@@ -18,12 +18,14 @@ import org.apache.spark.sql.functions.{col, input_file_name}
   * already cost a task and a footer read).
   *
   * Unlike `_stats.json` (free — harvested from footers the write just
-  * produced), blooms cost one columnar scan of the fingerprinted
-  * columns, so they are an OPT-IN maintenance artifact
-  * ([[SnapshotLake.computeBlooms]]), written as `_blooms.json` beside
-  * the stats. Adding a sidecar to a published (immutable) generation is
-  * safe: readers racing the write see either no bloom (no pruning) or
-  * the complete bloom — never a partial one (tmp + rename).
+  * produced), blooms need every value of the fingerprinted columns, so
+  * they are OPT-IN: a table with auto-Blooms on builds them inside each
+  * commit's own write job ([[GenWriter]]), and
+  * [[SnapshotLake.computeBlooms]] backfills older generations with one
+  * columnar scan each; both publish `_blooms.json` beside the stats.
+  * Adding a sidecar to a published (immutable) generation is safe:
+  * readers racing the write see either no bloom (no pruning) or the
+  * complete bloom — never a partial one (tmp + rename).
   *
   * Pruning stays strictly conservative: a bloom answers "maybe" or
   * "definitely absent"; only the latter prunes. Absent files, absent
@@ -130,79 +132,90 @@ object GenBlooms {
     case _ => None
   }
 
-  /** Build per-(file, column) blooms for `cols` over the generation at
-    * `genPath` and publish `_blooms.json` there. One distributed scan of
-    * the requested columns; per-partition blooms merge by bitwise OR
-    * (commutative — row order never matters), and only the finished
-    * bloom bits travel to the driver: numFiles × |cols| × m/8 bytes,
-    * metadata-sized. */
-  def write(spark: SparkSession, genPath: String, cols: Seq[String],
-      expectedNdvPerFile: Int = 100000, strict: Boolean = true): Unit = {
-    // next pow2 of ~10 bits/value, in Long space (Int math wraps
-    // negative past ndv≈215M — plausible per-file NDV at 100 TB — and
-    // either crashes array allocation or silently degenerates to a
-    // saturated 1024-bit bloom); capped at 2^30 bits = 128 MiB/column,
-    // past which callers should shard files rather than grow blooms
+  /** Bloom shape (m bits, k hashes) for ~10 bits per expected distinct
+    * value: the next power of two, in Long space (Int math wraps
+    * negative past ndv≈215M — plausible per-file NDV at 100 TB — and
+    * either crashes array allocation or silently degenerates to a
+    * saturated 1024-bit bloom); capped at 2^30 bits = 128 MiB/column,
+    * past which callers should shard files rather than grow blooms. */
+  private[ingest] def shape(expectedNdvPerFile: Int): (Int, Int) = {
     val target = math.min(1L << 30,
       math.max(1024L, expectedNdvPerFile.toLong * 10))
-    val m = (java.lang.Long.highestOneBit(target - 1) * 2).toInt
-    val k = 7
-    val df = spark.read.parquet(genPath)
-    // SCHEMA-gate supported types: a column whose row values canonical-
-    // bytes to None (e.g. timestamps surface as java.sql.Timestamp here
-    // but as micros Longs in Catalyst literals) would build an EMPTY
-    // bloom that wrongly proves every probe absent — such columns must
-    // have no bloom at all
-    val supported: Set[org.apache.spark.sql.types.DataType] = {
-      import org.apache.spark.sql.types._
-      Set(LongType, IntegerType, ShortType, ByteType, StringType,
-        DoubleType, FloatType, BooleanType)
-    }
-    def tagOf(dt: org.apache.spark.sql.types.DataType): String = {
-      import org.apache.spark.sql.types._
-      dt match {
-        case LongType | IntegerType | ShortType | ByteType => "l"
-        case DoubleType | FloatType => "d"
-        case StringType => "s"
-        case BooleanType => "b"
-        case other => sys.error(s"unsupported bloom type $other")
-      }
-    }
-    // Resolve requested columns CASE-INSENSITIVELY (Spark's default
-    // resolution): `computeBlooms(Seq("OKey"))` must build o_okey's
-    // bloom, not silently no-op. An unknown name throws — a silent skip
-    // leaves the operator believing the point-lookup tier exists.
-    // Sidecar keys are the LOWERCASED names; probes lowercase to match.
-    // `strict = false` (the auto-bloom commit path) drops unknown names
-    // instead: a table-level bloom config must survive schema evolution
-    // where a later commit simply lacks one of the configured columns.
+    ((java.lang.Long.highestOneBit(target - 1) * 2).toInt, 7)
+  }
+
+  /** The fields of `schema` that `cols` fingerprint, in request order.
+    *
+    * Requested columns resolve CASE-INSENSITIVELY (Spark's default
+    * resolution): `computeBlooms(Seq("OKey"))` must build o_okey's
+    * bloom, not silently no-op. An unknown name throws — a silent skip
+    * leaves the operator believing the point-lookup tier exists.
+    * Sidecar keys are the LOWERCASED names; probes lowercase to match.
+    * `strict = false` (the auto-bloom commit path) drops unknown names
+    * instead: a table-level bloom config must survive schema evolution
+    * where a later commit simply lacks one of the configured columns.
+    *
+    * Only supported types are fingerprinted: a column whose row values
+    * canonical-bytes to None (e.g. timestamps surface as
+    * java.sql.Timestamp in rows but as micros Longs in Catalyst
+    * literals) would build an EMPTY bloom that wrongly proves every
+    * probe absent — such columns must have no bloom at all. Strict mode
+    * rejects them; silently skipping would recreate the exact
+    * no-sidecar-no-signal failure strict resolution exists to prevent. */
+  private[ingest] def resolve(schema: org.apache.spark.sql.types.StructType,
+      cols: Seq[String], strict: Boolean): Seq[org.apache.spark.sql.types.StructField] = {
     val resolved = cols.flatMap { c =>
-      df.schema.fields.find(_.name.equalsIgnoreCase(c)) match {
+      schema.fields.find(_.name.equalsIgnoreCase(c)) match {
         case some @ Some(_) => some
         case None if strict =>
           sys.error(s"computeBlooms: no column matching '$c' in " +
-            df.schema.fieldNames.mkString("[", ", ", "]"))
+            schema.fieldNames.mkString("[", ", ", "]"))
         case None => None
       }
     }
-    // strict mode also rejects a RESOLVED column of unsupported type —
-    // silently skipping it would recreate the exact no-sidecar-no-signal
-    // failure strict resolution exists to prevent
-    val presentFields = resolved.filter { f =>
-      val ok = supported.contains(f.dataType)
+    val present = resolved.filter { f =>
+      val ok = tagOf(f.dataType).isDefined
       if (!ok && strict)
         sys.error(s"computeBlooms: column '${f.name}' has unsupported " +
           s"bloom type ${f.dataType.simpleString} (supported: integral, " +
           "float/double, string, boolean)")
       ok
     }
-    require(presentFields.map(_.name.toLowerCase).distinct.size ==
-      presentFields.size,
+    require(present.map(_.name.toLowerCase).distinct.size == present.size,
       "bloom columns collide under case-insensitive resolution: " +
-        presentFields.map(_.name).mkString(", "))
+        present.map(_.name).mkString(", "))
+    present
+  }
+
+  /** Storage tag of a fingerprintable column type, None if unsupported. */
+  private[ingest] def tagOf(dt: org.apache.spark.sql.types.DataType)
+      : Option[String] = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case LongType | IntegerType | ShortType | ByteType => Some("l")
+      case DoubleType | FloatType => Some("d")
+      case StringType => Some("s")
+      case BooleanType => Some("b")
+      case _ => None
+    }
+  }
+
+  /** Build per-(file, column) blooms for `cols` over the generation at
+    * `genPath` and publish `_blooms.json` there — the backfill for
+    * generations written without auto-Blooms (commits with auto-Blooms
+    * on build the same sidecar inside their own write job,
+    * [[GenWriter]]). One distributed scan of the requested columns;
+    * per-partition blooms merge by bitwise OR (commutative — row order
+    * never matters), and only the finished bloom bits are collected:
+    * numFiles × |cols| × m/8 bytes, metadata-sized. */
+  def write(spark: SparkSession, genPath: String, cols: Seq[String],
+      expectedNdvPerFile: Int = 100000, strict: Boolean = true): Unit = {
+    val (m, k) = shape(expectedNdvPerFile)
+    val df = spark.read.parquet(genPath)
+    val presentFields = resolve(df.schema, cols, strict)
     val present = presentFields.map(_.name.toLowerCase)
     if (present.isEmpty) return
-    val tags = presentFields.map(f => tagOf(f.dataType))
+    val tags = presentFields.map(f => tagOf(f.dataType).get)
     val rows = df.select(input_file_name().as("__f") +: present.map(col): _*)
     val perFile: Array[(String, Seq[(String, Bloom)])] = rows.rdd
       .mapPartitions { it =>
@@ -224,6 +237,15 @@ object GenBlooms {
         new Path(f).getName -> present.zip(bs.toSeq)
       }
       .collect()
+    publish(spark.sparkContext.hadoopConfiguration, genPath, perFile.toSeq)
+  }
+
+  /** Render `perFile` (bare file name → per-column blooms, columns in
+    * resolution order) as `_blooms.json` and publish it under
+    * `genPath`. Files are written in name order, so one set of blooms
+    * always renders to the same bytes, whichever pass built it. */
+  private[ingest] def publish(conf: Configuration, genPath: String,
+      perFile: Seq[(String, Seq[(String, Bloom)])]): Unit = {
     val enc = java.util.Base64.getEncoder
     def b64(b: Bloom): String = {
       val bb = java.nio.ByteBuffer.allocate(b.bits.length * 8)
@@ -246,7 +268,7 @@ object GenBlooms {
     // delete+rename moves the data file and its .crc in separate steps,
     // and a reader racing load() in that window throws ChecksumException
     // — the same hazard the _constraints.json path closes this way
-    val fsAll = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fsAll = dir.getFileSystem(conf)
     val fs = rawOf(fsAll)
     val tmp = new Path(dir, s".$BloomsFileName.tmp")
     val out = fs.create(tmp, true)
@@ -275,25 +297,23 @@ object GenBlooms {
     }
   }
 
+  private val cache = new SidecarCache[Map[String, Map[String, Bloom]]](1024)
+
   /** Blooms for one generation, keyed by bare file name then column;
-    * None when the generation has no bloom sidecar. */
+    * None when the generation has no bloom sidecar. Parsed sidecars are
+    * cached ([[SidecarCache]]), so the returned blooms are shared and
+    * must not be mutated. */
   def load(conf: Configuration, genPath: String)
       : Option[Map[String, Map[String, Bloom]]] = {
     val p = new Path(genPath, BloomsFileName)
     // raw fs: see the write-side note — a .crc written by an earlier
-    // build must never fail a control-plane read mid-publish
-    val fs = rawOf(p.getFileSystem(conf))
-    if (!fs.exists(p)) return None
-    // exists→open is a TOCTOU pair: computeBlooms' republish delete can
-    // land between them, making the sidecar momentarily absent — the
-    // contract is None (full fan-out, never a planner-killing
-    // FileNotFoundException). Same fix as GenStats.load.
-    val txt =
-      try {
-        val in = fs.open(p)
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), UTF_8)
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => return None }
+    // build must never fail a control-plane read mid-publish; a
+    // republish deleting the sidecar mid-read reads as absent (full
+    // fan-out), never as a planner-killing FileNotFoundException
+    cache.load(rawOf(p.getFileSystem(conf)), p)(parse)
+  }
+
+  private def parse(txt: String): Option[Map[String, Map[String, Bloom]]] = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.readTree(txt)
     // a sidecar from a different canonicalization era reads as absent

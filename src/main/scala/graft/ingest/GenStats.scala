@@ -35,6 +35,11 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * absent means "unknown, never prune", so stats are always a safe
   * subset. A generation written by an older writer has no `_stats.json`
   * at all and its files are likewise never pruned.
+  *
+  * The same footer pass records the generation's Spark schema (the
+  * `org.apache.spark.sql.parquet.row.metadata` footer entry Spark's own
+  * schema inference reads), so a reader resolves a version's schema by
+  * merging the recorded ones instead of running a `mergeSchema` job.
   */
 object GenStats {
 
@@ -49,6 +54,18 @@ object GenStats {
   final case class FileStats(rows: Long, cols: Map[String, ColStats])
 
   val StatsFileName = "_stats.json"
+
+  /** Footer key under which Spark's parquet writer stores the row
+    * schema as JSON (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** A parsed sidecar: per-file stats plus the generation's recorded
+    * schema (None for sidecars written before schemas were recorded, or
+    * for generations whose files carry no Spark schema). */
+  private final case class Sidecar(files: Map[String, FileStats],
+      schema: Option[org.apache.spark.sql.types.StructType])
+
+  private val cache = new SidecarCache[Sidecar](1024)
 
   /** See [[render]] — bump when the stats VALUE SPACE changes meaning,
     * OR when a harvest bug means existing sidecars cannot be trusted.
@@ -66,7 +83,10 @@ object GenStats {
     * as a table format's planning thread pool) so a many-file commit's
     * harvest is bounded by footer latency, not file count × latency.
     * Never throws on stats problems: a file whose footer defeats
-    * harvesting is recorded with no columns (readable, never pruned). */
+    * harvesting is recorded with no columns (readable, never pruned).
+    * The generation's schema is recorded when every file carries the
+    * same Spark schema (always so for one write job); otherwise readers
+    * fall back to schema inference. */
   def write(conf: Configuration, genPath: String): Unit = {
     val dir = new Path(genPath)
     val fsAll = dir.getFileSystem(conf)
@@ -76,10 +96,15 @@ object GenStats {
       new java.util.concurrent.ForkJoinPool(16))
     val par = new scala.collection.parallel.immutable.ParVector(files.toVector)
     par.tasksupport = pool
-    val perFile =
+    val harvested =
       try par.map(st => st.getPath.getName -> harvestFile(conf, st.getPath)).toVector
       finally pool.environment.shutdown()
-    val json = render(perFile)
+    val schemas = harvested.map(_._2._2).distinct
+    val schema = schemas match {
+      case Vector(Some(s)) => Some(s)
+      case _ => None
+    }
+    val json = render(harvested.map { case (n, (st, _)) => n -> st }, schema)
     // Publish through the RAW filesystem, like GenBlooms and the
     // control files: on ChecksumFileSystem delete+rename moves the data
     // file and its .crc in separate steps, and computeStats now
@@ -132,33 +157,35 @@ object GenStats {
 
   /** Stats for one generation, keyed by bare file name; None when the
     * generation predates stats collection. */
-  def load(conf: Configuration, genPath: String): Option[Map[String, FileStats]] = {
+  def load(conf: Configuration, genPath: String): Option[Map[String, FileStats]] =
+    sidecar(conf, genPath).map(_.files)
+
+  /** The Spark schema recorded for one generation at write time; None
+    * when its sidecar is absent, stale, or records no schema. */
+  def schema(conf: Configuration, genPath: String)
+      : Option[org.apache.spark.sql.types.StructType] =
+    sidecar(conf, genPath).flatMap(_.schema)
+
+  private def sidecar(conf: Configuration, genPath: String): Option[Sidecar] = {
     val p = new Path(genPath, StatsFileName)
     // raw fs: see the write-side note — a .crc written by an earlier
-    // build must never fail a control-plane read mid-backfill
-    val fs = rawOf(p.getFileSystem(conf))
-    if (!fs.exists(p)) return None
-    // exists→open is a TOCTOU pair: a backfill's delete can land
-    // between them (the republish window), in which case the sidecar is
-    // momentarily ABSENT — the contract is None (never prune), not a
-    // FileNotFoundException killing the reader's planning. Caught by
-    // the SnapLakeSkipSpec republish hammer.
-    try {
-      val in = fs.open(p)
-      val txt =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      parse(txt)
-    } catch { case _: java.io.FileNotFoundException => None }
+    // build must never fail a control-plane read mid-backfill. A
+    // backfill's delete landing mid-read (the republish window) reads
+    // as absent, never as an exception killing the reader's planning —
+    // caught by the SnapLakeSkipSpec republish hammer.
+    cache.load(rawOf(p.getFileSystem(conf)), p)(parse)
   }
 
   // ---------------------------------------------------------------- footer
 
-  private def harvestFile(conf: Configuration, file: Path): FileStats =
+  /** One file's stats and its footer's Spark schema JSON, if any. */
+  private def harvestFile(conf: Configuration, file: Path)
+      : (FileStats, Option[String]) =
     try {
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
       try {
+        val schema = Option(reader.getFooter.getFileMetaData
+          .getKeyValueMetaData.get(SparkSchemaKey))
         val blocks = reader.getFooter.getBlocks.asScala.toSeq
         val rows = blocks.map(_.getRowCount).sum
         // per-column chunks across all row groups; only top-level leaves
@@ -168,10 +195,10 @@ object GenStats {
         val cols = chunks.flatMap { case (name, ccs) =>
           mergeChunks(ccs).map(name -> _)
         }
-        FileStats(rows, cols)
+        (FileStats(rows, cols), schema)
       } finally reader.close()
     } catch {
-      case scala.util.control.NonFatal(_) => FileStats(-1L, Map.empty)
+      case scala.util.control.NonFatal(_) => (FileStats(-1L, Map.empty), None)
     }
 
   /** Merge one column's row-group chunks into a file envelope, or None
@@ -289,7 +316,8 @@ object GenStats {
   // one allocation per render/parse call (r13 review)
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private def render(perFile: Seq[(String, FileStats)]): String = {
+  private def render(perFile: Seq[(String, FileStats)],
+      schema: Option[String]): String = {
     val root = mapper.createObjectNode()
     // Format version gate (the hazard class _blooms.json's FormatVersion
     // already closes): v2 = -0.0 folded at harvest AND timestamps only
@@ -299,6 +327,7 @@ object GenStats {
     // against micros literals — so [[load]] drops it (absent = never
     // prune) rather than trusting it.
     root.put("v", FormatVersion)
+    schema.foreach(root.put("schema", _))
     val filesNode = root.putObject("files")
     perFile.foreach { case (name, fsStats) =>
       val f = filesNode.putObject(name)
@@ -322,7 +351,7 @@ object GenStats {
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
-  private def parse(txt: String): Option[Map[String, FileStats]] = {
+  private def parse(txt: String): Option[Sidecar] = {
     val root = mapper.readTree(txt)
     // Sidecars from any OTHER format version are DROPPED, not trusted —
     // see [[render]]. != (not <), matching GenBlooms.load: a FUTURE
@@ -330,8 +359,13 @@ object GenStats {
     // against it with this version's semantics could wrongly skip files
     // (r13 review). Absent stats only cost pruning, never correctness.
     if (root.path("v").asInt(0) != FormatVersion) return None
+    // an unparsable recorded schema only costs the inference fallback
+    val schema = Option(root.get("schema")).flatMap { n =>
+      scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(n.asText()))
+        .toOption.collect { case s: org.apache.spark.sql.types.StructType => s }
+    }
     val files = root.path("files")
-    Some(files.properties().asScala.map { e =>
+    val perFile = files.properties().asScala.map { e =>
       val name = e.getKey
       val node = e.getValue
       val cols = node.path("cols").properties().asScala.map { ce =>
@@ -356,7 +390,8 @@ object GenStats {
         ce.getKey -> ColStats(tag, readVal("min"), readVal("max"), nulls)
       }.toMap
       name -> FileStats(node.path("rows").asLong(-1L), cols)
-    }.toMap)
+    }.toMap
+    Some(Sidecar(perFile, schema))
   }
 }
 

@@ -13,8 +13,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     _commits/v00000001.json   // {"version":1,"dirs":["gen-ab12cd34"]}
   *     _commits/v00000002.json   // {"version":2,"dirs":["gen-ab12cd34","gen-99ff0011"]}
   *     gen-ab12cd34/  ...parquet...
+  *                    _stats.json    // per-file envelopes + the Spark schema
+  *                    _blooms.json   // per-file Blooms (auto-Blooms / computeBlooms)
+  *                    _cdf/          // row-level changes of a merge/delete rewrite
   *     gen-99ff0011/  ...parquet...
   * }}}
+  *
+  * A generation's metadata is captured by the pass that writes it,
+  * before its commit publishes it: the write job itself fills the
+  * auto-Bloom sidecar ([[GenWriter]]), and the footer pass after it
+  * ([[GenStats]]) records file envelopes and the generation's schema.
+  * Reads, merges, deletes, time travel and compaction resolve a
+  * version's schema from those records ([[schemaOf]]) instead of
+  * running a schema-inference job.
   *
   * Invariants that make this safe:
   *  - Generation directories are IMMUTABLE once a commit references them
@@ -40,7 +51,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Append commits reference the previous snapshot's directories plus the
   * new generation — O(1) data movement per append, like a table format's
   * manifest reuse; overwrite commits reference only the new generation.
-  * Schemas may evolve across appends (mergeSchema read, as SpecLake).
+  * Schemas may evolve across appends: a version reads under the union
+  * of its generations' schemas, as a `mergeSchema` read would infer it.
   */
 object SnapshotLake {
   /** Changefeed meta columns and the per-generation CDF directory name
@@ -189,8 +201,35 @@ class SnapshotLake(root: String) {
   def readAt(spark: SparkSession, version: Long): DataFrame = {
     val dirs = dirsAt(spark, version)
     require(dirs.nonEmpty, s"version $version lists no data directories")
-    spark.read.option("mergeSchema", "true")
-      .parquet(dirs.map(d => s"$root/$d"): _*)
+    readGens(spark, dirs)
+  }
+
+  /** Generations `gens` as one DataFrame under their merged schema
+    * ([[schemaOf]]). */
+  private[graft] def readGens(spark: SparkSession, gens: Seq[String]): DataFrame =
+    spark.read.schema(schemaOf(spark, gens)).parquet(gens.map(d => s"$root/$d"): _*)
+
+  /** The schema of a read over generations `gens`: their recorded
+    * write-time schemas ([[GenStats.schema]]) merged with Spark's own
+    * `StructType.merge` — the union a `mergeSchema` read infers, without
+    * that read's footer job. The fold runs in the order that inference
+    * folds files, sorted by path, which under one root is generation
+    * name order (fixed width), not manifest order: fields take the order
+    * of their first appearance in that sequence, exactly as inferred.
+    * If any generation has no recorded schema (written before schemas
+    * were recorded, or by a foreign writer), the whole union is inferred
+    * by one `mergeSchema` read: merging a partial inference into the
+    * recorded ones could order fields differently. */
+  private[graft] def schemaOf(spark: SparkSession,
+      gens: Seq[String]): org.apache.spark.sql.types.StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val recorded = gens.sorted.map(g => GenStats.schema(conf, s"$root/$g"))
+    if (recorded.nonEmpty && recorded.forall(_.isDefined)) {
+      val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+      recorded.flatten.reduceLeft(
+        org.apache.spark.sql.GraftBridge.mergeSchemas(_, _, caseSensitive))
+    } else spark.read.option("mergeSchema", "true")
+      .parquet(gens.map(d => s"$root/$d"): _*).schema
   }
 
   /** The latest committed snapshot. */
@@ -299,12 +338,7 @@ class SnapshotLake(root: String) {
     // data first, under a writer-unique UNCOMMITTED generation — readers
     // cannot see it until the commit file below publishes it
     val gen = s"gen-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-    df.write.parquet(s"$root/$gen")
-    validateGen(spark, gen)
-    // footer-harvested file stats land inside the still-unpublished
-    // generation, so they are immutable alongside the data they describe
-    GenStats.write(spark.sparkContext.hadoopConfiguration, s"$root/$gen")
-    maybeAutoBlooms(spark, gen)
+    writeGen(spark, df, gen)
     val tag = s""""op":"${if (overwrite) "overwrite" else "append"}",""" +
       batchId.map(b => s""""batchId":$b,""").getOrElse("") +
       queryId.map(q => s""""queryId":"$q",""").getOrElse("")
@@ -332,10 +366,7 @@ class SnapshotLake(root: String) {
     val fs = hadoopFs(spark)
     if (latestVersion(spark).isDefined) return None // cheap pre-check only
     val gen = s"gen-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-    df.write.parquet(s"$root/$gen")
-    validateGen(spark, gen)
-    GenStats.write(spark.sparkContext.hadoopConfiguration, s"$root/$gen")
-    maybeAutoBlooms(spark, gen)
+    writeGen(spark, df, gen)
     fs.mkdirs(new org.apache.hadoop.fs.Path(commitsDir))
     val json = s"""{"version":1,"op":"create","dirs":["$gen"]}"""
     val tmp = new org.apache.hadoop.fs.Path(s"$commitsDir/.tmp-$gen-1")
@@ -383,6 +414,20 @@ class SnapshotLake(root: String) {
         tmp.toUri, spark.sparkContext.hadoopConfiguration)
         .rename(tmp, dst)
     }
+  }
+
+  /** Write `df` as the still-UNPUBLISHED generation `gen` with its
+    * metadata: the auto-Bloom sidecar from the write job itself, then
+    * the footer-harvested stats and schema — all inside the generation,
+    * so they are immutable alongside the data they describe — then the
+    * constraint check, and last the rewrite's changefeed (`_cdf/`, a
+    * `_`-prefixed subdirectory invisible to data reads). */
+  private def writeGen(spark: SparkSession, df: DataFrame, gen: String,
+      changes: Option[DataFrame] = None): Unit = {
+    GenWriter.write(df, s"$root/$gen", autoBloomRequest(spark))
+    GenStats.write(spark.sparkContext.hadoopConfiguration, s"$root/$gen")
+    validateGen(spark, gen)
+    changes.foreach(GenWriter.write(_, s"$root/$gen/${SnapshotLake.CdfDirName}"))
   }
 
   /** Test seam: invoked after a mutation (merge/delete) has written its
@@ -445,20 +490,20 @@ class SnapshotLake(root: String) {
     Some(new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt))
   }
 
-  /** Best-effort per-generation bloom build for the auto tier — called
-    * on the still-UNPUBLISHED generation (immutable alongside its data,
-    * like `_stats.json`). Never fails the commit: an absent sidecar
-    * only costs pruning ("maybe"), never correctness, and an ingest
-    * must not die because an index build did. Lenient column matching
-    * (schema evolution may drop a configured column from one commit). */
-  private def maybeAutoBlooms(spark: SparkSession, gen: String): Unit =
-    try autoBloomConfig(spark).foreach { case (cols, ndv) =>
-      GenBlooms.write(spark, s"$root/$gen", cols, ndv, strict = false)
-    } catch {
+  /** The Bloom build a new generation's write should do for the auto
+    * tier: its sidecar is filled by the write job itself ([[GenWriter]])
+    * on the still-UNPUBLISHED generation, immutable alongside its data
+    * like `_stats.json`. Best-effort: an unreadable setting builds no
+    * sidecar rather than failing the commit — an absent sidecar only
+    * costs pruning ("maybe"), never correctness. Column matching is
+    * lenient (schema evolution may drop a configured column from one
+    * commit). */
+  private def autoBloomRequest(spark: SparkSession): Option[(Seq[String], Int)] =
+    try autoBloomConfig(spark) catch {
       case scala.util.control.NonFatal(e) =>
-        System.err.println(
-          s"snaplake: auto-bloom build failed for $root/$gen " +
-            s"(generation stays sidecar-less, never pruned): $e")
+        System.err.println(s"snaplake: auto-bloom setting unreadable for " +
+          s"$root (this generation stays sidecar-less, never pruned): $e")
+        None
     }
 
   // ---------------------------------------------- auto compaction
@@ -639,7 +684,7 @@ class SnapshotLake(root: String) {
     // or analysis error) must clean up the unpublished generation —
     // nothing sweeps orphans later
     try {
-      val raw = spark.read.parquet(s"$root/$gen")
+      val raw = readGens(spark, Seq(gen))
       // A constraint referencing a column this generation lacks must be
       // evaluated under evolved-read semantics: such a column reads as
       // NULL everywhere, so the missing attributes are ADDED as NULL
@@ -836,7 +881,7 @@ class SnapshotLake(root: String) {
       // simply match no source key, which is the correct semantics
       // (r13 review)
       val affectedDf = if (affected.isEmpty) None
-        else Some(spark.read.schema(readAt(spark, base).schema)
+        else Some(spark.read.schema(schemaOf(spark, dirs))
           .parquet(affected.map(d => s"$root/$d"): _*))
       val keep = affectedDf.map(_.join(srcKeys, keyCols, "left_anti"))
       val rewritten = keep match {
@@ -1075,8 +1120,7 @@ class SnapshotLake(root: String) {
     // target file count keeps outputs at ~maxBytes so a later pass sees
     // them as "big" and stops re-rewriting the same rows
     val numFiles = math.max(1L, (tailBytes + maxBytes - 1) / maxBytes).toInt
-    val tail = spark.read.option("mergeSchema", "true")
-      .parquet(small.map(d => s"$root/$d"): _*)
+    val tail = readGens(spark, small)
     val clustered =
       if (sortCols.isEmpty) tail.coalesce(numFiles)
       else tail.repartitionByRange(numFiles, sortCols: _*)
@@ -1122,15 +1166,12 @@ class SnapshotLake(root: String) {
     val baseDirs = dirsAt(spark, base)
     val consumed = baseDirs.filterNot(untouched.contains).toSet
     val gen = s"gen-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
-    rewritten.write.parquet(s"$root/$gen")
-    validateGen(spark, gen) // a merge source can violate like any ingest
-    // the changefeed rides INSIDE the writer-unique generation (a
-    // `_`-prefixed subdir, invisible to data reads), so it publishes
-    // atomically with the commit that references the generation and is
-    // cleaned up with it on abort — no separate claim to race
-    changes.foreach(_.write.parquet(s"$root/$gen/${SnapshotLake.CdfDirName}"))
-    GenStats.write(spark.sparkContext.hadoopConfiguration, s"$root/$gen")
-    maybeAutoBlooms(spark, gen)
+    // validated like any ingest (a merge source can violate); the
+    // changefeed rides INSIDE the writer-unique generation, so it
+    // publishes atomically with the commit that references the
+    // generation and is cleaned up with it on abort — no separate
+    // claim to race
+    writeGen(spark, rewritten, gen, changes)
     fs.mkdirs(new org.apache.hadoop.fs.Path(commitsDir))
     onBeforePublish()
     def abort(detail: String): Nothing = {

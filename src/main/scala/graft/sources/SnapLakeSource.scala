@@ -79,15 +79,16 @@ class SnapLakeSource extends RelationProvider with CreatableRelationProvider
     val dirs = genDirs.map(d => s"$root/$d")
     // Delegate to Spark's parquet relation over exactly this version's
     // files: pushdown/pruning/vectorization are the scan's own, and the
-    // relation pins its file listing now (snapshot isolation).
-    // mergeSchema because append commits may evolve the schema (SpecLake
-    // contract); the merged schema is the union across the version's
-    // generations only — later commits cannot widen an old snapshot.
+    // relation pins its file listing now (snapshot isolation). Append
+    // commits may evolve the schema; the version's schema is the union
+    // across its generations only (later commits cannot widen an old
+    // snapshot), resolved from their write-time records — no inference
+    // job.
     val resolved = org.apache.spark.sql.execution.datasources.DataSource(
       spark,
       className = "parquet",
       paths = dirs,
-      options = Map("mergeSchema" -> "true")).resolveRelation()
+      userSpecifiedSchema = Some(lake.schemaOf(spark, genDirs))).resolveRelation()
     resolved match {
       case fsRel: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
         // manifest-stats file skipping: swap the relation's FileIndex for

@@ -34,6 +34,13 @@ object GraftBridge {
       : org.apache.spark.memory.TaskMemoryManager =
     ctx.taskMemoryManager()
 
+  /** `StructType.merge` (`private[sql]`): the union Spark's parquet
+    * `mergeSchema` read folds file schemas with — fields of `a` first,
+    * then `b`'s new ones; conflicting types throw. */
+  def mergeSchemas(a: types.StructType, b: types.StructType,
+      caseSensitive: Boolean): types.StructType =
+    a.merge(b, caseSensitive)
+
   /** Drain the async listener bus (`private[spark]`) so metric listeners
     * observe every task of a just-finished action — the shuffle-volume
     * regression guards depend on it. */
