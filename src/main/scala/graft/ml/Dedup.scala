@@ -108,22 +108,9 @@ object Dedup {
     val rare = inv.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxShingleDf && col("df") >= 2)
       .select(col("g"))
-    // Pair expansion via ONE shuffle of the rare-shingle occurrences
-    // (r16, guide §2.4 — the Fuzzy.fuzzyPairs idiom applied here): the
-    // previous two-sided self-join exploded the shingle table twice,
-    // exchanged+sorted both sides (alias-renamed subtrees defeat
-    // exchange reuse) and sort-merge-joined them; this groups each rare
-    // shingle's occupants once and expands pairs within the group.
-    // Hot-key safety is UNCHANGED: the df filter above is still a
-    // partial-aggregating count (hot shingles collapse map-side and
-    // never reach the collect), so every collected list is ≤
-    // maxShingleDf ids — the same bound the join form carried.
-    val grp = inv.join(rare, "g")
-      .groupBy(col("g")).agg(collect_list(col("doc_id")).as("ids"))
-    grp.select(explode(col("ids")).as("doc_a"), col("ids"))
-      .select(col("doc_a"), explode(col("ids")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
+    // every surviving shingle bucket holds at most maxShingleDf ids
+    graft.ops.Skew.bucketPairs(inv.join(rare, "g"), Seq(col("g")), col("doc_id"))
+      .select(col("a").as("doc_a"), col("b").as("doc_b"))
   }
 
   def jaccardPairsCapped(docs: DataFrame, threshold: Double,
@@ -198,18 +185,18 @@ object Dedup {
     sh.select(col("doc_id"),
       graft.functions.MinHashSig.minhashSig(col("shingles"), NumHashes).as("sig"))
       // persist (lazy) is load-bearing against PROJECTION COLLAPSE, not
-      // (since r16) against a second reader: bandBuckets references
-      // `sig` inside a per-band transform lambda, and without the cache
-      // boundary Catalyst would inline the 128-hash kernel into every
-      // lambda iteration (the shingled() hazard). Consumers that scan
-      // the frame twice own their own eager barrier (lshCandidatesSalted,
-      // the streaming ledger's per-batch persists).
+      // against a second reader: bandBuckets references `sig` inside a
+      // per-band transform lambda, and without the cache boundary
+      // Catalyst would inline the 128-hash kernel into every lambda
+      // iteration (the shingled() hazard). lshCandidates scans the frame
+      // once; consumers that scan it twice own their own eager barrier
+      // (the streaming ledger's per-batch persists).
       .persist()
 
   /** (doc_id, band, bucket) rows from a signature frame — the banding
-    * shared by [[lshCandidates]], [[lshCandidatesSalted]], and the
-    * streaming near-dup ledger ([[graft.streaming.DocStreams]]), so
-    * every consumer buckets bit-identically. */
+    * shared by [[lshCandidates]] and the streaming near-dup ledger
+    * ([[graft.streaming.DocStreams]]), so every consumer buckets
+    * bit-identically. */
   def bandBuckets(sigs: DataFrame): DataFrame = {
     val rows = NumHashes / NumBands
     sigs.select(col("doc_id"),
@@ -220,85 +207,25 @@ object Dedup {
       .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
   }
 
-  /** LSH band-bucket candidate pairs (doc_a < doc_b, distinct).
-    *
-    * ONE shuffle of the banded table (r16, the Fuzzy.fuzzyPairs idiom —
-    * same rewrite as [[cappedCandidates]]): group each (band, bucket)'s
-    * occupants, drop singleton buckets (the majority), expand pairs
-    * within the group. The two-sided self-join it replaces exchanged the
-    * banded table twice and sort-merge-joined it against itself. A
-    * bucket's membership is buffered in its collect_list exactly as the
-    * join buffered it in the sort-merge run — bucket sizes are the
-    * banding design's bounded quantity either way, and the pathological
-    * hot-bucket corpus routes through [[lshCandidatesSalted]] as before.
-    * One honest asymmetry vs the join it replaced (ADVICE r16): the SMJ
-    * buffered a hot group in a SPILLABLE row array, while a
-    * collect_list buffer cannot spill its single in-flight array — so
-    * `maxBucket` (via [[graft.ops.Skew.boundedBucket]]) converts that
-    * pathological case into a named error pointing at the salted
-    * generator instead of an executor OOM. */
-  def lshCandidates(sigs: DataFrame, maxBucket: Int = 1 << 20): DataFrame = {
-    val banded = bandBuckets(sigs)
-    val grp = banded.groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(graft.ops.Skew.boundedBucket(col("ids"), maxBucket,
-        "lshCandidates").as("ids"))
-    grp.select(explode(col("ids")).as("doc_a"), col("ids"))
-      .select(col("doc_a"), explode(col("ids")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-  }
+  /** LSH band-bucket candidate pairs (doc_a < doc_b, distinct): the
+    * within-bucket pairs of every (band, bucket), expanded by
+    * [[graft.ops.Skew.bucketPairs]] (`tile` bounds the bucket size that
+    * expands as one unit; larger buckets are tiled over tasks). */
+  def lshCandidates(sigs: DataFrame,
+      tile: Int = graft.ops.Skew.PairTile): DataFrame =
+    graft.ops.Skew.bucketPairs(bandBuckets(sigs),
+        Seq(col("band"), col("bucket")), col("doc_id"), tile)
+      .select(col("a").as("doc_a"), col("b").as("doc_b"))
 
   /** MinHash+LSH near-dup pairs, exact-Jaccard verified: candidates from
-    * the banded signatures, then verified with true shingle-set Jaccard.
+    * the banded signatures ([[lshCandidates]] with `tile`), then verified
+    * with true shingle-set Jaccard.
     */
-  def minhashDupPairs(docs: DataFrame, threshold: Double): DataFrame =
-    minhashDupPairsFrom(docs, threshold, lshCandidates(_))
-
-  /** [[lshCandidates]] with the hot-bucket escape hatch: identical pair
-    * set, but the bucket self-join runs through
-    * [[graft.ops.Skew.saltedSelfJoinPairs]], spreading a pathological
-    * bucket's C(k,2) candidates over g² salt cells instead of one
-    * reducer. The (band, bucket) pair collapses to one xxhash64 join
-    * key — a cross-bucket hash collision can only ADD candidates (the
-    * exact-Jaccard verify removes them), never lose one, so recall is
-    * untouched. This is the candidate generator to swap in when a
-    * corpus has boilerplate-heavy bands (the 100× skew scenario
-    * ScaleSpec's hot-bucket test models). */
-  def lshCandidatesSalted(sigs: DataFrame, g: Int): DataFrame = {
-    // eager barrier HERE, not in minhashDupPairsFrom (r17): the salted
-    // two-sided self-join is the one candidate generator that still
-    // reads the signature frame twice (left and right of the salt-cell
-    // join), and its two scan stages can run concurrently — racing a
-    // cold cache, each would recompute the 128-hash signatures. The
-    // grouped generator (lshCandidates) scans sigs exactly once since
-    // the r16 rewrite, so it needs no barrier and must not pay one.
-    sigs.count()
-    val banded = bandBuckets(sigs)
-      .select(col("doc_id"), xxhash64(col("band"), col("bucket")).as("bb"))
-    graft.ops.Skew.saltedSelfJoinPairs(banded, "bb", "doc_id", g)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")).distinct()
-  }
-
-  /** [[minhashDupPairs]] over the salted candidate generator. */
-  def minhashDupPairsSalted(docs: DataFrame, threshold: Double,
-      g: Int): DataFrame =
-    minhashDupPairsFrom(docs, threshold, lshCandidatesSalted(_, g))
-
-  private def minhashDupPairsFrom(docs: DataFrame, threshold: Double,
-      candidates: DataFrame => DataFrame): DataFrame = {
+  def minhashDupPairs(docs: DataFrame, threshold: Double,
+      tile: Int = graft.ops.Skew.PairTile): DataFrame = {
     val sh = shingled(docs)
-    // No eager count here (r17): since the r16 grouped rewrite the plain
-    // candidate path scans the signature frame exactly ONCE, so the old
-    // "materialize before the two-sided band join reads it" pass was a
-    // full extra corpus materialization for nothing. The (lazy) persist
-    // inside minhashSignatures stays load-bearing either way — it is
-    // what keeps projection collapse from inlining the 128-hash kernel
-    // into bandBuckets' per-band lambda. The one generator that still
-    // reads sigs twice (lshCandidatesSalted) now owns its own barrier.
     val sigs = minhashSignatures(sh)
-    val cands = candidates(sigs)
+    val cands = lshCandidates(sigs, tile)
     val withSets = cands
       .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sa")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("shingles").as("sb")), "doc_b")
@@ -746,14 +673,7 @@ object Dedup {
 
   /** SimHash near-dup pairs with Hamming distance <= maxDist (<= 3 is
     * guaranteed found: 4 16-bit bands, pigeonhole). */
-  def simhashDupPairs(docs: DataFrame, maxDist: Int,
-      maxBucket: Int = 1 << 20): DataFrame = {
-    // No materialization barrier needed anymore (r17): the grouped
-    // candidate pass below consumes the simhash frame exactly ONCE —
-    // the old two-sided band self-join read it twice and needed the
-    // localCheckpoint both as a compute-once barrier and because its
-    // plan broadcast the banded table (corpus-proportional build side,
-    // the r16 verdict #2 hazard).
+  def simhashDupPairs(docs: DataFrame, maxDist: Int): DataFrame = {
     val sh = simhashed(docs)
     val banded = sh.select(col("doc_id"), col("simhash"),
         // shiftright(), not `>>`: Spark 4's parser rejects `>>` inside an
@@ -761,25 +681,11 @@ object Dedup {
         explode(expr(
           "transform(sequence(0, 3), b -> struct(b as band, shiftright(simhash, cast(b * 16 as int)) & 65535L as bucket))")).as("bb"))
       .select(col("doc_id"), col("simhash"), col("bb.band"), col("bb.bucket"))
-    // ONE grouped exchange (r17, the lshCandidates idiom — closes r16
-    // verdict #2): collect each (band, bucket)'s members WITH their
-    // hashes (16 bytes/member, the same payload the join carried on
-    // both sides), expand within-group pairs. Pair set identical by
-    // construction; hamming/distinct/filter tail unchanged.
-    // Hot-bucket discipline: 16-bit bands bound expected occupancy at
-    // n/2^16 per band; `maxBucket` turns a pathological boilerplate
-    // bucket into a NAMED error instead of an executor OOM
-    // (Skew.boundedBucket has the honest account of the bound).
-    val grp = banded.groupBy(col("band"), col("bucket"))
-      .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("ms"))
-      .filter(size(col("ms")) >= 2)
-      .select(graft.ops.Skew.boundedBucket(col("ms"), maxBucket,
-        "simhashDupPairs").as("ms"))
-    grp.select(explode(col("ms")).as("a"), col("ms"))
-      .select(col("a"), explode(col("ms")).as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.simhash").as("ha"), col("b.simhash").as("hb")).distinct()
+    // members carry their hash, so the Hamming verify needs no lookup
+    graft.ops.Skew.bucketPairs(banded, Seq(col("band"), col("bucket")),
+        struct(col("doc_id").as("id"), col("simhash")))
+      .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
+        col("a.simhash").as("ha"), col("b.simhash").as("hb"))
       .withColumn("hamming", expr("bit_count(ha ^ hb)"))
       .filter(col("hamming") <= maxDist)
       .select(col("doc_a"), col("doc_b"), col("hamming"))

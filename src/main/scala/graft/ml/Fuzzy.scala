@@ -81,7 +81,7 @@ object Fuzzy {
     * trivially qualify, and the deletion-neighborhood theorem applies
     * per distinct string exactly as before. */
   def fuzzyPairs(df: DataFrame, idCol: String, strCol: String,
-      maxEd: Int, maxBucket: Int = 1 << 20): DataFrame = {
+      maxEd: Int): DataFrame = {
     // (id, s, rid): rid = min id over the string's dup group, computed
     // as a partial-aggregating groupBy("s").agg(min) + a probe join back
     // — NEVER min(id).over(Window.partitionBy(s)): the operator's own
@@ -125,26 +125,15 @@ object Fuzzy {
       .withColumn("sig",
         explode(graft.functions.DeletionSigs.sigs(col("s"), maxEd)))
       .select(col("rid"), col("sig"))
-    // Candidate pairs via ONE shuffle of the signature table: group by
-    // sig, drop singleton groups (the Zipf-shaped majority — a signature
-    // held by one representative cannot generate a pair), and expand
-    // pairs within each group. The previous self-join spelling shuffled
-    // the 2.8M-row table twice; this exchanges it once and the pair
-    // expansion runs over the tiny shared-sig slice. Group sizes are
-    // bounded by distinct near-neighbors per signature (small by
-    // construction after the distinct-string reduction); a corpus with a
-    // pathological hot signature routes through
-    // [[graft.ops.Skew.saltedSelfJoinPairs]] instead, as documented.
-    val grp = sigs.groupBy(col("sig")).agg(collect_list(col("rid")).as("rids"))
-      .filter(size(col("rids")) >= 2)
-      // same loud bucket bound as the other grouped pair expanders
-      // (r17; ADVICE r16 — see Skew.boundedBucket for the honest account)
-      .select(graft.ops.Skew.boundedBucket(col("rids"), maxBucket,
-        "fuzzyPairs").as("rids"))
-    val cands = grp.select(explode(col("rids")).as("rid_a"), col("rids"))
-      .select(col("rid_a"), explode(col("rids")).as("rid_b"))
-      .filter(col("rid_a") < col("rid_b"))
-      .select(col("rid_a"), col("rid_b")).distinct()
+    // Candidate pairs from one grouped exchange of the signature table
+    // (singleton signatures, the Zipf-shaped majority, drop before any
+    // expansion). Bucket sizes are bounded by distinct near-neighbors per
+    // signature, small after the distinct-string reduction; a hot
+    // signature is tiled over tasks by bucketPairs. A representative can
+    // emit one signature twice (repeated characters); bucketPairs' distinct
+    // absorbs the duplicate pairs.
+    val cands = graft.ops.Skew.bucketPairs(sigs, Seq(col("sig")), col("rid"))
+      .select(col("a").as("rid_a"), col("b").as("rid_b"))
     // verify on distinct strings (edit_dist >= 1 here by construction)
     val strPairs = cands
       .join(reps.select(col("rid").as("rid_a"), col("s").as("s_a")), "rid_a")

@@ -51,13 +51,13 @@ object MlPack extends QueryPack {
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 
-    // Same pipeline through the SKEW-HARDENED candidate generator
-    // (Skew.saltedSelfJoinPairs over g=4 salt cells): the scored proof
-    // that the hot-bucket escape hatch is output-identical end to end,
-    // not just in ScaleSpec's synthetic fixture. Same oracle as
-    // ns_dedup_minhash by the same argument.
+    // Same pipeline with every non-singleton bucket forced through the
+    // hot-bucket tiled branch of Skew.bucketPairs (tile = 1): the scored
+    // proof that tiling is output-identical end to end, not just in
+    // ScaleSpec's synthetic fixture. Same oracle as ns_dedup_minhash by
+    // the same argument.
     "ns_dedup_minhash_salted" -> ((s, d) => {
-      Dedup.minhashDupPairsSalted(Tables.documents(s, d), 0.5, g = 4)
+      Dedup.minhashDupPairs(Tables.documents(s, d), 0.5, tile = 1)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
 

@@ -871,8 +871,7 @@ object Similarity {
     * vector is the linear price paid to avoid the quadratic join.
     */
   def cosineDupPairsBanded(emb: DataFrame, threshold: Double,
-      nBands: Int = 128, rowsPerBand: Int = 16, dim: Int = 64,
-      maxBucket: Int = 1 << 20): DataFrame = {
+      nBands: Int = 128, rowsPerBand: Int = 16, dim: Int = 64): DataFrame = {
     // localCheckpoint, not persist: the sketch side feeds the banded
     // candidate pass and the verify lookups re-read `v`, so it must
     // materialize once — but the result OUTLIVES this call, and a
@@ -889,30 +888,9 @@ object Similarity {
       .localCheckpoint()
     val banded = withSketch.select(col("vec_id"),
       posexplode(col("bands")).as(Seq("band", "bucket")))
-    // Candidate pairs from ONE grouped exchange (r17, guide §2.4/§3.1 —
-    // the r16 Dedup.lshCandidates idiom applied here, closing r16
-    // verdict #1): group each (band, bucket)'s occupants, drop
-    // singleton buckets, expand pairs within the group. The two-sided
-    // band self-join this replaces planned a BroadcastHashJoin whose
-    // BUILD SIDE was the banded table itself — corpus × nBands rows,
-    // i.e. a corpus-proportional broadcast that hits the 8 GB/512M-row
-    // hard cap (or degrades to a double-exchange SMJ) at 100 TB. Pair
-    // set is identical by construction: join-on-(band,bucket) with
-    // vec_a < vec_b ≡ unordered within-bucket pairs. Hot-bucket
-    // discipline: bucket sizes are the banding design's bounded
-    // quantity (the sizing law above); `maxBucket` makes a pathological
-    // bucket a NAMED error instead of an executor OOM
-    // (Skew.boundedBucket documents exactly what it does and does not
-    // bound).
-    val grp = banded.groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col("vec_id")).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(graft.ops.Skew.boundedBucket(col("ids"), maxBucket,
-        "cosineDupPairsBanded").as("ids"))
-    val cands = grp.select(explode(col("ids")).as("vec_a"), col("ids"))
-      .select(col("vec_a"), explode(col("ids")).as("vec_b"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b")).distinct()
+    val cands = graft.ops.Skew.bucketPairs(banded,
+        Seq(col("band"), col("bucket")), col("vec_id"))
+      .select(col("a").as("vec_a"), col("b").as("vec_b"))
     cands
       .join(withSketch.select(col("vec_id").as("vec_a"), col("v").as("va")), "vec_a")
       .join(withSketch.select(col("vec_id").as("vec_b"), col("v").as("vb")), "vec_b")

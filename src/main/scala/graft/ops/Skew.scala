@@ -4,8 +4,12 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation utilities. AQE handles skewed sort-merge JOINs
-  * automatically; these cover the cases it doesn't — hot-key
-  * aggregations — via the classic two-phase salted aggregate.
+  * automatically; these cover the cases it doesn't: hot-key
+  * aggregations (the classic two-phase salted aggregate), hot-key
+  * enrichment joins (a salted fact-to-dimension join), and hot buckets
+  * in the grouped candidate-pair expansion every near-dup and
+  * similarity generator shares ([[bucketPairs]], which tiles a hot
+  * bucket over tasks instead of serializing it on one reducer).
   */
 object Skew {
 
@@ -63,80 +67,67 @@ object Skew {
     fs.join(ds, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** Salted self-join PAIR GENERATION — the skew escape hatch for
-    * LSH-band / deletion-signature candidate joins ([[graft.ml.Dedup
-    * .lshCandidates]], [[graft.ml.Fuzzy.fuzzyPairs]]). A bucket with k
-    * members emits C(k,2) candidate pairs, and in a plain self-equi-join
-    * on the bucket key ONE reducer does all of that work — the remaining
-    * 100x-scale risk after df-caps and distinct-string reductions, since
-    * a single pathological bucket (boilerplate shingle band, hot
-    * signature) makes one task quadratic while its peers idle.
-    *
-    * The g²-cell decomposition: each member gets a deterministic salt
-    * `s(id) = xxhash64(id) mod g`; the left side keeps its own salt as
-    * the FIRST coordinate and replicates across all g values of the
-    * second, the right side mirrors this, and the join key becomes
-    * (bucket, s1, s2). The unordered pair {x, y} matches in exactly the
-    * cell (s(x), s(y)) for orientation (x, y) and (s(y), s(x)) for
-    * (y, x); the `id_a < id_b` filter keeps exactly one orientation, so
-    * output parity with the direct join is exact (ScaleSpec). Shuffle
-    * volume grows g× per side, but the hot bucket's C(k,2) pairs spread
-    * over g² independent reducers — g=32 turns one 8-hour straggler
-    * into a thousand 30-second tasks at the cost of one extra
-    * replication pass. AQE's skew-join splitting attacks the same
-    * problem reactively; this is the deterministic, planner-independent
-    * form for the candidate joins where the blowup is OUTPUT-side
-    * (post-join pair explosion), which byte-size-based AQE splitting
-    * systematically underestimates.
-    *
-    * Output: (keyCol, id_a, id_b), id_a < id_b, one row per unordered
-    * member pair per bucket key. */
-  /** Loud per-bucket size bound for the grouped pair-expansion idiom
-    * (r17; ADVICE r16): the grouped candidate generators
-    * ([[graft.ml.Dedup.lshCandidates]], [[graft.ml.Dedup
-    * .simhashDupPairs]], [[graft.ml.Similarity.cosineDupPairsBanded]])
-    * buffer each bucket's membership in ONE collect_list aggregation
-    * buffer, which — unlike the sort-merge self-join they replaced —
-    * cannot spill that single array. This wraps the collected list so a
-    * bucket past `maxLen` raises a NAMED error pointing at the remedies
-    * (salted generator / banding resize) instead of an opaque executor
-    * OOM.
-    *
-    * Honesty about what it bounds: the check runs when the finished
-    * list is first projected, so a bucket must materialize before it
-    * trips — the guard converts "quietly degrade" into "fail loudly
-    * with the knob named" for buckets up to ~100× maxLen (at the 2^20
-    * default that is still only ~1 GB of longs), not a hard memory cap.
-    * The regime it cannot catch was ALREADY dead under the old join
-    * plan: a bucket big enough to exhaust an executor on its id list
-    * (~10⁸+ ids) would have emitted C(k,2) ≈ 10¹⁶ join rows. Zero cost
-    * on healthy data: one `size()` comparison per BUCKET, not per row.
-    */
-  def boundedBucket(ids: Column, maxLen: Int, what: String): Column =
-    when(size(ids) <= lit(maxLen), ids)
-      .otherwise(raise_error(concat(
-        lit(s"$what: a candidate bucket exceeded maxBucket=$maxLen " +
-          "occupants ("), size(ids).cast("string"),
-        lit(") — this corpus has a pathological hot bucket; route it " +
-          "through the salted candidate generator " +
-          "(Skew.saltedSelfJoinPairs / Dedup.lshCandidatesSalted) or " +
-          "resize the banding (rows per band must grow with " +
-          "log2(corpus))"))))
+  /** Default [[bucketPairs]] tile: the largest bucket that still expands
+    * as one unit. The largest bucket measured for any generator at sf0.1
+    * and on the benchmark's curation corpus has 291 members (NOTES.md),
+    * so healthy buckets are never tiled. */
+  val PairTile = 1024
 
-  def saltedSelfJoinPairs(df: DataFrame, keyCol: String, idCol: String,
-      g: Int): DataFrame = {
-    require(g >= 1, s"salt buckets must be >= 1, got $g")
-    val base = df.select(col(keyCol).as("k"), col(idCol).as("id"),
-      pmod(xxhash64(col(idCol)), lit(g.toLong)).cast("int").as("s"))
-    val allSalts = sequence(lit(0), lit(g - 1))
-    val left = base
-      .withColumn("s2", explode(allSalts))
-      .select(col("k"), col("id").as("id_a"), col("s").as("s1"), col("s2"))
-    val right = base
-      .withColumn("s1", explode(allSalts))
-      .select(col("k"), col("id").as("id_b"), col("s1"), col("s").as("s2"))
-    left.join(right, Seq("k", "s1", "s2"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("k").as(keyCol), col("id_a"), col("id_b"))
+  /** Distinct unordered member pairs within each bucket — the candidate
+    * expansion shared by every near-dup and similarity generator (LSH
+    * bands, SimHash bands, sign-LSH bands, deletion signatures, df-capped
+    * shingles).
+    *
+    * `member` is either a bare orderable id or a struct with an `id`
+    * field; the id orders a pair and null ids never pair. Output:
+    * `(a, b)` member values with `a.id < b.id`, one row per distinct
+    * pair — exactly the pair set of a self-equi-join on `keys` filtered
+    * to `a.id < b.id`.
+    *
+    * One grouped aggregate collects each bucket's members and drops
+    * singletons (the majority), so the bucket table is exchanged once
+    * and never joined against itself. Each remaining bucket becomes
+    * expansion units: a bucket of at most `tile` members is one unit; a
+    * larger one is sorted by id and cut into `tile`-sized slices, and
+    * each slice pair (i ≤ j) is a unit. Sorting makes every id in slice
+    * i no larger than any id in slice j > i, so the `a.id < b.id` filter
+    * keeps each pair exactly once. The units pass through a round-robin
+    * `repartition(n)` over the session's task slots before they expand:
+    * AQE does not coalesce a count-fixed repartition, so a hot bucket's
+    * C(k,2) pairs spread over n tasks in units of at most tile² pairs
+    * instead of serializing on the reducer that collected it. This is
+    * the load-balanced partitioning of REPOSE (ICDE 2021).
+    *
+    * Only non-singleton buckets cross that exchange. Routing just the
+    * hot units through it (a union with an in-place branch over the same
+    * aggregate) writes the bucket shuffle twice whenever the input is a
+    * cached frame: AQE cannot reuse an exchange above a table-cache
+    * query stage (NOTES.md). */
+  def bucketPairs(df: DataFrame, keys: Seq[Column], member: Column,
+      tile: Int = PairTile): DataFrame = {
+    require(tile >= 1, s"tile must be >= 1, got $tile")
+    val isStruct = df.select(member).schema.head.dataType
+      .isInstanceOf[org.apache.spark.sql.types.StructType]
+    def id(m: Column): Column = if (isStruct) m.getField("id") else m
+    val ms = col("ms")
+    val byId = when(size(ms) > tile, array_sort(ms, (x, y) =>
+      when(id(x) < id(y), -1).when(id(x) > id(y), 1).otherwise(0))).otherwise(ms)
+    val last = col("last")
+    val slicePairs = flatten(transform(sequence(lit(0), last),
+      i => transform(sequence(i, last), j => struct(i.as("i"), j.as("j")))))
+    def slab(i: Column): Column = slice(ms, i * tile + 1, lit(tile))
+    df.filter(id(member).isNotNull)
+      .groupBy(keys: _*).agg(collect_list(member).as("ms"))
+      .filter(size(ms) >= 2)
+      .select(byId.as("ms"), floor((size(ms) - 1) / tile).cast("int").as("last"))
+      .select(ms, explode(slicePairs).as("t"))
+      // r stays null for a diagonal unit, so its slice ships once
+      .select(slab(col("t.i")).as("l"),
+        when(col("t.i") =!= col("t.j"), slab(col("t.j"))).as("r"))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+      .select(explode(col("l")).as("a"), coalesce(col("r"), col("l")).as("r"))
+      .select(col("a"), explode(col("r")).as("b"))
+      .filter(id(col("a")) < id(col("b")))
+      .distinct()
   }
 }

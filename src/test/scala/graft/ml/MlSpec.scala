@@ -87,11 +87,11 @@ class MlSpec extends SparkSpecBase {
     // verification makes precision exact; banding (64 bands × 2 rows)
     // makes a miss at j>=0.5 a ~1e-8 event
     assert(lsh == exact)
-    // the skew-hardened candidate generator (salted g²-cell self-join,
-    // collapsed band/bucket hash key) is output-identical end to end
-    val salted = Dedup.minhashDupPairsSalted(docs, 0.5, g = 8)
+    // every non-singleton bucket forced through the hot-bucket tiled
+    // expansion is output-identical end to end
+    val tiled = Dedup.minhashDupPairs(docs, 0.5, tile = 1)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    assert(salted == exact)
+    assert(tiled == exact)
     spark.catalog.clearCache() // both paths persist signature tables
   }
 

@@ -207,49 +207,99 @@ class ScaleSpec extends SparkSpecBase {
     }
   }
 
-  test("salted candidate self-join: hot bucket spreads over salt cells, exact parity") {
-    // one pathologically hot signature bucket (200 members -> 19,900
-    // pairs) among small background buckets — the skew shape a
-    // boilerplate LSH band or shared deletion signature produces
-    val g = 4
-    val rows = (1L to 200L).map(id => ("hot", id)) ++
-      (1L to 50L).map(i => (s"cold_${i % 10}", 1000L + i))
-    val df = rows.toDF("sig", "doc_id")
-    val salted = Skew.saltedSelfJoinPairs(df, "sig", "doc_id", g)
-    // parity: exactly the direct self-join's unordered pair set
-    val l = df.select($"sig", $"doc_id".as("id_a"))
-    val r = df.select($"sig", $"doc_id".as("id_b"))
-    val direct = l.join(r, "sig").filter($"id_a" < $"id_b")
-      .select($"sig", $"id_a", $"id_b")
-      .as[(String, Long, Long)].collect().toSet
-    val got = salted.as[(String, Long, Long)].collect().toSet
-    assert(got == direct,
-      s"salted pairs diverge: missing ${(direct -- got).size}, " +
-        s"fabricated ${(got -- direct).size} of ${direct.size}")
-    // plan: the join shuffles on (bucket, s1, s2) — the salt coordinates
-    // must be IN the exchange key, or nothing was spread
-    val exchanges = withForcedShufflePlanning {
-      Skew.saltedSelfJoinPairs(df, "sig", "doc_id", g)
-        .queryExecution.executedPlan.collect {
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-        }
+  /** (a, b) id pairs of a `bucketPairs` frame over (k, id) rows, with the
+    * member passed as a bare id or as an `id`-keyed struct. */
+  private def bucketPairIds(df: org.apache.spark.sql.DataFrame, tile: Int,
+      asStruct: Boolean): Set[(Long, Long)] = {
+    val member =
+      if (asStruct) struct($"id", ($"id" * 10).as("payload")) else $"id"
+    val pairs = Skew.bucketPairs(df, Seq($"k"), member, tile)
+    val ids =
+      if (asStruct) pairs.select($"a.id", $"b.id") else pairs.select($"a", $"b")
+    ids.as[(Long, Long)].collect().toSet
+  }
+
+  test("bucketPairs equals a direct self-join on edge inputs") {
+    val tile = 3
+    // ids within a bucket in scrambled order, so a tiled bucket must sort
+    def bucket(k: String, n: Int, base: Long): Seq[(String, Option[Long])] =
+      (0 until n).map(i => (k, Option(base + (i * 5L) % n)))
+    val cases: Seq[(String, Seq[(String, Option[Long])])] = Seq(
+      "empty frame" -> Nil,
+      "all singletons" -> Seq(("k1", Some(1L)), ("k2", Some(2L)), ("k3", Some(3L))),
+      "null member id" -> Seq(("k", None), ("k", Some(1L)), ("k", Some(2L)),
+        ("j", None), ("j", Some(5L))),
+      "repeated id" -> Seq(("k", Some(1L)), ("k", Some(1L)), ("k", Some(2L)),
+        ("h", Some(4L)), ("h", Some(4L)), ("h", Some(5L)), ("h", Some(6L)),
+        ("h", Some(7L))),
+      "tile-1" -> bucket("k", tile - 1, 10L),
+      "tile" -> bucket("k", tile, 10L),
+      "tile+1" -> bucket("k", tile + 1, 10L),
+      "2*tile+1" -> bucket("k", 2 * tile + 1, 10L),
+      "mixed sizes, shared pairs" -> (bucket("a", tile - 1, 0L) ++
+        bucket("b", tile, 0L) ++ bucket("c", tile + 1, 0L) ++
+        bucket("d", 2 * tile + 1, 0L) ++ Seq(("e", Some(99L)))))
+    cases.foreach { case (name, rows) =>
+      val df = rows.toDF("k", "id")
+      val direct = df.select($"k", $"id".as("id_a"))
+        .join(df.select($"k", $"id".as("id_b")), "k")
+        .filter($"id_a" < $"id_b").select($"id_a", $"id_b")
+        .as[(Long, Long)].collect().toSet
+      for (asStruct <- Seq(false, true); t <- Seq(tile, Skew.PairTile)) {
+        val got = bucketPairIds(df, t, asStruct)
+        assert(got == direct, s"$name (tile $t, struct member $asStruct): " +
+          s"missing ${direct -- got}, fabricated ${got -- direct}")
+      }
     }
-    assert(exchanges.nonEmpty)
-    exchanges.foreach { e =>
-      val p = e.outputPartitioning.toString
-      assert(p.contains("s1") && p.contains("s2"),
-        s"join exchange not keyed on salt cells: $p")
+    // the member payload travels with its id through the tiled branch
+    val df = bucket("k", 2 * tile + 1, 10L).toDF("k", "id")
+    val payloads = Skew.bucketPairs(df, Seq($"k"),
+        struct($"id", ($"id" * 10).as("payload")), tile)
+      .select($"a.id", $"a.payload", $"b.id", $"b.payload")
+      .as[(Long, Long, Long, Long)].collect()
+    assert(payloads.nonEmpty &&
+      payloads.forall(r => r._2 == r._1 * 10 && r._4 == r._3 * 10))
+  }
+
+  test("bucketPairs tiles a hot bucket over tasks under default AQE") {
+    // one hot bucket (200 members -> 19,900 pairs), default session: AQE
+    // on, default broadcast threshold. The expanding stage's partial
+    // distinct writes each pair once, so the stage whose written records
+    // equal the pair count is the one that expanded them; count its
+    // tasks that wrote any.
+    val k = 200
+    val df = (1L to k.toLong).map(id => ("hot", id)).toDF("k", "id")
+    val expected = (for (a <- 1L to k; b <- a + 1 to k) yield (a, b)).toSet
+    def expandingTasks(tile: Int): Int = {
+      val written = scala.collection.mutable.Map
+        .empty[Int, scala.collection.mutable.ArrayBuffer[Long]]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (t.taskMetrics != null) written.synchronized {
+            written.getOrElseUpdate(t.stageId,
+              scala.collection.mutable.ArrayBuffer.empty[Long]) +=
+              t.taskMetrics.shuffleWriteMetrics.recordsWritten
+          }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      val got = try {
+        val ids = Skew.bucketPairs(df, Seq($"k"), $"id", tile)
+          .as[(Long, Long)].collect().toSet
+        org.apache.spark.sql.GraftBridge.waitListenerBus(spark.sparkContext)
+        ids
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(got == expected, s"tile $tile: pair set diverges")
+      val expanding = written.values.filter(_.sum == expected.size.toLong)
+      assert(expanding.size == 1,
+        s"tile $tile: no single stage wrote the ${expected.size} pairs: $written")
+      expanding.head.count(_ > 0)
     }
-    // and the hot bucket's pairs really land in many independent
-    // reducer cells (the point: C(k,2) work no longer serializes on one
-    // task) — up to g^2 = 16 cells for the single hot key
-    val hotCells = withForcedShufflePlanning {
-      Skew.saltedSelfJoinPairs(df, "sig", "doc_id", g)
-        .filter($"sig" === "hot")
-        .select(spark_partition_id()).distinct().count()
-    }
-    assert(hotCells > g,
-      s"hot bucket concentrated in $hotCells partitions; salting spread nothing")
+    assert(expandingTasks(Skew.PairTile) == 1,
+      "a bucket within tile expands as one unit, in one task")
+    val spread = expandingTasks(16)
+    assert(spread > 1,
+      s"hot bucket's pairs expanded in $spread task(s); tiling spread nothing")
   }
 
   test("dup-cluster propagation survives a hot hub: salted join parity + spread") {
@@ -878,46 +928,28 @@ class ScaleSpec extends SparkSpecBase {
     }
   }
 
-  test("grouped pair expansion: a bucket past maxBucket fails LOUDLY with the " +
-      "knob named, in every grouped generator (r17; ADVICE r16)") {
-    // the honest account lives in Skew.boundedBucket: collect_list's
-    // single aggregation buffer cannot spill, so a pathological hot
-    // bucket must become a NAMED error pointing at the salted
-    // generator, not an opaque executor OOM. maxBucket=1 makes every
-    // real bucket "pathological", so the guard must fire on each
-    // grouped candidate generator; healthy defaults (2^20) leave every
-    // scored result untouched (the oracle re-proves that).
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    def assertGuardFires(tag: String)(body: => Unit): Unit = {
-      val e = intercept[Exception](body)
-      assert(messages(e).exists(m =>
-        m.contains("maxBucket=1") && m.contains("salted")),
-        s"$tag: guard did not fire loudly: ${messages(e).mkString(" | ")}")
-    }
-    // two identical vectors share every band bucket
-    val emb = Seq((1L, Seq.fill(64)(0.5)), (2L, Seq.fill(64)(0.5)))
-      .toDF("vec_id", "embedding")
-    assertGuardFires("cosineDupPairsBanded") {
-      graft.ml.Similarity.cosineDupPairsBanded(emb, 0.9, maxBucket = 1).count()
-    }
-    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "alpha beta gamma delta epsilon zeta"))
+  test("lshCandidates with tile = 1 returns the exact pair set") {
+    // identical documents share every band bucket; tile = 1 sends every
+    // non-singleton bucket through the tiled branch (this input raised
+    // under the old per-bucket size bound)
+    val docs = (Seq.fill(6)("alpha beta gamma delta epsilon zeta") ++
+        Seq("one two three four five six", "one two three four five seven"))
+      .zipWithIndex.map { case (t, i) => (i.toLong + 1, t) }
       .toDF("doc_id", "text")
-    assertGuardFires("simhashDupPairs") {
-      graft.ml.Dedup.simhashDupPairs(docs, 3, maxBucket = 1).count()
-    }
-    assertGuardFires("lshCandidates") {
+    try {
       val sigs = graft.ml.Dedup.minhashSignatures(graft.ml.Dedup.shingled(docs))
-      try graft.ml.Dedup.lshCandidates(sigs, maxBucket = 1).count()
-      finally spark.catalog.clearCache()
-    }
-    assertGuardFires("fuzzyPairs") {
-      val strs = Seq((1L, "prefix"), (2L, "prefixx")).toDF("id", "s")
-      try graft.ml.Fuzzy.fuzzyPairs(strs, "id", "s", 2, maxBucket = 1).count()
-      finally spark.catalog.clearCache()
-    }
+      val banded = graft.ml.Dedup.bandBuckets(sigs)
+      val direct = banded.select($"band", $"bucket", $"doc_id".as("doc_a"))
+        .join(banded.select($"band", $"bucket", $"doc_id".as("doc_b")),
+          Seq("band", "bucket"))
+        .filter($"doc_a" < $"doc_b").select($"doc_a", $"doc_b")
+        .as[(Long, Long)].collect().toSet
+      val tiled = graft.ml.Dedup.lshCandidates(sigs, tile = 1)
+        .as[(Long, Long)].collect().toSet
+      assert(tiled == direct)
+      assert((for (a <- 1L to 6L; b <- a + 1 to 6L) yield (a, b)).toSet
+        .subsetOf(tiled))
+    } finally spark.catalog.clearCache()
   }
 
   test("skewKurt power sums survive cluster-scale row counts without " +
