@@ -75,7 +75,7 @@ object GenBlooms {
     * different canonical bytes than the stored values, but Spark's
     * implicit join/comparison casts could still match the rows, so a
     * cross-kind miss is no proof (the bloom analog of the envelope
-    * tier's sameKind guard). */
+    * tier's storage-tag check). */
   final class Bloom(val m: Int, val k: Int, val tag: String,
       val bits: Array[Long]) extends Serializable {
     def this(m: Int, k: Int, tag: String) =

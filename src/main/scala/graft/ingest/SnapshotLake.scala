@@ -1,6 +1,10 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo,
+  Expression, GreaterThanOrEqual, LessThanOrEqual, Literal, Or}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
+  IntegerType, LongType, ShortType, StringType}
 
 /** Minimal snapshot-versioned table: a commit log + read-at-version over
   * the same immutable-generation machinery the ledgered sinks use — the
@@ -36,12 +40,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    unique temp name, then atomically claimed WITHOUT overwrite —
   *    rename on HDFS (NameNode-atomic), hard link on the local
   *    filesystem (where Hadoop's no-overwrite rename is a non-atomic
-  *    exists-check + rename(2); see [[claimVersionFile]]). Losing a
-  *    race for version N surfaces as FileAlreadyExistsException and the
-  *    writer retries at N+1 — optimistic concurrency, never a torn or
-  *    clobbered commit. On object stores (S3A) front the commit log
-  *    with a consistent metadata layer instead of pointing it at the
-  *    bucket.
+  *    exists-check + rename(2); see [[claimVersion]]). Losing a
+  *    race for version N fails the claim and the writer retries at
+  *    N+1 — optimistic concurrency, never a torn or clobbered commit.
+  *    On object stores (S3A) front the commit log with a consistent
+  *    metadata layer instead of pointing it at the bucket.
   *  - A reader materializes its file listing when the DataFrame is
   *    created, and generations are never mutated — so a frame read at
   *    version N keeps returning version N even after later commits
@@ -269,14 +272,8 @@ class SnapshotLake(root: String) {
     * batch marker wins. */
   private def newestBatchMarker(spark: SparkSession)(
       eligible: String => Boolean): Option[Long] = {
-    val fs = hadoopFs(spark)
     versions(spark).reverseIterator.map { v =>
-      val p = new org.apache.hadoop.fs.Path(f"$commitsDir/v$v%08d.json")
-      val in = fs.open(p)
-      val txt =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
+      val txt = commitJson(spark, v)
       if (!eligible(txt)) None
       else """"batchId":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
     }.collectFirst { case Some(b) => b }
@@ -334,10 +331,9 @@ class SnapshotLake(root: String) {
   private[graft] def commitTagged(df: DataFrame, overwrite: Boolean,
       batchId: Option[Long], queryId: Option[String] = None): Long = {
     val spark = df.sparkSession
-    val fs = hadoopFs(spark)
     // data first, under a writer-unique UNCOMMITTED generation — readers
     // cannot see it until the commit file below publishes it
-    val gen = s"gen-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+    val gen = newGenName()
     writeGen(spark, df, gen)
     val tag = s""""op":"${if (overwrite) "overwrite" else "append"}",""" +
       batchId.map(b => s""""batchId":$b,""").getOrElse("") +
@@ -345,7 +341,7 @@ class SnapshotLake(root: String) {
     // losing the claim race retries against the re-read latest — an
     // append retry re-bases on the winner's snapshot, exactly the
     // optimistic-concurrency contract
-    val v = retryClaim(spark, fs, tag) { next =>
+    val v = retryClaim(spark, tag) { next =>
       if (overwrite || next == 1) Seq(gen)
       else dirsAt(spark, next - 1) :+ gen
     }
@@ -363,30 +359,27 @@ class SnapshotLake(root: String) {
     * racing save silently overwrite a just-created table. */
   def commitInitial(df: DataFrame): Option[Long] = {
     val spark = df.sparkSession
-    val fs = hadoopFs(spark)
     if (latestVersion(spark).isDefined) return None // cheap pre-check only
-    val gen = s"gen-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+    val gen = newGenName()
     writeGen(spark, df, gen)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(commitsDir))
-    val json = s"""{"version":1,"op":"create","dirs":["$gen"]}"""
-    val tmp = new org.apache.hadoop.fs.Path(s"$commitsDir/.tmp-$gen-1")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    try {
-      claimVersionFile(spark, fs, tmp,
-        new org.apache.hadoop.fs.Path(f"$commitsDir/v${1L}%08d.json"))
+    if (claimVersion(spark, gen, 1L, s"""{"version":1,"op":"create","dirs":["$gen"]}"""))
       Some(1L)
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        fs.delete(tmp, false)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$root/$gen"), true)
-        None
+    else {
+      hadoopFs(spark).delete(new org.apache.hadoop.fs.Path(s"$root/$gen"), true)
+      None
     }
   }
 
-  /** Atomically claim `dst` with `tmp`'s content, throwing Hadoop's
-    * FileAlreadyExistsException when another committer won the version.
+  /** A fresh writer-unique generation name. */
+  private def newGenName(): String =
+    s"gen-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+
+  /** The one commit-claim step: write `json` to a temp file named by the
+    * writer-unique `token` (two writers colliding on a temp path would
+    * turn the loser's retryable claim race into a spurious failure),
+    * then atomically claim version `next` with it WITHOUT overwrite.
+    * Returns false, temp file removed, when another committer already
+    * holds `next`.
     *
     * On HDFS, rename-without-overwrite is the primitive: the NameNode
     * checks-and-renames under one namespace lock. On the LOCAL
@@ -396,23 +389,28 @@ class SnapshotLake(root: String) {
     * "win" and one commit would be silently clobbered (TOCTOU). The
     * POSIX primitive that atomically fails on an existing destination
     * is link(2), so local roots claim via Files.createLink instead. */
-  private def claimVersionFile(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Unit = {
-    if (fs.getScheme == "file") {
-      try java.nio.file.Files.createLink(
-        java.nio.file.Paths.get(dst.toUri.getPath),
-        java.nio.file.Paths.get(tmp.toUri.getPath))
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          throw new org.apache.hadoop.fs.FileAlreadyExistsException(dst.toString)
-      }
-      fs.delete(tmp, false)
-    } else {
-      org.apache.hadoop.fs.FileContext.getFileContext(
-        tmp.toUri, spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, dst)
+  private def claimVersion(spark: SparkSession, token: String, next: Long,
+      json: String): Boolean = {
+    val fs = hadoopFs(spark)
+    // create makes the missing _commits directory of a fresh table
+    val tmp = new org.apache.hadoop.fs.Path(s"$commitsDir/.tmp-$token-$next")
+    val dst = new org.apache.hadoop.fs.Path(f"$commitsDir/v$next%08d.json")
+    val out = fs.create(tmp, true)
+    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    try {
+      if (fs.getScheme == "file") {
+        java.nio.file.Files.createLink(java.nio.file.Paths.get(dst.toUri.getPath),
+          java.nio.file.Paths.get(tmp.toUri.getPath))
+        fs.delete(tmp, false)
+      } else org.apache.hadoop.fs.FileContext.getFileContext(
+        tmp.toUri, spark.sparkContext.hadoopConfiguration).rename(tmp, dst)
+      true
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException |
+           _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        fs.delete(tmp, false)
+        false
     }
   }
 
@@ -755,22 +753,28 @@ class SnapshotLake(root: String) {
 
   /** Copy-on-write UPSERT: target rows whose key equals a source row's
     * key are replaced by that source row; source rows matching nothing
-    * insert. The rewrite is scoped by the manifest stats: a generation
-    * none of whose files' key envelopes intersect the source's key
-    * envelope provably contains no match and CARRIES FORWARD into the
-    * new commit untouched — on a 100 TB table where upserts land in the
-    * recent key range, the rewrite touches the tail generations and the
-    * commit re-references the rest, which is exactly a table format's
-    * file-level MERGE scoping one level up. Generations without stats
-    * (older writers) rewrite conservatively.
+    * insert. The rewrite is scoped by a predicate over the key columns —
+    * each key within the source's [min, max], and, for a source of at
+    * most [[SnapshotLake.BloomScopeCap]] distinct keys, one of its key
+    * tuples — judged per generation by [[genMayMatch]], the read path's
+    * own envelope and Bloom check. A key whose source type does not
+    * compare with the target column's stored values (DATE into
+    * TIMESTAMP) does not bound the scope. A generation that provably
+    * holds no match CARRIES FORWARD into the new commit untouched — on a
+    * 100 TB table where upserts land in the recent key range, the rewrite
+    * touches the tail generations and the commit re-references the
+    * rest, which is exactly a table format's file-level MERGE scoping
+    * one level up. Generations without stats (older writers) rewrite
+    * conservatively.
     *
     * Contract: source keys should be unique (a duplicated source key
     * inserts duplicates, same as repeated appends); null source keys
     * never match a target row and insert as-is. Publication is
-    * optimistic WITHOUT rebase: a commit racing in between the snapshot
-    * read and the claim makes the rewrite stale, so the merge aborts
-    * with ConcurrentModificationException (cleaning up its generation)
-    * instead of silently dropping the winner's rows — rerun to rebase.
+    * optimistic ([[publishRewrite]]): a racing commit whose new
+    * generations are out of the merge's scope is rebased across; any
+    * other race aborts with ConcurrentModificationException (cleaning up
+    * its generation) instead of silently dropping the winner's rows —
+    * rerun to rebase.
     */
   def merge(source: DataFrame, keyCols: Seq[String]): Long =
     mergeTagged(source, keyCols, None, None)
@@ -799,78 +803,67 @@ class SnapshotLake(root: String) {
     // cannot disagree with its own materialized changes
     val src = source.persist()
     try {
-      // source key envelope: one tiny agg job, 2·|keys| scalars
+      // the merge's key scope as a predicate over the key columns, judged
+      // per generation by the read path's own check ([[genMayMatch]]).
+      // Envelope part: per key `k >= min AND k <= max` of the source,
+      // from one tiny agg job. A key with no non-null source value
+      // matches no target row (equi-join semantics), so the scope is
+      // `false`: an empty or all-null-key source rewrites nothing and the
+      // merge degrades to a plain append.
       val aggs = keyCols.flatMap(k => Seq(min(col(k)).as(s"mn_$k"), max(col(k)).as(s"mx_$k")))
       val env = src.agg(aggs.head, aggs.tail: _*).collect()(0)
-      val srcEnv: Map[String, (Any, Any)] = keyCols.flatMap { k =>
-        (normScalar(env.getAs[Any](s"mn_$k")), normScalar(env.getAs[Any](s"mx_$k"))) match {
-          case (Some(mn), Some(mx)) => Some(k -> (mn, mx))
-          case _ => None // non-primitive key type or all-null: no envelope
-        }
-      }.toMap
-      val srcKeys = src.select(keyCols.map(col): _*).distinct()
-      // BLOOM tier of the scoping: when the distinct source key set is
-      // small (bounded metadata collect, like every other collect here),
-      // a generation whose every file's blooms reject every source key
-      // tuple provably holds no match and carries forward even when its
-      // ENVELOPE intersects — the case that matters on unsorted layouts,
-      // where every file's envelope spans the whole key domain and the
-      // envelope tier alone would rewrite everything for a 3-row upsert.
-      // Tuples containing NULL match no target row and are dropped.
-      // LAZY: the collect job runs only if some generation actually has
-      // a sidecar (blooms are opt-in — most tables never pay this), and
-      // the sidecar parse runs only if the key set turned out small
-      lazy val keyTuples: Option[Seq[Seq[Any]]] = {
-        val head = srcKeys.limit(SnapshotLake.BloomScopeCap + 1).collect()
-        if (head.length > SnapshotLake.BloomScopeCap) None
-        else Some(head.toSeq
-          .map(r => keyCols.indices.map(i => r.get(i)).toSeq)
-          .filterNot(_.contains(null)))
+      lazy val snapSchema = schemaOf(spark, dirs)
+      // A key bounds the scope only when its source values compare with
+      // the target column's stored values in one space: the same type, or
+      // both integral, or both floating. Otherwise the join casts one side
+      // (DATE days vs TIMESTAMP micros both store as Long, a collated
+      // string compares case-blind) and the stored values prove nothing,
+      // so that key is left out of the scope.
+      def bounding(srcType: DataType, tgtType: DataType) = (srcType, tgtType) match {
+        case (ByteType | ShortType | IntegerType | LongType,
+              ByteType | ShortType | IntegerType | LongType) => true
+        case (FloatType | DoubleType, FloatType | DoubleType) => true
+        case (s: StringType, t: StringType) => s == StringType && t == StringType
+        case (s, t) => s == t
       }
+      val resolver = spark.sessionState.conf.resolver
+      lazy val keyAttrs: Seq[(AttributeReference, Int)] = keyCols.zipWithIndex.flatMap {
+        case (k, i) =>
+          val srcType = env.schema(s"mn_$k").dataType
+          snapSchema.fields.find(f => resolver(f.name, k))
+            .filter(f => bounding(srcType, f.dataType))
+            .map(f => (AttributeReference(f.name, srcType)(), i))
+      }
+      def litOf(a: AttributeReference, v: Any) = Literal.create(v, a.dataType)
+      val envScope: Expression =
+        if (keyCols.exists(k => env.isNullAt(env.fieldIndex(s"mn_$k")))) Literal.FalseLiteral
+        else keyAttrs.map { case (a, i) =>
+          And(GreaterThanOrEqual(a, litOf(a, env.getAs[Any](s"mn_${keyCols(i)}"))),
+            LessThanOrEqual(a, litOf(a, env.getAs[Any](s"mx_${keyCols(i)}")))): Expression
+        }.reduceOption(And).getOrElse(Literal.TrueLiteral)
+      val srcKeys = src.select(keyCols.map(col): _*).distinct()
+      // Bloom part: when the distinct source key set is small (a bounded
+      // metadata collect), the disjunction of the key tuples' equalities
+      // lets a generation whose Blooms reject every tuple carry forward
+      // even when its envelope intersects — the unsorted-layout case,
+      // where every file's envelope spans the key domain. Tuples holding
+      // NULL match nothing and are dropped. Each tuple lies inside the
+      // envelope, so once a generation passes the envelope part the key
+      // part alone is the stricter check. LAZY: the collect runs only
+      // once a generation in envelope scope has a Bloom sidecar, so
+      // tables without Blooms never pay for it.
+      lazy val inKeyScope = genMayMatch(spark, if (keyAttrs.isEmpty) Nil else {
+        val head = srcKeys.limit(SnapshotLake.BloomScopeCap + 1).collect()
+        if (head.length > SnapshotLake.BloomScopeCap) Nil
+        else Seq(head.toSeq.filterNot(r => keyCols.indices.exists(r.isNullAt))
+          .map(r => keyAttrs.map { case (a, i) => EqualTo(a, litOf(a, r.get(i))): Expression }
+            .reduce(And))
+          .reduceOption(Or).getOrElse(Literal.FalseLiteral))
+      })
+      val inEnvelope = genMayMatch(spark, Seq(envScope))
       val conf = spark.sparkContext.hadoopConfiguration
-      def bloomMayContain(gen: String): Boolean =
-        // load FIRST (it answers absent AND version-stale sidecars with
-        // one exists + parse), so the keyTuples collect job is forced
-        // only when a usable sidecar actually exists
-        GenBlooms.load(conf, s"$root/$gen") match {
-          case None => true // no usable sidecar: no proof
-          case Some(byFile) => keyTuples match {
-            case None => true
-            case Some(tuples) =>
-              byFile.isEmpty || byFile.values.exists { colBlooms =>
-                tuples.exists(t => keyCols.zip(t).forall { case (c, v) =>
-                  // sidecar keys are lowercased — match Spark's
-                  // case-insensitive resolution (GenBlooms.write)
-                  colBlooms.get(c.toLowerCase) match {
-                    case None => true // column not bloomed: unconstrained
-                    case Some(b) => normScalar(v) match {
-                      case None => true
-                      case Some(n) => b.mightContain(n)
-                    }
-                  }
-                })
-              }
-          }
-        }
-      // A key tuple containing NULL matches no target row (equi-join
-      // semantics), so a source with NO fully-non-null key tuple —
-      // empty frame, or every key null — provably touches nothing:
-      // scope to zero generations and the merge degrades to a plain
-      // append of the source. Without this, srcEnv comes back empty,
-      // genMayContainKeys answers a conservative true for EVERY
-      // generation, and an empty upstream frame triggers a silent
-      // 100%-of-table rewrite to apply zero changes (r13 review). The
-      // probe job only runs when the envelope is already empty (the
-      // common path pays nothing: a non-empty envelope implies
-      // non-null keys exist).
-      val hasMatchableKey = srcEnv.size == keyCols.size || srcKeys
-        .filter(keyCols.map(k => col(k).isNotNull)
-          .reduce((a, b) => a && b))
-        .limit(1).count() > 0
-      def genInScope(gen: String): Boolean =
-        hasMatchableKey &&
-          genMayContainKeys(spark, gen, keyCols, srcEnv) &&
-          bloomMayContain(gen)
+      def genInScope(gen: String): Boolean = inEnvelope(gen) &&
+        (!GenBlooms.load(conf, s"$root/$gen").exists(_.nonEmpty) || inKeyScope(gen))
       val (affected, untouched) = dirs.partition(genInScope)
       import org.apache.spark.sql.functions.lit
       // affected generations read under the SNAPSHOT's full schema
@@ -879,9 +872,8 @@ class SnapshotLake(root: String) {
       // a key column entirely, and the key joins below would fail
       // analysis on an unresolved column — null-filled, such rows
       // simply match no source key, which is the correct semantics
-      // (r13 review)
       val affectedDf = if (affected.isEmpty) None
-        else Some(spark.read.schema(schemaOf(spark, dirs))
+        else Some(spark.read.schema(snapSchema)
           .parquet(affected.map(d => s"$root/$d"): _*))
       val keep = affectedDf.map(_.join(srcKeys, keyCols, "left_anti"))
       val rewritten = keep match {
@@ -907,51 +899,35 @@ class SnapshotLake(root: String) {
     } finally src.unpersist()
   }
 
-  /** Copy-on-write DELETE of rows matching `predicate`, scoped the same
-    * way as [[merge]]: a generation none of whose files' envelopes can
-    * satisfy the predicate ([[graft.sources.StatsPruning]] — the same
-    * evaluator the read path prunes with) carries forward untouched;
-    * the rest rewrite keeping only non-matching rows. Returns the new
-    * version, or the current one unchanged when stats prove nothing
-    * matches anywhere (a free no-op). Same optimistic-abort publication
-    * contract as merge. */
+  /** Copy-on-write DELETE of rows matching `predicate`, scoped like
+    * [[merge]]: a generation that [[genMayMatch]] proves holds no
+    * matching row — the read path's own envelope and Bloom check —
+    * carries forward untouched; the rest rewrite keeping only
+    * non-matching rows. Returns the current version unchanged when
+    * nothing may match anywhere, including a predicate that folds to
+    * `false` (a free no-op). Same optimistic-abort publication contract
+    * as merge. */
   def delete(spark: SparkSession, predicate: org.apache.spark.sql.Column): Long = {
     val base = latestVersion(spark).getOrElse(
       sys.error(s"delete from a never-committed lake: $root"))
     val dirs = dirsAt(spark, base)
-    // resolve the predicate against the snapshot's schema so the stats
-    // evaluator sees bound AttributeReferences — from the OPTIMIZED plan,
-    // where implicit casts on literals have been constant-folded (the
-    // analyzed plan's Cast(lit) wrappers would read as "unknown shape"
-    // and defeat scoping). A predicate the optimizer eliminates entirely
-    // (folds to true/false) leaves no Filter node; fall back to
-    // rewriting everything, which is correct just not scoped.
+    // resolve the predicate against the snapshot's schema so the check
+    // sees bound AttributeReferences — from the OPTIMIZED plan, where
+    // implicit casts on literals have been constant-folded (the analyzed
+    // plan's Cast(lit) wrappers would read as "unknown shape" and defeat
+    // scoping). A predicate the optimizer eliminates leaves no Filter
+    // node: folded to false it empties the plan and matches nothing,
+    // folded to true it matches everything.
     val snapshot = readAt(spark, base)
-    val cond = snapshot.filter(predicate).queryExecution.optimizedPlan.collect {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }.headOption
-    val conf = spark.sparkContext.hadoopConfiguration
-    def genMayMatch(gen: String): Boolean = cond match {
-      case None => true
-      case Some(c) =>
-        val envMay = GenStats.load(conf, s"$root/$gen") match {
-          case Some(stats) =>
-            stats.isEmpty || stats.values.exists(fileSt =>
-              graft.sources.StatsPruning.mayMatch(c, fileSt))
-          case None => true // statless: rewrite conservatively
-        }
-        // bloom tier, same evaluator AND the same equality gate the read
-        // path uses: only a predicate containing an equality shape can
-        // ever produce a bloom proof, so a pure range delete must not
-        // parse the file-sized sidecars at all
-        val hasEq = graft.sources.BloomPruning.hasEqualityShape(c)
-        envMay && (!hasEq || (GenBlooms.load(conf, s"$root/$gen") match {
-          case None => true
-          case Some(byFile) => byFile.isEmpty || byFile.values.exists(
-            bs => graft.sources.BloomPruning.mayMatch(c, bs))
-        }))
+    val scope = snapshot.filter(predicate).queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+          if r.data.isEmpty => Seq(Literal.FalseLiteral)
+      case p => p.collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }.toSeq
     }
-    val affected = dirs.filter(genMayMatch)
+    val inScope = genMayMatch(spark, scope)
+    val affected = dirs.filter(inScope)
     if (affected.isEmpty) return base
     val untouched = dirs.filterNot(affected.contains)
     // SQL DELETE removes rows where the predicate is TRUE; NULL keeps
@@ -960,72 +936,35 @@ class SnapshotLake(root: String) {
     // null-filled): under schema evolution the affected subset can
     // predate a predicate column, and mergeSchema over the subset alone
     // would make the filter fail analysis; null-filled, the predicate
-    // evaluates NULL there and the rows are kept — correct (r13 review)
+    // evaluates NULL there and the rows are kept — correct
     val affectedDf = spark.read.schema(snapshot.schema)
       .parquet(affected.map(d => s"$root/$d"): _*)
     val hit = org.apache.spark.sql.functions.coalesce(predicate,
       org.apache.spark.sql.functions.lit(false))
     val changes = affectedDf.filter(hit).withColumn(
       SnapshotLake.ChangeTypeCol, org.apache.spark.sql.functions.lit("delete"))
-    // same evaluator scopes the rewrite AND gates rebase-across
+    // same check scopes the rewrite AND gates rebase-across
     publishRewrite(spark, base, untouched, affectedDf.filter(!hit),
-      Some(changes), mayOverlapScope = genMayMatch, op = "delete")
+      Some(changes), mayOverlapScope = inScope, op = "delete")
   }
 
-  /** Could generation `gen` hold a row whose every key column falls in
-    * the source envelope? Missing stats at any level answer yes. */
-  private def genMayContainKeys(spark: SparkSession, gen: String,
-      keyCols: Seq[String], srcEnv: Map[String, (Any, Any)]): Boolean = {
-    if (srcEnv.isEmpty) return true
-    GenStats.load(spark.sparkContext.hadoopConfiguration, s"$root/$gen") match {
-      case None => true
-      case Some(stats) if stats.isEmpty => true
-      case Some(stats) => stats.values.exists { fileSt =>
-        keyCols.forall { k =>
-          srcEnv.get(k) match {
-            case None => true
-            case Some((mn, mx)) => fileSt.cols.get(k) match {
-              case Some(cs) => (cs.min, cs.max) match {
-                case (Some(a), Some(b)) if sameKind(a, mn) =>
-                  val ord = GenStats.ordering(cs.tag)
-                  ord.lteq(a, mx) && ord.gteq(b, mn)
-                // absent min/max only proves non-match when the column
-                // is provably all-NULL (nulls == rows): parquet omits
-                // min/max for NaN-containing and oversized values while
-                // still writing counts, and those files may hold real
-                // matching keys
-                case (None, None) =>
-                  !cs.nulls.exists(n => fileSt.rows >= 0 && n == fileSt.rows)
-                case _ => true
-              }
-              case None => true
-            }
-          }
-        }
-      }
+  /** Could a generation hold a row passing every one of `filters`? Yes
+    * when some file of it passes [[graft.sources.FilePruning]] — the read
+    * path's own per-file check, so merge, delete and rebase scoping cannot
+    * drift from read pruning. A generation without stats lists its files
+    * through its Bloom sidecar, parsed only when the Bloom tier can prune;
+    * one with neither stays in scope unless a filter is `false`. */
+  private def genMayMatch(spark: SparkSession, filters: Seq[Expression]): String => Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val prune = new graft.sources.FilePruning(filters)
+    gen => {
+      val stats = GenStats.load(conf, s"$root/$gen").getOrElse(Map.empty)
+      lazy val blooms = GenBlooms.load(conf, s"$root/$gen").getOrElse(Map.empty)
+      val files = if (stats.nonEmpty) stats.keySet
+        else if (prune.wantsBlooms) blooms.keySet else Set.empty[String]
+      if (files.isEmpty) prune.mayMatch(None, None)
+      else files.exists(f => prune.mayMatch(stats.get(f), blooms.get(f)))
     }
-  }
-
-  private def sameKind(a: Any, b: Any): Boolean = (a, b) match {
-    case (_: Long, _: Long) | (_: Double, _: Double) |
-         (_: String, _: String) | (_: Boolean, _: Boolean) => true
-    case _ => false
-  }
-
-  /** External row value → the stats value space (None: unsupported).
-    * Doubles fold -0.0 → 0.0 like every other boundary into that space
-    * ([[GenStats.foldZero]]). */
-  private def normScalar(v: Any): Option[Any] = v match {
-    case null => None
-    case i: Int => Some(i.toLong)
-    case l: Long => Some(l)
-    case s: Short => Some(s.toLong)
-    case b: Byte => Some(b.toLong)
-    case f: Float => Some(GenStats.foldZero(f.toDouble))
-    case d: Double => Some(GenStats.foldZero(d))
-    case b: Boolean => Some(b)
-    case s: String => Some(s)
-    case _ => None
   }
 
   /** OPTIMIZE: rewrite the whole current snapshot as ONE clustered
@@ -1143,10 +1082,10 @@ class SnapshotLake(root: String) {
     *    `untouched`) must still be referenced by the new head — a winner
     *    that rewrote or dropped one has invalidated our rewrite;
     *  - every generation the winners ADDED must satisfy
-    *    `!mayOverlapScope(gen)` — its stats envelope provably holds no
-    *    row this mutation's key envelope / predicate could touch (the
-    *    SAME evaluator that scoped the rewrite, so "carried forward
-    *    untouched" and "safe to rebase across" cannot drift).
+    *    `!mayOverlapScope(gen)` — for merge and delete that is
+    *    [[genMayMatch]] over the mutation's scope, the SAME check that
+    *    scoped the rewrite (and prunes reads), so "carried forward
+    *    untouched" and "safe to rebase across" cannot drift.
     *
     * A valid rebase re-claims with manifest = (head's dirs minus the
     * consumed generations) + our generation: winners' disjoint work is
@@ -1165,14 +1104,13 @@ class SnapshotLake(root: String) {
     val fs = hadoopFs(spark)
     val baseDirs = dirsAt(spark, base)
     val consumed = baseDirs.filterNot(untouched.contains).toSet
-    val gen = s"gen-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
+    val gen = newGenName()
     // validated like any ingest (a merge source can violate); the
     // changefeed rides INSIDE the writer-unique generation, so it
     // publishes atomically with the commit that references the
     // generation and is cleaned up with it on abort — no separate
     // claim to race
     writeGen(spark, rewritten, gen, changes)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(commitsDir))
     onBeforePublish()
     def abort(detail: String): Nothing = {
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/$gen"), true)
@@ -1193,33 +1131,24 @@ class SnapshotLake(root: String) {
         .mkString(
           s"""{"version":$next,"op":"$op",$tag"rewrite":true,"dirs":[""",
           ",", "]}")
-      val tmp = new org.apache.hadoop.fs.Path(s"$commitsDir/.tmp-$gen-$next")
-      val out = fs.create(tmp, true)
-      try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      try {
-        claimVersionFile(spark, fs, tmp,
-          new org.apache.hadoop.fs.Path(f"$commitsDir/v$next%08d.json"))
+      if (claimVersion(spark, gen, next, json)) {
         // merge/delete/optimize commits can also grow the small tail —
         // the auto tier covers EVERY publishing path, not just appends
         // (the reentrancy guard no-ops this inside a fold's own publish)
         maybeAutoCompact(spark)
         return next
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          fs.delete(tmp, false)
-          attempts += 1
-          if (attempts >= 5) abort("rebase retries exhausted")
-          val head = latestVersion(spark).getOrElse(0L)
-          val headDirs = dirsAt(spark, head)
-          if (!consumed.forall(headDirs.contains))
-            abort("a racing commit rewrote a generation this mutation read")
-          val added = headDirs.filterNot(baseDirs.contains)
-          if (added.exists(mayOverlapScope))
-            abort("a racing commit added rows inside this mutation's scope")
-          attemptBase = head
-          carried = headDirs.filterNot(consumed.contains)
       }
+      attempts += 1
+      if (attempts >= 5) abort("rebase retries exhausted")
+      val head = latestVersion(spark).getOrElse(0L)
+      val headDirs = dirsAt(spark, head)
+      if (!consumed.forall(headDirs.contains))
+        abort("a racing commit rewrote a generation this mutation read")
+      val added = headDirs.filterNot(baseDirs.contains)
+      if (added.exists(mayOverlapScope))
+        abort("a racing commit added rows inside this mutation's scope")
+      attemptBase = head
+      carried = headDirs.filterNot(consumed.contains)
     }
     sys.error("unreachable")
   }
@@ -1237,7 +1166,7 @@ class SnapshotLake(root: String) {
   def restore(spark: SparkSession, version: Long): Long = {
     val fs = hadoopFs(spark)
     val dirs = dirsAt(spark, version) // throws if vacuumed
-    retryClaim(spark, fs, extraTag = "\"op\":\"restore\",") { _ =>
+    retryClaim(spark, extraTag = "\"op\":\"restore\",") { _ =>
       // restore uniquely re-references generations the current head may
       // NOT reference, which vacuum could be deleting concurrently —
       // the one writer/maintenance race the generation-immutability
@@ -1253,36 +1182,21 @@ class SnapshotLake(root: String) {
     }
   }
 
-  /** The optimistic write-tmp → claim → retry loop shared by every
-    * versioned publication that re-bases on the winner: `dirsFor(next)`
-    * recomputes the manifest against the re-read latest version, the
-    * tmp name embeds a writer-unique token (two writers colliding on a
-    * tmp path would turn the loser's retryable claim race into a
-    * spurious failure), and losing the claim deletes the tmp and goes
-    * again. `extraTag` carries optional commit-JSON fields (batch/query
-    * markers, the rewrite flag), already comma-terminated. */
-  private def retryClaim(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, extraTag: String)(
+  /** The optimistic claim → retry loop shared by every versioned
+    * publication that re-bases on the winner: `dirsFor(next)` recomputes
+    * the manifest against the re-read latest version, and a lost claim
+    * ([[claimVersion]]) goes again. `extraTag` carries optional
+    * commit-JSON fields (batch/query markers, the op), already
+    * comma-terminated. */
+  private def retryClaim(spark: SparkSession, extraTag: String)(
       dirsFor: Long => Seq[String]): Long = {
-    val writer = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(commitsDir))
+    val writer = newGenName()
     var published = -1L
     while (published < 0) {
       val next = latestVersion(spark).getOrElse(0L) + 1
       val json = dirsFor(next).map("\"" + _ + "\"")
         .mkString(s"""{"version":$next,$extraTag"dirs":[""", ",", "]}")
-      val tmp = new org.apache.hadoop.fs.Path(s"$commitsDir/.tmp-$writer-$next")
-      val out = fs.create(tmp, true)
-      try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      try {
-        claimVersionFile(spark, fs, tmp,
-          new org.apache.hadoop.fs.Path(f"$commitsDir/v$next%08d.json"))
-        published = next
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          fs.delete(tmp, false)
-      }
+      if (claimVersion(spark, writer, next, json)) published = next
     }
     published
   }

@@ -12,8 +12,9 @@ import graft.ingest.GenStats.{ColStats, FileStats}
 /** Manifest-stats file skipping for the snaplake read path: wraps the
   * resolved parquet relation's own [[FileIndex]] (which did the listing
   * and schema work) and, inside `listFiles`, drops every file whose
-  * [[graft.ingest.GenStats]] envelope proves the pushed data filters
-  * cannot match any of its rows.
+  * [[graft.ingest.GenStats]] envelope or Bloom sidecar proves the pushed
+  * data filters cannot match any of its rows ([[FilePruning]], the same
+  * check snaplake merges and deletes scope their rewrites with).
   *
   * This is the point where a table format earns its keep at 100 TB:
   * `FileSourceStrategy` hands the scan's data filters to the index
@@ -60,22 +61,12 @@ class StatsFileIndex(inner: FileIndex, statsByFile: Map[String, FileStats],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val base = inner.listFiles(partitionFilters, dataFilters)
     if (dataFilters.isEmpty) return base
-    val wantBlooms = dataFilters.exists(BloomPruning.hasEqualityShape)
-    if (statsByFile.isEmpty && !wantBlooms) return base
+    val prune = new FilePruning(dataFilters)
+    if (statsByFile.isEmpty && !prune.wantsBlooms) return base
     base.map { pd =>
       pd.copy(files = pd.files.filter { f =>
         val key = StatsFileIndex.keyOf(f.getPath)
-        val envelopeKeeps = statsByFile.get(key) match {
-          case Some(st) => dataFilters.forall(StatsPruning.mayMatch(_, st))
-          case None => true // statless file: never prune on envelopes
-        }
-        // bloom tier: point predicates a min/max envelope can't decide
-        // (equality on a high-cardinality unsorted key) prune on a
-        // definite-absence answer from the file's bloom sidecar
-        envelopeKeeps && (!wantBlooms || (blooms.get(key) match {
-          case Some(bs) => dataFilters.forall(BloomPruning.mayMatch(_, bs))
-          case None => true
-        }))
+        prune.mayMatch(statsByFile.get(key), blooms.get(key))
       })
     }
   }
@@ -84,6 +75,28 @@ class StatsFileIndex(inner: FileIndex, statsByFile: Map[String, FileStats],
 object StatsFileIndex {
   /** `gen-xxxx/part-....parquet` — the stats map key for a data file. */
   def keyOf(p: Path): String = s"${p.getParent.getName}/${p.getName}"
+}
+
+/** Could one file hold a row passing every one of `filters`? The one
+  * prune decision behind snaplake reads, merges, deletes and rebases. A
+  * `false` literal filter matches nothing. Otherwise the envelope tier
+  * ([[StatsPruning]]) runs first; then, only when some filter has an
+  * equality shape ([[wantsBlooms]]), the Bloom tier ([[BloomPruning]]):
+  * point predicates a min/max envelope cannot decide (equality on a
+  * high-cardinality unsorted key) prune on a definite-absence answer.
+  * `blooms` is by-name, so a sidecar is loaded only for a file that
+  * reaches that tier. A file without stats or Blooms is never pruned by
+  * that tier. */
+final class FilePruning(filters: Seq[Expression]) {
+  private val never = filters.contains(Literal.FalseLiteral)
+
+  /** Can the Bloom tier prune at all? Only then is a sidecar worth loading. */
+  val wantsBlooms: Boolean = filters.exists(BloomPruning.hasEqualityShape)
+
+  def mayMatch(stats: Option[FileStats],
+      blooms: => Option[Map[String, graft.ingest.GenBlooms.Bloom]]): Boolean =
+    !never && stats.forall(st => filters.forall(StatsPruning.mayMatch(_, st))) &&
+      (!wantsBlooms || blooms.forall(bs => filters.forall(BloomPruning.mayMatch(_, bs))))
 }
 
 /** Decides, from one file's column envelopes, whether a pushed filter
@@ -198,11 +211,11 @@ object StatsPruning {
       case None => true
     }
 
-  /** Catalyst internal literal → the stats value space. Doubles fold
-    * -0.0 to 0.0, matching the harvest side
-    * ([[graft.ingest.GenStats.foldZero]]) — see its scaladoc for the
-    * wrong-prune this prevents. */
-  private def norm(v: Any): Option[Any] = v match {
+  /** Catalyst internal literal → the stats value space, which the Bloom
+    * probe ([[BloomPruning]]) shares. Doubles fold -0.0 to 0.0, matching
+    * the harvest side ([[graft.ingest.GenStats.foldZero]]) — see its
+    * scaladoc for the wrong-prune this prevents. */
+  private[sources] def norm(v: Any): Option[Any] = v match {
     case null => None
     case i: Int => Some(i.toLong)
     case l: Long => Some(l)
@@ -219,10 +232,6 @@ object StatsPruning {
   // one tag alphabet for the whole stats/bloom value space
   private def tagMatches(tag: String, lit: Any): Boolean =
     graft.ingest.GenBlooms.kindOf(lit).contains(tag)
-
-  /** Catalyst internal literal → the stats value space, for the bloom
-    * probe (same mapping as [[norm]] — one value space everywhere). */
-  private[sources] def normForBloom(v: Any): Option[Any] = norm(v)
 }
 
 /** Bloom-tier pruning: equality-shaped predicates against a file's
@@ -234,10 +243,9 @@ object StatsPruning {
 object BloomPruning {
   import graft.ingest.GenBlooms.Bloom
 
-  /** Does the predicate contain a shape the bloom tier can serve? ONE
-    * spelling, shared by the read path's lazy-load gate and delete()'s
-    * sidecar-parse gate — growing [[mayMatch]]'s coverage means
-    * updating this alongside it. */
+  /** Does the predicate contain a shape the bloom tier can serve? The
+    * gate before any sidecar is loaded — growing [[mayMatch]]'s coverage
+    * means updating this alongside it. */
   def hasEqualityShape(e: Expression): Boolean = e.exists {
     case _: EqualTo | _: EqualNullSafe | _: In | _: InSet => true
     case _ => false
@@ -264,7 +272,7 @@ object BloomPruning {
     // cased differently from the physical schema still finds its bloom
     blooms.get(col.toLowerCase) match {
       case None => true
-      case Some(b) => StatsPruning.normForBloom(v) match {
+      case Some(b) => StatsPruning.norm(v) match {
         case None => true // NULL or exotic literal: not bloom-decidable
         case Some(n) => b.mightContain(n)
       }

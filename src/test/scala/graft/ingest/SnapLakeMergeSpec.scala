@@ -90,6 +90,10 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     // predicate outside every envelope: no-op, no new version
     assert(lake.delete(spark, col("id") >= 1000) == 2L)
     assert(lake.latestVersion(spark).get == 2L)
+    // predicates the optimizer folds to false match nothing either
+    assert(lake.delete(spark, lit(false)) == 2L)
+    assert(lake.delete(spark, col("id") === 5L && lit(false)) == 2L)
+    assert(lake.latestVersion(spark).get == 2L)
     // predicate inside one generation only
     val v = lake.delete(spark, col("id") < 50)
     assert(v == 3L)
@@ -97,6 +101,55 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     assert(after.toSet.intersect(before.toSet).size == 1,
       s"one generation should carry: before=$before after=$after")
     assert(lake.read(spark).count() == 150)
+  }
+
+  test("merge scoping prunes DATE and TIMESTAMP keys like the read path") {
+    val keys = Seq[(String, org.apache.spark.sql.Column => org.apache.spark.sql.Column)](
+      "date" -> (i => date_add(lit(java.sql.Date.valueOf("2024-01-01")), i.cast("int"))),
+      "timestamp" -> (i => timestamp_seconds(lit(1704067200L) + i * 3600)))
+    keys.foreach { case (kind, keyAt) =>
+      val root = freshRoot()
+      val lake = new SnapshotLake(root)
+      def rows(lo: Long, hi: Long, v: String) =
+        spark.range(lo, hi).select(keyAt(col("id")).as("k"), lit(v).as("v"))
+      // two generations with disjoint key ranges
+      lake.commit(rows(0, 10, "old"), overwrite = true)
+      lake.commit(rows(100, 110, "old"))
+      val Seq(early, late) = lake.dirsAt(spark, 2L)
+      // a one-row upsert inside the later generation's range only
+      val v = lake.merge(rows(105, 106, "new"), Seq("k"))
+      val after = lake.dirsAt(spark, v)
+      assert(after.contains(early) && !after.contains(late),
+        s"$kind key: the earlier generation must carry by reference: $after")
+      assert(lake.read(spark).filter(col("v") === "new").count() == 1, kind)
+      assert(lake.read(spark).count() == 20, kind)
+    }
+  }
+
+  test("merge keys typed unlike the target column still replace the matching row") {
+    import org.apache.spark.sql.Column
+    val days = (i: Column) => date_add(lit(java.sql.Date.valueOf("2024-01-01")), i.cast("int"))
+    val hours = (i: Column) => timestamp_seconds(lit(1704067200L) + i * 3600)
+    // (case, target key, source key): the join casts one side, while the
+    // stored DATE days, TIMESTAMP micros and local TIMESTAMP_NTZ micros
+    // all compare as Long, so their envelopes must not scope the merge
+    val cases = Seq[(String, Column => Column, Column => Column)](
+      ("DATE into TIMESTAMP", i => days(i).cast("timestamp"), days),
+      ("TIMESTAMP into DATE", days, i => days(i).cast("timestamp")),
+      ("TIMESTAMP_NTZ into TIMESTAMP", hours, i => hours(i).cast("timestamp_ntz")))
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try cases.foreach { case (name, tgtKey, srcKey) =>
+      val lake = new SnapshotLake(freshRoot())
+      def rows(key: Column => Column, lo: Long, hi: Long, v: String) =
+        spark.range(lo, hi).select(key(col("id")).as("k"), lit(v).as("v"))
+      lake.commit(rows(tgtKey, 0, 10, "old"), overwrite = true)
+      lake.commit(rows(tgtKey, 100, 110, "old"))
+      lake.merge(rows(srcKey, 5, 6, "new"), Seq("k"))
+      val out = lake.read(spark)
+      assert(out.count() == 20, s"$name: the matched row must be replaced, not duplicated")
+      assert(out.filter(col("v") === "new").count() == 1, name)
+    } finally spark.conf.set("spark.sql.session.timeZone", tz)
   }
 
   test("a racing append DISJOINT from the merge scope rebases; in-scope aborts") {

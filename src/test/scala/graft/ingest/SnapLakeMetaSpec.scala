@@ -222,5 +222,17 @@ class SnapLakeMetaSpec extends SparkSpecBase {
     // rewrite and changefeed writes with their shuffle stages
     assert(merge == 11, s"small merge ran $merge jobs")
     assert(lake.read(spark).count() == 1100)
+    // an empty source scopes nothing from its envelope alone
+    val emptyMerge = jobsOf(lake.merge(Seq.empty[(Long, Long)].toDF("id", "v"),
+      Seq("id")))
+    // without Blooms the key tuples are never collected
+    val plain = new SnapshotLake(freshRoot())
+    plain.commit(spark.range(0, 1000).select(col("id"), (col("id") % 7).as("v"))
+      .repartition(2))
+    val plainMerge = jobsOf(plain.merge(Seq((5L, 99L), (2000L, 1L)).toDF("id", "v"),
+      Seq("id")))
+    info(s"jobs: empty-source merge $emptyMerge, merge without Blooms $plainMerge")
+    assert(emptyMerge == 4, s"empty-source merge ran $emptyMerge jobs")
+    assert(plainMerge == 9, s"merge without Blooms ran $plainMerge jobs")
   }
 }
