@@ -35,15 +35,6 @@ object GenBlooms {
 
   val BloomsFileName = "_blooms.json"
 
-  /** Control-plane FS unwrap (same helper shape as GenStats.rawOf): a
-    * ChecksumFileSystem's .crc sidecar moves in a separate step from
-    * the data file, so publish/read of the sidecar must go raw. */
-  private def rawOf(fs: org.apache.hadoop.fs.FileSystem)
-      : org.apache.hadoop.fs.FileSystem = fs match {
-    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-    case other => other
-  }
-
   /** Sidecar format version, embedded as the `_v` key. Bumped whenever
     * the VALUE CANONICALIZATION changes (e.g. the ±0.0 fold): a bloom
     * built under an older hash answers "definitely absent" for values
@@ -269,7 +260,7 @@ object GenBlooms {
     // and a reader racing load() in that window throws ChecksumException
     // — the same hazard the _constraints.json path closes this way
     val fsAll = dir.getFileSystem(conf)
-    val fs = rawOf(fsAll)
+    val fs = SidecarCache.raw(fsAll)
     val tmp = new Path(dir, s".$BloomsFileName.tmp")
     val out = fs.create(tmp, true)
     try out.write(mapper.writeValueAsString(rootNode).getBytes(UTF_8))
@@ -306,11 +297,7 @@ object GenBlooms {
   def load(conf: Configuration, genPath: String)
       : Option[Map[String, Map[String, Bloom]]] = {
     val p = new Path(genPath, BloomsFileName)
-    // raw fs: see the write-side note — a .crc written by an earlier
-    // build must never fail a control-plane read mid-publish; a
-    // republish deleting the sidecar mid-read reads as absent (full
-    // fan-out), never as a planner-killing FileNotFoundException
-    cache.load(rawOf(p.getFileSystem(conf)), p)(parse)
+    cache.load(p.getFileSystem(conf), p)(parse)
   }
 
   private def parse(txt: String): Option[Map[String, Map[String, Bloom]]] = {

@@ -3,7 +3,7 @@ package graft.ingest
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -119,7 +119,7 @@ object GenStats {
     // only thing lost, and it is what caused the publish race. A
     // malformed sidecar still reads as absent (parse() → None → never
     // prune).
-    val fs = rawOf(fsAll)
+    val fs = SidecarCache.raw(fsAll)
     val tmp = new Path(dir, s".$StatsFileName.tmp")
     val out = fs.create(tmp, true)
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -150,11 +150,6 @@ object GenStats {
     }
   }
 
-  private def rawOf(fs: FileSystem): FileSystem = fs match {
-    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-    case other => other
-  }
-
   /** Stats for one generation, keyed by bare file name; None when the
     * generation predates stats collection. */
   def load(conf: Configuration, genPath: String): Option[Map[String, FileStats]] =
@@ -166,14 +161,12 @@ object GenStats {
       : Option[org.apache.spark.sql.types.StructType] =
     sidecar(conf, genPath).flatMap(_.schema)
 
+  /** A backfill's delete landing mid-read reads as absent ([[SidecarCache]]),
+    * never as an exception killing the reader's planning — caught by the
+    * SnapLakeSkipSpec republish hammer. */
   private def sidecar(conf: Configuration, genPath: String): Option[Sidecar] = {
     val p = new Path(genPath, StatsFileName)
-    // raw fs: see the write-side note — a .crc written by an earlier
-    // build must never fail a control-plane read mid-backfill. A
-    // backfill's delete landing mid-read (the republish window) reads
-    // as absent, never as an exception killing the reader's planning —
-    // caught by the SnapLakeSkipSpec republish hammer.
-    cache.load(rawOf(p.getFileSystem(conf)), p)(parse)
+    cache.load(p.getFileSystem(conf), p)(parse)
   }
 
   // ---------------------------------------------------------------- footer

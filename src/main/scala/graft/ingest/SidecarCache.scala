@@ -2,15 +2,18 @@ package graft.ingest
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** In-process cache of one kind of parsed generation sidecar
-  * (`_stats.json`, `_blooms.json`), keyed on the sidecar's path, length
-  * and modification time. A commit-time sidecar never changes, so a
-  * point read, merge or delete re-parses nothing it has parsed before;
-  * a backfill republish ([[SnapshotLake.computeStats]],
+/** In-process cache of one kind of parsed snaplake metadata file,
+  * keyed on the file's path, length and modification time: a
+  * generation sidecar (`_stats.json`, `_blooms.json`) or a commit file
+  * (`_commits/v%08d.json`, [[Commit]]). A sidecar written with its
+  * generation and a commit file never change, so a point read, merge,
+  * delete or changefeed walk re-parses nothing it has parsed before; a
+  * backfill republish ([[SnapshotLake.computeStats]],
   * [[SnapshotLake.computeBlooms]]) replaces the file, its length or
   * mtime moves, and the next load parses the new content. A cached
-  * load costs one status probe. Least-recently-used entries beyond `capacity` are dropped, so
-  * vacuumed generations cannot strand parsed Blooms forever. */
+  * load costs one status probe. Least-recently-used entries beyond
+  * `capacity` are dropped, so vacuumed generations and commits cannot
+  * strand parsed values forever. */
 private[ingest] final class SidecarCache[T](capacity: Int) {
 
   private final class Entry(val len: Long, val mtime: Long, val value: Option[T])
@@ -21,14 +24,14 @@ private[ingest] final class SidecarCache[T](capacity: Int) {
           e: java.util.Map.Entry[String, Entry]): Boolean = size() > capacity
     }
 
-  /** The parsed sidecar at `p`, None when absent or when `parse`
-    * rejects it. `fs` should be the raw filesystem (see the sidecars'
-    * publish notes). Cached values are shared: callers must not mutate
-    * them. */
-  def load(fs: FileSystem, p: Path)(parse: String => Option[T]): Option[T] =
-    // an absent sidecar, or one a republish deletes between the status
-    // probe and the open, reads as None (never prune), not an exception
+  /** The parsed file at `p`, None when absent or when `parse` rejects
+    * it. Read through the raw filesystem under `fs` ([[SidecarCache.raw]]).
+    * Cached values are shared: callers must not mutate them. */
+  def load(fsAll: FileSystem, p: Path)(parse: String => Option[T]): Option[T] =
+    // an absent file, or one a republish deletes between the status
+    // probe and the open, reads as None, not an exception
     try {
+      val fs = SidecarCache.raw(fsAll)
       val st = fs.getFileStatus(p)
       val key = p.toString
       val hit = entries.synchronized(Option(entries.get(key)))
@@ -45,4 +48,15 @@ private[ingest] final class SidecarCache[T](capacity: Int) {
         value
       }
     } catch { case _: java.io.FileNotFoundException => None }
+}
+
+private[ingest] object SidecarCache {
+  /** The raw filesystem under a checksummed one. Control-plane files are
+    * published and read raw: a ChecksumFileSystem moves a file and its
+    * `.crc` in separate steps, and a reader in that window would throw
+    * ChecksumException. */
+  def raw(fs: FileSystem): FileSystem = fs match {
+    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
 }

@@ -1,10 +1,12 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo,
-  Expression, GreaterThanOrEqual, LessThanOrEqual, Literal, Or}
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
-  IntegerType, LongType, ShortType, StringType}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute,
+  AttributeReference, Cast, EqualTo, EvalMode, Expression, GreaterThanOrEqual,
+  LessThanOrEqual, Literal, Or}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.internal.SQLConf.StoreAssignmentPolicy
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 
 /** Minimal snapshot-versioned table: a commit log + read-at-version over
   * the same immutable-generation machinery the ledgered sinks use — the
@@ -14,8 +16,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
   * Layout:
   * {{{
   *   root/
-  *     _commits/v00000001.json   // {"version":1,"dirs":["gen-ab12cd34"]}
-  *     _commits/v00000002.json   // {"version":2,"dirs":["gen-ab12cd34","gen-99ff0011"]}
+  *     _commits/v00000001.json   // {"version":1,"op":"create","dirs":["gen-ab12cd34"]}
+  *     _commits/v00000002.json   // {"version":2,"op":"merge","rewrite":true,
+  *                               //  "dirs":["gen-ab12cd34","gen-99ff0011"]}
   *     gen-ab12cd34/  ...parquet...
   *                    _stats.json    // per-file envelopes + the Spark schema
   *                    _blooms.json   // per-file Blooms (auto-Blooms / computeBlooms)
@@ -29,7 +32,9 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
   * ([[GenStats]]) records file envelopes and the generation's schema.
   * Reads, merges, deletes, time travel and compaction resolve a
   * version's schema from those records ([[schemaOf]]) instead of
-  * running a schema-inference job.
+  * running a schema-inference job. A commit file is one [[Commit]]
+  * record (an append also carries a streaming writer's `batchId` and
+  * `queryId`), parsed once per process ([[commitAt]]).
   *
   * Invariants that make this safe:
   *  - Generation directories are IMMUTABLE once a commit references them
@@ -77,6 +82,12 @@ object SnapshotLake {
   private[ingest] val genSizes =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
 
+  /** Parsed commit records ([[SnapshotLake.commitAt]]). A commit file is
+    * written once and never changed, so a repeat lookup costs one status
+    * probe; a vacuumed one misses, and a re-created root's files differ
+    * in length or mtime. */
+  private[ingest] val commits = new SidecarCache[Commit](4096)
+
   /** Reentrancy guard: a fold's own publishRewrite fires the
     * auto-compact hook again; the guard no-ops that inner call. */
   private[ingest] val inAutoCompact =
@@ -111,64 +122,34 @@ class SnapshotLake(root: String) {
   def latestVersion(spark: SparkSession): Option[Long] =
     versions(spark).lastOption
 
-  private def commitJson(spark: SparkSession, version: Long): String = {
-    val fs = hadoopFs(spark)
-    val p = new org.apache.hadoop.fs.Path(f"$commitsDir/v$version%08d.json")
-    require(fs.exists(p), s"no commit for version $version under $root")
-    val in = fs.open(p)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
+  private def commitPath(version: Long) =
+    new org.apache.hadoop.fs.Path(f"$commitsDir/v$version%08d.json")
 
-  /** One regex for generation-directory names in commit JSON — shared by
-    * [[dirsAt]] and [[history]] so the manifest shape has one spelling. */
-  private val GenDirPattern = "\"(gen-[0-9a-f]+)\"".r
+  /** The commit record of `version`, read and parsed once per file and
+    * then served from the process-wide cache ([[SnapshotLake.commits]]).
+    * A version that was vacuumed or never written fails fast with
+    * IllegalArgumentException. */
+  private[graft] def commitAt(spark: SparkSession, version: Long): Commit =
+    SnapshotLake.commits.load(hadoopFs(spark), commitPath(version))(t => Some(Commit.parse(t)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no commit for version $version under $root"))
+
+  /** When the commit of `version` was published: its file's mtime (the
+    * file is written once, atomically, and never touched again). */
+  private def publishedAt(spark: SparkSession, version: Long): Long =
+    hadoopFs(spark).getFileStatus(commitPath(version)).getModificationTime
 
   /** Generation directories of a committed version (names relative to
     * root, in commit order). */
   def dirsAt(spark: SparkSession, version: Long): Seq[String] =
-    // commit JSON is written by this class only; a regex parse keeps the
-    // manifest dependency-free (same trade as Bench.loadFloor)
-    GenDirPattern
-      .findAllMatchIn(commitJson(spark, version)).map(_.group(1)).toSeq
-
-  /** Manifest dirs PLUS whether the commit was a RESTORE, in one JSON
-    * read. The streaming source needs both for every version it walks
-    * (a restore is the one commit kind that re-references generations
-    * the stream may have already emitted — see
-    * [[graft.sources.SnapLakeStreamSource]]), and reading the commit
-    * file twice per version would double the batch's control-plane I/O
-    * at object-store latencies. */
-  private[graft] def dirsAndRestoreAt(spark: SparkSession,
-      version: Long): (Seq[String], Boolean) = {
-    val txt = commitJson(spark, version)
-    (GenDirPattern.findAllMatchIn(txt).map(_.group(1)).toSeq,
-      txt.contains("\"op\":\"restore\""))
-  }
-
-  /** Was `version` published by a mutation that MATERIALIZED its
-    * changefeed (merge/delete/optimize/compact)? Only those commits may
-    * read a generation's `_cdf/` as the version's changes: a RESTORE
-    * re-references an old rewrite generation — `_cdf/` and all — and
-    * its changefeed must be the manifest restatement, not the original
-    * mutation's stale rows. */
-  private[graft] def commitIsRewrite(spark: SparkSession, version: Long): Boolean =
-    commitJson(spark, version).contains("\"rewrite\":true")
+    commitAt(spark, version).dirs
 
   /** Latest version whose commit file was published at or before
-    * `tsMillis` — timestamp-based time travel. The commit file's
-    * modification time IS the publication instant (it is written once,
-    * atomically, and never touched again), so no extra bookkeeping is
-    * needed; like any table format's timestampAsOf, granularity is the
-    * store's mtime resolution. */
-  def versionAt(spark: SparkSession, tsMillis: Long): Option[Long] = {
-    val fs = hadoopFs(spark)
-    versions(spark).reverseIterator.find { v =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(
-        f"$commitsDir/v$v%08d.json")).getModificationTime <= tsMillis
-    }
-  }
+    * `tsMillis` — timestamp-based time travel on [[publishedAt]], so no
+    * extra bookkeeping is needed; like any table format's timestampAsOf,
+    * granularity is the store's mtime resolution. */
+  def versionAt(spark: SparkSession, tsMillis: Long): Option[Long] =
+    versions(spark).reverseIterator.find(publishedAt(spark, _) <= tsMillis)
 
   /** Operation HISTORY — the audit surface a table format exposes as
     * DESCRIBE HISTORY: one row per surviving commit with the operation
@@ -176,21 +157,15 @@ class SnapshotLake(root: String) {
     * `optimize`/`zorder`/`compact`/`restore`; commits from writers
     * predating the tag read as `unknown`), the generation count, and
     * the publication instant ([[versionAt]]'s clock). Metadata-only:
-    * one commit-file read per version, no data touched. Built with an
+    * one commit record per version, no data touched. Built with an
     * explicit schema (the createDataFrame/REPL-classloader contract
     * every frozen-table helper here follows). */
   def history(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val fs = hadoopFs(spark)
     val rows = versions(spark).map { v =>
-      val txt = commitJson(spark, v)
-      val op = """"op":"(\w+)"""".r.findFirstMatchIn(txt)
-        .map(_.group(1)).getOrElse("unknown")
-      val nDirs = GenDirPattern.findAllMatchIn(txt).length
-      val ts = fs.getFileStatus(new org.apache.hadoop.fs.Path(
-        f"$commitsDir/v$v%08d.json")).getModificationTime
-      Row(v, op, nDirs, ts)
+      val c = commitAt(spark, v)
+      Row(v, c.op, c.dirs.size, publishedAt(spark, v))
     }
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*),
@@ -235,6 +210,45 @@ class SnapshotLake(root: String) {
       .parquet(gens.map(d => s"$root/$d"): _*).schema
   }
 
+  /** `df` with each column the table already has cast to the table's
+    * type, as an INSERT into a typed table would under
+    * `spark.sql.storeAssignmentPolicy` (ANSI and STRICT casts fail on
+    * overflow): otherwise a write could publish a generation whose type
+    * no read can merge with the others' (INT beside BIGINT). A cast the
+    * policy forbids (STRING into INT under ANSI) is refused before
+    * anything is written. Nested fields conform alike; columns and
+    * fields new to the table keep their type (schema evolution). No job
+    * runs. */
+  private def conform(df: DataFrame, table: StructType): DataFrame = {
+    val conf = df.sparkSession.sessionState.conf
+    def find(fs: Array[org.apache.spark.sql.types.StructField], n: String) =
+      fs.find(f => conf.resolver(f.name, n))
+    def target(in: DataType, t: DataType): DataType = (in, t) match {
+      case (s: StructType, ts: StructType) => StructType(s.fields.map(f =>
+        find(ts.fields, f.name).fold(f)(tf => f.copy(dataType = target(f.dataType, tf.dataType)))))
+      case (ArrayType(e, n), ArrayType(te, _)) => ArrayType(target(e, te), n)
+      case (MapType(k, v, n), MapType(tk, tv, _)) => MapType(target(k, tk), target(v, tv), n)
+      case _ => t
+    }
+    val policy = conf.storeAssignmentPolicy
+    val plan = GraftBridge.plan(df)
+    val out = plan.output.map(a => find(table.fields, a.name)
+      .map(f => target(a.dataType, f.dataType)).filter(_ != a.dataType) match {
+        case None => a
+        case Some(t) =>
+          require(policy match {
+            case StoreAssignmentPolicy.ANSI => Cast.canANSIStoreAssign(a.dataType, t)
+            case StoreAssignmentPolicy.STRICT => Cast.canUpCast(a.dataType, t)
+            case _ => Cast.canCast(a.dataType, t)
+          }, s"column ${a.name} of type ${a.dataType.sql} cannot be stored as ${t.sql} " +
+            s"under spark.sql.storeAssignmentPolicy=$policy; write to $root refused")
+          Alias(Cast(a, t, Some(conf.sessionLocalTimeZone),
+            if (policy == StoreAssignmentPolicy.LEGACY) EvalMode.LEGACY else EvalMode.ANSI), a.name)()
+      })
+    if (out.forall(_.isInstanceOf[Attribute])) df
+    else GraftBridge.ofRows(df.sparkSession, Project(out, plan))
+  }
+
   /** The latest committed snapshot. */
   def read(spark: SparkSession): DataFrame = {
     val v = latestVersion(spark).getOrElse(
@@ -247,7 +261,7 @@ class SnapshotLake(root: String) {
     * current snapshot. Safe under concurrent committers (optimistic
     * retry on the commit-file rename). */
   def commit(df: DataFrame, overwrite: Boolean = false): Long =
-    commitTagged(df, overwrite, None)
+    commitMarked(df, overwrite, None)
 
   /** Newest streaming batch id recorded in the commit log, scanning
     * newest→oldest past any untagged (batch-API) commits in between —
@@ -263,21 +277,15 @@ class SnapshotLake(root: String) {
     * writer's marker is always near the log tail. */
   def lastStreamBatchId(spark: SparkSession,
       queryId: Option[String] = None): Option[Long] =
-    newestBatchMarker(spark) { txt =>
-      queryId.forall(q => txt.contains(s""""queryId":"$q""""))
-    }
+    newestBatchMarker(spark)(c => queryId.forall(c.queryId.contains))
 
   /** Newest→oldest commit-log scan shared by the two watermark lookups:
-    * the first commit whose JSON both satisfies `eligible` and carries a
-    * batch marker wins. */
+    * the first commit that both satisfies `eligible` and carries a batch
+    * marker wins. */
   private def newestBatchMarker(spark: SparkSession)(
-      eligible: String => Boolean): Option[Long] = {
-    versions(spark).reverseIterator.map { v =>
-      val txt = commitJson(spark, v)
-      if (!eligible(txt)) None
-      else """"batchId":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    }.collectFirst { case Some(b) => b }
-  }
+      eligible: Commit => Boolean): Option[Long] =
+    versions(spark).reverseIterator.map(commitAt(spark, _))
+      .flatMap(c => c.batchId.filter(_ => eligible(c))).nextOption()
 
   /** Replay watermark for a writer WITHOUT a streaming query id: the
     * newest batch marker among commits that ALSO lack one. The sinks
@@ -293,7 +301,7 @@ class SnapshotLake(root: String) {
     * as real queries (or set the local property themselves). */
   private[graft] def lastAnonymousStreamBatchId(
       spark: SparkSession): Option[Long] =
-    newestBatchMarker(spark)(txt => !txt.contains(""""queryId":"""))
+    newestBatchMarker(spark)(_.queryId.isEmpty)
 
   /** The (queryId, replay watermark) pair for a streaming writer into
     * this lake — THE one implementation of the replay-guard scoping
@@ -324,26 +332,27 @@ class SnapshotLake(root: String) {
   }
 
   /** [[commit]] plus an optional streaming (queryId, batchId) marker
-    * persisted in the commit JSON — the exactly-once handshake for the
+    * persisted in the commit record — the exactly-once handshake for the
     * streaming sink (a replayed micro-batch is detected by
     * [[lastStreamBatchId]] >= its id UNDER THE SAME QUERY ID and
-    * skipped whole). */
-  private[graft] def commitTagged(df: DataFrame, overwrite: Boolean,
+    * skipped whole). An append's columns that the table already has are
+    * stored in the table's types ([[conform]]). */
+  private[graft] def commitMarked(df: DataFrame, overwrite: Boolean,
       batchId: Option[Long], queryId: Option[String] = None): Long = {
     val spark = df.sparkSession
+    val data = if (overwrite) df else latestVersion(spark)
+      .fold(df)(v => conform(df, schemaOf(spark, dirsAt(spark, v))))
     // data first, under a writer-unique UNCOMMITTED generation — readers
     // cannot see it until the commit file below publishes it
     val gen = newGenName()
-    writeGen(spark, df, gen)
-    val tag = s""""op":"${if (overwrite) "overwrite" else "append"}",""" +
-      batchId.map(b => s""""batchId":$b,""").getOrElse("") +
-      queryId.map(q => s""""queryId":"$q",""").getOrElse("")
+    writeGen(spark, data, gen)
     // losing the claim race retries against the re-read latest — an
     // append retry re-bases on the winner's snapshot, exactly the
     // optimistic-concurrency contract
-    val v = retryClaim(spark, tag) { next =>
-      if (overwrite || next == 1) Seq(gen)
-      else dirsAt(spark, next - 1) :+ gen
+    val v = retryClaim(spark) { next =>
+      Commit(next, if (overwrite) "overwrite" else "append",
+        if (overwrite || next == 1) Seq(gen) else dirsAt(spark, next - 1) :+ gen,
+        batchId = batchId, queryId = queryId)
     }
     // post-publish, best-effort: the commit above is durable regardless
     maybeAutoCompact(spark)
@@ -362,7 +371,7 @@ class SnapshotLake(root: String) {
     if (latestVersion(spark).isDefined) return None // cheap pre-check only
     val gen = newGenName()
     writeGen(spark, df, gen)
-    if (claimVersion(spark, gen, 1L, s"""{"version":1,"op":"create","dirs":["$gen"]}"""))
+    if (claimVersion(spark, gen, Commit(1L, "create", Seq(gen))))
       Some(1L)
     else {
       hadoopFs(spark).delete(new org.apache.hadoop.fs.Path(s"$root/$gen"), true)
@@ -374,12 +383,12 @@ class SnapshotLake(root: String) {
   private def newGenName(): String =
     s"gen-${java.util.UUID.randomUUID().toString.replace("-", "").take(12)}"
 
-  /** The one commit-claim step: write `json` to a temp file named by the
-    * writer-unique `token` (two writers colliding on a temp path would
-    * turn the loser's retryable claim race into a spurious failure),
-    * then atomically claim version `next` with it WITHOUT overwrite.
+  /** The one commit-claim step: write `commit` to a temp file named by
+    * the writer-unique `token` (two writers colliding on a temp path
+    * would turn the loser's retryable claim race into a spurious
+    * failure), then atomically claim its version WITHOUT overwrite.
     * Returns false, temp file removed, when another committer already
-    * holds `next`.
+    * holds that version.
     *
     * On HDFS, rename-without-overwrite is the primitive: the NameNode
     * checks-and-renames under one namespace lock. On the LOCAL
@@ -389,14 +398,14 @@ class SnapshotLake(root: String) {
     * "win" and one commit would be silently clobbered (TOCTOU). The
     * POSIX primitive that atomically fails on an existing destination
     * is link(2), so local roots claim via Files.createLink instead. */
-  private def claimVersion(spark: SparkSession, token: String, next: Long,
-      json: String): Boolean = {
+  private def claimVersion(spark: SparkSession, token: String,
+      commit: Commit): Boolean = {
     val fs = hadoopFs(spark)
     // create makes the missing _commits directory of a fresh table
-    val tmp = new org.apache.hadoop.fs.Path(s"$commitsDir/.tmp-$token-$next")
-    val dst = new org.apache.hadoop.fs.Path(f"$commitsDir/v$next%08d.json")
+    val tmp = new org.apache.hadoop.fs.Path(s"$commitsDir/.tmp-$token-${commit.version}")
+    val dst = commitPath(commit.version)
     val out = fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(commit.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     try {
       if (fs.getScheme == "file") {
@@ -588,11 +597,7 @@ class SnapshotLake(root: String) {
     }
   }
 
-  private def rawFs(spark: SparkSession): org.apache.hadoop.fs.FileSystem =
-    hadoopFs(spark) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
+  private def rawFs(spark: SparkSession) = SidecarCache.raw(hadoopFs(spark))
 
   // ------------------------------------------------ CHECK constraints
 
@@ -757,15 +762,16 @@ class SnapshotLake(root: String) {
     * each key within the source's [min, max], and, for a source of at
     * most [[SnapshotLake.BloomScopeCap]] distinct keys, one of its key
     * tuples — judged per generation by [[genMayMatch]], the read path's
-    * own envelope and Bloom check. A key whose source type does not
-    * compare with the target column's stored values (DATE into
-    * TIMESTAMP) does not bound the scope. A generation that provably
-    * holds no match CARRIES FORWARD into the new commit untouched — on a
-    * 100 TB table where upserts land in the recent key range, the rewrite
-    * touches the tail generations and the commit re-references the
-    * rest, which is exactly a table format's file-level MERGE scoping
-    * one level up. Generations without stats (older writers) rewrite
-    * conservatively.
+    * own envelope and Bloom check. The source's columns that the table
+    * already has are first cast to the table's types ([[conform]]), so
+    * keys compare, scope and are stored in the table's own type; a key
+    * over a collated string column does not bound the scope. A
+    * generation that provably holds no match CARRIES FORWARD into the
+    * new commit untouched — on a 100 TB table where upserts land in the
+    * recent key range, the rewrite touches the tail generations and the
+    * commit re-references the rest, which is exactly a table format's
+    * file-level MERGE scoping one level up. Generations without stats
+    * (older writers) rewrite conservatively.
     *
     * Contract: source keys should be unique (a duplicated source key
     * inserts duplicates, same as repeated appends); null source keys
@@ -777,31 +783,30 @@ class SnapshotLake(root: String) {
     * rerun to rebase.
     */
   def merge(source: DataFrame, keyCols: Seq[String]): Long =
-    mergeTagged(source, keyCols, None, None)
+    mergeMarked(source, keyCols, None, None)
 
   /** [[merge]] plus the optional streaming (queryId, batchId) marker in
-    * the commit JSON — the same exactly-once handshake [[commitTagged]]
+    * the commit record — the same exactly-once handshake [[commitMarked]]
     * gives the append sink, extended to the MUTATING commit: a replayed
     * micro-batch upsert is detected by [[lastStreamBatchId]] >= its id
     * under the same query id and skipped whole by the sink
     * ([[graft.streaming.EventStreams.snaplakeUpsertSink]]). The marker
     * rides the one atomic commit-file claim, so "merged" and "recorded
     * as batch N" cannot come apart. */
-  def mergeTagged(source: DataFrame, keyCols: Seq[String],
+  def mergeMarked(source: DataFrame, keyCols: Seq[String],
       batchId: Option[Long], queryId: Option[String]): Long = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    val mergeTag = batchId.map(b => s""""batchId":$b,""").getOrElse("") +
-      queryId.map(q => s""""queryId":"$q",""").getOrElse("")
     val spark = source.sparkSession
     import org.apache.spark.sql.functions.{col, min, max}
     val base = latestVersion(spark).getOrElse(
       sys.error(s"merge into a never-committed lake: $root"))
     val dirs = dirsAt(spark, base)
+    val snapSchema = schemaOf(spark, dirs)
     // the source plan is consumed by the envelope agg, both key joins,
     // the rewrite, and the changefeed — cache it so an expensive or
     // non-deterministic source executes ONCE and the committed table
     // cannot disagree with its own materialized changes
-    val src = source.persist()
+    val src = conform(source, snapSchema).persist()
     try {
       // the merge's key scope as a predicate over the key columns, judged
       // per generation by the read path's own check ([[genMayMatch]]).
@@ -812,27 +817,16 @@ class SnapshotLake(root: String) {
       // merge degrades to a plain append.
       val aggs = keyCols.flatMap(k => Seq(min(col(k)).as(s"mn_$k"), max(col(k)).as(s"mx_$k")))
       val env = src.agg(aggs.head, aggs.tail: _*).collect()(0)
-      lazy val snapSchema = schemaOf(spark, dirs)
-      // A key bounds the scope only when its source values compare with
-      // the target column's stored values in one space: the same type, or
-      // both integral, or both floating. Otherwise the join casts one side
-      // (DATE days vs TIMESTAMP micros both store as Long, a collated
-      // string compares case-blind) and the stored values prove nothing,
-      // so that key is left out of the scope.
-      def bounding(srcType: DataType, tgtType: DataType) = (srcType, tgtType) match {
-        case (ByteType | ShortType | IntegerType | LongType,
-              ByteType | ShortType | IntegerType | LongType) => true
-        case (FloatType | DoubleType, FloatType | DoubleType) => true
-        case (s: StringType, t: StringType) => s == StringType && t == StringType
-        case (s, t) => s == t
-      }
+      // Conformed, a source key has its target column's type. A collated
+      // string key still proves nothing from stored values: the join
+      // compares it case-blind, the envelope orders bytes. Such a key,
+      // and one the table does not have, is left out of the scope.
       val resolver = spark.sessionState.conf.resolver
-      lazy val keyAttrs: Seq[(AttributeReference, Int)] = keyCols.zipWithIndex.flatMap {
+      val keyAttrs: Seq[(AttributeReference, Int)] = keyCols.zipWithIndex.flatMap {
         case (k, i) =>
-          val srcType = env.schema(s"mn_$k").dataType
           snapSchema.fields.find(f => resolver(f.name, k))
-            .filter(f => bounding(srcType, f.dataType))
-            .map(f => (AttributeReference(f.name, srcType)(), i))
+            .filter(f => f.dataType match { case s: StringType => s == StringType; case _ => true })
+            .map(f => (AttributeReference(f.name, f.dataType)(), i))
       }
       def litOf(a: AttributeReference, v: Any) = Literal.create(v, a.dataType)
       val envScope: Expression =
@@ -894,8 +888,8 @@ class SnapshotLake(root: String) {
       // rebase-across check = the scoping check (envelope AND bloom
       // tiers): a racing commit's new generation is safe to carry
       // forward iff it provably holds none of this merge's keys
-      publishRewrite(spark, base, untouched, rewritten, Some(changes),
-        mayOverlapScope = genInScope, op = "merge", tag = mergeTag)
+      publishRewrite(spark, base, untouched, rewritten, changes,
+        mayOverlapScope = genInScope, op = "merge", batchId = batchId, queryId = queryId)
     } finally src.unpersist()
   }
 
@@ -945,7 +939,7 @@ class SnapshotLake(root: String) {
       SnapshotLake.ChangeTypeCol, org.apache.spark.sql.functions.lit("delete"))
     // same check scopes the rewrite AND gates rebase-across
     publishRewrite(spark, base, untouched, affectedDf.filter(!hit),
-      Some(changes), mayOverlapScope = inScope, op = "delete")
+      changes, mayOverlapScope = inScope, op = "delete")
   }
 
   /** Could a generation hold a row passing every one of `filters`? Yes
@@ -998,8 +992,7 @@ class SnapshotLake(root: String) {
     // (rewrites of the consumed snapshot still abort via the consumed
     // check)
     publishRewrite(spark, base, Seq.empty, clustered,
-      Some(emptyChanges(snap)), mayOverlapScope = _ => false,
-      op = "optimize")
+      emptyChanges(snap), mayOverlapScope = _ => false, op = "optimize")
   }
 
   /** [[optimize]] on the z-order curve of two numeric keys
@@ -1022,8 +1015,7 @@ class SnapshotLake(root: String) {
     val snap = readAt(spark, base)
     publishRewrite(spark, base, Seq.empty,
       graft.ops.Layout.zOrderClusterN(snap, keys, numFiles, bitsPerKey),
-      Some(emptyChanges(snap)), mayOverlapScope = _ => false,
-      op = "zorder")
+      emptyChanges(snap), mayOverlapScope = _ => false, op = "zorder")
   }
 
   /** INCREMENTAL compaction: collapse only generations smaller than
@@ -1064,7 +1056,7 @@ class SnapshotLake(root: String) {
       if (sortCols.isEmpty) tail.coalesce(numFiles)
       else tail.repartitionByRange(numFiles, sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
-    publishRewrite(spark, base, big, clustered, Some(emptyChanges(tail)),
+    publishRewrite(spark, base, big, clustered, emptyChanges(tail),
       mayOverlapScope = _ => false, op = "compact")
   }
 
@@ -1096,11 +1088,9 @@ class SnapshotLake(root: String) {
     * retries; the materialized `_cdf` stays correct under rebase because
     * the carried generations provably contain no scoped rows. */
   private def publishRewrite(spark: SparkSession, base: Long,
-      untouched: Seq[String], rewritten: DataFrame,
-      changes: Option[DataFrame] = None,
-      mayOverlapScope: String => Boolean = _ => true,
-      op: String = "rewrite",
-      tag: String = ""): Long = {
+      untouched: Seq[String], rewritten: DataFrame, changes: DataFrame,
+      mayOverlapScope: String => Boolean, op: String,
+      batchId: Option[Long] = None, queryId: Option[String] = None): Long = {
     val fs = hadoopFs(spark)
     val baseDirs = dirsAt(spark, base)
     val consumed = baseDirs.filterNot(untouched.contains).toSet
@@ -1110,7 +1100,7 @@ class SnapshotLake(root: String) {
     // publishes atomically with the commit that references the
     // generation and is cleaned up with it on abort — no separate
     // claim to race
-    writeGen(spark, rewritten, gen, changes)
+    writeGen(spark, rewritten, gen, Some(changes))
     onBeforePublish()
     def abort(detail: String): Nothing = {
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/$gen"), true)
@@ -1123,15 +1113,12 @@ class SnapshotLake(root: String) {
     var attempts = 0
     while (true) {
       val next = attemptBase + 1
-      // "rewrite":true marks this commit as the mutation that OWNS its
+      // rewrite marks this commit as the mutation that OWNS its
       // generation's _cdf — the changefeed walker only reads _cdf under
       // this flag (a restore re-referencing the generation stays a
       // restatement)
-      val json = (carried :+ gen).map("\"" + _ + "\"")
-        .mkString(
-          s"""{"version":$next,"op":"$op",$tag"rewrite":true,"dirs":[""",
-          ",", "]}")
-      if (claimVersion(spark, gen, next, json)) {
+      if (claimVersion(spark, gen, Commit(next, op, carried :+ gen,
+          rewrite = true, batchId, queryId))) {
         // merge/delete/optimize commits can also grow the small tail —
         // the auto tier covers EVERY publishing path, not just appends
         // (the reentrancy guard no-ops this inside a fold's own publish)
@@ -1166,7 +1153,7 @@ class SnapshotLake(root: String) {
   def restore(spark: SparkSession, version: Long): Long = {
     val fs = hadoopFs(spark)
     val dirs = dirsAt(spark, version) // throws if vacuumed
-    retryClaim(spark, extraTag = "\"op\":\"restore\",") { _ =>
+    retryClaim(spark) { next =>
       // restore uniquely re-references generations the current head may
       // NOT reference, which vacuum could be deleting concurrently —
       // the one writer/maintenance race the generation-immutability
@@ -1178,25 +1165,20 @@ class SnapshotLake(root: String) {
         require(fs.exists(new org.apache.hadoop.fs.Path(s"$root/$d")),
           s"generation $d of version $version was vacuumed mid-restore")
       }
-      dirs
+      Commit(next, "restore", dirs)
     }
   }
 
   /** The optimistic claim → retry loop shared by every versioned
-    * publication that re-bases on the winner: `dirsFor(next)` recomputes
-    * the manifest against the re-read latest version, and a lost claim
-    * ([[claimVersion]]) goes again. `extraTag` carries optional
-    * commit-JSON fields (batch/query markers, the op), already
-    * comma-terminated. */
-  private def retryClaim(spark: SparkSession, extraTag: String)(
-      dirsFor: Long => Seq[String]): Long = {
+    * publication that re-bases on the winner: `commitFor(next)`
+    * recomputes the record against the re-read latest version, and a
+    * lost claim ([[claimVersion]]) goes again. */
+  private def retryClaim(spark: SparkSession)(commitFor: Long => Commit): Long = {
     val writer = newGenName()
     var published = -1L
     while (published < 0) {
-      val next = latestVersion(spark).getOrElse(0L) + 1
-      val json = dirsFor(next).map("\"" + _ + "\"")
-        .mkString(s"""{"version":$next,$extraTag"dirs":[""", ",", "]}")
-      if (claimVersion(spark, writer, next, json)) published = next
+      val c = commitFor(latestVersion(spark).getOrElse(0L) + 1)
+      if (claimVersion(spark, writer, c)) published = c.version
     }
     published
   }
@@ -1264,24 +1246,14 @@ class SnapshotLake(root: String) {
     * change-sized data (pipeline tool). Vacuumed manifests inside the
     * range fail fast, like any table-format CDF read past retention. */
   def changesBetween(spark: SparkSession, fromV: Long, toV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     require(fromV < toV, s"need fromV < toV, got ($fromV, $toV]")
-    val baseSchema = readAt(spark, toV).schema
-    val withChange = org.apache.spark.sql.types.StructType(
-      baseSchema.fields :+ org.apache.spark.sql.types.StructField(
-        SnapshotLake.ChangeTypeCol, org.apache.spark.sql.types.StringType))
-    def ordered(df: DataFrame, v: Long): DataFrame =
-      df.select(baseSchema.fieldNames.map(col).toSeq :+
-        col(SnapshotLake.ChangeTypeCol): _*)
-        .withColumn(SnapshotLake.CommitVersionCol, lit(v))
-    val frames = walkChanges(spark, fromV, toV,
-      manifestAt = v => dirsAt(spark, v), // throws once vacuumed: fail fast
-      readRows = paths => spark.read.schema(baseSchema).parquet(paths: _*),
-      readCdfRows = p => spark.read.schema(withChange).parquet(p))
-      .map { case (v, df) => ordered(df, v) }
-    frames.reduceOption(_.unionByName(_)).getOrElse(
-      ordered(readAt(spark, toV).limit(0)
-        .withColumn(SnapshotLake.ChangeTypeCol, lit("")), toV).limit(0))
+    val snapshot = readAt(spark, toV)
+    walkChanges(spark, fromV, toV, snapshot.schema,
+      (paths, schema) => spark.read.schema(schema).parquet(paths: _*))
+      .reduceOption(_.unionByName(_)).getOrElse(snapshot.limit(0)
+        .withColumn(SnapshotLake.ChangeTypeCol, lit(""))
+        .withColumn(SnapshotLake.CommitVersionCol, lit(toV)))
   }
 
   /** The changefeed's per-version walk, shared by the batch reader
@@ -1289,20 +1261,22 @@ class SnapshotLake(root: String) {
     * mode so the tier logic cannot drift between them. For each version
     * in (fromV, toV] it classifies the manifest delta — materialized
     * `_cdf/` (rewrites), new directories as inserts, dropped directories
-    * as deletes — and delegates frame construction (batch vs streaming
-    * relations) and missing-manifest policy to the caller. Returned
-    * frames carry [[SnapshotLake.ChangeTypeCol]]; version tagging and
-    * projection stay caller-side. */
+    * as deletes — and leaves frame construction (batch vs streaming
+    * relations) to `read(paths, schema)`. Each commit record is read once
+    * per walk ([[commitAt]]); a vacuumed one inside the range fails fast.
+    * Every frame has the `schema` columns, then
+    * [[SnapshotLake.ChangeTypeCol]] and [[SnapshotLake.CommitVersionCol]]. */
   private[graft] def walkChanges(spark: SparkSession, fromV: Long, toV: Long,
-      manifestAt: Long => Seq[String],
-      readRows: Seq[String] => DataFrame,
-      readCdfRows: String => DataFrame): Seq[(Long, DataFrame)] = {
-    import org.apache.spark.sql.functions.lit
+      schema: StructType,
+      read: (Seq[String], StructType) => DataFrame): Seq[DataFrame] = {
+    import org.apache.spark.sql.functions.{col, lit}
     val fs = hadoopFs(spark)
+    val withChange = schema.add(SnapshotLake.ChangeTypeCol, StringType)
     ((fromV + 1) to toV).flatMap { v =>
       // version 0 is the empty pre-table
-      val prev = if (v == 1) Set.empty[String] else manifestAt(v - 1).toSet
-      val cur = manifestAt(v)
+      val prev = if (v == 1) Set.empty[String] else dirsAt(spark, v - 1).toSet
+      val commit = commitAt(spark, v)
+      val cur = commit.dirs
       val newDirs = cur.filterNot(prev)
       val dropped = (prev -- cur.toSet).toSeq.sorted
       // the `_cdf/` read is gated on the COMMIT being a rewrite, not
@@ -1311,23 +1285,18 @@ class SnapshotLake(root: String) {
       // here would feed CDC consumers the original mutation's changes
       // (or optimize's empty feed) instead of the restore's restatement
       val materialized = newDirs match {
-        case Seq(g) if commitIsRewrite(spark, v) && fs.exists(
+        case Seq(g) if commit.rewrite && fs.exists(
             new org.apache.hadoop.fs.Path(
               s"$root/$g/${SnapshotLake.CdfDirName}")) =>
-          Some(readCdfRows(s"$root/$g/${SnapshotLake.CdfDirName}"))
+          Some(read(Seq(s"$root/$g/${SnapshotLake.CdfDirName}"), withChange))
         case _ => None
       }
-      materialized match {
-        case Some(c) => Seq(v -> c)
-        case None =>
-          val ins = if (newDirs.isEmpty) None else Some(
-            readRows(newDirs.map(d => s"$root/$d"))
-              .withColumn(SnapshotLake.ChangeTypeCol, lit("insert")))
-          val del = if (dropped.isEmpty) None else Some(
-            readRows(dropped.map(d => s"$root/$d"))
-              .withColumn(SnapshotLake.ChangeTypeCol, lit("delete")))
-          (ins.toSeq ++ del.toSeq).map(v -> _)
-      }
+      def rows(dirs: Seq[String], change: String) =
+        if (dirs.isEmpty) None else Some(read(dirs.map(d => s"$root/$d"), schema)
+          .withColumn(SnapshotLake.ChangeTypeCol, lit(change)))
+      materialized.map(Seq(_)).getOrElse(rows(newDirs, "insert").toSeq ++ rows(dropped, "delete"))
+        .map(_.select(withChange.fieldNames.map(col).toSeq: _*)
+          .withColumn(SnapshotLake.CommitVersionCol, lit(v)))
     }
   }
 
@@ -1352,10 +1321,7 @@ class SnapshotLake(root: String) {
     val fs = hadoopFs(spark)
     val all = versions(spark)
     if (all.isEmpty) return
-    val old = all.dropRight(1).filter { v =>
-      fs.getFileStatus(new org.apache.hadoop.fs.Path(
-        f"$commitsDir/v$v%08d.json")).getModificationTime < cutoffMillis
-    }
+    val old = all.dropRight(1).filter(publishedAt(spark, _) < cutoffMillis)
     // age-expired versions must form a prefix: a young commit below an
     // old one would leave a manifest hole readers can't distinguish
     // from corruption, so stop at the first survivor
@@ -1379,8 +1345,7 @@ class SnapshotLake(root: String) {
       // listed commits whose data is gone, so readAt(v) passes its
       // commit-exists require and then fails at evaluation (or silently
       // reads a partial snapshot if some of v's dirs survived).
-      drop.foreach(v => fs.delete(
-        new org.apache.hadoop.fs.Path(f"$commitsDir/v$v%08d.json"), false))
+      drop.foreach(v => fs.delete(commitPath(v), false))
       dead.foreach(d => fs.delete(
         new org.apache.hadoop.fs.Path(s"$root/$d"), true))
     }

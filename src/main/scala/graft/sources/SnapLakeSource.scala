@@ -73,8 +73,6 @@ class SnapLakeSource extends RelationProvider with CreatableRelationProvider
       .getOrElse(lake.latestVersion(spark).getOrElse(
         throw new IllegalArgumentException(
           s"no committed version under $root")))
-    // one manifest read serves the path list, the stats map, and the
-    // bloom thunk — dirsAt re-reads and re-parses the commit JSON
     val genDirs = lake.dirsAt(spark, version)
     val dirs = genDirs.map(d => s"$root/$d")
     // Delegate to Spark's parquet relation over exactly this version's
@@ -249,7 +247,7 @@ private[sources] class SnapLakeSink(spark: SparkSession, root: String,
         schema).resolveAndBind().createDeserializer()
       it.map(r => deser(r))
     }
-    lake.commitTagged(spark.createDataFrame(rows, schema), overwrite,
+    lake.commitMarked(spark.createDataFrame(rows, schema), overwrite,
       Some(batchId), queryId)
   }
 }

@@ -92,36 +92,14 @@ class SnapLakeStreamSource(spark: SparkSession, root: String,
     * generations as inserts (manifest arithmetic), rewrites read the
     * row-level `_cdf/` their mutation materialized, blind overwrites
     * restate file-level — each row tagged with change type and commit
-    * version. Any manifest the walk needs that vacuum has dropped is
-    * fatal: a changefeed cannot skip history without lying. */
+    * version. Any commit the walk needs that vacuum has dropped is
+    * fatal ([[SnapshotLake.commitAt]]): a changefeed cannot skip history
+    * without lying. */
   private def changeBatch(startV: Long, endV: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val committed = lake.versions(spark).toSet
-    val withChange = StructType(tableSchema.fields :+
-      org.apache.spark.sql.types.StructField(SnapshotLake.ChangeTypeCol,
-        org.apache.spark.sql.types.StringType))
-    def ordered(df: DataFrame, v: Long): DataFrame =
-      df.select(tableSchema.fieldNames.map(col).toSeq :+
-        col(SnapshotLake.ChangeTypeCol): _*)
-        .withColumn(SnapshotLake.CommitVersionCol, lit(v))
     // the shared tier walker — only frame construction (streaming
-    // relations) and missing-manifest policy are this source's own.
-    // dirsAt re-reads and re-parses the commit JSON on every call, and
-    // walkChanges consults v AND v-1 of every version in the range —
-    // memoized, a catch-up batch spanning N versions does N+1 manifest
-    // reads instead of ~2N (at object-store latencies the difference is
-    // tens of seconds on a long catch-up; r13 review)
-    val manifestCache = collection.mutable.Map.empty[Long, Seq[String]]
-    val frames = lake.walkChanges(spark, startV, endV,
-      manifestAt = v =>
-        if (committed.contains(v))
-          manifestCache.getOrElseUpdate(v, lake.dirsAt(spark, v))
-        else throw new IllegalStateException(
-          s"changefeed needs version $v of $root but it has been vacuumed"),
-      readRows = paths => streamingParquet(paths, tableSchema),
-      readCdfRows = p => streamingParquet(Seq(p), withChange))
-      .map { case (v, df) => ordered(df, v) }
-    frames.reduceOption(_.unionByName(_)).getOrElse(emptyStreamDf(schema))
+    // relations) is this source's own
+    lake.walkChanges(spark, startV, endV, tableSchema, streamingParquet)
+      .reduceOption(_.unionByName(_)).getOrElse(emptyStreamDf(schema))
   }
 
   /** New directories of versions (startV, endV], walked VERSION BY
@@ -198,10 +176,10 @@ class SnapLakeStreamSource(spark: SparkSession, root: String,
     var v = startV + 1
     while (v <= endV) {
       if (committed.contains(v)) {
-        val (ds, isRestore) = lake.dirsAndRestoreAt(spark, v)
-        val fresh = ds.filterNot(seen.contains)
+        val c = lake.commitAt(spark, v)
+        val fresh = c.dirs.filterNot(seen.contains)
         val skip: Set[String] =
-          if (isRestore && fresh.nonEmpty) deliveredBefore(fresh.toSet)
+          if (c.op == "restore" && fresh.nonEmpty) deliveredBefore(fresh.toSet)
           else Set.empty
         fresh.foreach { d => seen += d; if (!skip.contains(d)) out += d }
       }

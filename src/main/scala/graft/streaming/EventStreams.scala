@@ -222,7 +222,7 @@ object EventStreams {
     * history.
     *
     * Exactly-once: the merge commit carries the (queryId, batchId)
-    * marker in its ATOMIC commit-file claim ([[SnapshotLake.mergeTagged]]),
+    * marker in its ATOMIC commit-file claim ([[SnapshotLake.mergeMarked]]),
     * so "applied" and "recorded as batch N" cannot come apart; a
     * replayed batch is detected by lastStreamBatchId under this query's
     * id and skipped whole (merge is NOT idempotent against its own
@@ -253,9 +253,9 @@ object EventStreams {
     if (watermark.exists(_ >= batchId))
       return // replay of this writer's own batch (same watermark scope)
     if (lake.latestVersion(spark).isEmpty || batch.isEmpty)
-      lake.commitTagged(batch, overwrite = false, Some(batchId), queryId)
+      lake.commitMarked(batch, overwrite = false, Some(batchId), queryId)
     else
-      lake.mergeTagged(batch, keyCols, Some(batchId), queryId)
+      lake.mergeMarked(batch, keyCols, Some(batchId), queryId)
   }
 
   /** Live (non-tombstoned) rows of the [[upsertSnapshotSink]] snapshot. */

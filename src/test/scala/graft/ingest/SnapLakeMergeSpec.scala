@@ -152,6 +152,43 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     } finally spark.conf.set("spark.sql.session.timeZone", tz)
   }
 
+  test("appends and merges store the table's own column types; a forbidden cast publishes nothing") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    def typeOf(lake: SnapshotLake, c: String) = lake.read(spark).schema(c).dataType
+    // a LONG id appended into an INT-id lake, then a LONG-keyed merge
+    // that carries the first generation forward
+    val intIds = new SnapshotLake(freshRoot())
+    intIds.commit(Seq((1, "a")).toDF("id", "v"), overwrite = true)
+    intIds.commit(Seq((2L, "b")).toDF("id", "v"))
+    intIds.merge(Seq((2L, "B")).toDF("id", "v"), Seq("id"))
+    assert(intIds.dirsAt(spark, 3L).head == intIds.dirsAt(spark, 1L).head)
+    assert(typeOf(intIds, "id") == IntegerType)
+    assert(intIds.read(spark).as[(Int, String)].collect().toSet == Set((1, "a"), (2, "B")))
+    // an INT id appended into a LONG-id lake
+    val longIds = new SnapshotLake(freshRoot())
+    longIds.commit(Seq((1L, "a")).toDF("id", "v"), overwrite = true)
+    longIds.commit(Seq((2, "b")).toDF("id", "v"))
+    assert(typeOf(longIds, "id") == LongType)
+    assert(longIds.read(spark).as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
+    // a merge whose non-key n is LONG into an INT-n lake, one generation carried
+    val root = freshRoot()
+    val ints = new SnapshotLake(root)
+    ints.commit(Seq((1L, 10), (2L, 20)).toDF("id", "n"), overwrite = true)
+    ints.commit(Seq((100L, 1000)).toDF("id", "n"))
+    ints.merge(Seq((1L, 11L)).toDF("id", "n"), Seq("id"))
+    assert(ints.dirsAt(spark, 3L).contains(ints.dirsAt(spark, 2L).last), "nothing carried")
+    assert(typeOf(ints, "n") == IntegerType)
+    assert(ints.read(spark).as[(Long, Int)].collect().toSet ==
+      Set((1L, 11), (2L, 20), (100L, 1000)))
+    // STRING into INT is no store assignment under ANSI: refused before
+    // any generation is written
+    def gens = new java.io.File(root).list().count(_.startsWith("gen-"))
+    val (versions, genCount) = (ints.versions(spark), gens)
+    intercept[IllegalArgumentException](ints.commit(Seq((3L, "x")).toDF("id", "n")))
+    intercept[IllegalArgumentException](ints.merge(Seq((3L, "x")).toDF("id", "n"), Seq("id")))
+    assert(ints.versions(spark) == versions && gens == genCount)
+  }
+
   test("a racing append DISJOINT from the merge scope rebases; in-scope aborts") {
     val root = freshRoot()
     val lake = new SnapshotLake(root)

@@ -118,7 +118,7 @@ class SnapLakeSinkSpec extends SparkSpecBase {
   }
 
   test("blooms=on: every micro-batch commit carries its bloom sidecar") {
-    // the streaming sink lands through commitTagged, so the auto-bloom
+    // the streaming sink lands through commitMarked, so the auto-bloom
     // tier applies per micro-batch — a long-lived streamed table keeps
     // point-lookup skipping without any maintenance job. (The build is
     // one extra scan of the new generation per batch: opt-in cost.)

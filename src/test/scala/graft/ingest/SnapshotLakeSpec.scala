@@ -181,6 +181,9 @@ class SnapshotLakeSpec extends SparkSpecBase {
     Seq((99L, "ghost")).toDF("id", "v")
       .write.parquet(s"$root/gen-feedface0000")
     val keepDir = lake.dirsAt(spark, 3L).head
+    // version 1's commit record is now cached; the vacuum must still
+    // make it unreadable
+    assert(lake.dirsAt(spark, 1L).nonEmpty)
     lake.vacuum(spark, retainLast = 1)
     assert(lake.versions(spark) == Seq(3L))
     assert(lake.read(spark).as[(Long, String)].collect().toSet ==
