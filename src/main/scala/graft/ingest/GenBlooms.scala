@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions.{col, input_file_name}
   * columnar scan each; both publish `_blooms.json` beside the stats.
   * Adding a sidecar to a published (immutable) generation is safe:
   * readers racing the write see either no bloom (no pruning) or the
-  * complete bloom — never a partial one (tmp + rename).
+  * complete bloom — never a partial one ([[AtomicOverwrite.publish]]).
   *
   * Pruning stays strictly conservative: a bloom answers "maybe" or
   * "definitely absent"; only the latter prunes. Absent files, absent
@@ -195,14 +195,17 @@ object GenBlooms {
     * `genPath` and publish `_blooms.json` there — the backfill for
     * generations written without auto-Blooms (commits with auto-Blooms
     * on build the same sidecar inside their own write job,
-    * [[GenWriter]]). One distributed scan of the requested columns;
+    * [[GenWriter]]). The generation reads under its recorded schema
+    * ([[SnapshotLake.readGens]]), so no inference job runs before the
+    * one distributed scan of the requested columns;
     * per-partition blooms merge by bitwise OR (commutative — row order
     * never matters), and only the finished bloom bits are collected:
     * numFiles × |cols| × m/8 bytes, metadata-sized. */
   def write(spark: SparkSession, genPath: String, cols: Seq[String],
       expectedNdvPerFile: Int = 100000, strict: Boolean = true): Unit = {
     val (m, k) = shape(expectedNdvPerFile)
-    val df = spark.read.parquet(genPath)
+    val gen = new Path(genPath)
+    val df = new SnapshotLake(gen.getParent.toString).readGens(spark, Seq(gen.getName))
     val presentFields = resolve(df.schema, cols, strict)
     val present = presentFields.map(_.name.toLowerCase)
     if (present.isEmpty) return
@@ -254,38 +257,8 @@ object GenBlooms {
         cn.put("b", b64(b))
       }
     }
-    val dir = new Path(genPath)
-    // publish through the RAW filesystem: on ChecksumFileSystem the
-    // delete+rename moves the data file and its .crc in separate steps,
-    // and a reader racing load() in that window throws ChecksumException
-    // — the same hazard the _constraints.json path closes this way
-    val fsAll = dir.getFileSystem(conf)
-    val fs = SidecarCache.raw(fsAll)
-    val tmp = new Path(dir, s".$BloomsFileName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(mapper.writeValueAsString(rootNode).getBytes(UTF_8))
-    finally out.close()
-    fs.delete(new Path(dir, BloomsFileName), false)
-    // a false rename (concurrent recreation, cross-mount tmp) must NOT
-    // report success: the operator would believe the point-lookup tier
-    // exists while every probe keeps paying full fan-out. Clean the tmp
-    // up — the old sidecar is already gone either way, so the message
-    // says so and a rebuild is the recovery.
-    if (!fs.rename(tmp, new Path(dir, BloomsFileName))) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"failed to publish $BloomsFileName under $genPath — the " +
-          "generation now has NO bloom sidecar; rerun computeBlooms")
-    }
-    // a sidecar written by a pre-raw (checksummed) build left a .crc
-    // describing the OLD content; the raw rename above does not touch
-    // it, and it would permanently fail any checksummed read of the new
-    // file — same hygiene as writeControlFile's publish
-    fsAll match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem =>
-        fs.delete(c.getChecksumFile(new Path(dir, BloomsFileName)), false)
-      case _ => ()
-    }
+    AtomicOverwrite.publish(conf, new Path(genPath, BloomsFileName),
+      mapper.writeValueAsString(rootNode))
   }
 
   private val cache = new SidecarCache[Map[String, Map[String, Bloom]]](1024)

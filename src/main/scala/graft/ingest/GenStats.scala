@@ -89,9 +89,7 @@ object GenStats {
     * fall back to schema inference. */
   def write(conf: Configuration, genPath: String): Unit = {
     val dir = new Path(genPath)
-    val fsAll = dir.getFileSystem(conf)
-    val files = fsAll.listStatus(dir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    val files = dataFiles(dir.getFileSystem(conf), dir)
     val pool = new scala.collection.parallel.ForkJoinTaskSupport(
       new java.util.concurrent.ForkJoinPool(16))
     val par = new scala.collection.parallel.immutable.ParVector(files.toVector)
@@ -104,51 +102,19 @@ object GenStats {
       case Vector(Some(s)) => Some(s)
       case _ => None
     }
-    val json = render(harvested.map { case (n, (st, _)) => n -> st }, schema)
-    // Publish through the RAW filesystem, like GenBlooms and the
-    // control files: on ChecksumFileSystem delete+rename moves the data
-    // file and its .crc in separate steps, and computeStats now
-    // backfills into PUBLISHED generations — a reader racing load() in
-    // that window would throw ChecksumException or see a momentary
-    // sidecar-less generation (lost pruning). ACCEPTED TRADEOFF (same
-    // call GenBlooms made in r9): raw reads forgo local-fs checksum
-    // verification, so silent on-disk corruption that still parses as
-    // valid JSON would yield a wrong envelope instead of a loud
-    // ChecksumException. Real object stores (S3/GCS/HDFS) carry their
-    // own integrity checks below this layer; the local-fs .crc was the
-    // only thing lost, and it is what caused the publish race. A
-    // malformed sidecar still reads as absent (parse() → None → never
-    // prune).
-    val fs = SidecarCache.raw(fsAll)
-    val tmp = new Path(dir, s".$StatsFileName.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // Commit-time call: the generation is unpublished, no reader to
-    // race, the delete is a no-op. BACKFILL call
-    // ([[SnapshotLake.computeStats]]): a pre-v2 sidecar may sit at the
-    // destination — without the delete, local-fs rename refuses to
-    // overwrite and the backfill silently no-ops; a reader in the
-    // delete→rename window sees no sidecar and simply doesn't prune.
-    fs.delete(new Path(dir, StatsFileName), false)
-    // a false rename after the delete would leave the generation with
-    // NO sidecar while reporting success — the silent no-signal failure
-    // GenBlooms.write throws for; surface it the same way
-    if (!fs.rename(tmp, new Path(dir, StatsFileName))) {
-      fs.delete(tmp, false)
-      throw new IllegalStateException(
-        s"failed to publish $StatsFileName under $genPath — the " +
-          "generation now has NO stats sidecar; rerun computeStats")
-    }
-    // a sidecar written by a pre-raw (checksummed) build left a .crc
-    // describing the OLD content; the raw rename does not touch it, and
-    // it would permanently fail any checksummed read of the new file
-    fsAll match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem =>
-        fs.delete(c.getChecksumFile(new Path(dir, StatsFileName)), false)
-      case _ => ()
-    }
+    // a backfill (SnapshotLake.computeStats) replaces the sidecar of a
+    // published generation: the atomic publish keeps readers on the old
+    // or the new file, never on none
+    AtomicOverwrite.publish(conf, new Path(dir, StatsFileName),
+      render(harvested.map { case (n, (st, _)) => n -> st }, schema))
   }
+
+  /** A generation's data files: the `*.parquet` files directly under
+    * `dir` (its `_cdf/` changefeed and sidecars are not data). */
+  private[ingest] def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
 
   /** Stats for one generation, keyed by bare file name; None when the
     * generation predates stats collection. */
@@ -161,9 +127,6 @@ object GenStats {
       : Option[org.apache.spark.sql.types.StructType] =
     sidecar(conf, genPath).flatMap(_.schema)
 
-  /** A backfill's delete landing mid-read reads as absent ([[SidecarCache]]),
-    * never as an exception killing the reader's planning — caught by the
-    * SnapLakeSkipSpec republish hammer. */
   private def sidecar(conf: Configuration, genPath: String): Option[Sidecar] = {
     val p = new Path(genPath, StatsFileName)
     cache.load(p.getFileSystem(conf), p)(parse)

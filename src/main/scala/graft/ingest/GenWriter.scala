@@ -26,8 +26,8 @@ import graft.ingest.GenBlooms.Bloom
   *  - With `blooms`, every written row's Bloom columns go into its
   *    file's [[GenBlooms.Bloom]] inside the write task itself, and
   *    `_blooms.json` is published from those bits: the same bytes
-  *    [[GenBlooms.write]]'s rescan would produce, without the two jobs
-  *    (schema inference and scan) that rescan costs per commit.
+  *    [[GenBlooms.write]]'s rescan would produce, without the scan job
+  *    that rescan costs per generation.
   */
 object GenWriter {
 

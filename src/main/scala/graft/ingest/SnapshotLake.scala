@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute,
   AttributeReference, Cast, EqualTo, EvalMode, Expression, GreaterThanOrEqual,
   LessThanOrEqual, Literal, Or}
 import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.datasources.{DataSource, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.internal.SQLConf.StoreAssignmentPolicy
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 
@@ -175,7 +176,8 @@ class SnapshotLake(root: String) {
         StructField("ts_millis", LongType))))
   }
 
-  /** TIME TRAVEL: the table exactly as committed at `version`. */
+  /** TIME TRAVEL: the table exactly as committed at `version`. Reads
+    * prune files exactly like `format("snaplake")` ([[relation]]). */
   def readAt(spark: SparkSession, version: Long): DataFrame = {
     val dirs = dirsAt(spark, version)
     require(dirs.nonEmpty, s"version $version lists no data directories")
@@ -185,7 +187,43 @@ class SnapshotLake(root: String) {
   /** Generations `gens` as one DataFrame under their merged schema
     * ([[schemaOf]]). */
   private[graft] def readGens(spark: SparkSession, gens: Seq[String]): DataFrame =
-    spark.read.schema(schemaOf(spark, gens)).parquet(gens.map(d => s"$root/$d"): _*)
+    readGens(spark, gens, schemaOf(spark, gens))
+
+  /** Generations `gens` as one DataFrame under `schema` ([[relation]]). */
+  private[graft] def readGens(spark: SparkSession, gens: Seq[String],
+      schema: StructType): DataFrame =
+    GraftBridge.ofRows(spark, LogicalRelation(relation(spark, gens, schema)))
+
+  /** The one scan of snaplake data: directories `gens` (relative to the
+    * root — generations, or a rewrite's `_cdf/`) as Spark's own parquet
+    * relation under `schema`, so pushdown, column pruning and vectorized
+    * decoding are the parquet scan's. The relation lists its files now:
+    * a frame keeps reading its version after later commits (snapshot
+    * isolation). Its file index is wrapped in a
+    * [[graft.sources.StatsFileIndex]], which drops each file that
+    * [[graft.sources.FilePruning]] proves holds no row passing the scan's
+    * pushed filters, from the generations' `_stats.json` envelopes and,
+    * loaded only for an equality-shaped scan, their `_blooms.json`. A
+    * directory without sidecars is never pruned. The index also lists the
+    * commit log among its root paths, which makes Spark refuse a
+    * single-path `INSERT INTO` that would drop files into a committed
+    * generation. */
+  private[graft] def relation(spark: SparkSession, gens: Seq[String],
+      schema: StructType): HadoopFsRelation = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    // sidecars are keyed by bare file name; the index keys a file by
+    // `gen/file` (generation names are unique within the table)
+    def byFile[V](load: String => Option[Map[String, V]]): Map[String, V] =
+      gens.flatMap(g => load(s"$root/$g").getOrElse(Map.empty)
+        .map { case (file, v) => s"$g/$file" -> v }).toMap
+    DataSource(spark, className = "parquet", paths = gens.map(g => s"$root/$g"),
+      userSpecifiedSchema = Some(schema)).resolveRelation() match {
+      case r: HadoopFsRelation =>
+        r.copy(location = new graft.sources.StatsFileIndex(r.location,
+          byFile(GenStats.load(conf, _)), new org.apache.hadoop.fs.Path(commitsDir),
+          () => byFile(GenBlooms.load(conf, _))))(spark)
+    }
+  }
 
   /** The schema of a read over generations `gens`: their recorded
     * write-time schemas ([[GenStats.schema]]) merged with Spark's own
@@ -463,7 +501,7 @@ class SnapshotLake(root: String) {
     val arr = node.putArray("cols")
     cols.foreach(arr.add)
     node.put("ndv", expectedNdvPerFile)
-    writeControlFile(spark, bloomColsPath, "._bloomcols.tmp",
+    AtomicOverwrite.publish(spark.sparkContext.hadoopConfiguration, bloomColsPath,
       mapper.writeValueAsString(node))
   }
 
@@ -481,9 +519,8 @@ class SnapshotLake(root: String) {
     }
 
   /** Raw-fs read+parse of an administrative control file; None when
-    * absent. The read-side twin of [[writeControlFile]] — every control
-    * file goes through this pair so the ChecksumFileSystem hygiene
-    * lives in exactly one place. */
+    * absent. The read-side twin of [[AtomicOverwrite.publish]], which
+    * writes every control file. */
   private def readControlJson(spark: SparkSession,
       p: org.apache.hadoop.fs.Path)
       : Option[com.fasterxml.jackson.databind.JsonNode] = {
@@ -547,7 +584,7 @@ class SnapshotLake(root: String) {
       val arr = node.putArray("sortCols")
       sortCols.foreach(arr.add)
     }
-    writeControlFile(spark, autoCompactPath, "._autocompact.tmp",
+    AtomicOverwrite.publish(spark.sparkContext.hadoopConfiguration, autoCompactPath,
       mapper.writeValueAsString(node))
   }
 
@@ -630,39 +667,8 @@ class SnapshotLake(root: String) {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
     cs.toSeq.sortBy(_._1).foreach { case (n, e) => node.put(n, e) }
-    writeControlFile(spark, constraintsPath, "._constraints.tmp",
+    AtomicOverwrite.publish(spark.sparkContext.hadoopConfiguration, constraintsPath,
       mapper.writeValueAsString(node))
-  }
-
-  /** Atomic OVERWRITING publish of an administrative control file
-    * (constraints, auto-bloom config), through the RAW filesystem (no
-    * .crc sidecar — see the [[constraints]] read-side note).
-    * Delete-then-rename would open a window where a concurrent commit's
-    * validateGen sees NO file and validates against nothing — readers
-    * must always observe either the old or the new file. FileContext's
-    * OVERWRITE rename is atomic on HDFS but falls back to delete+rename
-    * on the local fs, so local takes the POSIX ATOMIC_MOVE directly. */
-  private def writeControlFile(spark: SparkSession,
-      dst: org.apache.hadoop.fs.Path, tmpName: String,
-      content: String): Unit = {
-    val fsAll = hadoopFs(spark)
-    val raw = rawFs(spark)
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/$tmpName")
-    val out = raw.create(tmp, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // the scheme-branched atomic move lives in AtomicOverwrite (r14) —
-    // it was duplicated into GenPointer.swapPtr WITHOUT the local-fs
-    // branch, which is exactly the drift a single implementation stops
-    AtomicOverwrite.rename(
-      spark.sparkContext.hadoopConfiguration, raw, tmp, dst)
-    // a pre-raw writer may have left a checksum sidecar describing the
-    // OLD content; it would poison any checksummed read of the new file
-    fsAll match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem =>
-        raw.delete(c.getChecksumFile(dst), false)
-      case _ => ()
-    }
   }
 
   /** Validate a freshly-written, still-unpublished generation against
@@ -679,10 +685,7 @@ class SnapshotLake(root: String) {
     if (cs.isEmpty) return
     // a fileless generation (empty batch/delete-all) has nothing to
     // check — and schema inference over it would fail
-    val hasFiles = hadoopFs(spark)
-      .listStatus(new org.apache.hadoop.fs.Path(s"$root/$gen"))
-      .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    if (!hasFiles) return
+    if (!hasDataFiles(spark, gen)) return
     // ANY failure from here on (violation, malformed constraint, parse
     // or analysis error) must clean up the unpublished generation —
     // nothing sweeps orphans later
@@ -867,8 +870,7 @@ class SnapshotLake(root: String) {
       // analysis on an unresolved column — null-filled, such rows
       // simply match no source key, which is the correct semantics
       val affectedDf = if (affected.isEmpty) None
-        else Some(spark.read.schema(snapSchema)
-          .parquet(affected.map(d => s"$root/$d"): _*))
+        else Some(readGens(spark, affected, snapSchema))
       val keep = affectedDf.map(_.join(srcKeys, keyCols, "left_anti"))
       val rewritten = keep match {
         case Some(k) => k.unionByName(src, allowMissingColumns = true)
@@ -931,8 +933,7 @@ class SnapshotLake(root: String) {
     // predate a predicate column, and mergeSchema over the subset alone
     // would make the filter fail analysis; null-filled, the predicate
     // evaluates NULL there and the rows are kept — correct
-    val affectedDf = spark.read.schema(snapshot.schema)
-      .parquet(affected.map(d => s"$root/$d"): _*)
+    val affectedDf = readGens(spark, affected, snapshot.schema)
     val hit = org.apache.spark.sql.functions.coalesce(predicate,
       org.apache.spark.sql.functions.lit(false))
     val changes = affectedDf.filter(hit).withColumn(
@@ -995,19 +996,12 @@ class SnapshotLake(root: String) {
       emptyChanges(snap), mayOverlapScope = _ => false, op = "optimize")
   }
 
-  /** [[optimize]] on the z-order curve of two numeric keys
-    * ([[graft.ops.Layout.zOrderCluster]]): every rewritten file gets a
-    * tight envelope on BOTH keys, so single-column predicates on either
-    * prune — the OPTIMIZE ZORDER maintenance pass. */
+  /** [[optimize]] on the z-order curve of `keys`, numeric columns
+    * ([[graft.ops.Layout.zOrderClusterN]]; keys.size·bitsPerKey ≤ 63):
+    * every rewritten file gets a tight envelope on EVERY key, so
+    * single-column predicates on any of them prune — the OPTIMIZE ZORDER
+    * maintenance pass. */
   def optimizeZOrder(spark: SparkSession,
-      a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
-      numFiles: Int, bitsPerKey: Int = 21): Long =
-    optimizeZOrderN(spark, Seq(a, b), numFiles, bitsPerKey)
-
-  /** [[optimizeZOrder]] at arbitrary arity
-    * ([[graft.ops.Layout.zOrderClusterN]]): n keys share the curve,
-    * n·bitsPerKey ≤ 63. */
-  def optimizeZOrderN(spark: SparkSession,
       keys: Seq[org.apache.spark.sql.Column],
       numFiles: Int, bitsPerKey: Int = 21): Long = {
     val base = latestVersion(spark).getOrElse(
@@ -1199,12 +1193,12 @@ class SnapshotLake(root: String) {
   def diff(spark: SparkSession, v1: Long, v2: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     // align both snapshots on the UNION schema (null-filled) before
-    // exceptAll: the lake's headline feature is schema-evolving appends,
-    // and exceptAll demands identical column counts — unaligned, the
-    // audit tool threw exactly when an evolved table needed reconciling
-    // (r13 review). Null-filling is also the honest diff semantics: a
-    // pre-evolution row equals its post-evolution null-extended self.
-    val (sa, sb) = (readAt(spark, v1).schema, readAt(spark, v2).schema)
+    // exceptAll: appends may evolve the schema, and exceptAll demands
+    // identical column counts. Null-filling is also the honest diff
+    // semantics: a pre-evolution row equals its post-evolution
+    // null-extended self.
+    val (va, vb) = (readAt(spark, v1), readAt(spark, v2))
+    val (sa, sb) = (va.schema, vb.schema)
     val names = (sa.fieldNames ++
       sb.fieldNames.filterNot(sa.fieldNames.contains)).toSeq
     def aligned(df: DataFrame): DataFrame = {
@@ -1219,8 +1213,8 @@ class SnapshotLake(root: String) {
       }
       df.select(all: _*)
     }
-    val a = aligned(readAt(spark, v1))
-    val b = aligned(readAt(spark, v2))
+    val a = aligned(va)
+    val b = aligned(vb)
     b.exceptAll(a).withColumn("op", lit("insert"))
       .unionByName(a.exceptAll(b).withColumn("op", lit("delete")))
   }
@@ -1249,8 +1243,7 @@ class SnapshotLake(root: String) {
     import org.apache.spark.sql.functions.lit
     require(fromV < toV, s"need fromV < toV, got ($fromV, $toV]")
     val snapshot = readAt(spark, toV)
-    walkChanges(spark, fromV, toV, snapshot.schema,
-      (paths, schema) => spark.read.schema(schema).parquet(paths: _*))
+    walkChanges(spark, fromV, toV, snapshot.schema, readGens(spark, _, _))
       .reduceOption(_.unionByName(_)).getOrElse(snapshot.limit(0)
         .withColumn(SnapshotLake.ChangeTypeCol, lit(""))
         .withColumn(SnapshotLake.CommitVersionCol, lit(toV)))
@@ -1262,7 +1255,8 @@ class SnapshotLake(root: String) {
     * in (fromV, toV] it classifies the manifest delta — materialized
     * `_cdf/` (rewrites), new directories as inserts, dropped directories
     * as deletes — and leaves frame construction (batch vs streaming
-    * relations) to `read(paths, schema)`. Each commit record is read once
+    * frames over [[relation]]) to `read(dirs, schema)`, `dirs` relative to
+    * the root. Each commit record is read once
     * per walk ([[commitAt]]); a vacuumed one inside the range fails fast.
     * Every frame has the `schema` columns, then
     * [[SnapshotLake.ChangeTypeCol]] and [[SnapshotLake.CommitVersionCol]]. */
@@ -1288,11 +1282,11 @@ class SnapshotLake(root: String) {
         case Seq(g) if commit.rewrite && fs.exists(
             new org.apache.hadoop.fs.Path(
               s"$root/$g/${SnapshotLake.CdfDirName}")) =>
-          Some(read(Seq(s"$root/$g/${SnapshotLake.CdfDirName}"), withChange))
+          Some(read(Seq(s"$g/${SnapshotLake.CdfDirName}"), withChange))
         case _ => None
       }
       def rows(dirs: Seq[String], change: String) =
-        if (dirs.isEmpty) None else Some(read(dirs.map(d => s"$root/$d"), schema)
+        if (dirs.isEmpty) None else Some(read(dirs, schema)
           .withColumn(SnapshotLake.ChangeTypeCol, lit(change)))
       materialized.map(Seq(_)).getOrElse(rows(newDirs, "insert").toSeq ++ rows(dropped, "delete"))
         .map(_.select(withChange.fieldNames.map(col).toSeq: _*)
@@ -1365,16 +1359,8 @@ class SnapshotLake(root: String) {
   def computeBlooms(spark: SparkSession, cols: Seq[String],
       expectedNdvPerFile: Int = 100000): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    latestVersion(spark).foreach { v =>
-      dirsAt(spark, v).foreach { gen =>
-        val genPath = s"$root/$gen"
-        val hasFiles = hadoopFs(spark)
-          .listStatus(new org.apache.hadoop.fs.Path(genPath))
-          .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        if (hasFiles && GenBlooms.load(conf, genPath).isEmpty)
-          GenBlooms.write(spark, genPath, cols, expectedNdvPerFile)
-      }
-    }
+    dataGenPaths(spark).filter(GenBlooms.load(conf, _).isEmpty)
+      .foreach(GenBlooms.write(spark, _, cols, expectedNdvPerFile))
   }
 
   /** Backfill `_stats.json` for every generation of the LATEST snapshot
@@ -1386,17 +1372,19 @@ class SnapshotLake(root: String) {
     * parquet footers, so cost is a few KB of metadata per file. */
   def computeStats(spark: SparkSession): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    latestVersion(spark).foreach { v =>
-      dirsAt(spark, v).foreach { gen =>
-        val genPath = s"$root/$gen"
-        val hasFiles = hadoopFs(spark)
-          .listStatus(new org.apache.hadoop.fs.Path(genPath))
-          .exists(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        if (hasFiles && GenStats.load(conf, genPath).isEmpty)
-          GenStats.write(conf, genPath)
-      }
-    }
+    dataGenPaths(spark).filter(GenStats.load(conf, _).isEmpty)
+      .foreach(GenStats.write(conf, _))
   }
+
+  /** Paths of the latest snapshot's generations that hold data files —
+    * the walk both backfills take. */
+  private def dataGenPaths(spark: SparkSession): Seq[String] =
+    latestVersion(spark).toSeq.flatMap(dirsAt(spark, _))
+      .filter(hasDataFiles(spark, _)).map(gen => s"$root/$gen")
+
+  /** Does generation `gen` hold any data file? */
+  private def hasDataFiles(spark: SparkSession, gen: String): Boolean =
+    GenStats.dataFiles(hadoopFs(spark), new org.apache.hadoop.fs.Path(s"$root/$gen")).nonEmpty
 
   /** Sweep ORPHANED generations: `gen-*` directories no surviving commit
     * references AND whose mtime is before the ABSOLUTE instant

@@ -20,14 +20,10 @@ import graft.ingest.SnapshotLake
   * }}}
   *
   * The read path resolves the commit log to the exact generation
-  * directories of the requested version and then delegates to Spark's own
-  * parquet relation over that file list — the table-format read shape
-  * (manifest → file list → native scan): predicate pushdown, column
-  * pruning, and vectorized decoding all come from the parquet scan
-  * itself, and the resolved relation materializes its listing at creation
-  * time, so a DataFrame keeps returning its version even after later
-  * commits (the same snapshot-isolation contract as
-  * [[SnapshotLake.readAt]]).
+  * directories of the requested version and returns the lake's one scan
+  * over them ([[SnapshotLake.relation]], which [[SnapshotLake.readAt]]
+  * also reads through) — the table-format read shape (manifest → file
+  * list → stats-pruned native scan).
   *
   * The write path maps SaveMode onto commit semantics: Overwrite and
   * Append are overwrite/append commits (optimistic-concurrency retry
@@ -73,52 +69,8 @@ class SnapLakeSource extends RelationProvider with CreatableRelationProvider
       .getOrElse(lake.latestVersion(spark).getOrElse(
         throw new IllegalArgumentException(
           s"no committed version under $root")))
-    val genDirs = lake.dirsAt(spark, version)
-    val dirs = genDirs.map(d => s"$root/$d")
-    // Delegate to Spark's parquet relation over exactly this version's
-    // files: pushdown/pruning/vectorization are the scan's own, and the
-    // relation pins its file listing now (snapshot isolation). Append
-    // commits may evolve the schema; the version's schema is the union
-    // across its generations only (later commits cannot widen an old
-    // snapshot), resolved from their write-time records — no inference
-    // job.
-    val resolved = org.apache.spark.sql.execution.datasources.DataSource(
-      spark,
-      className = "parquet",
-      paths = dirs,
-      userSpecifiedSchema = Some(lake.schemaOf(spark, genDirs))).resolveRelation()
-    resolved match {
-      case fsRel: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-        // manifest-stats file skipping: swap the relation's FileIndex for
-        // a wrapper that prunes files against each generation's
-        // _stats.json under the scan's pushed data filters. Generations
-        // without stats contribute nothing to the map and their files
-        // are never pruned.
-        val stats = genDirs.flatMap { gen =>
-          graft.ingest.GenStats
-            .load(spark.sparkContext.hadoopConfiguration, s"$root/$gen")
-            .getOrElse(Map.empty)
-            .map { case (file, st) => s"$gen/$file" -> st }
-        }.toMap
-        // bloom sidecars (opt-in, SnapshotLake.computeBlooms): the point-
-        // lookup tier envelopes can't serve — keyed the same way, but
-        // passed as a THUNK: the index loads them only for scans whose
-        // pushed filters carry an equality shape (they are file-sized
-        // artifacts, not envelope-sized)
-        val blooms = () => genDirs.flatMap { gen =>
-          graft.ingest.GenBlooms
-            .load(spark.sparkContext.hadoopConfiguration, s"$root/$gen")
-            .getOrElse(Map.empty)
-            .map { case (file, bs) => s"$gen/$file" -> bs }
-        }.toMap
-        // wrap even with no stats: the wrapper's rootPaths carry the
-        // commit log, which is what blocks single-path INSERT INTO from
-        // corrupting a committed generation (see StatsFileIndex)
-        fsRel.copy(location = new StatsFileIndex(fsRel.location, stats,
-          Some(new org.apache.hadoop.fs.Path(s"$root/_commits")),
-          blooms))(spark)
-      case other => other
-    }
+    val gens = lake.dirsAt(spark, version)
+    lake.relation(spark, gens, lake.schemaOf(spark, gens))
   }
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
@@ -168,7 +120,7 @@ class SnapLakeSource extends RelationProvider with CreatableRelationProvider
       val v = lake.latestVersion(spark).getOrElse(
         throw new IllegalArgumentException(
           s"streaming from an empty lake needs .schema(...): $root"))
-      lake.readAt(spark, v).schema
+      lake.schemaOf(spark, lake.dirsAt(spark, v))
     }
     val full =
       if (!changeFeedRequested(parameters)) resolved

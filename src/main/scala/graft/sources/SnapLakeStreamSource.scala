@@ -68,24 +68,18 @@ class SnapLakeStreamSource(spark: SparkSession, root: String,
     if (changeFeed) return changeBatch(startV, ver(end))
     val dirs = deltaDirs(startV, ver(end), checkpointed = start.isDefined)
     if (dirs.isEmpty) emptyStreamDf(schema)
-    else streamingParquet(dirs.map(d => s"$root/$d"), tableSchema)
+    else streamingRead(dirs, tableSchema)
   }
 
   private def emptyStreamDf(s: StructType): DataFrame =
     GraftBridge.ofRows(spark,
       LocalRelation(DataTypeUtils.toAttributes(s), Nil, isStreaming = true))
 
-  /** The delegated parquet relation, pinned to an explicit schema so
-    * evolved appends project instead of widening mid-stream, flagged
-    * streaming for the incremental planner. */
-  private def streamingParquet(paths: Seq[String], s: StructType): DataFrame = {
-    val rel = org.apache.spark.sql.execution.datasources.DataSource(
-      spark,
-      className = "parquet",
-      paths = paths,
-      userSpecifiedSchema = Some(s)).resolveRelation(checkFilesExist = false)
-    GraftBridge.ofRows(spark, LogicalRelation(rel, isStreaming = true))
-  }
+  /** The lake's scan of `gens` ([[SnapshotLake.relation]]), pinned to
+    * an explicit schema so evolved appends project instead of widening
+    * mid-stream, flagged streaming for the incremental planner. */
+  private def streamingRead(gens: Seq[String], s: StructType): DataFrame =
+    GraftBridge.ofRows(spark, LogicalRelation(lake.relation(spark, gens, s), isStreaming = true))
 
   /** CHANGEFEED batch for versions (startV, endV]: the same three cost
     * tiers as [[SnapshotLake.changesBetween]] — appends emit their new
@@ -98,7 +92,7 @@ class SnapLakeStreamSource(spark: SparkSession, root: String,
   private def changeBatch(startV: Long, endV: Long): DataFrame = {
     // the shared tier walker — only frame construction (streaming
     // relations) is this source's own
-    lake.walkChanges(spark, startV, endV, tableSchema, streamingParquet)
+    lake.walkChanges(spark, startV, endV, tableSchema, streamingRead)
       .reduceOption(_.unionByName(_)).getOrElse(emptyStreamDf(schema))
   }
 

@@ -9,7 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ingest.GenStats.{ColStats, FileStats}
 
-/** Manifest-stats file skipping for the snaplake read path: wraps the
+/** Manifest-stats file skipping for every snaplake scan
+  * ([[graft.ingest.SnapshotLake.relation]]): wraps the
   * resolved parquet relation's own [[FileIndex]] (which did the listing
   * and schema work) and, inside `listFiles`, drops every file whose
   * [[graft.ingest.GenStats]] envelope or Bloom sidecar proves the pushed
@@ -30,9 +31,8 @@ import graft.ingest.GenStats.{ColStats, FileStats}
   * generation names are UUID-derived.
   */
 class StatsFileIndex(inner: FileIndex, statsByFile: Map[String, FileStats],
-    commitLogPath: Option[Path] = None,
-    bloomsByFile: () => Map[String, Map[String, graft.ingest.GenBlooms.Bloom]] =
-      () => Map.empty)
+    commitLogPath: Path,
+    bloomsByFile: () => Map[String, Map[String, graft.ingest.GenBlooms.Bloom]])
     extends FileIndex {
 
   // LAZY and equality-gated: bloom sidecars are orders of magnitude
@@ -51,7 +51,7 @@ class StatsFileIndex(inner: FileIndex, statsByFile: Map[String, FileStats],
     * snapshot isolation and time travel). Writes go through
     * `format("snaplake").mode("append")`, i.e. the commit log. */
   override def rootPaths: Seq[Path] =
-    inner.rootPaths ++ commitLogPath.toSeq
+    inner.rootPaths :+ commitLogPath
   override def inputFiles: Array[String] = inner.inputFiles
   override def refresh(): Unit = inner.refresh()
   override def sizeInBytes: Long = inner.sizeInBytes

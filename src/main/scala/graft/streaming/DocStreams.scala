@@ -57,21 +57,12 @@ object DocStreams {
     spark.readStream.schema(DocSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(dir)
 
-  // CURRENT-pointer chassis shared with the package's other
-  // read-merge-swap sinks — one implementation in [[GenPointer]]
-  private def readPtr(fs: org.apache.hadoop.fs.FileSystem,
-      ledgerDir: String): Option[String] = GenPointer.readPtr(fs, ledgerDir)
-
-  private def swapPtr(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, ledgerDir: String,
-      gen: String): Unit = GenPointer.swapPtr(spark, fs, ledgerDir, gen)
-
   /** All fingerprints currently in the ledger (reader view). */
   def ledgerFingerprints(spark: SparkSession, ledgerDir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(ledgerDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    readPtr(fs, ledgerDir).filter(g => fs.exists(new Path(s"$ledgerDir/$g")))
+    GenPointer.readPtr(fs, ledgerDir).filter(g => fs.exists(new Path(s"$ledgerDir/$g")))
       .map(g => spark.read.schema(LedgerSchema).parquet(s"$ledgerDir/$g"))
       .getOrElse(spark.range(0).selectExpr("CAST(NULL AS STRING) AS fp",
         "CAST(NULL AS BIGINT) AS doc_id", "CAST(NULL AS STRING) AS pfx")
@@ -90,10 +81,10 @@ object DocStreams {
     // Resolve (or initialize) the current ledger generation. Writing the
     // pointer before any data is safe: a missing gen dir reads as an
     // empty ledger.
-    val gen = readPtr(fs, ledgerDir).getOrElse {
+    val gen = GenPointer.readPtr(fs, ledgerDir).getOrElse {
       fs.mkdirs(new Path(ledgerDir))
       val g = s"gen_$batchId"
-      swapPtr(spark, fs, ledgerDir, g)
+      GenPointer.swapPtr(spark, fs, ledgerDir, g)
       g
     }
     val genPath = s"$ledgerDir/$gen"
@@ -161,7 +152,7 @@ object DocStreams {
         .sortWithinPartitions(col("fp"))
         .write.mode("overwrite").partitionBy("pfx")
         .parquet(s"$ledgerDir/$next")
-      swapPtr(spark, fs, ledgerDir, next)
+      GenPointer.swapPtr(spark, fs, ledgerDir, next)
       // keep the predecessor one cycle (readers that resolved the old
       // generation finish their scan; same rollback margin as
       // upsertSnapshotSink); older/stray gens are swept

@@ -262,12 +262,8 @@ object EventStreams {
   def activeSnapshot(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ptr = new Path(s"$dir/CURRENT")
-    val in = fs.open(ptr)
-    val gen =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
+    val gen = GenPointer.readPtr(fs, dir)
+      .getOrElse(throw new java.io.FileNotFoundException(s"$dir/CURRENT"))
     spark.read.parquet(s"$dir/$gen").filter(col("event_type") =!= "error")
   }
 

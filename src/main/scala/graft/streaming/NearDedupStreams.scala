@@ -83,16 +83,6 @@ object NearDedupStreams {
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") / graft.ml.Dedup.NumHashes
 
-  // thin forwarders to the shared chassis (NearDedupSpec pins the swap
-  // contract through these names; the one implementation lives in
-  // [[GenPointer]])
-  private[streaming] def readPtr(fs: org.apache.hadoop.fs.FileSystem,
-      ledgerDir: String): Option[String] = GenPointer.readPtr(fs, ledgerDir)
-
-  private[streaming] def swapPtr(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, ledgerDir: String,
-      gen: String): Unit = GenPointer.swapPtr(spark, fs, ledgerDir, gen)
-
   private def readOrEmpty(spark: SparkSession, path: String, schema: String,
       fs: org.apache.hadoop.fs.FileSystem): DataFrame =
     if (fs.exists(new org.apache.hadoop.fs.Path(path)))
@@ -108,7 +98,7 @@ object NearDedupStreams {
     import org.apache.hadoop.fs.Path
     val fs = new Path(ledgerDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    readPtr(fs, ledgerDir)
+    GenPointer.readPtr(fs, ledgerDir)
       .map(g => readOrEmpty(spark, s"$ledgerDir/$g/sigs", SigSchema, fs))
       .getOrElse(readOrEmpty(spark, s"$ledgerDir/__none__", SigSchema, fs))
   }
@@ -123,10 +113,10 @@ object NearDedupStreams {
     import graft.ml.Dedup
     val fs = new Path(ledgerDir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val gen = readPtr(fs, ledgerDir).getOrElse {
+    val gen = GenPointer.readPtr(fs, ledgerDir).getOrElse {
       fs.mkdirs(new Path(ledgerDir))
       val g = s"gen_$batchId"
-      swapPtr(spark, fs, ledgerDir, g)
+      GenPointer.swapPtr(spark, fs, ledgerDir, g)
       g
     }
     val genPath = s"$ledgerDir/$gen"
@@ -333,7 +323,7 @@ object NearDedupStreams {
         .repartition(col("pfx")).sortWithinPartitions(col("bucket"))
         .write.mode("overwrite").partitionBy("pfx")
         .parquet(s"$ledgerDir/$next/buckets")
-      swapPtr(spark, fs, ledgerDir, next)
+      GenPointer.swapPtr(spark, fs, ledgerDir, next)
       fs.listStatus(new Path(ledgerDir)).foreach { st =>
         val name = st.getPath.getName
         if (name.startsWith("gen_") && name != next && name != gen)

@@ -231,8 +231,14 @@ class SnapLakeMetaSpec extends SparkSpecBase {
       .repartition(2))
     val plainMerge = jobsOf(plain.merge(Seq((5L, 99L), (2000L, 1L)).toDF("id", "v"),
       Seq("id")))
-    info(s"jobs: empty-source merge $emptyMerge, merge without Blooms $plainMerge")
+    // a Bloom backfill runs one scan job per generation: the recorded
+    // schema leaves no inference job to run before it
+    plain.commit(spark.range(3000, 3100).select(col("id"), (col("id") % 7).as("v")))
+    val backfill = jobsOf(plain.computeBlooms(spark, Seq("id"), expectedNdvPerFile = 1000))
+    info(s"jobs: empty-source merge $emptyMerge, merge without Blooms $plainMerge, " +
+      s"Bloom backfill of 2 generations $backfill")
     assert(emptyMerge == 4, s"empty-source merge ran $emptyMerge jobs")
     assert(plainMerge == 9, s"merge without Blooms ran $plainMerge jobs")
+    assert(backfill == 2, s"computeBlooms ran $backfill jobs")
   }
 }

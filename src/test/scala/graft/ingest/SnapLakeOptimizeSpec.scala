@@ -64,7 +64,7 @@ class SnapLakeOptimizeSpec extends SparkSpecBase {
     lake.commit(spark.range(0, 10000)
       .select((col("id") / 100).cast("long").as("x"), (col("id") % 100).as("y")),
       overwrite = true)
-    lake.optimizeZOrder(spark, col("x"), col("y"), 16)
+    lake.optimizeZOrder(spark, Seq(col("x"), col("y")), 16)
     val total = filesRead(spark.read.format("snaplake").load(root))
     assert(total == 16L)
     val xs = filesRead(spark.read.format("snaplake").load(root)
@@ -88,7 +88,7 @@ class SnapLakeOptimizeSpec extends SparkSpecBase {
       (col("id") / 400).cast("long").as("x"),
       ((col("id") / 20) % 20).cast("long").as("y"),
       (col("id") % 20).as("z")), overwrite = true)
-    lake.optimizeZOrderN(spark, Seq(col("x"), col("y"), col("z")), 16, 12)
+    lake.optimizeZOrder(spark, Seq(col("x"), col("y"), col("z")), 16, 12)
     def files(f: org.apache.spark.sql.Column): Long =
       filesRead(spark.read.format("snaplake").load(root).filter(f))
     assert(files(lit(true)) == 16L)

@@ -75,6 +75,16 @@ class SnapLakeSkipSpec extends SparkSpecBase {
     val in2 = runCounting(spark.read.format("snaplake").load(root)
       .filter(col("id").isin(10L, 7990L)))
     assert(in2._1 == 2L && in2._2 == 2L, s"IN should scan 2 files, got $in2")
+    // time travel reads through the same scan, so it prunes alike
+    val lake = new SnapshotLake(root)
+    val v = lake.latestVersion(spark).get
+    val narrowAt = runCounting(lake.readAt(spark, v)
+      .filter(col("id") >= 100 && col("id") < 200))
+    assert(narrowAt == ((100L, 1L)), s"readAt narrow range read $narrowAt, want 1 file")
+    val missAt = runCounting(lake.readAt(spark, v).filter(col("id") === 1000000L))
+    assert(missAt == ((0L, 0L)), s"readAt miss should scan nothing, got $missAt")
+    val inAt = runCounting(lake.readAt(spark, v).filter(col("id").isin(10L, 7990L)))
+    assert(inAt == ((2L, 2L)), s"readAt IN should scan 2 files, got $inAt")
   }
 
   test("skipping never changes an answer: parity across filter shapes") {
@@ -536,13 +546,11 @@ class SnapLakeSkipSpec extends SparkSpecBase {
   }
 
   test("stats republish never exposes a reader to a broken window") {
-    // the race the raw-fs publish closes: computeStats backfills into
-    // PUBLISHED generations, so load() can run concurrently with
-    // write()'s delete->rename. A reader must see either the old or
-    // the new sidecar (or, in the unavoidable sub-moment between
-    // delete and rename, absent = "never prune") — NEVER a
-    // ChecksumException or a partial file. Hammer load() from 4
-    // threads across 25 republishes.
+    // computeStats backfills into PUBLISHED generations, so load() can
+    // run concurrently with write()'s publish. The publish is an atomic
+    // replace, so a reader sees either the old or the new sidecar —
+    // NEVER an absent one, a ChecksumException or a partial file.
+    // Hammer load() from 4 threads across 25 republishes.
     val dir = Files.createTempDirectory("graft_statsrace").toString
     spark.range(0, 1000).toDF("id").coalesce(2)
       .write.mode(SaveMode.Overwrite).parquet(dir)
@@ -561,7 +569,7 @@ class SnapLakeSkipSpec extends SparkSpecBase {
               // a parsed sidecar must be COMPLETE: both files, right rows
               if (stats.values.map(_.rows).sum != 1000L)
                 failures.add(s"partial sidecar visible: $stats")
-            case None => absent.incrementAndGet() // delete->rename moment
+            case None => absent.incrementAndGet()
           } catch {
             case e: Throwable => failures.add(s"${e.getClass.getName}: ${e.getMessage}")
           }
@@ -573,6 +581,7 @@ class SnapLakeSkipSpec extends SparkSpecBase {
     finally { stop.set(true); readers.foreach(_.join(10000)) }
     assert(failures.isEmpty, s"reader failures: ${failures.toArray.mkString("; ")}")
     assert(reads.get() > 0, "hammer never completed a read")
+    assert(absent.get() == 0, s"a reader saw no sidecar ${absent.get()} time(s)")
   }
 
   test("stats backfill over a checksummed-era sidecar clears the stale .crc") {

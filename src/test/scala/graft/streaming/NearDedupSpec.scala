@@ -27,11 +27,11 @@ class NearDedupSpec extends SparkSpecBase {
     val ledger = Files.createTempDirectory("graft_ptr").toString
     val fs = new Path(ledger).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    assert(NearDedupStreams.readPtr(fs, ledger).isEmpty)
-    NearDedupStreams.swapPtr(spark, fs, ledger, "gen-1")
-    assert(NearDedupStreams.readPtr(fs, ledger).contains("gen-1"))
-    NearDedupStreams.swapPtr(spark, fs, ledger, "gen-2")
-    assert(NearDedupStreams.readPtr(fs, ledger).contains("gen-2"))
+    assert(GenPointer.readPtr(fs, ledger).isEmpty)
+    GenPointer.swapPtr(spark, fs, ledger, "gen-1")
+    assert(GenPointer.readPtr(fs, ledger).contains("gen-1"))
+    GenPointer.swapPtr(spark, fs, ledger, "gen-2")
+    assert(GenPointer.readPtr(fs, ledger).contains("gen-2"))
     assert(!fs.exists(new Path(s"$ledger/CURRENT.tmp")),
       "swap left CURRENT.tmp behind — rename was not the publish step")
   }
