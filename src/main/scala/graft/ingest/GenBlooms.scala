@@ -95,6 +95,21 @@ object GenBlooms {
       while (i < bits.length) { bits(i) |= o.bits(i); i += 1 }
       this
     }
+    /** This bloom at `m2` bits (a power of two dividing `m`): its m/m2
+      * segments ORed together. An index is `floorMod(h, m)` and m2
+      * divides m, so bit `i` lands on bit `i mod m2`, the index a build
+      * at m2 sets: the result is bit for bit the bloom of the same
+      * values built at `m2`. */
+    def fold(m2: Int): Bloom =
+      if (m2 == m) this else {
+        require(m2 > 0 && m2 < m && m % m2 == 0 && Integer.bitCount(m2) == 1,
+          s"cannot fold a $m-bit bloom to $m2 bits")
+        val out = new Bloom(m2, k, tag)
+        val words = out.bits.length
+        var i = 0
+        while (i < bits.length) { out.bits(i % words) |= bits(i); i += 1 }
+        out
+      }
   }
 
   /** Canonical byte form shared by the build scan and the prune probe —
@@ -133,6 +148,17 @@ object GenBlooms {
     val target = math.min(1L << 30,
       math.max(1024L, expectedNdvPerFile.toLong * 10))
     ((java.lang.Long.highestOneBit(target - 1) * 2).toInt, 7)
+  }
+
+  /** One file's blooms, built at the cap shape `shape(ndvCap)`, folded
+    * to the shape its `rows` call for when that is smaller: a file
+    * cannot hold more distinct values than rows, so a 500-row file
+    * carries a 8,192-bit bloom instead of the cap's. The write-time
+    * build ([[GenWriter]]) and the rescan ([[write]]) both size here,
+    * so their sidecars stay byte-identical. */
+  private[ingest] def sized(blooms: Array[Bloom], rows: Long, ndvCap: Int): Array[Bloom] = {
+    val m = shape(math.min(rows, ndvCap.toLong).toInt)._1
+    blooms.map(_.fold(m))
   }
 
   /** The fields of `schema` that `cols` fingerprint, in request order.
@@ -199,13 +225,14 @@ object GenBlooms {
     * ([[SnapshotLake.readGens]]), so no inference job runs before the
     * one distributed scan of the requested columns;
     * per-partition blooms merge by bitwise OR (commutative — row order
-    * never matters), and only the finished bloom bits are collected:
-    * numFiles × |cols| × m/8 bytes, metadata-sized. */
+    * never matters) with their row counts, each file's blooms are sized
+    * to its rows ([[sized]]; `expectedNdvPerFile` is the cap), and only
+    * the finished bloom bits are collected: metadata-sized. */
   def write(spark: SparkSession, genPath: String, cols: Seq[String],
       expectedNdvPerFile: Int = 100000, strict: Boolean = true): Unit = {
     val (m, k) = shape(expectedNdvPerFile)
     val gen = new Path(genPath)
-    val df = new SnapshotLake(gen.getParent.toString).readGens(spark, Seq(gen.getName))
+    val df = new SnapshotLake(gen.getParent.toString).readGens(spark, Seq(GenRef(gen.getName)))
     val presentFields = resolve(df.schema, cols, strict)
     val present = presentFields.map(_.name.toLowerCase)
     if (present.isEmpty) return
@@ -213,22 +240,23 @@ object GenBlooms {
     val rows = df.select(input_file_name().as("__f") +: present.map(col): _*)
     val perFile: Array[(String, Seq[(String, Bloom)])] = rows.rdd
       .mapPartitions { it =>
-        val acc = scala.collection.mutable.HashMap[String, Array[Bloom]]()
+        val acc = scala.collection.mutable.HashMap[String, (Array[Bloom], Long)]()
         it.foreach { r =>
           val f = r.getString(0)
-          val blooms = acc.getOrElseUpdate(f,
-            tags.map(t => new Bloom(m, k, t)).toArray)
+          val (blooms, n) = acc.getOrElseUpdate(f,
+            (tags.map(t => new Bloom(m, k, t)).toArray, 0L))
+          acc(f) = (blooms, n + 1)
           var i = 0
           while (i < present.size) {
             if (!r.isNullAt(i + 1)) blooms(i).add(r.get(i + 1))
             i += 1
           }
         }
-        acc.iterator.map { case (f, bs) => f -> bs }
+        acc.iterator
       }
-      .reduceByKey((a, b) => a.zip(b).map { case (x, y) => x.merge(y) })
-      .map { case (f, bs) =>
-        new Path(f).getName -> present.zip(bs.toSeq)
+      .reduceByKey((a, b) => (a._1.zip(b._1).map { case (x, y) => x.merge(y) }, a._2 + b._2))
+      .map { case (f, (bs, n)) =>
+        new Path(f).getName -> present.zip(sized(bs, n, expectedNdvPerFile).toSeq)
       }
       .collect()
     publish(spark.sparkContext.hadoopConfiguration, genPath, perFile.toSeq)

@@ -24,10 +24,11 @@ import graft.ingest.GenBlooms.Bloom
   *    never harvest a timestamp envelope and a timestamp range filter
   *    pruned no file. A MILLIS or MICROS setting is kept as set.
   *  - With `blooms`, every written row's Bloom columns go into its
-  *    file's [[GenBlooms.Bloom]] inside the write task itself, and
-  *    `_blooms.json` is published from those bits: the same bytes
-  *    [[GenBlooms.write]]'s rescan would produce, without the scan job
-  *    that rescan costs per generation.
+  *    file's [[GenBlooms.Bloom]] inside the write task itself, sized
+  *    to the rows the file received when it closes
+  *    ([[GenBlooms.sized]]), and `_blooms.json` is published from
+  *    those bits: the same bytes [[GenBlooms.write]]'s rescan would
+  *    produce, without the scan job that rescan costs per generation.
   */
 object GenWriter {
 
@@ -44,7 +45,7 @@ object GenWriter {
     new java.util.concurrent.ConcurrentHashMap[String, Capture]()
 
   /** Write `df` as a parquet directory at `path` (which must not
-    * exist). `blooms` = (columns, expected distinct values per file)
+    * exist). `blooms` = (columns, cap on distinct values per file)
     * also publishes the directory's `_blooms.json`, resolving columns
     * leniently like the auto-Bloom tier ([[GenBlooms.resolve]] with
     * `strict = false`); no present column means no sidecar, exactly as
@@ -106,11 +107,10 @@ class SnapParquetFormat extends ParquetFileFormat {
         sparkSession.sparkContext.register(acc, "snaplake write-time blooms")
         c.names = fields.map(_.name.toLowerCase)
         c.acc = acc
-        val (m, k) = GenBlooms.shape(c.ndv)
         new BloomingWriterFactory(inner,
           fields.map(f => dataSchema.fieldIndex(f.name)).toArray,
           fields.map(_.dataType).toArray,
-          fields.map(f => GenBlooms.tagOf(f.dataType).get).toArray, m, k, acc)
+          fields.map(f => GenBlooms.tagOf(f.dataType).get).toArray, c.ndv, acc)
       case _ => inner
     }
   }
@@ -118,8 +118,10 @@ class SnapParquetFormat extends ParquetFileFormat {
 
 private final class BloomingWriterFactory(inner: OutputWriterFactory,
     ordinals: Array[Int], types: Array[DataType], tags: Array[String],
-    m: Int, k: Int, acc: CollectionAccumulator[(String, Array[Bloom])])
+    ndvCap: Int, acc: CollectionAccumulator[(String, Array[Bloom])])
     extends OutputWriterFactory {
+
+  private val (m, k) = GenBlooms.shape(ndvCap)
 
   override def getFileExtension(context: TaskAttemptContext): String =
     inner.getFileExtension(context)
@@ -141,7 +143,8 @@ private final class BloomingWriterFactory(inner: OutputWriterFactory,
       }
       override def close(): Unit = {
         writer.close()
-        if (rows > 0) acc.add(new Path(writer.path()).getName -> blooms)
+        if (rows > 0)
+          acc.add(new Path(writer.path()).getName -> GenBlooms.sized(blooms, rows, ndvCap))
       }
       override def path(): String = writer.path()
     }

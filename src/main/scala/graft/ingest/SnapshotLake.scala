@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute,
   AttributeReference, Cast, EqualTo, EvalMode, Expression, GreaterThanOrEqual,
   LessThanOrEqual, Literal, Or}
 import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.execution.datasources.{DataSource, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf.StoreAssignmentPolicy
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
 
@@ -19,7 +20,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, Str
   *   root/
   *     _commits/v00000001.json   // {"version":1,"op":"create","dirs":["gen-ab12cd34"]}
   *     _commits/v00000002.json   // {"version":2,"op":"merge","rewrite":true,
-  *                               //  "dirs":["gen-ab12cd34","gen-99ff0011"]}
+  *                               //  "dirs":["gen-ab12cd34","gen-99ff0011"],
+  *                               //  "files":{"gen-ab12cd34":["part-00001-….parquet"]},
+  *                               //  "metrics":{"files_added":1,…}}
   *     gen-ab12cd34/  ...parquet...
   *                    _stats.json    // per-file envelopes + the Spark schema
   *                    _blooms.json   // per-file Blooms (auto-Blooms / computeBlooms)
@@ -60,6 +63,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, Str
   * Append commits reference the previous snapshot's directories plus the
   * new generation — O(1) data movement per append, like a table format's
   * manifest reuse; overwrite commits reference only the new generation.
+  * A merge or delete rewrites only the data files that may hold a row in
+  * its scope and carries the rest by reference, so a commit may read a
+  * generation in part: its record names that generation's remaining
+  * files ([[GenRef]]).
   * Schemas may evolve across appends: a version reads under the union
   * of its generations' schemas, as a `mergeSchema` read would infer it.
   */
@@ -76,12 +83,14 @@ object SnapshotLake {
     * envelopes alone. */
   val BloomScopeCap = 1024
 
-  /** (root, generation) → total bytes. Generations are immutable, so an
-    * entry never invalidates; vacuumed generations merely strand a Long
-    * (per-process, bounded by generations ever measured). Keeps the
-    * per-commit auto-compact check from re-walking the whole big body. */
-  private[ingest] val genSizes =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
+  /** (root, generation) → its data files (bare name, bytes) in name
+    * order. Generations are immutable, so an entry never invalidates;
+    * vacuumed generations merely strand an entry (per-process, bounded
+    * by generations ever listed). Keeps mutation scoping, operation
+    * metrics and the per-commit auto-compact check from re-listing the
+    * whole big body. */
+  private[ingest] val genFiles =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[(String, Long)]]()
 
   /** Parsed commit records ([[SnapshotLake.commitAt]]). A commit file is
     * written once and never changed, so a repeat lookup costs one status
@@ -156,8 +165,10 @@ class SnapshotLake(root: String) {
     * DESCRIBE HISTORY: one row per surviving commit with the operation
     * that published it (`create`/`append`/`overwrite`/`merge`/`delete`/
     * `optimize`/`zorder`/`compact`/`restore`; commits from writers
-    * predating the tag read as `unknown`), the generation count, and
-    * the publication instant ([[versionAt]]'s clock). Metadata-only:
+    * predating the tag read as `unknown`), the generation count, the
+    * publication instant ([[versionAt]]'s clock), and for a rewrite the
+    * data files and bytes it added, removed and carried by reference
+    * ([[Commit.Metrics]]; null for other operations). Metadata-only:
     * one commit record per version, no data touched. Built with an
     * explicit schema (the createDataFrame/REPL-classloader contract
     * every frozen-table helper here follows). */
@@ -166,64 +177,108 @@ class SnapshotLake(root: String) {
     import org.apache.spark.sql.types._
     val rows = versions(spark).map { v =>
       val c = commitAt(spark, v)
-      Row(v, c.op, c.dirs.size, publishedAt(spark, v))
+      Row.fromSeq(Seq(v, c.op, c.dirs.size, publishedAt(spark, v)) ++
+        c.metrics.fold(Seq.fill[Any](Commit.Metrics.Names.size)(null))(_.values))
     }
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*),
       StructType(Seq(StructField("version", LongType),
         StructField("op", StringType),
         StructField("n_dirs", IntegerType),
-        StructField("ts_millis", LongType))))
+        StructField("ts_millis", LongType)) ++
+        Commit.Metrics.Names.map(StructField(_, LongType))))
   }
 
   /** TIME TRAVEL: the table exactly as committed at `version`. Reads
     * prune files exactly like `format("snaplake")` ([[relation]]). */
-  def readAt(spark: SparkSession, version: Long): DataFrame = {
-    val dirs = dirsAt(spark, version)
-    require(dirs.nonEmpty, s"version $version lists no data directories")
-    readGens(spark, dirs)
+  def readAt(spark: SparkSession, version: Long): DataFrame =
+    GraftBridge.ofRows(spark, LogicalRelation(relationAt(spark, version)))
+
+  /** [[relation]] over the manifest of `version`, under its schema. */
+  private[graft] def relationAt(spark: SparkSession, version: Long): HadoopFsRelation = {
+    val gens = commitAt(spark, version).gens
+    require(gens.nonEmpty, s"version $version lists no data directories")
+    relation(spark, gens, schemaOf(spark, gens.map(_.dir)))
   }
 
   /** Generations `gens` as one DataFrame under their merged schema
     * ([[schemaOf]]). */
-  private[graft] def readGens(spark: SparkSession, gens: Seq[String]): DataFrame =
-    readGens(spark, gens, schemaOf(spark, gens))
+  private[graft] def readGens(spark: SparkSession, gens: Seq[GenRef]): DataFrame =
+    readGens(spark, gens, schemaOf(spark, gens.map(_.dir)))
 
   /** Generations `gens` as one DataFrame under `schema` ([[relation]]). */
-  private[graft] def readGens(spark: SparkSession, gens: Seq[String],
+  private[graft] def readGens(spark: SparkSession, gens: Seq[GenRef],
       schema: StructType): DataFrame =
     GraftBridge.ofRows(spark, LogicalRelation(relation(spark, gens, schema)))
 
-  /** The one scan of snaplake data: directories `gens` (relative to the
-    * root — generations, or a rewrite's `_cdf/`) as Spark's own parquet
-    * relation under `schema`, so pushdown, column pruning and vectorized
-    * decoding are the parquet scan's. The relation lists its files now:
-    * a frame keeps reading its version after later commits (snapshot
-    * isolation). Its file index is wrapped in a
-    * [[graft.sources.StatsFileIndex]], which drops each file that
-    * [[graft.sources.FilePruning]] proves holds no row passing the scan's
-    * pushed filters, from the generations' `_stats.json` envelopes and,
-    * loaded only for an equality-shaped scan, their `_blooms.json`. A
-    * directory without sidecars is never pruned. The index also lists the
-    * commit log among its root paths, which makes Spark refuse a
-    * single-path `INSERT INTO` that would drop files into a committed
-    * generation. */
-  private[graft] def relation(spark: SparkSession, gens: Seq[String],
+  /** The one scan of snaplake data: the data files of directories `gens`
+    * (relative to the root — generations, or a rewrite's `_cdf/`; a
+    * [[GenRef]] with a file subset reads only those files) as Spark's own
+    * parquet relation under `schema`, so pushdown, column pruning and
+    * vectorized decoding are the parquet scan's. The relation lists its
+    * files now: a frame keeps reading its version after later commits
+    * (snapshot isolation), and a directory that no longer exists fails
+    * here. Its file index ([[graft.sources.StatsFileIndex]]) drops each
+    * file that [[graft.sources.FilePruning]] proves holds no row passing
+    * the scan's pushed filters, from the generations' `_stats.json`
+    * envelopes and, loaded only for an equality-shaped scan, their
+    * `_blooms.json`. A directory without sidecars is never pruned. The
+    * index also lists the commit log among its root paths, which makes
+    * Spark refuse a single-path `INSERT INTO` that would drop files into
+    * a committed generation. */
+  private[graft] def relation(spark: SparkSession, gens: Seq[GenRef],
       schema: StructType): HadoopFsRelation = {
+    import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
-    // sidecars are keyed by bare file name; the index keys a file by
-    // `gen/file` (generation names are unique within the table)
-    def byFile[V](load: String => Option[Map[String, V]]): Map[String, V] =
-      gens.flatMap(g => load(s"$root/$g").getOrElse(Map.empty)
-        .map { case (file, v) => s"$g/$file" -> v }).toMap
-    DataSource(spark, className = "parquet", paths = gens.map(g => s"$root/$g"),
-      userSpecifiedSchema = Some(schema)).resolveRelation() match {
-      case r: HadoopFsRelation =>
-        r.copy(location = new graft.sources.StatsFileIndex(r.location,
-          byFile(GenStats.load(conf, _)), new org.apache.hadoop.fs.Path(commitsDir),
-          () => byFile(GenBlooms.load(conf, _))))(spark)
+    val fs = hadoopFs(spark)
+    val listed = gens.map { g =>
+      g -> readBy(g, GenStats.dataFiles(fs, new Path(s"$root/${g.dir}")))(_.getPath.getName)
     }
+    // sidecars are keyed by bare file name, the index by file path
+    def byFile[V](load: String => Option[Map[String, V]]): Map[Path, V] =
+      listed.flatMap { case (g, files) =>
+        val sidecar = load(s"$root/${g.dir}").getOrElse(Map.empty)
+        files.flatMap(st => sidecar.get(st.getPath.getName).map(st.getPath -> _))
+      }.toMap
+    val index = new graft.sources.StatsFileIndex(
+      gens.map(g => new Path(s"$root/${g.dir}")), listed.flatMap(_._2),
+      byFile(GenStats.load(conf, _)), new Path(commitsDir),
+      () => byFile(GenBlooms.load(conf, _)))
+    HadoopFsRelation(index, partitionSchema = new StructType(),
+      dataSchema = GraftBridge.asNullable(schema), bucketSpec = None,
+      fileFormat = new ParquetFileFormat(), options = Map.empty)(spark)
   }
+
+  /** The data files `gen` reads, with their bytes, from the per-process
+    * listing of its directory ([[SnapshotLake.genFiles]]). */
+  private def liveFiles(spark: SparkSession, gen: GenRef): Seq[(String, Long)] =
+    readBy(gen, SnapshotLake.genFiles.computeIfAbsent((root, gen.dir), _ =>
+      GenStats.dataFiles(hadoopFs(spark), new org.apache.hadoop.fs.Path(s"$root/${gen.dir}"))
+        .map(st => st.getPath.getName -> st.getLen).sortBy(_._1)))(_._1)
+
+  /** Of `all`, a listing of `gen`'s directory, the files `gen` reads. */
+  private def readBy[A](gen: GenRef, all: Seq[A])(name: A => String): Seq[A] =
+    gen.files.fold(all) { keep =>
+      val k = keep.toSet
+      all.filter(a => k(name(a)))
+    }
+
+  /** Every (directory, file) that `gens` read. */
+  private def fileSet(spark: SparkSession, gens: Seq[GenRef]): Set[(String, String)] =
+    gens.flatMap(g => liveFiles(spark, g).map(f => g.dir -> f._1)).toSet
+
+  /** `gens` keeping only the files `keep(dir)` accepts: a generation
+    * that keeps every file it reads stays as it is, one that keeps none
+    * leaves the manifest, and the rest name the files they keep. */
+  private def narrow(spark: SparkSession, gens: Seq[GenRef])(
+      keep: String => String => Boolean): Seq[GenRef] =
+    gens.flatMap { g =>
+      val names = liveFiles(spark, g).map(_._1)
+      val kept = names.filter(keep(g.dir))
+      if (kept.size == names.size) Some(g)
+      else if (kept.isEmpty) None
+      else Some(GenRef(g.dir, Some(kept)))
+    }
 
   /** The schema of a read over generations `gens`: their recorded
     * write-time schemas ([[GenStats.schema]]) merged with Spark's own
@@ -388,8 +443,8 @@ class SnapshotLake(root: String) {
     // append retry re-bases on the winner's snapshot, exactly the
     // optimistic-concurrency contract
     val v = retryClaim(spark) { next =>
-      Commit(next, if (overwrite) "overwrite" else "append",
-        if (overwrite || next == 1) Seq(gen) else dirsAt(spark, next - 1) :+ gen,
+      Commit.of(next, if (overwrite) "overwrite" else "append",
+        (if (overwrite || next == 1) Nil else commitAt(spark, next - 1).gens) :+ GenRef(gen),
         batchId = batchId, queryId = queryId)
     }
     // post-publish, best-effort: the commit above is durable regardless
@@ -491,8 +546,10 @@ class SnapshotLake(root: String) {
     * point-lookup skipping and merge/delete bloom scoping never decay
     * to envelope-only as the table accretes commits. [[computeBlooms]]
     * remains the one-shot backfill for generations that predate the
-    * setting. Administrative, like constraints: applies from the moment
-    * it is set. */
+    * setting. Each file's Bloom is sized to the rows it holds, with
+    * `expectedNdvPerFile` as the cap ([[GenBlooms.sized]]).
+    * Administrative, like constraints: applies from the moment it is
+    * set. */
   def enableAutoBlooms(spark: SparkSession, cols: Seq[String],
       expectedNdvPerFile: Int = 100000): Unit = {
     require(cols.nonEmpty, "enableAutoBlooms needs at least one column")
@@ -690,7 +747,7 @@ class SnapshotLake(root: String) {
     // or analysis error) must clean up the unpublished generation —
     // nothing sweeps orphans later
     try {
-      val raw = readGens(spark, Seq(gen))
+      val raw = readGens(spark, Seq(GenRef(gen)))
       // A constraint referencing a column this generation lacks must be
       // evaluated under evolved-read semantics: such a column reads as
       // NULL everywhere, so the missing attributes are ADDED as NULL
@@ -764,17 +821,17 @@ class SnapshotLake(root: String) {
     * insert. The rewrite is scoped by a predicate over the key columns —
     * each key within the source's [min, max], and, for a source of at
     * most [[SnapshotLake.BloomScopeCap]] distinct keys, one of its key
-    * tuples — judged per generation by [[genMayMatch]], the read path's
-    * own envelope and Bloom check. The source's columns that the table
+    * tuples — judged per data file by [[mayMatch]], the read path's own
+    * envelope and Bloom check. The source's columns that the table
     * already has are first cast to the table's types ([[conform]]), so
     * keys compare, scope and are stored in the table's own type; a key
-    * over a collated string column does not bound the scope. A
-    * generation that provably holds no match CARRIES FORWARD into the
-    * new commit untouched — on a 100 TB table where upserts land in the
-    * recent key range, the rewrite touches the tail generations and the
-    * commit re-references the rest, which is exactly a table format's
-    * file-level MERGE scoping one level up. Generations without stats
-    * (older writers) rewrite conservatively.
+    * over a collated string column does not bound the scope. A file that
+    * provably holds no match CARRIES FORWARD into the new commit
+    * untouched, also when other files of its generation are rewritten —
+    * on a 100 TB table where upserts land in the recent key range, the
+    * rewrite touches the tail files and the commit re-references the
+    * rest, a table format's file-level MERGE scoping. Files without
+    * stats (older writers) rewrite conservatively.
     *
     * Contract: source keys should be unique (a duplicated source key
     * inserts duplicates, same as repeated appends); null source keys
@@ -803,8 +860,8 @@ class SnapshotLake(root: String) {
     import org.apache.spark.sql.functions.{col, min, max}
     val base = latestVersion(spark).getOrElse(
       sys.error(s"merge into a never-committed lake: $root"))
-    val dirs = dirsAt(spark, base)
-    val snapSchema = schemaOf(spark, dirs)
+    val gens = commitAt(spark, base).gens
+    val snapSchema = schemaOf(spark, gens.map(_.dir))
     // the source plan is consumed by the envelope agg, both key joins,
     // the rewrite, and the changefeed — cache it so an expensive or
     // non-deterministic source executes ONCE and the committed table
@@ -812,7 +869,7 @@ class SnapshotLake(root: String) {
     val src = conform(source, snapSchema).persist()
     try {
       // the merge's key scope as a predicate over the key columns, judged
-      // per generation by the read path's own check ([[genMayMatch]]).
+      // per file by the read path's own check ([[mayMatch]]).
       // Envelope part: per key `k >= min AND k <= max` of the source,
       // from one tiny agg job. A key with no non-null source value
       // matches no target row (equi-join semantics), so the scope is
@@ -841,15 +898,15 @@ class SnapshotLake(root: String) {
       val srcKeys = src.select(keyCols.map(col): _*).distinct()
       // Bloom part: when the distinct source key set is small (a bounded
       // metadata collect), the disjunction of the key tuples' equalities
-      // lets a generation whose Blooms reject every tuple carry forward
-      // even when its envelope intersects — the unsorted-layout case,
-      // where every file's envelope spans the key domain. Tuples holding
-      // NULL match nothing and are dropped. Each tuple lies inside the
-      // envelope, so once a generation passes the envelope part the key
-      // part alone is the stricter check. LAZY: the collect runs only
-      // once a generation in envelope scope has a Bloom sidecar, so
-      // tables without Blooms never pay for it.
-      lazy val inKeyScope = genMayMatch(spark, if (keyAttrs.isEmpty) Nil else {
+      // lets a file whose Blooms reject every tuple carry forward even
+      // when its envelope intersects — the unsorted-layout case, where
+      // every file's envelope spans the key domain. Tuples holding NULL
+      // match nothing and are dropped. Each tuple lies inside the
+      // envelope, so once a file passes the envelope part the key part
+      // alone is the stricter check. LAZY: the collect runs only once a
+      // file in envelope scope has a Bloom sidecar, so tables without
+      // Blooms never pay for it.
+      lazy val inKeyScope = mayMatch(spark, if (keyAttrs.isEmpty) Nil else {
         val head = srcKeys.limit(SnapshotLake.BloomScopeCap + 1).collect()
         if (head.length > SnapshotLake.BloomScopeCap) Nil
         else Seq(head.toSeq.filterNot(r => keyCols.indices.exists(r.isNullAt))
@@ -857,18 +914,24 @@ class SnapshotLake(root: String) {
             .reduce(And))
           .reduceOption(Or).getOrElse(Literal.FalseLiteral))
       })
-      val inEnvelope = genMayMatch(spark, Seq(envScope))
+      val inEnvelope = mayMatch(spark, Seq(envScope))
       val conf = spark.sparkContext.hadoopConfiguration
-      def genInScope(gen: String): Boolean = inEnvelope(gen) &&
-        (!GenBlooms.load(conf, s"$root/$gen").exists(_.nonEmpty) || inKeyScope(gen))
-      val (affected, untouched) = dirs.partition(genInScope)
+      def inScope(gen: String): String => Boolean = {
+        val envelope = inEnvelope(gen)
+        if (!GenBlooms.load(conf, s"$root/$gen").exists(_.nonEmpty)) envelope
+        else {
+          lazy val keys = inKeyScope(gen)
+          file => envelope(file) && keys(file)
+        }
+      }
+      val affected = scoped(spark, gens, inScope)
       import org.apache.spark.sql.functions.lit
-      // affected generations read under the SNAPSHOT's full schema
-      // (missing columns null-filled), not bare mergeSchema over the
-      // affected subset: under schema evolution the subset can predate
-      // a key column entirely, and the key joins below would fail
-      // analysis on an unresolved column — null-filled, such rows
-      // simply match no source key, which is the correct semantics
+      // affected files read under the SNAPSHOT's full schema (missing
+      // columns null-filled), not bare mergeSchema over the affected
+      // subset: under schema evolution the subset can predate a key
+      // column entirely, and the key joins below would fail analysis on
+      // an unresolved column — null-filled, such rows simply match no
+      // source key, which is the correct semantics
       val affectedDf = if (affected.isEmpty) None
         else Some(readGens(spark, affected, snapSchema))
       val keep = affectedDf.map(_.join(srcKeys, keyCols, "left_anti"))
@@ -888,44 +951,45 @@ class SnapshotLake(root: String) {
         case None => inserts
       }
       // rebase-across check = the scoping check (envelope AND bloom
-      // tiers): a racing commit's new generation is safe to carry
-      // forward iff it provably holds none of this merge's keys
-      publishRewrite(spark, base, untouched, rewritten, changes,
-        mayOverlapScope = genInScope, op = "merge", batchId = batchId, queryId = queryId)
+      // tiers): a racing commit's new file is safe to carry forward iff
+      // it provably holds none of this merge's keys
+      publishRewrite(spark, base, affected, rewritten, changes,
+        mayOverlapScope = inScope, op = "merge", batchId = batchId, queryId = queryId)
     } finally src.unpersist()
   }
 
   /** Copy-on-write DELETE of rows matching `predicate`, scoped like
-    * [[merge]]: a generation that [[genMayMatch]] proves holds no
-    * matching row — the read path's own envelope and Bloom check —
-    * carries forward untouched; the rest rewrite keeping only
-    * non-matching rows. Returns the current version unchanged when
-    * nothing may match anywhere, including a predicate that folds to
-    * `false` (a free no-op). Same optimistic-abort publication contract
-    * as merge. */
+    * [[merge]]: a data file that [[mayMatch]] proves holds no matching
+    * row — the read path's own envelope and Bloom check — carries
+    * forward untouched; the rest rewrite keeping only non-matching rows.
+    * Returns the current version unchanged when nothing may match
+    * anywhere, including a predicate that folds to `false` (a free
+    * no-op). Same optimistic-abort publication contract as merge. */
   def delete(spark: SparkSession, predicate: org.apache.spark.sql.Column): Long = {
     val base = latestVersion(spark).getOrElse(
       sys.error(s"delete from a never-committed lake: $root"))
-    val dirs = dirsAt(spark, base)
+    val gens = commitAt(spark, base).gens
+    val schema = schemaOf(spark, gens.map(_.dir))
     // resolve the predicate against the snapshot's schema so the check
     // sees bound AttributeReferences — from the OPTIMIZED plan, where
     // implicit casts on literals have been constant-folded (the analyzed
     // plan's Cast(lit) wrappers would read as "unknown shape" and defeat
     // scoping). A predicate the optimizer eliminates leaves no Filter
     // node: folded to false it empties the plan and matches nothing,
-    // folded to true it matches everything.
-    val snapshot = readAt(spark, base)
-    val scope = snapshot.filter(predicate).queryExecution.optimizedPlan match {
+    // folded to true it matches everything. The frame is a relation over
+    // no file, so nothing is listed; an empty LocalRelation would not do,
+    // as the optimizer folds any filter over it to an empty relation.
+    val scope = readGens(spark, Nil, schema).filter(predicate)
+        .queryExecution.optimizedPlan match {
       case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
           if r.data.isEmpty => Seq(Literal.FalseLiteral)
       case p => p.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }.toSeq
     }
-    val inScope = genMayMatch(spark, scope)
-    val affected = dirs.filter(inScope)
+    val inScope = mayMatch(spark, scope)
+    val affected = scoped(spark, gens, inScope)
     if (affected.isEmpty) return base
-    val untouched = dirs.filterNot(affected.contains)
     // SQL DELETE removes rows where the predicate is TRUE; NULL keeps
     // the row — so the keep-filter is NOT(coalesce(p, false)), not !p.
     // Read under the snapshot's full schema (missing columns
@@ -933,32 +997,49 @@ class SnapshotLake(root: String) {
     // predate a predicate column, and mergeSchema over the subset alone
     // would make the filter fail analysis; null-filled, the predicate
     // evaluates NULL there and the rows are kept — correct
-    val affectedDf = readGens(spark, affected, snapshot.schema)
+    val affectedDf = readGens(spark, affected, schema)
     val hit = org.apache.spark.sql.functions.coalesce(predicate,
       org.apache.spark.sql.functions.lit(false))
     val changes = affectedDf.filter(hit).withColumn(
       SnapshotLake.ChangeTypeCol, org.apache.spark.sql.functions.lit("delete"))
     // same check scopes the rewrite AND gates rebase-across
-    publishRewrite(spark, base, untouched, affectedDf.filter(!hit),
+    publishRewrite(spark, base, affected, affectedDf.filter(!hit),
       changes, mayOverlapScope = inScope, op = "delete")
   }
 
-  /** Could a generation hold a row passing every one of `filters`? Yes
-    * when some file of it passes [[graft.sources.FilePruning]] — the read
-    * path's own per-file check, so merge, delete and rebase scoping cannot
-    * drift from read pruning. A generation without stats lists its files
-    * through its Bloom sidecar, parsed only when the Bloom tier can prune;
-    * one with neither stays in scope unless a filter is `false`. */
-  private def genMayMatch(spark: SparkSession, filters: Seq[Expression]): String => Boolean = {
+  /** For generation `gen`: could its data file `file` hold a row passing
+    * every one of `filters`? [[graft.sources.FilePruning]] — the read
+    * path's own per-file check, so merge, delete and rebase scoping
+    * cannot drift from read pruning. A generation's sidecars load once,
+    * its Bloom sidecar only when the Bloom tier can prune; a file with
+    * neither stats nor Bloom stays in scope unless a filter is `false`. */
+  private def mayMatch(spark: SparkSession,
+      filters: Seq[Expression]): String => String => Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
     val prune = new graft.sources.FilePruning(filters)
     gen => {
       val stats = GenStats.load(conf, s"$root/$gen").getOrElse(Map.empty)
       lazy val blooms = GenBlooms.load(conf, s"$root/$gen").getOrElse(Map.empty)
-      val files = if (stats.nonEmpty) stats.keySet
-        else if (prune.wantsBlooms) blooms.keySet else Set.empty[String]
-      if (files.isEmpty) prune.mayMatch(None, None)
-      else files.exists(f => prune.mayMatch(stats.get(f), blooms.get(f)))
+      file => prune.mayMatch(stats.get(file), blooms.get(file))
+    }
+  }
+
+  /** The files of `gens` that `inScope` keeps, as manifest entries; a
+    * generation none of whose files is in scope is left out. With
+    * auto-compaction on, a generation whose files are small by its
+    * measure ([[compactSmall]]) is taken with every file the version
+    * reads of it: carrying the others would leave one more small
+    * generation that the next fold rewrites anyway, and bring that fold
+    * sooner. An unreadable setting scopes file by file. */
+  private def scoped(spark: SparkSession, gens: Seq[GenRef],
+      inScope: String => String => Boolean): Seq[GenRef] = {
+    val smallBytes = scala.util.Try(autoCompactConfig(spark)).toOption.flatten.map(_._2)
+    gens.flatMap { g =>
+      val files = liveFiles(spark, g)
+      val kept = files.map(_._1).filter(inScope(g.dir))
+      if (kept.isEmpty) None
+      else if (kept.size == files.size || smallBytes.exists(files.map(_._2).sum < _)) Some(g)
+      else Some(GenRef(g.dir, Some(kept)))
     }
   }
 
@@ -992,8 +1073,8 @@ class SnapshotLake(root: String) {
     // content, so racing APPEND generations always carry forward
     // (rewrites of the consumed snapshot still abort via the consumed
     // check)
-    publishRewrite(spark, base, Seq.empty, clustered,
-      emptyChanges(snap), mayOverlapScope = _ => false, op = "optimize")
+    publishRewrite(spark, base, commitAt(spark, base).gens, clustered,
+      emptyChanges(snap), mayOverlapScope = _ => _ => false, op = "optimize")
   }
 
   /** [[optimize]] on the z-order curve of `keys`, numeric columns
@@ -1007,14 +1088,15 @@ class SnapshotLake(root: String) {
     val base = latestVersion(spark).getOrElse(
       sys.error(s"optimize of a never-committed lake: $root"))
     val snap = readAt(spark, base)
-    publishRewrite(spark, base, Seq.empty,
+    publishRewrite(spark, base, commitAt(spark, base).gens,
       graft.ops.Layout.zOrderClusterN(snap, keys, numFiles, bitsPerKey),
-      emptyChanges(snap), mayOverlapScope = _ => false, op = "zorder")
+      emptyChanges(snap), mayOverlapScope = _ => _ => false, op = "zorder")
   }
 
-  /** INCREMENTAL compaction: collapse only generations smaller than
-    * `maxBytes` into one sorted generation, carrying larger ones
-    * forward by reference. This is the steady-state maintenance loop
+  /** INCREMENTAL compaction: collapse only generations whose live data
+    * files (the files the manifest reads of them) total under `maxBytes`
+    * into one sorted generation, carrying larger ones forward by
+    * reference. This is the steady-state maintenance loop
     * for a stream-written table — each micro-batch commit adds one
     * small generation, and periodic compactSmall folds the accumulated
     * tail WITHOUT rewriting the big compacted body the way a full
@@ -1029,29 +1111,24 @@ class SnapshotLake(root: String) {
       minSmallGens: Int = 2): Long = {
     val base = latestVersion(spark).getOrElse(
       sys.error(s"compact of a never-committed lake: $root"))
-    val fs = hadoopFs(spark)
-    val dirs = dirsAt(spark, base)
-    // one recursive listing per generation, MEMOIZED on (root, gen):
-    // generations are immutable, so a size never changes once measured
-    // — with auto-compact checking per commit, the steady state walks
-    // only the generations the last commit added, not the whole (ever-
-    // growing) big body
-    val sizes = dirs.map(d => d -> SnapshotLake.genSizes.computeIfAbsent(
-      (root, d), _ => fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(s"$root/$d")).getLength)).toMap
-    val (small, big) = dirs.partition(d => sizes(d) < maxBytes)
+    // sizes come from the per-process listing memo: generations are
+    // immutable, so with auto-compact checking per commit the steady
+    // state lists only the generations the last commit added, not the
+    // whole (ever-growing) big body
+    val sizes = commitAt(spark, base).gens.map(g => g -> liveFiles(spark, g).map(_._2).sum)
+    val small = sizes.filter(_._2 < maxBytes)
     if (small.size < math.max(2, minSmallGens)) return base
-    val tailBytes = small.map(sizes).sum
+    val tailBytes = small.map(_._2).sum
     // target file count keeps outputs at ~maxBytes so a later pass sees
     // them as "big" and stops re-rewriting the same rows
     val numFiles = math.max(1L, (tailBytes + maxBytes - 1) / maxBytes).toInt
-    val tail = readGens(spark, small)
+    val tail = readGens(spark, small.map(_._1))
     val clustered =
       if (sortCols.isEmpty) tail.coalesce(numFiles)
       else tail.repartitionByRange(numFiles, sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
-    publishRewrite(spark, base, big, clustered, emptyChanges(tail),
-      mayOverlapScope = _ => false, op = "compact")
+    publishRewrite(spark, base, small.map(_._1), clustered, emptyChanges(tail),
+      mayOverlapScope = _ => _ => false, op = "compact")
   }
 
   private def emptyChanges(snap: DataFrame): DataFrame =
@@ -1059,35 +1136,39 @@ class SnapshotLake(root: String) {
       org.apache.spark.sql.functions.lit("insert"))
 
   /** Write `rewritten` as a new generation and claim the next version
-    * referencing `untouched ++ newGen`. Loses a race → REBASE when the
-    * winner's commits are provably disjoint from this mutation's scope,
-    * abort otherwise (cleanup, ConcurrentModificationException) — the
-    * Delta-style conflict check one level up, at generation granularity:
+    * referencing the base manifest minus the `consumed` files (what the
+    * rewrite read and replaces) plus the new generation. Loses a race →
+    * REBASE when the winner's commits are provably disjoint from this
+    * mutation's scope, abort otherwise (cleanup,
+    * ConcurrentModificationException) — the Delta-style conflict check,
+    * at file granularity:
     *
-    *  - every generation this rewrite CONSUMED (`base` manifest minus
-    *    `untouched`) must still be referenced by the new head — a winner
-    *    that rewrote or dropped one has invalidated our rewrite;
-    *  - every generation the winners ADDED must satisfy
-    *    `!mayOverlapScope(gen)` — for merge and delete that is
-    *    [[genMayMatch]] over the mutation's scope, the SAME check that
+    *  - every file this rewrite CONSUMED must still be read by the new
+    *    head — a winner that rewrote or dropped one has invalidated our
+    *    rewrite;
+    *  - every file the winners ADDED must satisfy
+    *    `!mayOverlapScope(gen)(file)` — for merge and delete that is
+    *    [[mayMatch]] over the mutation's scope, the SAME check that
     *    scoped the rewrite (and prunes reads), so "carried forward
     *    untouched" and "safe to rebase across" cannot drift.
     *
-    * A valid rebase re-claims with manifest = (head's dirs minus the
-    * consumed generations) + our generation: winners' disjoint work is
-    * carried forward BY REFERENCE, and both writers land — without this,
-    * every concurrent pair of disjoint merges serializes through abort
-    * and rerun, which at 100 TB (many independent upsert streams over
+    * A valid rebase re-claims with manifest = (head's manifest minus the
+    * consumed files) + our generation: winners' disjoint work is carried
+    * forward BY REFERENCE, and both writers land — without this, every
+    * concurrent pair of disjoint merges serializes through abort and
+    * rerun, which at 100 TB (many independent upsert streams over
     * disjoint key ranges) serializes the whole write path. Bounded
     * retries; the materialized `_cdf` stays correct under rebase because
-    * the carried generations provably contain no scoped rows. */
+    * the carried files provably contain no scoped rows. The commit
+    * records the files and bytes added, removed and carried
+    * ([[Commit.Metrics]]). */
   private def publishRewrite(spark: SparkSession, base: Long,
-      untouched: Seq[String], rewritten: DataFrame, changes: DataFrame,
-      mayOverlapScope: String => Boolean, op: String,
+      consumed: Seq[GenRef], rewritten: DataFrame, changes: DataFrame,
+      mayOverlapScope: String => String => Boolean, op: String,
       batchId: Option[Long] = None, queryId: Option[String] = None): Long = {
     val fs = hadoopFs(spark)
-    val baseDirs = dirsAt(spark, base)
-    val consumed = baseDirs.filterNot(untouched.contains).toSet
+    val baseGens = commitAt(spark, base).gens
+    val consumedFiles = fileSet(spark, consumed)
     val gen = newGenName()
     // validated like any ingest (a merge source can violate); the
     // changefeed rides INSIDE the writer-unique generation, so it
@@ -1102,17 +1183,30 @@ class SnapshotLake(root: String) {
         s"lake $root advanced past version $base during the rewrite " +
           s"($detail); rerun the merge/delete to rebase on the new snapshot")
     }
+    def filesAndBytes(gens: Seq[GenRef]): (Long, Long) = {
+      val files = gens.flatMap(liveFiles(spark, _))
+      (files.size.toLong, files.map(_._2).sum)
+    }
+    val (addedN, addedB) = filesAndBytes(Seq(GenRef(gen)))
+    val (removedN, removedB) = filesAndBytes(consumed)
     var attemptBase = base
-    var carried = untouched
+    // a consumed generation without data files (an empty batch's) leaves
+    // the manifest too
+    val emptied = consumed.filter(liveFiles(spark, _).isEmpty).map(_.dir).toSet
+    def unconsumed(gens: Seq[GenRef]) =
+      narrow(spark, gens)(d => f => !consumedFiles((d, f))).filterNot(g => emptied(g.dir))
+    var carried = unconsumed(baseGens)
     var attempts = 0
     while (true) {
       val next = attemptBase + 1
+      val (carriedN, carriedB) = filesAndBytes(carried)
       // rewrite marks this commit as the mutation that OWNS its
       // generation's _cdf — the changefeed walker only reads _cdf under
       // this flag (a restore re-referencing the generation stays a
       // restatement)
-      if (claimVersion(spark, gen, Commit(next, op, carried :+ gen,
-          rewrite = true, batchId, queryId))) {
+      if (claimVersion(spark, gen, Commit.of(next, op, carried :+ GenRef(gen),
+          rewrite = true, batchId, queryId, Some(Commit.Metrics(addedN, addedB,
+            removedN, removedB, carriedN, carriedB))))) {
         // merge/delete/optimize commits can also grow the small tail —
         // the auto tier covers EVERY publishing path, not just appends
         // (the reentrancy guard no-ops this inside a fold's own publish)
@@ -1122,14 +1216,18 @@ class SnapshotLake(root: String) {
       attempts += 1
       if (attempts >= 5) abort("rebase retries exhausted")
       val head = latestVersion(spark).getOrElse(0L)
-      val headDirs = dirsAt(spark, head)
-      if (!consumed.forall(headDirs.contains))
-        abort("a racing commit rewrote a generation this mutation read")
-      val added = headDirs.filterNot(baseDirs.contains)
-      if (added.exists(mayOverlapScope))
+      val headGens = commitAt(spark, head).gens
+      val headFiles = fileSet(spark, headGens)
+      if (!consumedFiles.subsetOf(headFiles))
+        abort("a racing commit rewrote a file this mutation read")
+      val added = headFiles -- fileSet(spark, baseGens)
+      if (added.groupBy(_._1).exists { case (d, fs) =>
+          val overlaps = mayOverlapScope(d)
+          fs.exists(f => overlaps(f._2))
+        })
         abort("a racing commit added rows inside this mutation's scope")
       attemptBase = head
-      carried = headDirs.filterNot(consumed.contains)
+      carried = unconsumed(headGens)
     }
     sys.error("unreachable")
   }
@@ -1139,14 +1237,15 @@ class SnapshotLake(root: String) {
     * a metadata-only commit, no data moves (generations are immutable,
     * so re-referencing them is free). History is preserved: the bad
     * versions stay time-travelable until vacuumed, and because the new
-    * head references the restored generations, vacuum keeps them live.
+    * head references the restored generations (and the same files of
+    * each), vacuum keeps them live.
     * The changefeed across a restore surfaces as the file-level
     * restatement the manifest diff implies. Optimistic retry like any
     * append: losing the race re-reads the target version (unchanged)
     * and re-claims the next number. */
   def restore(spark: SparkSession, version: Long): Long = {
     val fs = hadoopFs(spark)
-    val dirs = dirsAt(spark, version) // throws if vacuumed
+    val gens = commitAt(spark, version).gens // throws if vacuumed
     retryClaim(spark) { next =>
       // restore uniquely re-references generations the current head may
       // NOT reference, which vacuum could be deleting concurrently —
@@ -1155,11 +1254,11 @@ class SnapshotLake(root: String) {
       // shrinks the window to the claim itself; like other table
       // formats, restore and vacuum are a single-maintainer pair and
       // must not run concurrently.
-      dirs.foreach { d =>
-        require(fs.exists(new org.apache.hadoop.fs.Path(s"$root/$d")),
-          s"generation $d of version $version was vacuumed mid-restore")
+      gens.foreach { g =>
+        require(fs.exists(new org.apache.hadoop.fs.Path(s"$root/${g.dir}")),
+          s"generation ${g.dir} of version $version was vacuumed mid-restore")
       }
-      Commit(next, "restore", dirs)
+      Commit.of(next, "restore", gens)
     }
   }
 
@@ -1242,9 +1341,10 @@ class SnapshotLake(root: String) {
   def changesBetween(spark: SparkSession, fromV: Long, toV: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
     require(fromV < toV, s"need fromV < toV, got ($fromV, $toV]")
-    val snapshot = readAt(spark, toV)
-    walkChanges(spark, fromV, toV, snapshot.schema, readGens(spark, _, _))
-      .reduceOption(_.unionByName(_)).getOrElse(snapshot.limit(0)
+    // the recorded schema: nothing is listed until a version's frame is
+    val schema = schemaOf(spark, dirsAt(spark, toV))
+    walkChanges(spark, fromV, toV, schema, readGens(spark, _, _))
+      .reduceOption(_.unionByName(_)).getOrElse(readGens(spark, Nil, schema)
         .withColumn(SnapshotLake.ChangeTypeCol, lit(""))
         .withColumn(SnapshotLake.CommitVersionCol, lit(toV)))
   }
@@ -1253,26 +1353,40 @@ class SnapshotLake(root: String) {
     * ([[changesBetween]]) and the streaming source's `readChangeFeed`
     * mode so the tier logic cannot drift between them. For each version
     * in (fromV, toV] it classifies the manifest delta — materialized
-    * `_cdf/` (rewrites), new directories as inserts, dropped directories
-    * as deletes — and leaves frame construction (batch vs streaming
-    * frames over [[relation]]) to `read(dirs, schema)`, `dirs` relative to
-    * the root. Each commit record is read once
+    * `_cdf/` (rewrites), files the version reads that its predecessor did
+    * not as inserts, the reverse as deletes — and leaves frame
+    * construction (batch vs streaming frames over [[relation]]) to
+    * `read(gens, schema)`, directories relative to the root. Each commit
+    * record is read once
     * per walk ([[commitAt]]); a vacuumed one inside the range fails fast.
     * Every frame has the `schema` columns, then
     * [[SnapshotLake.ChangeTypeCol]] and [[SnapshotLake.CommitVersionCol]]. */
   private[graft] def walkChanges(spark: SparkSession, fromV: Long, toV: Long,
       schema: StructType,
-      read: (Seq[String], StructType) => DataFrame): Seq[DataFrame] = {
+      read: (Seq[GenRef], StructType) => DataFrame): Seq[DataFrame] = {
     import org.apache.spark.sql.functions.{col, lit}
     val fs = hadoopFs(spark)
     val withChange = schema.add(SnapshotLake.ChangeTypeCol, StringType)
+    // the files `a` reads that `b` does not
+    def minus(a: Seq[GenRef], b: Seq[GenRef]): Seq[GenRef] = {
+      val byDir = b.map(g => g.dir -> g).toMap
+      a.flatMap { g =>
+        byDir.get(g.dir) match {
+          case None => Some(g)
+          case Some(o) if o.files.isEmpty || o == g => None
+          case Some(o) =>
+            val have = liveFiles(spark, o).map(_._1).toSet
+            val extra = liveFiles(spark, g).map(_._1).filterNot(have)
+            if (extra.isEmpty) None else Some(GenRef(g.dir, Some(extra)))
+        }
+      }
+    }
     ((fromV + 1) to toV).flatMap { v =>
       // version 0 is the empty pre-table
-      val prev = if (v == 1) Set.empty[String] else dirsAt(spark, v - 1).toSet
+      val prev = if (v == 1) Nil else commitAt(spark, v - 1).gens
       val commit = commitAt(spark, v)
-      val cur = commit.dirs
-      val newDirs = cur.filterNot(prev)
-      val dropped = (prev -- cur.toSet).toSeq.sorted
+      val cur = commit.gens
+      val newDirs = commit.dirs.filterNot(prev.map(_.dir).toSet)
       // the `_cdf/` read is gated on the COMMIT being a rewrite, not
       // just on the directory carrying `_cdf/`: a restore re-references
       // an old rewrite generation, and reading its stale change rows
@@ -1282,13 +1396,14 @@ class SnapshotLake(root: String) {
         case Seq(g) if commit.rewrite && fs.exists(
             new org.apache.hadoop.fs.Path(
               s"$root/$g/${SnapshotLake.CdfDirName}")) =>
-          Some(read(Seq(s"$g/${SnapshotLake.CdfDirName}"), withChange))
+          Some(read(Seq(GenRef(s"$g/${SnapshotLake.CdfDirName}")), withChange))
         case _ => None
       }
-      def rows(dirs: Seq[String], change: String) =
-        if (dirs.isEmpty) None else Some(read(dirs, schema)
+      def rows(gens: Seq[GenRef], change: String) =
+        if (gens.isEmpty) None else Some(read(gens, schema)
           .withColumn(SnapshotLake.ChangeTypeCol, lit(change)))
-      materialized.map(Seq(_)).getOrElse(rows(newDirs, "insert").toSeq ++ rows(dropped, "delete"))
+      materialized.map(Seq(_)).getOrElse(rows(minus(cur, prev), "insert").toSeq ++
+        rows(minus(prev, cur).sortBy(_.dir), "delete"))
         .map(_.select(withChange.fieldNames.map(col).toSeq: _*)
           .withColumn(SnapshotLake.CommitVersionCol, lit(v)))
     }
@@ -1296,7 +1411,8 @@ class SnapshotLake(root: String) {
 
   /** Drop generation directories not referenced by the newest
     * `retainLast` commits, then drop the older commit files — bounded
-    * time travel, like a table format's VACUUM/expire-snapshots.
+    * time travel, like a table format's VACUUM/expire-snapshots. A
+    * directory stays while any retained version reads any of its files.
     * Readers of vacuumed versions fail fast on their next listing. */
   def vacuum(spark: SparkSession, retainLast: Int): Unit = {
     require(retainLast >= 1, "must retain at least the latest snapshot")
@@ -1352,10 +1468,10 @@ class SnapshotLake(root: String) {
     * envelope spans the domain), a bloom prunes it to zero files.
     * Costs one columnar scan per uncovered generation; generations are
     * immutable, so a sidecar never goes stale and incremental calls
-    * only touch generations newer appends created. Sizing:
-    * ~10·`expectedNdvPerFile` bits per (file, column) for ~1% false
-    * positives — a false positive only costs an extra file read, never
-    * correctness. */
+    * only touch generations newer appends created. Sizing: ~10 bits per
+    * row of each file, capped at ~10·`expectedNdvPerFile` bits per
+    * (file, column), for ~1% false positives ([[GenBlooms.sized]]) — a
+    * false positive only costs an extra file read, never correctness. */
   def computeBlooms(spark: SparkSession, cols: Seq[String],
       expectedNdvPerFile: Int = 100000): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration

@@ -467,9 +467,13 @@ object LayoutPack extends QueryPack {
 
     // The five-operation audit trail as literal rows: the lake's
     // history is fully determined by the query's own mutation sequence.
+    // The merge's rewrite generation holds the kept rows and the source
+    // row in different files; the delete rewrites only the file holding
+    // doc_id 1 and carries the others by reference, so its version
+    // reads two generations.
     "l_snaplake_history" ->
       """SELECT * FROM (VALUES
-        |  (1, 'overwrite', 1), (2, 'merge', 1), (3, 'delete', 1),
+        |  (1, 'overwrite', 1), (2, 'merge', 1), (3, 'delete', 2),
         |  (4, 'optimize', 1), (5, 'restore', 1))
         |AS t(seq, op, n_dirs) ORDER BY seq""".stripMargin,
 

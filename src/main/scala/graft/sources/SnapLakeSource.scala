@@ -69,8 +69,7 @@ class SnapLakeSource extends RelationProvider with CreatableRelationProvider
       .getOrElse(lake.latestVersion(spark).getOrElse(
         throw new IllegalArgumentException(
           s"no committed version under $root")))
-    val gens = lake.dirsAt(spark, version)
-    lake.relation(spark, gens, lake.schemaOf(spark, gens))
+    lake.relationAt(spark, version)
   }
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,

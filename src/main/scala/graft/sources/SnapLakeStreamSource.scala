@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.types.StructType
 
-import graft.ingest.SnapshotLake
+import graft.ingest.{GenRef, SnapshotLake}
 
 /** [[SnapshotLake]]'s commit log tailed as a Structured Streaming source
   * (`spark.readStream.format("snaplake").load(root)`): offsets are commit
@@ -78,7 +78,7 @@ class SnapLakeStreamSource(spark: SparkSession, root: String,
   /** The lake's scan of `gens` ([[SnapshotLake.relation]]), pinned to
     * an explicit schema so evolved appends project instead of widening
     * mid-stream, flagged streaming for the incremental planner. */
-  private def streamingRead(gens: Seq[String], s: StructType): DataFrame =
+  private def streamingRead(gens: Seq[GenRef], s: StructType): DataFrame =
     GraftBridge.ofRows(spark, LogicalRelation(lake.relation(spark, gens, s), isStreaming = true))
 
   /** CHANGEFEED batch for versions (startV, endV]: the same three cost
@@ -96,7 +96,9 @@ class SnapLakeStreamSource(spark: SparkSession, root: String,
       .reduceOption(_.unionByName(_)).getOrElse(emptyStreamDf(schema))
   }
 
-  /** New directories of versions (startV, endV], walked VERSION BY
+  /** New directories of versions (startV, endV], each read as the
+    * version that introduced it reads it (a restore may re-reference a
+    * generation in part), walked VERSION BY
     * VERSION — diffing only the endpoint manifests would silently drop a
     * generation that was appended and then overwritten away inside one
     * batch window (committed rows whose delivery would depend on trigger
@@ -134,7 +136,7 @@ class SnapLakeStreamSource(spark: SparkSession, root: String,
     * still-live generation they introduced surfaces through the next
     * retained manifest's diff against the seen-set. */
   private def deltaDirs(startV: Long, endV: Long,
-      checkpointed: Boolean): List[String] = {
+      checkpointed: Boolean): List[GenRef] = {
     val committedAll = lake.versions(spark) // one listing per batch, sorted
     val committed = committedAll.toSet
     def manifestAt(v: Long): Option[Seq[String]] =
@@ -166,16 +168,16 @@ class SnapLakeStreamSource(spark: SparkSession, root: String,
       }
       delivered.result()
     }
-    val out = scala.collection.mutable.ListBuffer.empty[String]
+    val out = scala.collection.mutable.ListBuffer.empty[GenRef]
     var v = startV + 1
     while (v <= endV) {
       if (committed.contains(v)) {
         val c = lake.commitAt(spark, v)
-        val fresh = c.dirs.filterNot(seen.contains)
+        val fresh = c.gens.filterNot(g => seen.contains(g.dir))
         val skip: Set[String] =
-          if (c.op == "restore" && fresh.nonEmpty) deliveredBefore(fresh.toSet)
+          if (c.op == "restore" && fresh.nonEmpty) deliveredBefore(fresh.map(_.dir).toSet)
           else Set.empty
-        fresh.foreach { d => seen += d; if (!skip.contains(d)) out += d }
+        fresh.foreach { g => seen += g.dir; if (!skip.contains(g.dir)) out += g }
       }
       v += 1
     }

@@ -1,21 +1,23 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata,
+  PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ingest.GenStats.{ColStats, FileStats}
 
-/** Manifest-stats file skipping for every snaplake scan
-  * ([[graft.ingest.SnapshotLake.relation]]): wraps the
-  * resolved parquet relation's own [[FileIndex]] (which did the listing
-  * and schema work) and, inside `listFiles`, drops every file whose
+/** The file index of every snaplake scan
+  * ([[graft.ingest.SnapshotLake.relation]]): the data `files` the
+  * manifest names, listed by the relation when it was built, and, inside
+  * `listFiles`, the skipping step — every file whose
   * [[graft.ingest.GenStats]] envelope or Bloom sidecar proves the pushed
-  * data filters cannot match any of its rows ([[FilePruning]], the same
-  * check snaplake merges and deletes scope their rewrites with).
+  * data filters cannot match any of its rows is dropped ([[FilePruning]],
+  * the same check snaplake merges and deletes scope their rewrites
+  * with).
   *
   * This is the point where a table format earns its keep at 100 TB:
   * `FileSourceStrategy` hands the scan's data filters to the index
@@ -26,13 +28,10 @@ import graft.ingest.GenStats.{ColStats, FileStats}
   * type, statless footer) is always kept, so the index can never change
   * a query's answer, only its cost — asserted by the parity tests in
   * SnapLakeSkipSpec.
-  *
-  * Stats are keyed by `gen-dir/file-name`, unique within a table because
-  * generation names are UUID-derived.
   */
-class StatsFileIndex(inner: FileIndex, statsByFile: Map[String, FileStats],
-    commitLogPath: Path,
-    bloomsByFile: () => Map[String, Map[String, graft.ingest.GenBlooms.Bloom]])
+class StatsFileIndex(dirs: Seq[Path], files: Seq[FileStatus],
+    statsByFile: Map[Path, FileStats], commitLogPath: Path,
+    bloomsByFile: () => Map[Path, Map[String, graft.ingest.GenBlooms.Bloom]])
     extends FileIndex {
 
   // LAZY and equality-gated: bloom sidecars are orders of magnitude
@@ -50,31 +49,20 @@ class StatsFileIndex(inner: FileIndex, statsByFile: Map[String, FileStats],
     * (which would mutate every version referencing it and break
     * snapshot isolation and time travel). Writes go through
     * `format("snaplake").mode("append")`, i.e. the commit log. */
-  override def rootPaths: Seq[Path] =
-    inner.rootPaths :+ commitLogPath
-  override def inputFiles: Array[String] = inner.inputFiles
-  override def refresh(): Unit = inner.refresh()
-  override def sizeInBytes: Long = inner.sizeInBytes
-  override def partitionSchema: StructType = inner.partitionSchema
+  override def rootPaths: Seq[Path] = dirs :+ commitLogPath
+  override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_.getLen).sum
+  override def partitionSchema: StructType = new StructType()
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val base = inner.listFiles(partitionFilters, dataFilters)
-    if (dataFilters.isEmpty) return base
     val prune = new FilePruning(dataFilters)
-    if (statsByFile.isEmpty && !prune.wantsBlooms) return base
-    base.map { pd =>
-      pd.copy(files = pd.files.filter { f =>
-        val key = StatsFileIndex.keyOf(f.getPath)
-        prune.mayMatch(statsByFile.get(key), blooms.get(key))
-      })
-    }
+    val kept =
+      if (dataFilters.isEmpty || (statsByFile.isEmpty && !prune.wantsBlooms)) files
+      else files.filter(f => prune.mayMatch(statsByFile.get(f.getPath), blooms.get(f.getPath)))
+    Seq(PartitionDirectory(InternalRow.empty, kept.map(FileStatusWithMetadata(_, Map.empty))))
   }
-}
-
-object StatsFileIndex {
-  /** `gen-xxxx/part-....parquet` — the stats map key for a data file. */
-  def keyOf(p: Path): String = s"${p.getParent.getName}/${p.getName}"
 }
 
 /** Could one file hold a row passing every one of `filters`? The one

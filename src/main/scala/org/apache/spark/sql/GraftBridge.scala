@@ -41,6 +41,10 @@ object GraftBridge {
       caseSensitive: Boolean): types.StructType =
     a.merge(b, caseSensitive)
 
+  /** `StructType.asNullable` (`private[spark]`): the schema with every
+    * field nullable, as Spark's file sources read any schema. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
   /** Drain the async listener bus (`private[spark]`) so metric listeners
     * observe every task of a just-finished action — the shuffle-volume
     * regression guards depend on it. */

@@ -175,4 +175,31 @@ class PropertySpec extends AnyFunSuite {
       b.mightContain(l.toDouble) && b.mightContain(l.toString)
     })
   }
+
+  test("bloom: a fold to a smaller power of two is the bloom built at that size") {
+    import graft.ingest.GenBlooms
+    // (log2 m, log2 m2) with 2^10 <= m2 <= m <= 2^16
+    val shapes = for {
+      lm <- Gen.choose(10, 16)
+      lm2 <- Gen.choose(10, lm)
+    } yield (1 << lm, 1 << lm2)
+    val values: Gen[List[Any]] = Gen.listOf(Gen.oneOf(
+      Gen.long.map(identity[Any]),
+      Gen.choose(Int.MinValue, Int.MaxValue).map(identity[Any])))
+    check(forAll(shapes, values, Gen.listOfN(20, Gen.long)) { case ((m, m2), vs, probes) =>
+      val big = new GenBlooms.Bloom(m, 7, "l")
+      val direct = new GenBlooms.Bloom(m2, 7, "l")
+      vs.foreach { v => big.add(v); direct.add(v) }
+      val folded = big.fold(m2)
+      folded.m == m2 && java.util.Arrays.equals(folded.bits, direct.bits) &&
+        (vs ++ probes).forall(p => folded.mightContain(p) == direct.mightContain(p))
+    })
+    // strings too: the fold sees only bit positions, whatever the kind
+    check(forAll(Gen.listOf(asciiText)) { vs =>
+      val big = new GenBlooms.Bloom(1 << 14, 7, "s")
+      val direct = new GenBlooms.Bloom(1 << 10, 7, "s")
+      vs.foreach { v => big.add(v); direct.add(v) }
+      java.util.Arrays.equals(big.fold(1 << 10).bits, direct.bits)
+    })
+  }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 
 /** Copy-on-write MERGE/DELETE on [[SnapshotLake]]: upsert and delete
-  * semantics, stats-scoped rewrites (untouched generations carry forward
-  * by reference), the no-op delete fast path, and the optimistic-abort
+  * semantics, stats-scoped rewrites (untouched files carry forward by
+  * reference), the no-op delete fast path, and the optimistic-abort
   * publication contract under a racing commit.
   */
 class SnapLakeMergeSpec extends SparkSpecBase {
@@ -17,6 +17,11 @@ class SnapLakeMergeSpec extends SparkSpecBase {
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft_snapmerge").toString
+
+  /** Generations version `v` reads exactly as version `u` does — the
+    * same files of each: carried by reference, untouched. */
+  private def carried(lake: SnapshotLake, u: Long, v: Long): Set[String] =
+    lake.commitAt(spark, v).gens.toSet.intersect(lake.commitAt(spark, u).gens.toSet).map(_.dir)
 
   test("merge: updates replace by key, inserts append, others survive") {
     val root = freshRoot()
@@ -45,9 +50,9 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     val v = lake.merge(Seq((150L, "new")).toDF("id", "v"), Seq("id"))
     val after = lake.dirsAt(spark, v)
     // the two untouched generations are re-referenced, not rewritten
-    assert(after.toSet.intersect(before.toSet).size == 2,
+    assert(carried(lake, 3L, v) == Set(before(0), before(2)),
       s"expected 2 carried generations: before=$before after=$after")
-    assert(after.size == 3, s"one rewrite generation expected: $after")
+    assert(after.filterNot(before.contains).size == 1, s"one rewrite generation expected: $after")
     val rows = lake.read(spark).as[(Long, String)].collect()
     assert(rows.length == 300)
     assert(rows.toMap.apply(150L) == "new")
@@ -98,7 +103,7 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     val v = lake.delete(spark, col("id") < 50)
     assert(v == 3L)
     val after = lake.dirsAt(spark, v)
-    assert(after.toSet.intersect(before.toSet).size == 1,
+    assert(carried(lake, 2L, v) == Set(before(1)),
       s"one generation should carry: before=$before after=$after")
     assert(lake.read(spark).count() == 150)
   }
@@ -118,7 +123,7 @@ class SnapLakeMergeSpec extends SparkSpecBase {
       val Seq(early, late) = lake.dirsAt(spark, 2L)
       // a one-row upsert inside the later generation's range only
       val v = lake.merge(rows(105, 106, "new"), Seq("k"))
-      val after = lake.dirsAt(spark, v)
+      val after = carried(lake, 2L, v)
       assert(after.contains(early) && !after.contains(late),
         s"$kind key: the earlier generation must carry by reference: $after")
       assert(lake.read(spark).filter(col("v") === "new").count() == 1, kind)
@@ -293,7 +298,7 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     // a 2-row EVEN-key upsert: the odd generation's blooms reject both
     // keys, so it must carry forward BY REFERENCE
     val v = lake.merge(Seq((2L, "E2"), (4L, "E4")).toDF("id", "v"), Seq("id"))
-    val after = lake.dirsAt(spark, v)
+    val after = carried(lake, 2L, v)
     assert(after.contains(oddGen) && !after.contains(evenGen),
       s"bloom scoping failed: before=$before after=$after")
     val got = lake.read(spark).as[(Long, String)].collect().toMap
@@ -302,10 +307,10 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     // DELETE through the same tier: bloom the merge's new generation,
     // then delete one odd key — the (bloomed) even rewrite must carry
     lake.computeBlooms(spark, Seq("id"), expectedNdvPerFile = 1000)
-    val beforeDel = lake.dirsAt(spark, lake.latestVersion(spark).get)
+    val beforeDel = lake.dirsAt(spark, v)
     val evenGen2 = beforeDel.filterNot(_ == oddGen).head
     val v2 = lake.delete(spark, col("id") === 7L)
-    val afterDel = lake.dirsAt(spark, v2)
+    val afterDel = carried(lake, v, v2)
     assert(afterDel.contains(evenGen2) && !afterDel.contains(oddGen),
       s"bloom delete scoping failed: before=$beforeDel after=$afterDel")
     assert(lake.read(spark).count() == 199)
@@ -462,5 +467,83 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     assert(before.subsetOf(lake.dirsAt(spark, v2).toSet),
       "all-null-key merge rewrote carried generations")
     assert(lake.readAt(spark, v2).count() == 201)
+  }
+
+  test("file-granular rewrites: rebase per file, restore, changefeed, vacuum and stream") {
+    val root = freshRoot()
+    val lake = new SnapshotLake(root)
+    // one generation of four files holding ids [0,25), [25,50), [50,75), [75,100)
+    lake.commit(spark.range(0, 100, 1, 4).toDF("id").withColumn("v", lit("x")),
+      overwrite = true)
+    val gen = lake.dirsAt(spark, 1L).head
+    def live(v: Long): Int = lake.commitAt(spark, v).gens.flatMap(g =>
+      g.files.getOrElse(Files.list(java.nio.file.Paths.get(root, g.dir)).toArray
+        .map(_.toString).filter(_.endsWith(".parquet")).toSeq)).size
+    // a delete racing into another file of the same generation: the
+    // files this delete read are untouched, so it rebases and both land
+    val racy = new SnapshotLake(root) {
+      override protected def onBeforePublish(): Unit =
+        new SnapshotLake(root).delete(spark, col("id") === 80L)
+    }
+    val v3 = racy.delete(spark, col("id") === 10L)
+    assert(v3 == 3L)
+    assert(lake.commitAt(spark, v3).files.get(gen).exists(_.size == 2))
+    assert(lake.read(spark).count() == 98L)
+    assert(live(3L) == 4, "two carried files and two one-file rewrites")
+    // a racing delete in the SAME file rewrites a file this one read: abort
+    val racy2 = new SnapshotLake(root) {
+      override protected def onBeforePublish(): Unit =
+        new SnapshotLake(root).delete(spark, col("id") === 30L)
+    }
+    intercept[java.util.ConcurrentModificationException] {
+      racy2.delete(spark, col("id") === 31L)
+    }
+    assert(lake.latestVersion(spark).contains(4L))
+    assert(lake.read(spark).filter(col("id") === 31L).count() == 1L)
+    // restore to v1 reads the generation whole again; its changefeed is
+    // the file-level restatement: the three rewritten files' rows come
+    // back, the rewrites' rows go
+    val v5 = lake.restore(spark, 1L)
+    assert(lake.commitAt(spark, v5).gens == Seq(GenRef(gen)))
+    val feed = lake.changesBetween(spark, 4L, v5)
+      .groupBy(col("_change_type")).count().as[(String, Long)].collect().toMap
+    assert(feed == Map("insert" -> 75L, "delete" -> 72L), feed)
+    assert(lake.read(spark).count() == 100L)
+    // vacuum keeps a generation while a retained version reads any file
+    // of it; the rewrites only dropped versions read go
+    val v6 = lake.delete(spark, col("id") === 60L)
+    assert(lake.commitAt(spark, v6).files.get(gen).exists(_.size == 3))
+    lake.vacuum(spark, retainLast = 1)
+    assert(lake.versions(spark) == Seq(v6))
+    assert(lake.read(spark).count() == 99L)
+    val dirs = Files.list(java.nio.file.Paths.get(root)).toArray.map(_.toString)
+      .filter(_.contains("/gen-")).toSet
+    assert(dirs == lake.dirsAt(spark, v6).map(d => s"$root/$d").toSet, dirs)
+    // a stream from v6 replays the partly read generation as v6 reads it
+    val q = spark.readStream.format("snaplake").option("startingVersion", v6.toString)
+      .load(root).writeStream.format("memory").queryName("file_granular_stream").start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table("file_granular_stream").count() == 99L)
+    } finally q.stop()
+  }
+
+  test("with auto-compaction on, a mutation rewrites a small generation whole") {
+    val root = freshRoot()
+    val lake = new SnapshotLake(root)
+    lake.commit(spark.range(0, 100, 1, 4).toDF("id").withColumn("v", lit("x")))
+    val gen = lake.dirsAt(spark, 1L).head
+    // every generation is small: the next fold would rewrite the files a
+    // file-granular delete carries, so the delete takes all four
+    lake.enableAutoCompact(spark, maxSmallGens = 8, smallBytes = 1L << 30)
+    val v2 = lake.delete(spark, col("id") === 10L)
+    val c2 = lake.commitAt(spark, v2)
+    assert(!c2.dirs.contains(gen) && c2.metrics.exists(_.filesRemoved == 4L), c2.json)
+    // no generation is small: the delete rewrites only the file in scope
+    lake.enableAutoCompact(spark, maxSmallGens = 8, smallBytes = 1L)
+    val Seq(rewrite) = c2.dirs
+    val c3 = lake.commitAt(spark, lake.delete(spark, col("id") === 60L))
+    assert(c3.files.get(rewrite).exists(_.size == 3) && c3.metrics.exists(_.filesRemoved == 1L), c3.json)
+    assert(lake.read(spark).count() == 98L)
   }
 }

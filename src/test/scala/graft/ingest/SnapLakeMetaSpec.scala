@@ -19,6 +19,10 @@ import graft.sources.SnapLakeSource
 class SnapLakeMetaSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** Pinned byte counts; each test says what it measures. */
+  private val BloomSidecarBytes = 851L
+  private val DeleteRewriteBytes = 9356L
+
   private def freshRoot(): String =
     Files.createTempDirectory("graft_snapmeta").toString + "/lake"
 
@@ -200,6 +204,63 @@ class SnapLakeMetaSpec extends SparkSpecBase {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  /** Bytes of every file under `dir`, its hidden checksums included. */
+  private def bytesUnder(dir: String): Long = {
+    val s = Files.walk(Paths.get(dir))
+    try s.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
+    finally s.close()
+  }
+
+  test("byte budget: auto-Blooms are sized to each file's rows, under the cap") {
+    val root = freshRoot()
+    val lake = new SnapshotLake(root)
+    // the default cap (100,000 distinct values per file) would give each
+    // file a 2^20-bit bloom; three 100-row files get 1,024 bits each
+    lake.enableAutoBlooms(spark, Seq("id"))
+    lake.commit(spark.range(0, 300, 1, 3).select(col("id"), (col("id") % 7).as("v")))
+    val gen = s"$root/${lake.dirsAt(spark, 1L).head}"
+    val blooms = GenBlooms.load(conf, gen).get
+    assert(blooms.size == 3 && blooms.values.forall(_("id").m == 1024),
+      blooms.map { case (f, b) => f -> b("id").m })
+    val sidecar = Files.size(Paths.get(gen, GenBlooms.BloomsFileName))
+    info(s"_blooms.json of three 100-row files: $sidecar bytes")
+    assert(sidecar == BloomSidecarBytes, s"_blooms.json is $sidecar bytes")
+    // every file still answers for its own keys, and only for them
+    (0L until 300L by 37L).foreach { k =>
+      assert(filesRead(spark.read.format("snaplake").load(root).filter(col("id") === k)) == 1L)
+    }
+  }
+
+  test("byte budget: one-key delete in a 3-file generation rewrites 1 file") {
+    val root = freshRoot()
+    val lake = new SnapshotLake(root)
+    lake.enableAutoBlooms(spark, Seq("id"), expectedNdvPerFile = 1000)
+    // three files holding ids [0, 1000), [1000, 2000), [2000, 3000)
+    lake.commit(spark.range(0, 3000, 1, 3).select(col("id"), (col("id") % 7).as("v")))
+    val gen = lake.dirsAt(spark, 1L).head
+    val genBytes = bytesUnder(s"$root/$gen")
+    val v = lake.delete(spark, col("id") === 1500L)
+    val c = lake.commitAt(spark, v)
+    // the other two files of the generation carry by reference
+    assert(c.dirs.head == gen && c.files.get(gen).exists(_.size == 2), c.json)
+    val Seq(rewrite) = c.dirs.tail
+    val added = bytesUnder(s"$root/$rewrite")
+    info(s"one-key delete: generation $genBytes bytes, rewrite adds $added bytes")
+    val m = c.metrics.get
+    assert((m.filesAdded, m.filesRemoved, m.filesCarried) == (1L, 1L, 2L), m)
+    def parquetBytes(d: String): Long = Files.list(Paths.get(root, d)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).map(f => Files.size(Paths.get(f))).sum
+    assert(m.bytesRemoved + m.bytesCarried == parquetBytes(gen) &&
+      m.bytesAdded == parquetBytes(rewrite), m)
+    val h = lake.history(spark).filter(col("version") === v).head()
+    assert(Commit.Metrics.Names.map(h.getAs[Long](_)) == m.values)
+    assert(added == DeleteRewriteBytes, s"the rewrite added $added bytes")
+    assert(lake.read(spark).count() == 2999L)
+    assert(lake.read(spark).filter(col("id") === 1500L).count() == 0L)
+    assert(lake.changesBetween(spark, 1L, v).as[(Long, Long, String, Long)].collect().toSeq ==
+      Seq((1500L, 1500L % 7, "delete", v)))
   }
 
   test("job budget: append 1, resolve 0, point delete and small merge pinned") {

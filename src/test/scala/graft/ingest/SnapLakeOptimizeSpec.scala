@@ -230,4 +230,21 @@ class SnapLakeOptimizeSpec extends SparkSpecBase {
       }
     assert(spark.read.format("snaplake").load(root).count() == 50600)
   }
+
+  test("compactSmall and optimize drop the empty generations they fold") {
+    val root = freshRoot()
+    val lake = new SnapshotLake(root)
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      Seq((0L, "")).toDF("id", "v").schema)
+    lake.commit(Seq((1L, "a")).toDF("id", "v"))
+    lake.commit(empty)
+    lake.commit(Seq((2L, "b")).toDF("id", "v"))
+    lake.commit(empty)
+    val v = lake.compactSmall(spark, maxBytes = 1L << 30, Seq(col("id")))
+    assert(lake.dirsAt(spark, v).size == 1, lake.dirsAt(spark, v))
+    lake.commit(empty)
+    val v2 = lake.optimize(spark, 1, Seq(col("id")))
+    assert(lake.dirsAt(spark, v2).size == 1, lake.dirsAt(spark, v2))
+    assert(lake.read(spark).as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
+  }
 }
