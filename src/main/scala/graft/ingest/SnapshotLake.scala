@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf.StoreAssignmentPolicy
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructType}
+import org.roaringbitmap.RoaringBitmap
 
 /** Minimal snapshot-versioned table: a commit log + read-at-version over
   * the same immutable-generation machinery the ledgered sinks use — the
@@ -23,10 +24,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, Str
   *                               //  "dirs":["gen-ab12cd34","gen-99ff0011"],
   *                               //  "files":{"gen-ab12cd34":["part-00001-….parquet"]},
   *                               //  "metrics":{"files_added":1,…}}
+  *     _commits/v00000003.json   // {"version":3,"op":"delete","dirs":[…],"files":{…},
+  *                               //  "dvs":{"gen-99ff0011":{"part-00000-….parquet":
+  *                               //    {"file":"dv-5e6f….json","rows":2}}},…}
+  *     _dv/dv-5e6f….json         // the deletion vectors one delete changed
   *     gen-ab12cd34/  ...parquet...
   *                    _stats.json    // per-file envelopes + the Spark schema
   *                    _blooms.json   // per-file Blooms (auto-Blooms / computeBlooms)
-  *                    _cdf/          // row-level changes of a merge/delete rewrite
+  *                    _cdf/          // row-level changes of a merge or compaction
   *     gen-99ff0011/  ...parquet...
   * }}}
   *
@@ -63,10 +68,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, Str
   * Append commits reference the previous snapshot's directories plus the
   * new generation — O(1) data movement per append, like a table format's
   * manifest reuse; overwrite commits reference only the new generation.
-  * A merge or delete rewrites only the data files that may hold a row in
-  * its scope and carries the rest by reference, so a commit may read a
-  * generation in part: its record names that generation's remaining
-  * files ([[GenRef]]).
+  * A merge rewrites only the data files that may hold a row in its scope
+  * and carries the rest by reference, so a commit may read a generation
+  * in part: its record names that generation's remaining files
+  * ([[GenRef]]). A delete copies no file: it gives each data file with a
+  * deleted row a deletion vector ([[DeletionVectors]]) that every read
+  * applies.
   * Schemas may evolve across appends: a version reads under the union
   * of its generations' schemas, as a `mergeSchema` read would infer it.
   */
@@ -166,9 +173,11 @@ class SnapshotLake(root: String) {
     * that published it (`create`/`append`/`overwrite`/`merge`/`delete`/
     * `optimize`/`zorder`/`compact`/`restore`; commits from writers
     * predating the tag read as `unknown`), the generation count, the
-    * publication instant ([[versionAt]]'s clock), and for a rewrite the
-    * data files and bytes it added, removed and carried by reference
-    * ([[Commit.Metrics]]; null for other operations). Metadata-only:
+    * publication instant ([[versionAt]]'s clock), and for a rewrite or a
+    * delete the data files and bytes it added, removed and carried by
+    * reference, and for a delete the rows it removed and the files whose
+    * deletion vector it changed ([[Commit.Metrics]]; null where an
+    * operation does not record them). Metadata-only:
     * one commit record per version, no data touched. Built with an
     * explicit schema (the createDataFrame/REPL-classloader contract
     * every frozen-table helper here follows). */
@@ -215,7 +224,12 @@ class SnapshotLake(root: String) {
     * (relative to the root — generations, or a rewrite's `_cdf/`; a
     * [[GenRef]] with a file subset reads only those files) as Spark's own
     * parquet relation under `schema`, so pushdown, column pruning and
-    * vectorized decoding are the parquet scan's. The relation lists its
+    * vectorized decoding are the parquet scan's. A file with a deletion
+    * vector skips the rows it marks, and a file keyed in `only`
+    * ([[DeletionVectors.key]]) reads just the rows that bitmap marks (a
+    * changefeed's deleted rows); either way the relation reads through
+    * [[graft.sources.DvParquetFileFormat]], and a relation with neither
+    * through the stock parquet format. The relation lists its
     * files now: a frame keeps reading its version after later commits
     * (snapshot isolation), and a directory that no longer exists fails
     * here. Its file index ([[graft.sources.StatsFileIndex]]) drops each
@@ -227,13 +241,24 @@ class SnapshotLake(root: String) {
     * Spark refuse a single-path `INSERT INTO` that would drop files into
     * a committed generation. */
   private[graft] def relation(spark: SparkSession, gens: Seq[GenRef],
-      schema: StructType): HadoopFsRelation = {
+      schema: StructType, only: Map[String, RoaringBitmap] = Map.empty): HadoopFsRelation = {
     import org.apache.hadoop.fs.Path
+    import graft.sources.RowMask
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = hadoopFs(spark)
     val listed = gens.map { g =>
       g -> readBy(g, GenStats.dataFiles(fs, new Path(s"$root/${g.dir}")))(_.getPath.getName)
     }
+    val masks: Map[Path, RowMask] = listed.flatMap { case (g, files) =>
+      files.flatMap { st =>
+        val f = st.getPath.getName
+        only.get(DeletionVectors.key(g.dir, f))
+          .map(b => RowMask(DeletionVectors.bytes(b), keepMarked = true))
+          .orElse(g.dvs.get(f).map(dv =>
+            RowMask(DeletionVectors.load(fs, root, g.dir, f, dv), keepMarked = false)))
+          .map(st.getPath -> _)
+      }
+    }.toMap
     // sidecars are keyed by bare file name, the index by file path
     def byFile[V](load: String => Option[Map[String, V]]): Map[Path, V] =
       listed.flatMap { case (g, files) =>
@@ -243,10 +268,12 @@ class SnapshotLake(root: String) {
     val index = new graft.sources.StatsFileIndex(
       gens.map(g => new Path(s"$root/${g.dir}")), listed.flatMap(_._2),
       byFile(GenStats.load(conf, _)), new Path(commitsDir),
-      () => byFile(GenBlooms.load(conf, _)))
+      () => byFile(GenBlooms.load(conf, _)), masks)
     HadoopFsRelation(index, partitionSchema = new StructType(),
       dataSchema = GraftBridge.asNullable(schema), bucketSpec = None,
-      fileFormat = new ParquetFileFormat(), options = Map.empty)(spark)
+      fileFormat = if (masks.isEmpty) new ParquetFileFormat()
+        else new graft.sources.DvParquetFileFormat(),
+      options = Map.empty)(spark)
   }
 
   /** The data files `gen` reads, with their bytes, from the per-process
@@ -263,9 +290,23 @@ class SnapshotLake(root: String) {
       all.filter(a => k(name(a)))
     }
 
-  /** Every (directory, file) that `gens` read. */
-  private def fileSet(spark: SparkSession, gens: Seq[GenRef]): Set[(String, String)] =
-    gens.flatMap(g => liveFiles(spark, g).map(f => g.dir -> f._1)).toSet
+  /** Every (directory, file, deletion vector) that `gens` read: a file
+    * whose deletion vector changed reads as another entry. */
+  private def fileSet(spark: SparkSession,
+      gens: Seq[GenRef]): Set[(String, String, Option[Dv])] =
+    gens.flatMap(g => liveFiles(spark, g).map(f => (g.dir, f._1, g.dvs.get(f._1)))).toSet
+
+  /** The data files of `gens` and their bytes, in total. */
+  private def filesAndBytes(spark: SparkSession, gens: Seq[GenRef]): (Long, Long) = {
+    val files = gens.flatMap(liveFiles(spark, _))
+    (files.size.toLong, files.map(_._2).sum)
+  }
+
+  /** `gen` read by only its files `kept`, with their deletion vectors. */
+  private def subset(gen: GenRef, kept: Seq[String]): GenRef = {
+    val k = kept.toSet
+    GenRef(gen.dir, Some(kept), gen.dvs.filter(e => k(e._1)))
+  }
 
   /** `gens` keeping only the files `keep(dir)` accepts: a generation
     * that keeps every file it reads stays as it is, one that keeps none
@@ -277,7 +318,7 @@ class SnapshotLake(root: String) {
       val kept = names.filter(keep(g.dir))
       if (kept.size == names.size) Some(g)
       else if (kept.isEmpty) None
-      else Some(GenRef(g.dir, Some(kept)))
+      else Some(subset(g, kept))
     }
 
   /** The schema of a read over generations `gens`: their recorded
@@ -530,9 +571,10 @@ class SnapshotLake(root: String) {
     changes.foreach(GenWriter.write(_, s"$root/$gen/${SnapshotLake.CdfDirName}"))
   }
 
-  /** Test seam: invoked after a mutation (merge/delete) has written its
-    * rewrite generation but before it claims the commit — the window a
-    * concurrent commit would race into. No-op in production. */
+  /** Test seam: invoked after a mutation has written what it publishes
+    * (a merge's rewrite generation, a delete's deletion vectors) but
+    * before it claims the commit — the window a concurrent commit would
+    * race into. No-op in production. */
   protected def onBeforePublish(): Unit = ()
 
   // ------------------------------------------------ auto bloom tier
@@ -958,13 +1000,20 @@ class SnapshotLake(root: String) {
     } finally src.unpersist()
   }
 
-  /** Copy-on-write DELETE of rows matching `predicate`, scoped like
-    * [[merge]]: a data file that [[mayMatch]] proves holds no matching
-    * row — the read path's own envelope and Bloom check — carries
-    * forward untouched; the rest rewrite keeping only non-matching rows.
-    * Returns the current version unchanged when nothing may match
-    * anywhere, including a predicate that folds to `false` (a free
-    * no-op). Same optimistic-abort publication contract as merge. */
+  /** DELETE of rows matching `predicate`, by deletion vector: no data
+    * file is copied. The data files that [[mayMatch]] — the read path's
+    * own envelope and Bloom check — keeps in scope are scanned once for
+    * the positions of their matching rows ([[DeletionVectors.mark]]), and
+    * the commit gives each file with a match a deletion vector: its
+    * earlier one unioned with the new marks, all stored in one new `_dv/`
+    * file. A file whose vector covers every row leaves the manifest
+    * instead. Every read of the table skips the marked rows
+    * ([[relation]]); a merge, compaction or optimize that rewrites the
+    * file drops them and its vector. Returns the current version
+    * unchanged when no row matches, including a predicate that folds to
+    * `false` (a free no-op). Same optimistic-abort publication contract
+    * as merge: a racing commit that changed the vector of, or rewrote, a
+    * file this delete marks aborts it. */
   def delete(spark: SparkSession, predicate: org.apache.spark.sql.Column): Long = {
     val base = latestVersion(spark).getOrElse(
       sys.error(s"delete from a never-committed lake: $root"))
@@ -988,24 +1037,51 @@ class SnapshotLake(root: String) {
       }.toSeq
     }
     val inScope = mayMatch(spark, scope)
-    val affected = scoped(spark, gens, inScope)
+    val affected = narrow(spark, gens)(inScope)
     if (affected.isEmpty) return base
     // SQL DELETE removes rows where the predicate is TRUE; NULL keeps
-    // the row — so the keep-filter is NOT(coalesce(p, false)), not !p.
-    // Read under the snapshot's full schema (missing columns
+    // the row. Read under the snapshot's full schema (missing columns
     // null-filled): under schema evolution the affected subset can
-    // predate a predicate column, and mergeSchema over the subset alone
-    // would make the filter fail analysis; null-filled, the predicate
-    // evaluates NULL there and the rows are kept — correct
-    val affectedDf = readGens(spark, affected, schema)
-    val hit = org.apache.spark.sql.functions.coalesce(predicate,
-      org.apache.spark.sql.functions.lit(false))
-    val changes = affectedDf.filter(hit).withColumn(
-      SnapshotLake.ChangeTypeCol, org.apache.spark.sql.functions.lit("delete"))
-    // same check scopes the rewrite AND gates rebase-across
-    publishRewrite(spark, base, affected, affectedDf.filter(!hit),
-      changes, mayOverlapScope = inScope, op = "delete")
+    // predate a predicate column; null-filled, the predicate evaluates
+    // NULL there and the rows are kept
+    val marks = DeletionVectors.mark(readGens(spark, affected, schema).filter(
+      org.apache.spark.sql.functions.coalesce(predicate, org.apache.spark.sql.functions.lit(false))))
+    if (marks.isEmpty) return base
+    val conf = spark.sparkContext.hadoopConfiguration
+    val consumed = narrow(spark, affected)(d => f => marks.contains(DeletionVectors.key(d, f)))
+    val vectors = for (g <- consumed; (f, _) <- liveFiles(spark, g))
+      yield (g.dir, f, RoaringBitmap.or(marks(DeletionVectors.key(g.dir, f)), vectorOf(spark, g, f)))
+    val (emptied, marked) = vectors.partition { case (d, f, all) =>
+      GenStats.load(conf, s"$root/$d").flatMap(_.get(f)).exists(_.rows == all.getLongCardinality)
+    }
+    val gone = emptied.map(e => (e._1, e._2)).toSet
+    val dvFile = if (marked.isEmpty) None else Some(DeletionVectors.write(hadoopFs(spark), root,
+      marked.map { case (d, f, all) => DeletionVectors.key(d, f) -> all }.toMap))
+    val changed = marked.groupBy(_._1).map { case (d, files) =>
+      d -> files.map { case (_, f, all) => f -> Dv(dvFile.get, all.getLongCardinality) }.toMap
+    }
+    val (removedN, removedB) = filesAndBytes(spark, narrow(spark, consumed)(d => f => gone((d, f))))
+    val rows = marks.values.map(_.getLongCardinality).sum
+    publish(spark, base, consumed, "delete", dvFile.getOrElse(newGenName()),
+      mayOverlapScope = inScope,
+      discard = () => dvFile.foreach(f => rawFs(spark).delete(dvPath(f), false)),
+      manifest = hs => narrow(spark, hs)(d => f => !gone((d, f))).map(g =>
+        changed.get(g.dir).fold(g)(c => g.copy(dvs = g.dvs ++ c))) match {
+        // with every row gone the generations stay, reading no file, so
+        // the table keeps its schema
+        case Nil => hs.map(g => GenRef(g.dir, Some(Nil)))
+        case kept => kept
+      },
+      metrics = m => {
+        val (n, b) = filesAndBytes(spark, m)
+        Commit.Metrics(0L, 0L, removedN, removedB, n, b, Some(rows), Some(marked.size.toLong))
+      })
   }
+
+  /** The rows `gen`'s deletion vector marks of its data file `file`. */
+  private def vectorOf(spark: SparkSession, gen: GenRef, file: String): RoaringBitmap =
+    gen.dvs.get(file).fold(new RoaringBitmap())(dv =>
+      DeletionVectors.bitmap(DeletionVectors.load(hadoopFs(spark), root, gen.dir, file, dv)))
 
   /** For generation `gen`: could its data file `file` hold a row passing
     * every one of `filters`? [[graft.sources.FilePruning]] — the read
@@ -1039,7 +1115,7 @@ class SnapshotLake(root: String) {
       val kept = files.map(_._1).filter(inScope(g.dir))
       if (kept.isEmpty) None
       else if (kept.size == files.size || smallBytes.exists(files.map(_._2).sum < _)) Some(g)
-      else Some(GenRef(g.dir, Some(kept)))
+      else Some(subset(g, kept))
     }
   }
 
@@ -1135,40 +1211,15 @@ class SnapshotLake(root: String) {
     snap.limit(0).withColumn(SnapshotLake.ChangeTypeCol,
       org.apache.spark.sql.functions.lit("insert"))
 
-  /** Write `rewritten` as a new generation and claim the next version
-    * referencing the base manifest minus the `consumed` files (what the
-    * rewrite read and replaces) plus the new generation. Loses a race →
-    * REBASE when the winner's commits are provably disjoint from this
-    * mutation's scope, abort otherwise (cleanup,
-    * ConcurrentModificationException) — the Delta-style conflict check,
-    * at file granularity:
-    *
-    *  - every file this rewrite CONSUMED must still be read by the new
-    *    head — a winner that rewrote or dropped one has invalidated our
-    *    rewrite;
-    *  - every file the winners ADDED must satisfy
-    *    `!mayOverlapScope(gen)(file)` — for merge and delete that is
-    *    [[mayMatch]] over the mutation's scope, the SAME check that
-    *    scoped the rewrite (and prunes reads), so "carried forward
-    *    untouched" and "safe to rebase across" cannot drift.
-    *
-    * A valid rebase re-claims with manifest = (head's manifest minus the
-    * consumed files) + our generation: winners' disjoint work is carried
-    * forward BY REFERENCE, and both writers land — without this, every
-    * concurrent pair of disjoint merges serializes through abort and
-    * rerun, which at 100 TB (many independent upsert streams over
-    * disjoint key ranges) serializes the whole write path. Bounded
-    * retries; the materialized `_cdf` stays correct under rebase because
-    * the carried files provably contain no scoped rows. The commit
-    * records the files and bytes added, removed and carried
+  /** Write `rewritten` as a new generation (with its changefeed,
+    * `changes`) and publish the base manifest minus the `consumed` files
+    * (what the rewrite read and replaces) plus the new generation. The
+    * commit records the files and bytes added, removed and carried
     * ([[Commit.Metrics]]). */
   private def publishRewrite(spark: SparkSession, base: Long,
       consumed: Seq[GenRef], rewritten: DataFrame, changes: DataFrame,
       mayOverlapScope: String => String => Boolean, op: String,
       batchId: Option[Long] = None, queryId: Option[String] = None): Long = {
-    val fs = hadoopFs(spark)
-    val baseGens = commitAt(spark, base).gens
-    val consumedFiles = fileSet(spark, consumed)
     val gen = newGenName()
     // validated like any ingest (a merge source can violate); the
     // changefeed rides INSIDE the writer-unique generation, so it
@@ -1176,58 +1227,94 @@ class SnapshotLake(root: String) {
     // generation and is cleaned up with it on abort — no separate
     // claim to race
     writeGen(spark, rewritten, gen, Some(changes))
+    val consumedFiles = fileSet(spark, consumed).map(f => (f._1, f._2))
+    // a consumed generation without data files (an empty batch's) leaves
+    // the manifest too
+    val emptied = consumed.filter(liveFiles(spark, _).isEmpty).map(_.dir).toSet
+    val (addedN, addedB) = filesAndBytes(spark, Seq(GenRef(gen)))
+    val (removedN, removedB) = filesAndBytes(spark, consumed)
+    // rewrite marks this commit as the mutation that OWNS its
+    // generation's _cdf — the changefeed walker only reads _cdf under
+    // this flag (a restore re-referencing the generation stays a
+    // restatement)
+    publish(spark, base, consumed, op, gen, mayOverlapScope,
+      discard = () => hadoopFs(spark).delete(new org.apache.hadoop.fs.Path(s"$root/$gen"), true),
+      manifest = hs => narrow(spark, hs)(d => f => !consumedFiles((d, f)))
+        .filterNot(g => emptied(g.dir)) :+ GenRef(gen),
+      metrics = m => {
+        val (carriedN, carriedB) = filesAndBytes(spark, m.init)
+        Commit.Metrics(addedN, addedB, removedN, removedB, carriedN, carriedB)
+      },
+      rewrite = true, batchId = batchId, queryId = queryId)
+  }
+
+  /** Claim the next version for a mutation of version `base` that read
+    * the `consumed` files: its record is `manifest` of the head's
+    * manifest, with `metrics` of that manifest. Loses a race → REBASE
+    * when the winner's commits are provably disjoint from this
+    * mutation's scope, abort otherwise (`discard` of what the mutation
+    * wrote, ConcurrentModificationException) — the Delta-style conflict
+    * check, at file granularity:
+    *
+    *  - every file this mutation CONSUMED must still be read by the new
+    *    head, under the same deletion vector — a winner that rewrote,
+    *    dropped or deleted rows of one has invalidated this mutation;
+    *  - every file the winners ADDED must satisfy
+    *    `!mayOverlapScope(gen)(file)` — for merge and delete that is
+    *    [[mayMatch]] over the mutation's scope, the SAME check that
+    *    scoped it (and prunes reads), so "carried forward untouched" and
+    *    "safe to rebase across" cannot drift.
+    *
+    * A valid rebase re-claims with the head's manifest: winners'
+    * disjoint work is carried forward BY REFERENCE, and both writers
+    * land — without this, every concurrent pair of disjoint merges
+    * serializes through abort and rerun, which at 100 TB (many
+    * independent upsert streams over disjoint key ranges) serializes the
+    * whole write path. Bounded retries; a rewrite's materialized `_cdf`
+    * stays correct under rebase because the carried files provably
+    * contain no scoped rows. `token` names the writer's temp commit
+    * file. */
+  private def publish(spark: SparkSession, base: Long, consumed: Seq[GenRef],
+      op: String, token: String, mayOverlapScope: String => String => Boolean,
+      discard: () => Unit, manifest: Seq[GenRef] => Seq[GenRef],
+      metrics: Seq[GenRef] => Commit.Metrics, rewrite: Boolean = false,
+      batchId: Option[Long] = None, queryId: Option[String] = None): Long = {
     onBeforePublish()
     def abort(detail: String): Nothing = {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/$gen"), true)
+      discard()
       throw new java.util.ConcurrentModificationException(
         s"lake $root advanced past version $base during the rewrite " +
           s"($detail); rerun the merge/delete to rebase on the new snapshot")
     }
-    def filesAndBytes(gens: Seq[GenRef]): (Long, Long) = {
-      val files = gens.flatMap(liveFiles(spark, _))
-      (files.size.toLong, files.map(_._2).sum)
-    }
-    val (addedN, addedB) = filesAndBytes(Seq(GenRef(gen)))
-    val (removedN, removedB) = filesAndBytes(consumed)
-    var attemptBase = base
-    // a consumed generation without data files (an empty batch's) leaves
-    // the manifest too
-    val emptied = consumed.filter(liveFiles(spark, _).isEmpty).map(_.dir).toSet
-    def unconsumed(gens: Seq[GenRef]) =
-      narrow(spark, gens)(d => f => !consumedFiles((d, f))).filterNot(g => emptied(g.dir))
-    var carried = unconsumed(baseGens)
+    val baseFiles = fileSet(spark, commitAt(spark, base).gens)
+    val consumedFiles = fileSet(spark, consumed)
+    var head = base
+    var headGens = commitAt(spark, base).gens
     var attempts = 0
     while (true) {
-      val next = attemptBase + 1
-      val (carriedN, carriedB) = filesAndBytes(carried)
-      // rewrite marks this commit as the mutation that OWNS its
-      // generation's _cdf — the changefeed walker only reads _cdf under
-      // this flag (a restore re-referencing the generation stays a
-      // restatement)
-      if (claimVersion(spark, gen, Commit.of(next, op, carried :+ GenRef(gen),
-          rewrite = true, batchId, queryId, Some(Commit.Metrics(addedN, addedB,
-            removedN, removedB, carriedN, carriedB))))) {
-        // merge/delete/optimize commits can also grow the small tail —
-        // the auto tier covers EVERY publishing path, not just appends
-        // (the reentrancy guard no-ops this inside a fold's own publish)
+      val gens = manifest(headGens)
+      if (claimVersion(spark, token, Commit.of(head + 1, op, gens, rewrite, batchId, queryId,
+          Some(metrics(gens))))) {
+        // mutations can also grow the small tail — the auto tier covers
+        // EVERY publishing path, not just appends (the reentrancy guard
+        // no-ops this inside a fold's own publish)
         maybeAutoCompact(spark)
-        return next
+        return head + 1
       }
       attempts += 1
       if (attempts >= 5) abort("rebase retries exhausted")
-      val head = latestVersion(spark).getOrElse(0L)
-      val headGens = commitAt(spark, head).gens
+      head = latestVersion(spark).getOrElse(0L)
+      headGens = commitAt(spark, head).gens
       val headFiles = fileSet(spark, headGens)
       if (!consumedFiles.subsetOf(headFiles))
-        abort("a racing commit rewrote a file this mutation read")
-      val added = headFiles -- fileSet(spark, baseGens)
+        abort("a racing commit rewrote or deleted from a file this mutation read")
+      // a file whose deletion vector alone changed added no row
+      val added = headFiles.map(f => (f._1, f._2)) -- baseFiles.map(f => (f._1, f._2))
       if (added.groupBy(_._1).exists { case (d, fs) =>
           val overlaps = mayOverlapScope(d)
           fs.exists(f => overlaps(f._2))
         })
         abort("a racing commit added rows inside this mutation's scope")
-      attemptBase = head
-      carried = unconsumed(headGens)
     }
     sys.error("unreachable")
   }
@@ -1257,6 +1344,8 @@ class SnapshotLake(root: String) {
       gens.foreach { g =>
         require(fs.exists(new org.apache.hadoop.fs.Path(s"$root/${g.dir}")),
           s"generation ${g.dir} of version $version was vacuumed mid-restore")
+        g.dvs.values.foreach(dv => require(fs.exists(dvPath(dv.file)),
+          s"deletion vector ${dv.file} of version $version was vacuumed mid-restore"))
       }
       Commit.of(next, "restore", gens)
     }
@@ -1323,8 +1412,10 @@ class SnapshotLake(root: String) {
     * `_commit_version`. Three cost tiers, cheapest wins per version:
     *
     *  - APPEND commits emit their new generations' rows as inserts —
-    *    pure manifest arithmetic, no extra storage, no diffing.
-    *  - MERGE/DELETE rewrites read the row-level changes the mutation
+    *    pure manifest arithmetic, no extra storage, no diffing. DELETE
+    *    commits emit, as deletes, the rows their new deletion vectors
+    *    mark that the old ones did not — a read of those positions only.
+    *  - MERGE rewrites read the row-level changes the mutation
     *    MATERIALIZED while it still knew them (`_cdf/` inside the
     *    rewrite generation — atomic with the commit, sized by the rows
     *    actually changed, never by the table). OPTIMIZE materializes an
@@ -1343,7 +1434,7 @@ class SnapshotLake(root: String) {
     require(fromV < toV, s"need fromV < toV, got ($fromV, $toV]")
     // the recorded schema: nothing is listed until a version's frame is
     val schema = schemaOf(spark, dirsAt(spark, toV))
-    walkChanges(spark, fromV, toV, schema, readGens(spark, _, _))
+    walkChanges(spark, fromV, toV, schema, r => GraftBridge.ofRows(spark, LogicalRelation(r)))
       .reduceOption(_.unionByName(_)).getOrElse(readGens(spark, Nil, schema)
         .withColumn(SnapshotLake.ChangeTypeCol, lit(""))
         .withColumn(SnapshotLake.CommitVersionCol, lit(toV)))
@@ -1353,33 +1444,43 @@ class SnapshotLake(root: String) {
     * ([[changesBetween]]) and the streaming source's `readChangeFeed`
     * mode so the tier logic cannot drift between them. For each version
     * in (fromV, toV] it classifies the manifest delta — materialized
-    * `_cdf/` (rewrites), files the version reads that its predecessor did
+    * `_cdf/` (rewrites), rows the version reads that its predecessor did
     * not as inserts, the reverse as deletes — and leaves frame
-    * construction (batch vs streaming frames over [[relation]]) to
-    * `read(gens, schema)`, directories relative to the root. Each commit
-    * record is read once
-    * per walk ([[commitAt]]); a vacuumed one inside the range fails fast.
-    * Every frame has the `schema` columns, then
-    * [[SnapshotLake.ChangeTypeCol]] and [[SnapshotLake.CommitVersionCol]]. */
+    * construction (batch vs streaming frames) to `frame`, over
+    * [[relation]]s. A row is read by one version and not the other when
+    * its file is, or when the other version's deletion vector of the
+    * file marks it and this one's does not: a delete's rows are the
+    * marks its new vectors add. Each commit record is read once per walk
+    * ([[commitAt]]); a vacuumed one inside the range fails fast. Every
+    * frame has the `schema` columns, then [[SnapshotLake.ChangeTypeCol]]
+    * and [[SnapshotLake.CommitVersionCol]]. */
   private[graft] def walkChanges(spark: SparkSession, fromV: Long, toV: Long,
-      schema: StructType,
-      read: (Seq[GenRef], StructType) => DataFrame): Seq[DataFrame] = {
+      schema: StructType, frame: HadoopFsRelation => DataFrame): Seq[DataFrame] = {
     import org.apache.spark.sql.functions.{col, lit}
     val fs = hadoopFs(spark)
     val withChange = schema.add(SnapshotLake.ChangeTypeCol, StringType)
-    // the files `a` reads that `b` does not
-    def minus(a: Seq[GenRef], b: Seq[GenRef]): Seq[GenRef] = {
+    // the rows `a` reads that `b` does not: the files `b` does not read,
+    // and the rows `b`'s deletion vector marks of a file both read
+    // (as [[relation]]'s `only`)
+    def minus(a: Seq[GenRef], b: Seq[GenRef]): (Seq[GenRef], Map[String, RoaringBitmap]) = {
       val byDir = b.map(g => g.dir -> g).toMap
-      a.flatMap { g =>
+      val parts = a.flatMap { g =>
         byDir.get(g.dir) match {
-          case None => Some(g)
-          case Some(o) if o.files.isEmpty || o == g => None
+          case None => Some((g, Map.empty[String, RoaringBitmap]))
+          case Some(o) if o == g => None
           case Some(o) =>
             val have = liveFiles(spark, o).map(_._1).toSet
-            val extra = liveFiles(spark, g).map(_._1).filterNot(have)
-            if (extra.isEmpty) None else Some(GenRef(g.dir, Some(extra)))
+            val (both, extra) = liveFiles(spark, g).map(_._1).partition(have)
+            val only = both.filter(f => g.dvs.get(f) != o.dvs.get(f)).flatMap { f =>
+              val rows = RoaringBitmap.andNot(vectorOf(spark, o, f), vectorOf(spark, g, f))
+              if (rows.isEmpty) None else Some(f -> rows)
+            }
+            if (extra.isEmpty && only.isEmpty) None
+            else Some((subset(g, extra ++ only.map(_._1)),
+              only.map { case (f, rows) => DeletionVectors.key(g.dir, f) -> rows }.toMap))
         }
       }
+      (parts.map(_._1), parts.flatMap(_._2).toMap)
     }
     ((fromV + 1) to toV).flatMap { v =>
       // version 0 is the empty pre-table
@@ -1396,14 +1497,14 @@ class SnapshotLake(root: String) {
         case Seq(g) if commit.rewrite && fs.exists(
             new org.apache.hadoop.fs.Path(
               s"$root/$g/${SnapshotLake.CdfDirName}")) =>
-          Some(read(Seq(GenRef(s"$g/${SnapshotLake.CdfDirName}")), withChange))
+          Some(frame(relation(spark, Seq(GenRef(s"$g/${SnapshotLake.CdfDirName}")), withChange)))
         case _ => None
       }
-      def rows(gens: Seq[GenRef], change: String) =
-        if (gens.isEmpty) None else Some(read(gens, schema)
+      def rows(delta: (Seq[GenRef], Map[String, RoaringBitmap]), change: String) =
+        if (delta._1.isEmpty) None else Some(frame(relation(spark, delta._1, schema, delta._2))
           .withColumn(SnapshotLake.ChangeTypeCol, lit(change)))
       materialized.map(Seq(_)).getOrElse(rows(minus(cur, prev), "insert").toSeq ++
-        rows(minus(prev, cur).sortBy(_.dir), "delete"))
+        rows(minus(prev.sortBy(_.dir), cur), "delete"))
         .map(_.select(withChange.fieldNames.map(col).toSeq: _*)
           .withColumn(SnapshotLake.CommitVersionCol, lit(v)))
     }
@@ -1412,8 +1513,10 @@ class SnapshotLake(root: String) {
   /** Drop generation directories not referenced by the newest
     * `retainLast` commits, then drop the older commit files — bounded
     * time travel, like a table format's VACUUM/expire-snapshots. A
-    * directory stays while any retained version reads any of its files.
-    * Readers of vacuumed versions fail fast on their next listing. */
+    * directory stays while any retained version reads any of its files;
+    * its data files that only dropped versions read go, and so do the
+    * `_dv/` files only dropped versions name. Readers of vacuumed
+    * versions fail fast on their next listing. */
   def vacuum(spark: SparkSession, retainLast: Int): Unit = {
     require(retainLast >= 1, "must retain at least the latest snapshot")
     val fs = hadoopFs(spark)
@@ -1443,12 +1546,19 @@ class SnapshotLake(root: String) {
       fs: org.apache.hadoop.fs.FileSystem,
       drop: Seq[Long], keep: Seq[Long]): Unit = {
     if (drop.nonEmpty) {
-      val live = keep.flatMap(v => dirsAt(spark, v)).toSet
+      val kept = keep.flatMap(v => commitAt(spark, v).gens)
+      val dropped = drop.flatMap(v => commitAt(spark, v).gens)
+      val live = kept.map(_.dir).toSet
       // delete only generations the DROPPED commits reference and no kept
       // commit does — never sweep unreferenced gen dirs wholesale: an
       // unreferenced dir may be a concurrent committer's in-flight
-      // generation that simply has not published its commit file yet
-      val dead = drop.flatMap(v => dirsAt(spark, v)).toSet -- live
+      // generation that simply has not published its commit file yet.
+      // The same rule holds for data files and deletion vectors.
+      val dead = dropped.map(_.dir).toSet -- live
+      def names(gens: Seq[GenRef]) = fileSet(spark, gens).map(f => (f._1, f._2))
+      val deadFiles = names(dropped.filter(g => live(g.dir))) -- names(kept)
+      def vectors(gens: Seq[GenRef]) = gens.flatMap(_.dvs.values.map(_.file)).toSet
+      val deadDvs = vectors(dropped) -- vectors(kept)
       // commit files BEFORE data: a crash between the two loops then
       // leaves only orphaned (unreferenced, never-swept) gen dirs — the
       // class's documented harmless state. The reverse order would leave
@@ -1458,8 +1568,16 @@ class SnapshotLake(root: String) {
       drop.foreach(v => fs.delete(commitPath(v), false))
       dead.foreach(d => fs.delete(
         new org.apache.hadoop.fs.Path(s"$root/$d"), true))
+      deadFiles.foreach { case (d, f) =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$root/$d/$f"), false)
+      }
+      deadFiles.map(_._1).foreach(d => SnapshotLake.genFiles.remove((root, d)))
+      deadDvs.foreach(f => rawFs(spark).delete(dvPath(f), false))
     }
   }
+
+  private def dvPath(file: String) =
+    new org.apache.hadoop.fs.Path(s"$root/${DeletionVectors.DirName}/$file")
 
   /** Build `_blooms.json` bloom sidecars for `cols` in every generation
     * of the LATEST snapshot that lacks one — the opt-in point-lookup
@@ -1517,18 +1635,26 @@ class SnapshotLake(root: String) {
     * the past) is what keeps this safe against the race vacuum's
     * comment warns about: an in-flight writer's unpublished generation
     * is by construction younger than any sane retention horizon, while
-    * a crash orphan only ages. Same single-maintainer contract as
-    * vacuum/restore. */
+    * a crash orphan only ages. `_dv/` files no surviving commit names
+    * are swept by the same rule (a delete that crashed before its claim).
+    * Same single-maintainer contract as vacuum/restore. */
   def vacuumOrphans(spark: SparkSession, cutoffMillis: Long): Unit = {
     val fs = hadoopFs(spark)
     val rootPath = new org.apache.hadoop.fs.Path(root)
     if (!fs.exists(rootPath)) return
-    val live = versions(spark).flatMap(v => dirsAt(spark, v)).toSet
+    val gens = versions(spark).flatMap(v => commitAt(spark, v).gens)
+    val live = gens.map(_.dir).toSet
     fs.listStatus(rootPath).foreach { st =>
       val name = st.getPath.getName
       if (st.isDirectory && name.startsWith("gen-") && !live.contains(name)
           && st.getModificationTime < cutoffMillis)
         fs.delete(st.getPath, true)
+    }
+    val liveDvs = gens.flatMap(_.dvs.values.map(_.file)).toSet
+    val dvDir = new org.apache.hadoop.fs.Path(s"$root/${DeletionVectors.DirName}")
+    if (fs.exists(dvDir)) fs.listStatus(dvDir).foreach { st =>
+      if (!liveDvs(st.getPath.getName) && st.getModificationTime < cutoffMillis)
+        rawFs(spark).delete(st.getPath, false)
     }
   }
 }

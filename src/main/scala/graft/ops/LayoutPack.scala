@@ -124,10 +124,10 @@ object LayoutPack extends QueryPack {
       s.read.format("snaplake").load(root).orderBy(col("doc_id"))
     }),
 
-    // Copy-on-write DELETE with a stats-scopable range predicate: drop
-    // the low-key docs, summarize the survivors. NULL-keeps semantics
-    // and generation scoping are SnapLakeMergeSpec's; the oracle pins
-    // the post-delete table.
+    // DELETE with a stats-scopable range predicate: drop the low-key
+    // docs (marked in deletion vectors), summarize the survivors.
+    // NULL-keeps semantics and file scoping are SnapLakeMergeSpec's; the
+    // oracle pins the post-delete table.
     "l_snaplake_delete" -> ((s, d) => {
       val root = snapRoot("graft_snapdel", d)
       graft.Tables.documents(s, d).select(col("doc_id"), col("lang"))
@@ -467,13 +467,11 @@ object LayoutPack extends QueryPack {
 
     // The five-operation audit trail as literal rows: the lake's
     // history is fully determined by the query's own mutation sequence.
-    // The merge's rewrite generation holds the kept rows and the source
-    // row in different files; the delete rewrites only the file holding
-    // doc_id 1 and carries the others by reference, so its version
-    // reads two generations.
+    // The delete marks doc_id 1 in a deletion vector and writes no
+    // generation, so its version reads the merge's one generation.
     "l_snaplake_history" ->
       """SELECT * FROM (VALUES
-        |  (1, 'overwrite', 1), (2, 'merge', 1), (3, 'delete', 2),
+        |  (1, 'overwrite', 1), (2, 'merge', 1), (3, 'delete', 1),
         |  (4, 'optimize', 1), (5, 'restore', 1))
         |AS t(seq, op, n_dirs) ORDER BY seq""".stripMargin,
 

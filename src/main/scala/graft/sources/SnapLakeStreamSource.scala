@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.types.StructType
@@ -79,7 +79,10 @@ class SnapLakeStreamSource(spark: SparkSession, root: String,
     * an explicit schema so evolved appends project instead of widening
     * mid-stream, flagged streaming for the incremental planner. */
   private def streamingRead(gens: Seq[GenRef], s: StructType): DataFrame =
-    GraftBridge.ofRows(spark, LogicalRelation(lake.relation(spark, gens, s), isStreaming = true))
+    streaming(lake.relation(spark, gens, s))
+
+  private def streaming(r: HadoopFsRelation): DataFrame =
+    GraftBridge.ofRows(spark, LogicalRelation(r, isStreaming = true))
 
   /** CHANGEFEED batch for versions (startV, endV]: the same three cost
     * tiers as [[SnapshotLake.changesBetween]] — appends emit their new
@@ -92,7 +95,7 @@ class SnapLakeStreamSource(spark: SparkSession, root: String,
   private def changeBatch(startV: Long, endV: Long): DataFrame = {
     // the shared tier walker — only frame construction (streaming
     // relations) is this source's own
-    lake.walkChanges(spark, startV, endV, tableSchema, streamingRead)
+    lake.walkChanges(spark, startV, endV, tableSchema, streaming)
       .reduceOption(_.unionByName(_)).getOrElse(emptyStreamDf(schema))
   }
 

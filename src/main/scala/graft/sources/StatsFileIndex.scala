@@ -17,7 +17,8 @@ import graft.ingest.GenStats.{ColStats, FileStats}
   * [[graft.ingest.GenStats]] envelope or Bloom sidecar proves the pushed
   * data filters cannot match any of its rows is dropped ([[FilePruning]],
   * the same check snaplake merges and deletes scope their rewrites
-  * with).
+  * with). A file with a [[RowMask]] (its deletion vector) carries it as
+  * file-constant metadata to [[DvParquetFileFormat]], which reads it.
   *
   * This is the point where a table format earns its keep at 100 TB:
   * `FileSourceStrategy` hands the scan's data filters to the index
@@ -31,7 +32,8 @@ import graft.ingest.GenStats.{ColStats, FileStats}
   */
 class StatsFileIndex(dirs: Seq[Path], files: Seq[FileStatus],
     statsByFile: Map[Path, FileStats], commitLogPath: Path,
-    bloomsByFile: () => Map[Path, Map[String, graft.ingest.GenBlooms.Bloom]])
+    bloomsByFile: () => Map[Path, Map[String, graft.ingest.GenBlooms.Bloom]],
+    masks: Map[Path, RowMask] = Map.empty)
     extends FileIndex {
 
   // LAZY and equality-gated: bloom sidecars are orders of magnitude
@@ -61,7 +63,8 @@ class StatsFileIndex(dirs: Seq[Path], files: Seq[FileStatus],
     val kept =
       if (dataFilters.isEmpty || (statsByFile.isEmpty && !prune.wantsBlooms)) files
       else files.filter(f => prune.mayMatch(statsByFile.get(f.getPath), blooms.get(f.getPath)))
-    Seq(PartitionDirectory(InternalRow.empty, kept.map(FileStatusWithMetadata(_, Map.empty))))
+    Seq(PartitionDirectory(InternalRow.empty, kept.map(f => FileStatusWithMetadata(f,
+      masks.get(f.getPath).fold(Map.empty[String, Any])(m => Map(RowMask.Key -> m))))))
   }
 }
 

@@ -113,6 +113,37 @@ class SnapLakeCommitSpec extends SparkSpecBase {
     assert(CountingFs.opens.isEmpty, s"repeat lookup opened ${CountingFs.opens}")
     assert(CountingFs.statuses.asScala.map(_._2.get).sum == 1)
   }
+
+  test("a commit file without deletion vectors parses and reads unchanged") {
+    val root = freshRoot()
+    val lake = new SnapshotLake(root)
+    lake.commit(spark.range(0, 100, 1, 2).toDF("id"))
+    val gen = lake.dirsAt(spark, 1L).head
+    val parts = Files.list(Paths.get(root, gen)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .filterNot(_.getFileName.toString.startsWith(".")).sortBy(_.getFileName.toString)
+    val Array(first, second) = parts.map(p => (p.getFileName.toString, Files.size(p)))
+    // a file-granular rewrite record as written before deletion vectors:
+    // it reads the second file of the generation and records six metrics
+    val json = s"""{"version":2,"op":"delete","rewrite":true,"dirs":["$gen"],""" +
+      s""""files":{"$gen":["${second._1}"]},"metrics":{"files_added":0,"bytes_added":0,""" +
+      s""""files_removed":1,"bytes_removed":${first._2},"files_carried":1,"bytes_carried":${second._2}}}"""
+    writeCommit(root, 2L, json)
+    val c = lake.commitAt(spark, 2L)
+    assert(c.dvs.isEmpty && c.gens == Seq(GenRef(gen, Some(Seq(second._1)))), c)
+    assert(c.metrics.exists(m => m.rowsRemoved.isEmpty && m.dvsChanged.isEmpty), c)
+    assert(c.json == json)
+    assert(lake.read(spark).as[Long].collect().sorted.toSeq == (50L until 100L))
+    val h = lake.history(spark).filter($"version" === 2L).head()
+    assert(h.isNullAt(h.fieldIndex("rows_removed")) && h.isNullAt(h.fieldIndex("dvs_changed")))
+    assert(h.getAs[Long]("bytes_carried") == second._2)
+    assert(lake.changesBetween(spark, 1L, 2L).as[(Long, String, Long)].collect().toSeq.sorted ==
+      (0L until 50L).map(i => (i, "delete", 2L)))
+    // a delete's deletion vectors round-trip through the record
+    val v3 = lake.delete(spark, $"id" === 70L)
+    val c3 = lake.commitAt(spark, v3)
+    assert(c3.dvs.keySet == Set(gen) && Commit.parse(c3.json) == c3, c3.json)
+  }
 }
 
 /** A local filesystem under the test-only `countfs` scheme that counts

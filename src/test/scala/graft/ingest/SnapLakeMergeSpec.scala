@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
 
-/** Copy-on-write MERGE/DELETE on [[SnapshotLake]]: upsert and delete
-  * semantics, stats-scoped rewrites (untouched files carry forward by
-  * reference), the no-op delete fast path, and the optimistic-abort
-  * publication contract under a racing commit.
+/** MERGE and DELETE on [[SnapshotLake]]: upsert and delete semantics,
+  * stats-scoped copy-on-write merges (untouched files carry forward by
+  * reference), deletes by deletion vector, the no-op delete fast path,
+  * the optimistic-abort publication contract under a racing commit, and
+  * vacuum of what only expired versions read.
   */
 class SnapLakeMergeSpec extends SparkSpecBase {
   import spark.implicits._
@@ -422,7 +423,8 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     lake.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), overwrite = true)
     lake.commit(Seq((3L, "c", 10), (4L, "d", 20)).toDF("id", "v", "c"))
     val v = lake.delete(spark, col("c") === 99)
-    assert(v == 3L)
+    // no row matches: nothing is published
+    assert(v == 2L)
     assert(lake.read(spark).count() == 4, "no row matches c = 99")
     // and a real cross-evolution delete still works end-to-end
     val v2 = lake.delete(spark, col("c") === 10)
@@ -479,27 +481,24 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     def live(v: Long): Int = lake.commitAt(spark, v).gens.flatMap(g =>
       g.files.getOrElse(Files.list(java.nio.file.Paths.get(root, g.dir)).toArray
         .map(_.toString).filter(_.endsWith(".parquet")).toSeq)).size
-    // a delete racing into another file of the same generation: the
-    // files this delete read are untouched, so it rebases and both land
+    def upsert(l: SnapshotLake, id: Long): Long = l.merge(Seq((id, "y")).toDF("id", "v"), Seq("id"))
+    // a merge racing into another file of the same generation: the
+    // files this merge read are untouched, so it rebases and both land
     val racy = new SnapshotLake(root) {
-      override protected def onBeforePublish(): Unit =
-        new SnapshotLake(root).delete(spark, col("id") === 80L)
+      override protected def onBeforePublish(): Unit = upsert(new SnapshotLake(root), 80L)
     }
-    val v3 = racy.delete(spark, col("id") === 10L)
+    val v3 = upsert(racy, 10L)
     assert(v3 == 3L)
     assert(lake.commitAt(spark, v3).files.get(gen).exists(_.size == 2))
-    assert(lake.read(spark).count() == 98L)
-    assert(live(3L) == 4, "two carried files and two one-file rewrites")
-    // a racing delete in the SAME file rewrites a file this one read: abort
+    assert(lake.read(spark).filter(col("v") === "y").count() == 2L)
+    assert(live(3L) == 6, "two carried files and two rewrites of the kept rows and the source row")
+    // a racing merge in the SAME file rewrites a file this one read: abort
     val racy2 = new SnapshotLake(root) {
-      override protected def onBeforePublish(): Unit =
-        new SnapshotLake(root).delete(spark, col("id") === 30L)
+      override protected def onBeforePublish(): Unit = upsert(new SnapshotLake(root), 30L)
     }
-    intercept[java.util.ConcurrentModificationException] {
-      racy2.delete(spark, col("id") === 31L)
-    }
+    intercept[java.util.ConcurrentModificationException](upsert(racy2, 31L))
     assert(lake.latestVersion(spark).contains(4L))
-    assert(lake.read(spark).filter(col("id") === 31L).count() == 1L)
+    assert(lake.read(spark).filter(col("id") === 31L && col("v") === "x").count() == 1L)
     // restore to v1 reads the generation whole again; its changefeed is
     // the file-level restatement: the three rewritten files' rows come
     // back, the rewrites' rows go
@@ -507,15 +506,15 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     assert(lake.commitAt(spark, v5).gens == Seq(GenRef(gen)))
     val feed = lake.changesBetween(spark, 4L, v5)
       .groupBy(col("_change_type")).count().as[(String, Long)].collect().toMap
-    assert(feed == Map("insert" -> 75L, "delete" -> 72L), feed)
-    assert(lake.read(spark).count() == 100L)
+    assert(feed == Map("insert" -> 75L, "delete" -> 75L), feed)
+    assert(lake.read(spark).filter(col("v") === "x").count() == 100L)
     // vacuum keeps a generation while a retained version reads any file
     // of it; the rewrites only dropped versions read go
-    val v6 = lake.delete(spark, col("id") === 60L)
+    val v6 = upsert(lake, 60L)
     assert(lake.commitAt(spark, v6).files.get(gen).exists(_.size == 3))
     lake.vacuum(spark, retainLast = 1)
     assert(lake.versions(spark) == Seq(v6))
-    assert(lake.read(spark).count() == 99L)
+    assert(lake.read(spark).count() == 100L)
     val dirs = Files.list(java.nio.file.Paths.get(root)).toArray.map(_.toString)
       .filter(_.contains("/gen-")).toSet
     assert(dirs == lake.dirsAt(spark, v6).map(d => s"$root/$d").toSet, dirs)
@@ -524,8 +523,35 @@ class SnapLakeMergeSpec extends SparkSpecBase {
       .load(root).writeStream.format("memory").queryName("file_granular_stream").start()
     try {
       q.processAllAvailable()
-      assert(spark.table("file_granular_stream").count() == 99L)
+      assert(spark.table("file_granular_stream").count() == 100L)
     } finally q.stop()
+  }
+
+  test("vacuum deletes the files of a kept generation that no retained version reads") {
+    val root = freshRoot()
+    val lake = new SnapshotLake(root)
+    lake.commit(spark.range(0, 100, 1, 4).toDF("id").withColumn("v", lit("x")))
+    val gen = lake.dirsAt(spark, 1L).head
+    def parquet(d: String): Set[String] = Files.list(java.nio.file.Paths.get(root, d)).toArray
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSet
+    val all = parquet(gen)
+    // a file-granular merge replaces the file holding id 10
+    val v2 = lake.merge(Seq((10L, "y")).toDF("id", "v"), Seq("id"))
+    val kept = lake.commitAt(spark, v2).files(gen).toSet
+    assert(kept.size == 3)
+    val want = lake.read(spark).as[(Long, String)].collect().toSet
+    lake.vacuum(spark, retainLast = 1)
+    assert(parquet(gen) == kept, s"${all -- kept} should be gone")
+    assert(lake.read(spark).as[(Long, String)].collect().toSet == want)
+    // a deletion vector only the dropped version named goes too
+    val v3 = lake.delete(spark, col("id") === 60L)
+    val v4 = lake.delete(spark, col("id") === 61L)
+    def dvFiles = Files.list(java.nio.file.Paths.get(root, DeletionVectors.DirName)).count()
+    assert(dvFiles == 2L)
+    lake.vacuum(spark, retainLast = 1)
+    assert(lake.versions(spark) == Seq(v4) && dvFiles == 1L && v3 == v4 - 1)
+    assert(lake.read(spark).count() == 98L)
   }
 
   test("with auto-compaction on, a mutation rewrites a small generation whole") {
@@ -534,16 +560,20 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     lake.commit(spark.range(0, 100, 1, 4).toDF("id").withColumn("v", lit("x")))
     val gen = lake.dirsAt(spark, 1L).head
     // every generation is small: the next fold would rewrite the files a
-    // file-granular delete carries, so the delete takes all four
+    // file-granular merge carries, so the merge takes all four
     lake.enableAutoCompact(spark, maxSmallGens = 8, smallBytes = 1L << 30)
-    val v2 = lake.delete(spark, col("id") === 10L)
+    def upsert(id: Long): Long = lake.merge(Seq((id, "y")).toDF("id", "v"), Seq("id"))
+    val v2 = upsert(10L)
     val c2 = lake.commitAt(spark, v2)
     assert(!c2.dirs.contains(gen) && c2.metrics.exists(_.filesRemoved == 4L), c2.json)
-    // no generation is small: the delete rewrites only the file in scope
+    // no generation is small: the merge rewrites only the file in scope
     lake.enableAutoCompact(spark, maxSmallGens = 8, smallBytes = 1L)
     val Seq(rewrite) = c2.dirs
-    val c3 = lake.commitAt(spark, lake.delete(spark, col("id") === 60L))
-    assert(c3.files.get(rewrite).exists(_.size == 3) && c3.metrics.exists(_.filesRemoved == 1L), c3.json)
-    assert(lake.read(spark).count() == 98L)
+    val files = c2.metrics.get.filesAdded.toInt
+    val c3 = lake.commitAt(spark, upsert(60L))
+    assert(c3.files.get(rewrite).exists(_.size == files - 1) &&
+      c3.metrics.exists(_.filesRemoved == 1L), c3.json)
+    assert(lake.read(spark).count() == 100L)
+    assert(lake.read(spark).filter(col("v") === "y").count() == 2L)
   }
 }

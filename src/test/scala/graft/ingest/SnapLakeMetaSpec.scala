@@ -21,7 +21,7 @@ class SnapLakeMetaSpec extends SparkSpecBase {
 
   /** Pinned byte counts; each test says what it measures. */
   private val BloomSidecarBytes = 851L
-  private val DeleteRewriteBytes = 9356L
+  private val DeleteBytes = 483L
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft_snapmeta").toString + "/lake"
@@ -139,8 +139,9 @@ class SnapLakeMetaSpec extends SparkSpecBase {
     lake.delete(spark, col("id") === 31L)
     lake.merge(Seq((62L, "m", 1.0, true)).toDF("id", "name", "score", "flag"),
       Seq("id"))
+    // two appends and the merge's rewrite: a delete writes no generation
     val gens = lake.versions(spark).flatMap(v => lake.dirsAt(spark, v)).distinct
-    assert(gens.size == 4)
+    assert(gens.size == 3)
     gens.foreach { g =>
       val sidecar = s"$root/$g/${GenBlooms.BloomsFileName}"
       val atWrite = readBytes(sidecar)
@@ -233,30 +234,32 @@ class SnapLakeMetaSpec extends SparkSpecBase {
     }
   }
 
-  test("byte budget: one-key delete in a 3-file generation rewrites 1 file") {
+  test("byte budget: one-key delete in 3-file generation writes no data file") {
     val root = freshRoot()
     val lake = new SnapshotLake(root)
     lake.enableAutoBlooms(spark, Seq("id"), expectedNdvPerFile = 1000)
     // three files holding ids [0, 1000), [1000, 2000), [2000, 3000)
     lake.commit(spark.range(0, 3000, 1, 3).select(col("id"), (col("id") % 7).as("v")))
     val gen = lake.dirsAt(spark, 1L).head
-    val genBytes = bytesUnder(s"$root/$gen")
+    val before = bytesUnder(root)
     val v = lake.delete(spark, col("id") === 1500L)
+    // the commit file and one deletion-vector file
+    val written = bytesUnder(root) - before
     val c = lake.commitAt(spark, v)
-    // the other two files of the generation carry by reference
-    assert(c.dirs.head == gen && c.files.get(gen).exists(_.size == 2), c.json)
-    val Seq(rewrite) = c.dirs.tail
-    val added = bytesUnder(s"$root/$rewrite")
-    info(s"one-key delete: generation $genBytes bytes, rewrite adds $added bytes")
+    info(s"one-key delete: generation ${bytesUnder(s"$root/$gen")} bytes, the delete wrote $written bytes")
+    // the generation is read whole; its middle file gains a one-row vector
+    assert(c.dirs == Seq(gen) && c.files.isEmpty &&
+      c.dvs(gen).values.map(_.rows).toSeq == Seq(1L), c.json)
     val m = c.metrics.get
-    assert((m.filesAdded, m.filesRemoved, m.filesCarried) == (1L, 1L, 2L), m)
+    assert((m.filesAdded, m.bytesAdded, m.filesRemoved, m.bytesRemoved, m.filesCarried) ==
+      (0L, 0L, 0L, 0L, 3L), m)
     def parquetBytes(d: String): Long = Files.list(Paths.get(root, d)).toArray.map(_.toString)
       .filter(_.endsWith(".parquet")).map(f => Files.size(Paths.get(f))).sum
-    assert(m.bytesRemoved + m.bytesCarried == parquetBytes(gen) &&
-      m.bytesAdded == parquetBytes(rewrite), m)
+    assert(m.bytesCarried == parquetBytes(gen), m)
+    assert(m.rowsRemoved.contains(1L) && m.dvsChanged.contains(1L), m)
     val h = lake.history(spark).filter(col("version") === v).head()
-    assert(Commit.Metrics.Names.map(h.getAs[Long](_)) == m.values)
-    assert(added == DeleteRewriteBytes, s"the rewrite added $added bytes")
+    assert(Commit.Metrics.Names.map(n => h.get(h.fieldIndex(n))) == m.values)
+    assert(written == DeleteBytes, s"the delete wrote $written bytes")
     assert(lake.read(spark).count() == 2999L)
     assert(lake.read(spark).filter(col("id") === 1500L).count() == 0L)
     assert(lake.changesBetween(spark, 1L, v).as[(Long, Long, String, Long)].collect().toSeq ==
@@ -278,7 +281,8 @@ class SnapLakeMetaSpec extends SparkSpecBase {
     info(s"jobs: append $append, resolve $resolve, delete $delete, merge $merge")
     assert(append == 1, s"append commit ran $append jobs")
     assert(resolve == 0, s"resolving format(snaplake).load ran $resolve jobs")
-    assert(delete == 2, s"one-key delete ran $delete jobs")
+    // one scan marks the row's position; nothing is written by a job
+    assert(delete == 1, s"one-key delete ran $delete jobs")
     // the source envelope, the Bloom-scoping key collect, and the
     // rewrite and changefeed writes with their shuffle stages
     assert(merge == 11, s"small merge ran $merge jobs")

@@ -2,12 +2,12 @@ package graft.tools
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Throwaway plan-dump driver (sbt console piping is unavailable in this
-  * sandbox): writes `.explain("formatted")` for the r17 session-2 touched
-  * queries to /tmp, with the SAME session shape as tools/explain_dump.scala
-  * (local[4], shuffle=4) so the dumps diff cleanly against the committed
-  * plans/r17 before-files. Run explicitly via testOnly; the assertions are
-  * trivial on purpose. */
+/** Plan dump (piped `sbt console` scripts do not execute, so plan
+  * dumps run inside a test JVM): writes `.explain("formatted")` for the
+  * r17 session-2 touched queries to /tmp, with the session shape EXPLAIN.md
+  * and the committed plans/r17 before-files were dumped under (local[4],
+  * shuffle=4) so the dumps diff cleanly against them. Run explicitly via
+  * testOnly; the assertions are trivial on purpose. */
 class PlanDumpR17bSpec extends AnyFunSuite {
 
   test("dump formatted plans for the r17b touched queries") {
