@@ -439,10 +439,10 @@ class SnapshotLake(root: String) {
 
   /** The (queryId, replay watermark) pair for a streaming writer into
     * this lake — THE one implementation of the replay-guard scoping
-    * rule, shared by [[graft.sources]]' SnapLakeSink and
-    * [[graft.streaming.EventStreams.snaplakeUpsertSink]] (r13 review:
-    * it had drifted into two verbatim copies, and the r12
-    * watermark-scoping fix had to be applied to both).
+    * rule, shared by [[graft.sources]]' SnapLakeSink,
+    * [[graft.streaming.EventStreams.snaplakeUpsertSink]] and the
+    * streaming ledgers ([[graft.streaming.DocStreams]],
+    * [[graft.streaming.NearDedupStreams]]).
     *
     * queryId is the stable streaming-query id (checkpoint identity),
     * set as a local property on the stream's driver thread — scoping
@@ -655,8 +655,8 @@ class SnapshotLake(root: String) {
     s"$root/_autocompact.json")
 
   /** Table-level AUTO-compaction — the write-path companion of
-    * [[enableAutoBlooms]] and the generalized form of the streaming
-    * ledgers' every-N-batches compaction: once enabled, EVERY
+    * [[enableAutoBlooms]], and what keeps the streaming ledgers
+    * ([[graft.streaming.DocStreams]]) bounded: once enabled, EVERY
     * publishing path — append/overwrite commits, streamed
     * micro-batches, and the merge/delete/optimize rewrites — checks
     * the small-generation tail and runs [[compactSmall]] when it has

@@ -195,7 +195,7 @@ object Dedup {
 
   /** (doc_id, band, bucket) rows from a signature frame — the banding
     * shared by [[lshCandidates]] and the streaming near-dup ledger
-    * ([[graft.streaming.DocStreams]]), so every consumer buckets
+    * ([[graft.streaming.NearDedupStreams]]), so every consumer buckets
     * bit-identically. */
   def bandBuckets(sigs: DataFrame): DataFrame = {
     val rows = NumHashes / NumBands

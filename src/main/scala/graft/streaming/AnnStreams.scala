@@ -128,9 +128,8 @@ object AnnStreams {
     // markers are dead weight — without a sweep the dir grows one file
     // per micro-batch forever (a year at one batch/minute ≈ 500k
     // zero-byte files: namenode object pressure on HDFS, ever-slower
-    // listings on object stores). Keeping only the newest marker is the
-    // same bounded-metadata discipline as the ledger compaction
-    // (r13 review).
+    // listings on object stores). Keeping only the newest marker keeps
+    // the marker metadata bounded.
     fs.listStatus(new Path(markerDir)).foreach { st =>
       val name = st.getPath.getName
       if (name.startsWith("batch-") &&
@@ -271,13 +270,13 @@ object AnnStreams {
     if (row.isEmpty) 0.0 else row(0).getDouble(0)
   }
 
-  /** [[indexDrift]] in DIMENSIONLESS units (r15):
+  /** [[indexDrift]] in DIMENSIONLESS units:
     * [[Similarity.embeddingDriftZ]]'s RMS two-sample z over the same
     * membership split. Under no drift this reads ≈1.0 for ANY batch
     * size (each per-dimension statistic is the mean shift over its own
     * standard error), so — unlike the raw embedding-unit mean-shift —
     * one finite threshold works for every corpus, and
-    * [[maybeRebuild]]'s drift gate can finally ship ON
+    * [[maybeRebuild]]'s drift gate can ship ON
     * ([[DefaultDriftZ]] = 2.0, the two-sigma cut). Returns 0.0 when
     * either side is empty, which keeps post-rebuild reads at zero —
     * and ALSO when `drift_z` itself is NULL, which happens on a
@@ -285,8 +284,8 @@ object AnnStreams {
     * t dropped by the exact num = 0 test → count(t) = 0): no standard
     * error exists to scale a shift, so the z gate abstains and
     * [[maybeRebuild]] falls back to its grown-fraction signal instead
-    * of NPE-ing on `Row.getDouble` (r16 ADVICE, AnnStreamsSpec pins
-    * the constant-reference face red→green). */
+    * of NPE-ing on `Row.getDouble` (AnnStreamsSpec pins the
+    * constant-reference case). */
   def indexDriftZ(spark: SparkSession, index: IvfPqIndex,
       corpus: DataFrame): Double = {
     val row = Similarity.embeddingDriftZ(tagIndexMembership(index, corpus),
@@ -315,13 +314,12 @@ object AnnStreams {
     * between ingest waves.
     *
     * `driftThreshold` defaults to [[DefaultDriftZ]] (2.0) — the gate
-    * ships ON (r15, verdict #2). Through r14 it defaulted to +∞
-    * because the statistic was the raw mean-shift L2 in embedding
-    * units, where no corpus-independent cut exists; the two-sample z
-    * normalization ([[Similarity.embeddingDriftZ]]) reads ≈1.0 under
-    * no drift at any batch size, so two sigma is meaningful
-    * everywhere. Pass +∞ to restore grown-fraction-only behavior. The
-    * drift statistic is computed only when the grown gate did not
+    * ships ON: the two-sample z normalization
+    * ([[Similarity.embeddingDriftZ]]) reads ≈1.0 under no drift at any
+    * batch size, so two sigma is meaningful everywhere, where the raw
+    * mean-shift L2 in embedding units has no corpus-independent cut.
+    * Pass +∞ to restore grown-fraction-only behavior. The drift
+    * statistic is computed only when the grown gate did not
     * already fire and the threshold is finite; its cost is the one
     * (label, dim) partial-sum shuffle embeddingDriftZ documents — a
     * maintenance-cycle probe, not a hot-path cost. */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 
@@ -160,61 +160,8 @@ object EventStreams {
   def idempotentParquetSink(out: String)(df: DataFrame, batchId: Long): Unit =
     df.write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
 
-  /** Streaming CDC upsert sink — the streaming half of `t_cdc_upsert`:
-    * each micro-batch merges last-wins (by ts, then event_id) into a
-    * keyed user snapshot. Tombstones ('error' events) are KEPT in the
-    * snapshot so an out-of-order older event in a later batch cannot
-    * resurrect a deleted key; [[activeSnapshot]] is the reader view that
-    * hides them.
-    *
-    * The merge is read-merge-swap: write the merged snapshot to a fresh
-    * generation dir, then atomically swap a pointer file — a crash
-    * mid-merge leaves the previous generation intact, and a replayed
-    * micro-batch re-merges idempotently (last-wins is idempotent and
-    * commutative in (ts, event_id)). At scale both sides shuffle once on
-    * user_id; the snapshot stays partitioned by the merge key.
-    */
-  def upsertSnapshotSink(spark: SparkSession, dir: String)(
-      batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.expressions.Window
-    val cols = Seq("user_id", "ts", "event_type", "value", "event_id")
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // shared CURRENT-pointer chassis (one implementation: [[GenPointer]])
-    val current: Option[String] = GenPointer.readPtr(fs, dir)
-    val next = s"gen_$batchId"
-    // The pointer swap IS the commit: if CURRENT already names this
-    // batch's generation, the batch completed before a crash and the
-    // replay must no-op (re-merging would read and overwrite gen_N at
-    // once).
-    if (current.contains(next)) return
-    val merged = current match {
-      case Some(gen) =>
-        spark.read.parquet(s"$dir/$gen").select(cols.map(col): _*)
-          .unionByName(batch.select(cols.map(col): _*))
-      case None => batch.select(cols.map(col): _*)
-    }
-    merged.withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .drop("rk")
-      .write.mode("overwrite").parquet(s"$dir/$next")
-    // atomic pointer swap: write CURRENT.tmp, rename over CURRENT —
-    // readers see the old or the new generation, never a partial write
-    GenPointer.swapPtr(spark, fs, dir, next)
-    // bound storage: drop superseded generations, keeping the new
-    // current and its predecessor (rollback margin)
-    val keep = Set(next) ++ current
-    fs.listStatus(new Path(dir)).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("gen_") && !keep.contains(name))
-        fs.delete(st.getPath, true)
-    }
-  }
-
-  /** Streaming CDC upsert into the TRANSACTIONAL lake — the
-    * [[upsertSnapshotSink]] semantics upgraded from the raw
-    * pointer-swap snapshot to [[graft.ingest.SnapshotLake]] MERGE:
+  /** Streaming CDC upsert into the TRANSACTIONAL lake — the streaming
+    * half of `t_cdc_upsert` as [[graft.ingest.SnapshotLake]] MERGE:
     * every micro-batch is one versioned, optimistically-retried,
     * changefeed-materializing commit, so the upserted table gets time
     * travel, CDF, stats/bloom skipping and concurrent-batch-writer
@@ -224,31 +171,30 @@ object EventStreams {
     * Exactly-once: the merge commit carries the (queryId, batchId)
     * marker in its ATOMIC commit-file claim ([[SnapshotLake.mergeMarked]]),
     * so "applied" and "recorded as batch N" cannot come apart; a
-    * replayed batch is detected by lastStreamBatchId under this query's
-    * id and skipped whole (merge is NOT idempotent against its own
-    * changefeed — a blind re-merge would publish a duplicate CDF
-    * restatement even though the data rows converge). The watermark is
-    * query-scoped exactly like the append sink's: a fresh query whose
-    * batch ids restart at 0 is not mistaken for a replay. When the
-    * queryId local property is ABSENT (direct invocation), the guard
-    * consults only ANONYMOUS markers (commits that also lack a
-    * queryId): an anonymous caller's own replay is still suppressed,
-    * but its batches are never silently swallowed by some earlier real
-    * query's watermark.
+    * replayed batch is detected by the writer's watermark
+    * ([[graft.ingest.SnapshotLake.streamWriterScope]]) and skipped whole
+    * (merge is NOT idempotent against its own changefeed — a blind
+    * re-merge would publish a duplicate CDF restatement even though the
+    * data rows converge). The watermark is query-scoped exactly like the
+    * append sink's: a fresh query whose batch ids restart at 0 is not
+    * mistaken for a replay, and a direct invocation (no queryId) is
+    * guarded only by anonymous markers.
     *
     * Batch shape contract: the caller collapses the batch to one row
-    * per key (last-wins by (ts, event_id) for CDC) BEFORE the sink —
-    * merge applies the source verbatim, so in-batch duplicates would
-    * both insert. First batch on a never-committed lake lands as the
-    * table-creating append; empty batches commit an empty generation so
-    * the watermark advances across idle windows (the append-sink rule —
-    * and merge's key envelope is degenerate on an empty source, so the
-    * empty append also dodges an unscoped full rewrite).
+    * per key (last-wins by (ts, event_id) for CDC, against the lake's
+    * current rows for the batch's keys, so an out-of-order older event
+    * cannot overwrite a newer one — and tombstones stay in the table
+    * for the same reason) BEFORE the sink — merge applies the source
+    * verbatim, so in-batch duplicates would both insert. First batch on
+    * a never-committed lake lands as the table-creating append; empty
+    * batches commit an empty generation so the watermark advances across
+    * idle windows (the append-sink rule — and merge's key envelope is
+    * degenerate on an empty source, so the empty append also dodges an
+    * unscoped full rewrite).
     */
   def snaplakeUpsertSink(lake: graft.ingest.SnapshotLake,
       keyCols: Seq[String])(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    // shared replay-guard scoping rule — see SnapshotLake.streamWriterScope
     val (queryId, watermark) = lake.streamWriterScope(spark)
     if (watermark.exists(_ >= batchId))
       return // replay of this writer's own batch (same watermark scope)
@@ -256,15 +202,6 @@ object EventStreams {
       lake.commitMarked(batch, overwrite = false, Some(batchId), queryId)
     else
       lake.mergeMarked(batch, keyCols, Some(batchId), queryId)
-  }
-
-  /** Live (non-tombstoned) rows of the [[upsertSnapshotSink]] snapshot. */
-  def activeSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = GenPointer.readPtr(fs, dir)
-      .getOrElse(throw new java.io.FileNotFoundException(s"$dir/CURRENT"))
-    spark.read.parquet(s"$dir/$gen").filter(col("event_type") =!= "error")
   }
 
   /** Run any of the above to completion against a bounded source:

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.ingest.SnapshotLake
+
 /** Streaming NEAR-duplicate ingest — [[DocStreams]] upgraded from exact
   * content identity to MinHash similarity: a document is admitted iff no
   * already-admitted document estimates Jaccard ≥ τ against it. This is
@@ -11,16 +13,18 @@ import org.apache.spark.sql.streaming.Trigger
   * the shape a continuously-crawling pipeline actually runs: dedup AT
   * ingest, against everything ever admitted, with bounded per-doc state.
   *
-  * Ledger (one generation dir, same CURRENT-pointer chassis as
-  * [[DocStreams]], two tables inside):
-  *  - `sigs/`:    (doc_id, sig ARRAY<BIGINT>) partitioned by `spfx`
-  *                (doc_id mod 256) — 128 longs per admitted doc, the
-  *                bounded state that replaces unbounded shingle storage.
-  *  - `buckets/`: (band, bucket, doc_id) partitioned by `pfx`
-  *                (bucket mod 256) — the inverted LSH index. A batch
-  *                collects its ≤256 touched prefixes (metadata, not
-  *                data) and the candidate join reads only those
-  *                partitions.
+  * Ledger: two [[graft.ingest.SnapshotLake]] tables under `ledgerDir`,
+  * both created with auto-Blooms and auto-compaction:
+  *  - `sigs/` ([[sigsLedger]]): (doc_id, sig ARRAY<BIGINT>,
+  *                ingest_batch) — 128 longs per admitted doc, the
+  *                bounded state that replaces unbounded shingle
+  *                storage; Blooms on `doc_id`.
+  *  - `buckets/` ([[bucketsLedger]]): (band, bucket, doc_id) — the
+  *                inverted LSH index; Blooms on `bucket` and
+  *                `doc_id`.
+  * Each ledger read is the ordinary snaplake scan filtered by the
+  * batch's distinct keys ([[DocStreams.ledgerScan]]), so file pruning
+  * skips the files whose Blooms or envelopes rule them all out.
   *
   * Per micro-batch:
   *  1. signature + band buckets for incoming docs (bit-identical banding
@@ -38,16 +42,19 @@ import org.apache.spark.sql.streaming.Trigger
   *     frontier: admit docs with no smaller-id surviving neighbor,
   *     remove them and their neighbors, repeat (each round admits the
   *     smallest survivor, so it terminates);
-  *  4. admitted docs land in the corpus via batch-keyed dynamic
-  *     partition overwrite (effectively-once, as in DocStreams), then
-  *     sigs (the per-doc ADMISSION RECORD, tagged with the admitting
-  *     batch id), then buckets. Any crash point replays to the
-  *     identical state: data-only → identical recompute overwrites
-  *     itself; data+sigs → the id guard marks the docs REPLAYED, the
-  *     partition rewrite includes them unchanged, and their bucket rows
-  *     are (re-)appended, healing the lost buckets write; all three →
-  *     same path, with the duplicate bucket rows being benign
-  *     (candidates are distinct, compaction dedups).
+  *  4. a batch at or below the buckets table's replay watermark
+  *     ([[graft.ingest.SnapshotLake.streamWriterScope]]) was committed
+  *     whole and returns before step 1. Otherwise admitted docs land in
+  *     the corpus via batch-keyed dynamic partition overwrite
+  *     (effectively-once, as in DocStreams), then the sigs commit (the
+  *     per-doc ADMISSION RECORD, tagged with the admitting batch id),
+  *     then the buckets commit; both commits carry the (queryId,
+  *     batchId) marker. Any crash point replays to the identical state:
+  *     data-only → identical recompute overwrites itself; data+sigs →
+  *     the id guard marks the docs REPLAYED, the partition rewrite
+  *     includes them unchanged, and the bucket rows of those the
+  *     buckets table lacks are committed, healing the lost buckets
+  *     commit. A bucket row is committed once.
   *
   * Like every banded tier here, admission uses the LSH candidate
   * restriction: only pairs sharing a band bucket are compared (recall
@@ -65,61 +72,32 @@ import org.apache.spark.sql.streaming.Trigger
   * and the replayed-vs-resent classification would collide with
   * earlier epochs' partitions. Likewise doc_id is an immutable record
   * id: a re-crawled or rewritten document must arrive under a NEW id.
-  * The ledger must also live on a filesystem with ATOMIC RENAME
-  * (HDFS, POSIX local): the CURRENT-pointer swap relies on
-  * FileContext.rename(OVERWRITE) being all-or-nothing, which object
-  * stores like S3A do not guarantee — a crash mid-swap there can leave
-  * a missing or partial pointer. On such stores, front the pointer
-  * with a consistent metadata layer (e.g. a table-format commit log)
-  * rather than pointing this sink at the bucket directly.
   */
 object NearDedupStreams {
-
-  private val SigSchema =
-    "doc_id BIGINT, sig ARRAY<BIGINT>, ingest_batch BIGINT, spfx STRING"
-  private val BucketSchema = "band INT, bucket BIGINT, doc_id BIGINT, pfx STRING"
 
   private def estJaccard(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
       lit(0), (acc, x) => acc + x).cast("double") / graft.ml.Dedup.NumHashes
 
-  private def readOrEmpty(spark: SparkSession, path: String, schema: String,
-      fs: org.apache.hadoop.fs.FileSystem): DataFrame =
-    if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.schema(schema).parquet(path)
-    else {
-      val fields = schema.split(",").map(_.trim.split(" ", 2))
-      spark.range(0).selectExpr(
-        fields.map(f => s"CAST(NULL AS ${f(1)}) AS ${f(0)}").toIndexedSeq: _*)
-    }
+  /** The admission record: one (doc_id, sig, ingest_batch) row per
+    * admitted document (signless documents carry a null sig). */
+  def sigsLedger(ledgerDir: String): SnapshotLake = new SnapshotLake(s"$ledgerDir/sigs")
 
-  /** Admitted signatures currently in the ledger (reader view). */
-  def ledgerSigs(spark: SparkSession, ledgerDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(ledgerDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    GenPointer.readPtr(fs, ledgerDir)
-      .map(g => readOrEmpty(spark, s"$ledgerDir/$g/sigs", SigSchema, fs))
-      .getOrElse(readOrEmpty(spark, s"$ledgerDir/__none__", SigSchema, fs))
-  }
+  /** The inverted LSH index: (band, bucket, doc_id) rows of every
+    * admitted document. */
+  def bucketsLedger(ledgerDir: String): SnapshotLake = new SnapshotLake(s"$ledgerDir/buckets")
 
   /** foreachBatch body: near-dedup `batch` against the ledger and itself,
     * write admitted docs, extend the ledger. */
   def nearDedupIngestSink(spark: SparkSession, ledgerDir: String,
-      outDir: String, tau: Double, compactEvery: Int = 16,
-      maxMisRounds: Int = 256)(
+      outDir: String, tau: Double, maxMisRounds: Int = 256)(
       batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
     import graft.ml.Dedup
-    val fs = new Path(ledgerDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val gen = GenPointer.readPtr(fs, ledgerDir).getOrElse {
-      fs.mkdirs(new Path(ledgerDir))
-      val g = s"gen_$batchId"
-      GenPointer.swapPtr(spark, fs, ledgerDir, g)
-      g
-    }
-    val genPath = s"$ledgerDir/$gen"
+    val sigsLake = DocStreams.openLedger(spark, sigsLedger(ledgerDir), Seq("doc_id"))
+    val bucketsLake = DocStreams.openLedger(spark, bucketsLedger(ledgerDir), Seq("bucket", "doc_id"))
+    // the buckets table commits last, so its marker says the batch landed whole
+    val (queryId, watermark) = bucketsLake.streamWriterScope(spark)
+    if (watermark.exists(_ >= batchId)) return // replay of a committed batch
 
     // 1. signatures + band buckets for the batch (all per-batch persists
     // are released below — a leaked one accumulates forever in a
@@ -134,39 +112,32 @@ object NearDedupStreams {
     try {
       sh = Dedup.shingled(batch)
       sigs = Dedup.minhashSignatures(sh)
-      val bands = Dedup.bandBuckets(sigs)
-        .withColumn("pfx", format_string("%02x", pmod(col("bucket"), lit(256L))))
-        .persist()
+      val bands = Dedup.bandBuckets(sigs).persist()
       try {
-        val prefixes = bands.select(col("pfx")).distinct()
-          .collect().map(_.getString(0)).toSeq // ≤256 prune keys (metadata)
-
-        // 2. ledger rejection: candidates via the pruned inverted index,
+        // 2. ledger rejection: candidates via the inverted index,
         // estimate on the stored signatures
-        val ledgerBuckets = readOrEmpty(spark, s"$genPath/buckets",
-          BucketSchema, fs).filter(col("pfx").isin(prefixes: _*))
-        val cands = bands
-          .select(col("doc_id").as("new_id"), col("band"), col("bucket"))
-          .join(ledgerBuckets
-            .select(col("doc_id").as("old_id"), col("band"), col("bucket")),
-            Seq("band", "bucket"))
-          .select(col("new_id"), col("old_id")).distinct()
-          // materialized once: both the spfx-prune collect below and the
-          // simRejected join consume cands — unmaterialized, the pruned
-          // ledger-bucket scan and the band join would run TWICE per
-          // micro-batch on the hot ingest path (r13 review)
+        // (a table without a commit yet holds nothing: no rows)
+        def none(cols: String*) = spark.range(0).select(cols.map(col("id").as(_)): _*)
+        val cands = DocStreams.ledgerScan(bucketsLake, bands.select(col("bucket")))
+          .fold(none("new_id", "old_id")) { l =>
+            bands.select(col("doc_id").as("new_id"), col("band"), col("bucket"))
+              .join(l.select(col("doc_id").as("old_id"), col("band"), col("bucket")),
+                Seq("band", "bucket"))
+              .select(col("new_id"), col("old_id")).distinct()
+          }
+          // materialized once: both the sigs key collect below and the
+          // simRejected join consume cands — unmaterialized, the ledger
+          // bucket scan and the band join would run TWICE per
+          // micro-batch on the hot ingest path
           .localCheckpoint()
-        val candPfx = cands.select(
-            format_string("%02x", pmod(col("old_id"), lit(256L))).as("spfx"))
-          .distinct().collect().map(_.getString(0)).toSeq
-        val oldSigs = readOrEmpty(spark, s"$genPath/sigs", SigSchema, fs)
-          .filter(col("spfx").isin(candPfx: _*))
-          .select(col("doc_id").as("old_id"), col("sig").as("old_sig"))
-        val simRejected = cands
-          .join(sigs.select(col("doc_id").as("new_id"), col("sig")), "new_id")
-          .join(oldSigs, "old_id")
-          .filter(estJaccard(col("sig"), col("old_sig")) >= tau)
-          .select(col("new_id").as("doc_id")).distinct()
+        val simRejected = DocStreams.ledgerScan(sigsLake, cands.select(col("old_id").as("doc_id")))
+          .fold(none("doc_id")) { l =>
+            cands
+              .join(sigs.select(col("doc_id").as("new_id"), col("sig")), "new_id")
+              .join(l.select(col("doc_id").as("old_id"), col("sig").as("old_sig")), "old_id")
+              .filter(estJaccard(col("sig"), col("old_sig")) >= tau)
+              .select(col("new_id").as("doc_id")).distinct()
+          }
         // ADMISSION RECORD by identity. doc_id is an immutable record id
         // (the operator's contract: a re-crawled/rewritten document gets
         // a NEW id) — so a batch doc whose id is already in the sigs
@@ -177,22 +148,19 @@ object NearDedupStreams {
         //    (b) INCLUDED in this batch's corpus rewrite — the dynamic
         //    overwrite replaces the whole partition, and omitting
         //    originally-admitted docs would drop them — and (c) have its
-        //    bucket rows re-appended, healing the crash window where the
-        //    sigs append landed but the buckets write did not.
+        //    bucket rows committed if the buckets table lacks them,
+        //    healing the crash window where the sigs commit landed but
+        //    the buckets commit did not.
         //  - RESENT (recorded batch != this batch): the same record
         //    arriving again in a later batch. It lives in its original
         //    partition already — reject it here, rewrite nothing.
         // Both kinds still BLOCK their in-batch near-duplicates (they
         // are admitted corpus content), via preEdges below.
-        val batchIdPfx = batch
-          .select(format_string("%02x", pmod(col("doc_id"), lit(256L)))
-            .as("spfx"))
-          .distinct().collect().map(_.getString(0)).toSeq
-        val preAdmitted = batch.select(col("doc_id")).join(
-          readOrEmpty(spark, s"$genPath/sigs", SigSchema, fs)
-            .filter(col("spfx").isin(batchIdPfx: _*))
-            .select(col("doc_id"), col("ingest_batch")),
-          Seq("doc_id"), "inner")
+        val preAdmitted = DocStreams.ledgerScan(sigsLake, batch.select(col("doc_id")))
+          .fold(none("doc_id", "ingest_batch")) { l =>
+            batch.select(col("doc_id"))
+              .join(l.select(col("doc_id"), col("ingest_batch")), Seq("doc_id"), "inner")
+          }
           .localCheckpoint()
         val replayed = preAdmitted.filter(col("ingest_batch") === batchId)
           .select(col("doc_id"))
@@ -235,7 +203,7 @@ object NearDedupStreams {
         var rounds = 0
         while (!done) {
           // the same round budget as the batch twin
-          // (Dedup.sequentialAdmission, NOTES r12): a chain of
+          // (Dedup.sequentialAdmission): a chain of
           // near-duplicates inside ONE micro-batch makes the greedy
           // dependency depth — and the round count, at ~4
           // driver-blocking localCheckpoint actions each — linear in
@@ -287,21 +255,16 @@ object NearDedupStreams {
           // similarity-reject anyone, by design); replayed docs already
           // have theirs, so appending only `admitted` keeps the record
           // one row per admitted doc under any replay
-          admitted.join(sigs, Seq("doc_id"), "left")
-            .withColumn("ingest_batch", lit(batchId))
-            .withColumn("spfx",
-              format_string("%02x", pmod(col("doc_id"), lit(256L))))
-            .select(col("doc_id"), col("sig"), col("ingest_batch"), col("spfx"))
-            .write.mode("append").partitionBy("spfx")
-            .parquet(s"$genPath/sigs")
-          // buckets for newly admitted AND replayed docs — re-appending a
-          // replayed doc's rows heals the sigs-landed/buckets-lost crash
-          // window; duplicates are benign (candidates distinct, and
-          // compaction dedups)
-          bands.join(writeSet, "doc_id")
-            .select(col("band"), col("bucket"), col("doc_id"), col("pfx"))
-            .write.mode("append").partitionBy("pfx")
-            .parquet(s"$genPath/buckets")
+          DocStreams.commitBatch(sigsLake, admitted.join(sigs, Seq("doc_id"), "left")
+            .select(col("doc_id"), col("sig"), lit(batchId).as("ingest_batch")),
+            batchId, queryId)
+          // buckets for newly admitted docs, and for the replayed docs
+          // the buckets ledger lacks — that heals the sigs-landed/
+          // buckets-lost crash window without committing a row twice
+          val unbucketed = DocStreams.ledgerScan(bucketsLake, replayed)
+            .fold(replayed)(l => replayed.join(l.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+          DocStreams.commitBatch(bucketsLake, bands.join(admitted.unionByName(unbucketed), "doc_id")
+            .select(col("band"), col("bucket"), col("doc_id")), batchId, queryId)
         } finally fresh.unpersist()
       } finally bands.unpersist()
     } finally {
@@ -309,39 +272,17 @@ object NearDedupStreams {
       if (sh != null) sh.unpersist()
       batch.unpersist()
     }
-
-    // maintenance: same generation-swap compaction as DocStreams
-    val next = s"gen_c$batchId"
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
-        next != gen && fs.exists(new Path(genPath))) {
-      readOrEmpty(spark, s"$genPath/sigs", SigSchema, fs)
-        .repartition(col("spfx")).sortWithinPartitions(col("doc_id"))
-        .write.mode("overwrite").partitionBy("spfx")
-        .parquet(s"$ledgerDir/$next/sigs")
-      readOrEmpty(spark, s"$genPath/buckets", BucketSchema, fs)
-        .distinct() // crash-replay bucket duplicates compact away here
-        .repartition(col("pfx")).sortWithinPartitions(col("bucket"))
-        .write.mode("overwrite").partitionBy("pfx")
-        .parquet(s"$ledgerDir/$next/buckets")
-      GenPointer.swapPtr(spark, fs, ledgerDir, next)
-      fs.listStatus(new Path(ledgerDir)).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("gen_") && name != next && name != gen)
-          fs.delete(st.getPath, true)
-      }
-    }
   }
 
   /** Drain a bounded doc stream through the near-dedup ingest sink. */
   def runOnce(spark: SparkSession, srcDir: String, ledgerDir: String,
       outDir: String, tau: Double, checkpoint: String,
-      compactEvery: Int = 16, maxMisRounds: Int = 256): Unit = {
+      maxMisRounds: Int = 256): Unit = {
     val q = DocStreams.fromParquetDir(spark, srcDir).writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch(
-        nearDedupIngestSink(spark, ledgerDir, outDir, tau, compactEvery,
-          maxMisRounds) _)
+        nearDedupIngestSink(spark, ledgerDir, outDir, tau, maxMisRounds) _)
       .start()
     q.awaitTermination()
   }

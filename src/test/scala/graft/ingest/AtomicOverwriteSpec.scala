@@ -2,12 +2,12 @@ package graft.ingest
 
 import graft.SparkSpecBase
 
-/** Pins the one shared overwrite-publish primitive (r14): on a local
-  * root the swap must be the POSIX atomic rename path — tmp gone,
-  * destination flipped whole — through BOTH filesystem flavors that
-  * reach it (LocalFileSystem from the pointer chassis,
-  * RawLocalFileSystem from the control-file writer, which notably does
-  * NOT implement getScheme). */
+/** Pins the overwrite-publish primitive for snaplake metadata files
+  * ([[AtomicOverwrite.publish]]): on a local root the new content lands
+  * by the POSIX atomic rename — destination flipped whole, no temp file
+  * left — whichever filesystem flavor wrote the old destination, and a
+  * checksummed reader afterwards verifies the new bytes instead of
+  * quarantining the file into `bad_files`. */
 class AtomicOverwriteSpec extends SparkSpecBase {
 
   private def write(fs: org.apache.hadoop.fs.FileSystem,
@@ -16,80 +16,61 @@ class AtomicOverwriteSpec extends SparkSpecBase {
     try out.write(s.getBytes("UTF-8")) finally out.close()
   }
 
-  private def read(p: java.nio.file.Path): String =
-    new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+  /** `p` read through a FRESH checksummed fs (bypassing the cached
+    * instance) with verification on: a stale `.crc` throws
+    * ChecksumException here and moves `p` into `bad_files`. */
+  private def verifiedRead(p: org.apache.hadoop.fs.Path): String = {
+    val fresh = org.apache.hadoop.fs.FileSystem
+      .newInstance(p.toUri, spark.sparkContext.hadoopConfiguration)
+    try {
+      fresh.setVerifyChecksum(true)
+      val in = fresh.open(p)
+      try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
+      finally in.close()
+    } finally fresh.close()
+  }
+
+  /** What publishing left beside the destination: temp files, and a
+    * `bad_files` quarantine directory. */
+  private def residue(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles.map(_.getName).toSeq
+      .filter(n => n.endsWith(".tmp") || n == "bad_files")
+
+  private def checksummedFs(dir: String) =
+    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .asInstanceOf[org.apache.hadoop.fs.ChecksumFileSystem]
 
   test("atomic overwrite-rename flips whole and removes tmp on both local fs flavors") {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = java.nio.file.Files.createTempDirectory("atomic_ow").toString
-    val checksummed = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(conf)
-    val raw = checksummed match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case other => other
-    }
-    for ((fs, tag) <- Seq((checksummed, "local"), (raw, "rawlocal"))) {
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/ptr-$tag.tmp")
-      val dst = new org.apache.hadoop.fs.Path(s"$dir/ptr-$tag")
+    val checksummed = checksummedFs(dir)
+    for ((fs, tag) <- Seq((checksummed, "local"), (checksummed.getRawFileSystem, "rawlocal"))) {
+      val dst = new org.apache.hadoop.fs.Path(s"$dir/_control-$tag.json")
       write(fs, dst, "old")
-      write(fs, tmp, "new")
-      AtomicOverwrite.rename(conf, fs, tmp, dst) // must not throw (getScheme!)
-      assert(read(java.nio.file.Paths.get(dst.toUri.getPath)) == "new",
-        s"$tag: destination not flipped")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(tmp.toUri.getPath)), s"$tag: tmp residue")
+      AtomicOverwrite.publish(conf, dst, "new")
+      assert(verifiedRead(dst) == "new", s"$tag: destination not flipped")
     }
+    assert(residue(dir).isEmpty, s"publish left ${residue(dir).mkString(", ")}")
   }
 
-  /** r15 (ADVICE): the checksummed LocalFileSystem keeps a `.f.crc`
-    * sidecar per file, and the r14 NIO move transferred ONLY the data
-    * file. Two corruptions followed: every swap orphaned a stale
-    * `.CURRENT.tmp.crc`, and a dst sidecar written by a pre-r14
-    * checksummed writer (the old FileContext path renamed data+crc as a
-    * pair, so every pre-upgrade ledger HAS one) still described the OLD
-    * content — the first post-upgrade checksummed read then throws
-    * ChecksumException and LocalFileSystem QUARANTINES the pointer into
-    * bad_files: the ledger silently resets to generation 0, the exact
-    * loss mode AtomicOverwrite exists to close. This test constructs
-    * that pre-upgrade ledger shape and demands a verified read of the
-    * new content plus zero sidecar residue. */
   test("checksummed swap keeps sidecars consistent: verified read of new content, no stale or orphaned .crc") {
+    // the stale-sidecar shape: a checksummed writer leaves `.f.crc`
+    // beside the file, then a raw writer replaces the bytes under it —
+    // the sidecar now describes content the file no longer holds
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = java.nio.file.Files.createTempDirectory("atomic_crc").toString
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-      .asInstanceOf[org.apache.hadoop.fs.ChecksumFileSystem]
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/CURRENT")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/CURRENT.tmp")
-    // pre-upgrade ledger: CURRENT + matching .CURRENT.crc (checksummed
-    // create writes both, exactly as the old ChecksumFs rename left them)
-    write(fs, dst, "gen-000041")
+    val fs = checksummedFs(dir)
+    val dst = new org.apache.hadoop.fs.Path(s"$dir/_autocompact.json")
+    write(fs, dst, "{\"maxSmallGens\":4}")
     assert(fs.getRawFileSystem.exists(fs.getChecksumFile(dst)),
       "fixture broken: checksummed create must leave a dst sidecar")
-    write(fs, tmp, "gen-000042")
-    AtomicOverwrite.rename(conf, fs, tmp, dst)
-    // a FRESH checksummed fs (bypassing the cached instance) must read
-    // the new pointer back WITH verification — a stale sidecar throws
-    // ChecksumException here and quarantines CURRENT into bad_files
-    val fresh = org.apache.hadoop.fs.FileSystem
-      .newInstance(dst.toUri, conf)
-    try {
-      fresh.setVerifyChecksum(true)
-      val in = fresh.open(dst)
-      val got = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-      assert(got == "gen-000042", "pointer content not flipped")
-    } finally fresh.close()
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dst.toUri.getPath)),
-      "CURRENT vanished (quarantined into bad_files?)")
-    assert(!fs.getRawFileSystem.exists(fs.getChecksumFile(tmp)),
-      "orphaned .CURRENT.tmp.crc sidecar survived the swap")
-    // whatever sidecar remains for dst must describe the NEW bytes:
-    // re-verify by reading through yet another fresh instance
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/bad_files")) &&
-      !new java.io.File(dir).listFiles.exists(_.getName == "bad_files"),
-      "checksummed read quarantined the pointer")
+    write(fs.getRawFileSystem, dst, "{\"maxSmallGens\":16}")
+    AtomicOverwrite.publish(conf, dst, "{\"maxSmallGens\":8}")
+    assert(verifiedRead(dst) == "{\"maxSmallGens\":8}", "content not flipped")
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dst.toUri.getPath)),
+      "destination vanished (quarantined into bad_files?)")
+    assert(!fs.getRawFileSystem.exists(fs.getChecksumFile(dst)),
+      "a stale .crc survived beside the published file")
+    assert(residue(dir).isEmpty, s"publish left ${residue(dir).mkString(", ")}")
   }
 }

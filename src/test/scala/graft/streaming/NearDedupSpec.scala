@@ -15,26 +15,8 @@ import java.nio.file.Files
 class NearDedupSpec extends SparkSpecBase {
   import spark.implicits._
 
-  test("CURRENT-pointer swap: pointer flips whole, no tmp residue") {
-    // the rename-atomicity contract from the class scaladoc, pinned at
-    // its observable surface: every swap leaves CURRENT holding exactly
-    // the new generation name and removes CURRENT.tmp (the rename
-    // consumed it — a lingering tmp would mean a copy+delete fallback,
-    // which is NOT all-or-nothing). The unobservable half (no torn
-    // pointer mid-rename) is the documented HDFS/POSIX requirement; on
-    // S3A the contract says to front this with a metadata layer.
-    import org.apache.hadoop.fs.Path
-    val ledger = Files.createTempDirectory("graft_ptr").toString
-    val fs = new Path(ledger).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(GenPointer.readPtr(fs, ledger).isEmpty)
-    GenPointer.swapPtr(spark, fs, ledger, "gen-1")
-    assert(GenPointer.readPtr(fs, ledger).contains("gen-1"))
-    GenPointer.swapPtr(spark, fs, ledger, "gen-2")
-    assert(GenPointer.readPtr(fs, ledger).contains("gen-2"))
-    assert(!fs.exists(new Path(s"$ledger/CURRENT.tmp")),
-      "swap left CURRENT.tmp behind — rename was not the publish step")
-  }
+  private def sigsRows(ledger: String) = NearDedupStreams.sigsLedger(ledger).read(spark)
+  private def bucketRows(ledger: String) = NearDedupStreams.bucketsLedger(ledger).read(spark)
 
   test("near-dup ingest: streamed admission == sequential greedy; replay no-op") {
     // two sub-shingle-width docs (duplicates of each other): no
@@ -56,6 +38,7 @@ class NearDedupSpec extends SparkSpecBase {
     docs.filter($"doc_id" % 2 === 0).coalesce(1).write.mode("append").parquet(src)
     Thread.sleep(1100) // strictly increasing mtimes → deterministic batch order
     docs.filter($"doc_id" % 2 === 1).coalesce(1).write.mode("append").parquet(src)
+    val bucketsBefore = LedgerCopies.take(s"$ledger/buckets")
     NearDedupStreams.runOnce(spark, src, ledger, out, tau, ckpt)
 
     val got = spark.read.parquet(out).select($"doc_id")
@@ -92,32 +75,27 @@ class NearDedupSpec extends SparkSpecBase {
 
     // ledger state: one admission row per admitted doc (signless docs
     // carry a null sig — pure replay markers, invisible to similarity)
-    assert(NearDedupStreams.ledgerSigs(spark, ledger).count() == got.size)
+    assert(sigsRows(ledger).count() == got.size)
 
-    // full replay of wave 0: admitted docs are marked REPLAYED by the
-    // admission record and rewritten identically — corpus and ledger
-    // unchanged
+    // full replay of wave 0 by a writer the stream's watermark does not
+    // cover: admitted docs are marked REPLAYED by the admission record
+    // and rewritten identically — corpus and ledger unchanged, no bucket
+    // row added
+    val bucketCount = bucketRows(ledger).count()
     NearDedupStreams.nearDedupIngestSink(spark, ledger, out, tau)(
       docs.filter($"doc_id" % 2 === 0), 0L)
     assert(spark.read.parquet(out).select($"doc_id")
       .as[Long].collect().toSet == got)
-    assert(NearDedupStreams.ledgerSigs(spark, ledger).count() == got.size)
+    assert(sigsRows(ledger).count() == got.size)
+    assert(bucketRows(ledger).count() == bucketCount)
 
-    // crash window: sigs landed, buckets write lost. Simulate by
-    // deleting the buckets table outright, then replay BOTH batches
-    // (what a restarted stream does). The id guard must keep every
-    // originally-admitted doc in its partition (the pre-fix bug dropped
-    // them and admitted their rejected near-dups instead), and the
-    // bucket rows must be healed.
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(ledger).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = {
-      val in = fs.open(new Path(s"$ledger/CURRENT"))
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
-    }
-    fs.delete(new Path(s"$ledger/$gen/buckets"), true)
+    // crash window: sigs landed, buckets commits lost. Simulate by
+    // restoring the buckets table as it was before the stream ran (it
+    // did not exist), then replay BOTH batches (what a restarted stream
+    // does). The id guard must keep every originally-admitted doc in its
+    // partition (the pre-fix bug dropped them and admitted their rejected
+    // near-dups instead), and the bucket rows must be healed, once each.
+    LedgerCopies.restore(s"$ledger/buckets", bucketsBefore)
     NearDedupStreams.nearDedupIngestSink(spark, ledger, out, tau)(
       docs.filter($"doc_id" % 2 === 0), 0L)
     NearDedupStreams.nearDedupIngestSink(spark, ledger, out, tau)(
@@ -125,12 +103,11 @@ class NearDedupSpec extends SparkSpecBase {
     assert(spark.read.parquet(out).select($"doc_id")
       .as[Long].collect().toSet == got,
       "crash-window replay changed the corpus")
-    assert(NearDedupStreams.ledgerSigs(spark, ledger).count() == got.size)
-    assert(spark.read.schema(
-        "band INT, bucket BIGINT, doc_id BIGINT, pfx STRING")
-      .parquet(s"$ledger/$gen/buckets")
-      .select($"doc_id").distinct().count() == (got -- signless).size,
-      "bucket rows not healed for admitted docs")
+    assert(sigsRows(ledger).count() == got.size)
+    assert(bucketRows(ledger).select($"doc_id").distinct().count() ==
+      (got -- signless).size, "bucket rows not healed for admitted docs")
+    assert(bucketRows(ledger).count() == bucketRows(ledger).distinct().count(),
+      "healing committed a bucket row twice")
 
     // RESENT record (same doc_id, later batch): rejected by identity,
     // nothing rewritten anywhere
@@ -139,7 +116,7 @@ class NearDedupSpec extends SparkSpecBase {
     assert(spark.read.parquet(out).select($"doc_id")
       .as[Long].collect().toSet == got,
       "resent records changed the corpus")
-    assert(NearDedupStreams.ledgerSigs(spark, ledger).count() == got.size)
+    assert(sigsRows(ledger).count() == got.size)
     spark.catalog.clearCache()
   }
 
@@ -186,7 +163,7 @@ class NearDedupSpec extends SparkSpecBase {
   test("τ-boundary divergence: the sink decides on the signature ESTIMATE, not exact Jaccard") {
     // The batch-twin parity test above runs on DECISIVE fixtures where
     // estimate and exact agree; this pins the contract where they
-    // DISAGREE (r11 verdict #6). Both fixtures are a 40-token base doc
+    // DISAGREE. Both fixtures are a 40-token base doc
     // vs a tail-rewrite variant (replace the last k tokens): distinct
     // 5-shingles are 36 per doc, shared = 36-k, so exact J = (36-k)/(36+k)
     // exactly, while the 128-component signature estimate scatters
@@ -252,83 +229,79 @@ class NearDedupSpec extends SparkSpecBase {
   }
 
   test("long run: 21 batches + crash replays, compaction bounds files and rows") {
-    // the unbounded-growth question VERDICT flagged: over a long stream
-    // with crash-healing re-appends, do bucket duplicates and small
-    // per-batch files accumulate without bound, or does the periodic
-    // generation-swap compaction actually keep the ledger tight? Drive
-    // 21 micro-batches (docs sliced by doc_id % 21) with compactEvery=5
-    // and two simulated crash replays, then pin: duplicate rows exist
-    // BEFORE a compaction (the test bites), are exactly deduped after
-    // the final one, file counts collapse to one per partition, stale
-    // generations are pruned, and the admission record stays one row
-    // per admitted doc throughout.
+    // over a long stream with crash-healing re-appends, do bucket
+    // duplicates, small per-batch files and old versions accumulate
+    // without bound, or do auto-compaction and the vacuum after each
+    // fold keep both ledger tables tight? Drive 21 micro-batches (docs
+    // sliced by doc_id % 21) with two simulated crashes (the buckets
+    // commit lost after the sigs commit landed) and one full replay,
+    // then pin: bucket rows are never duplicated, live generations stay
+    // under the auto-compaction threshold, on-disk versions and
+    // generation directories stay bounded, and the admission record
+    // stays one row per admitted doc throughout.
     import org.apache.hadoop.fs.Path
     val docs = Tables.documents(spark, sf0001)
     val ledger = Files.createTempDirectory("graft_ndl_ledger").toString + "/l"
     val out = Files.createTempDirectory("graft_ndl_out").toString + "/o"
     val tau = 0.5
     val nBatches = 21
-    val sink = NearDedupStreams.nearDedupIngestSink(
-      spark, ledger, out, tau, compactEvery = 5) _
+    val sink = NearDedupStreams.nearDedupIngestSink(spark, ledger, out, tau) _
+    val tables = Seq("sigs" -> NearDedupStreams.sigsLedger(ledger),
+      "buckets" -> NearDedupStreams.bucketsLedger(ledger))
     val fs = new Path(ledger).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def currentGen: String = {
-      val in = fs.open(new Path(s"$ledger/CURRENT"))
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
+    def assertBounded(i: Int): Unit = tables.foreach { case (name, lake) =>
+      val n = lake.autoCompactConfig(spark).map(_._1)
+        .getOrElse(fail(s"batch $i: $name has no auto-compaction"))
+      val live = lake.dirsAt(spark, lake.latestVersion(spark).get).size
+      assert(live < n, s"batch $i: $name holds $live live generations")
+      val versions = lake.versions(spark).size
+      assert(versions <= n + 1, s"batch $i: $name keeps $versions versions")
+      val dirs = fs.listStatus(new Path(s"$ledger/$name"))
+        .count(_.getPath.getName.startsWith("gen-"))
+      assert(dirs < 2 * n, s"batch $i: $name keeps $dirs generation directories")
     }
-    def buckets = spark.read
-      .schema("band INT, bucket BIGINT, doc_id BIGINT, pfx STRING")
-      .parquet(s"$ledger/$currentGen/buckets")
+    def assertNoDupBuckets(i: Int): Unit = {
+      val b = bucketRows(ledger)
+      assert(b.count() == b.distinct().count(), s"batch $i: duplicate bucket rows")
+    }
     (0 until nBatches).foreach { i =>
-      sink(docs.filter($"doc_id" % nBatches === i), i.toLong)
-      // two crash replays mid-run: the healing re-append path that
-      // accumulates duplicate bucket rows
-      if (i == 7 || i == 13) sink(docs.filter($"doc_id" % nBatches === i), i.toLong)
+      val batch = docs.filter($"doc_id" % nBatches === i)
+      val bucketsBefore = LedgerCopies.take(s"$ledger/buckets")
+      sink(batch, i.toLong)
+      if (i == 7 || i == 13) {
+        // crash after the sigs commit: the buckets table is restored to
+        // its copy from before the batch, and the batch replays
+        LedgerCopies.restore(s"$ledger/buckets", bucketsBefore)
+        sink(batch, i.toLong)
+        assertNoDupBuckets(i)
+      }
+      assertBounded(i)
     }
-    // replays really did duplicate bucket rows (batches 15-20 appended
-    // since the last compaction at 15; the replay dups from 13 compacted
-    // away there, so re-create one dup now and measure pre-compaction)
-    sink(docs.filter($"doc_id" % nBatches === 19), 19L)
-    val (rows, distinctRows) = (buckets.count(), buckets.distinct().count())
-    assert(rows > distinctRows,
-      s"expected duplicate bucket rows before compaction ($rows vs $distinctRows)")
-    // batch 25 (25 % 5 == 0) compacts and swaps generations
-    sink(docs.filter($"doc_id" % nBatches === 4), 25L)
-    val gen = currentGen
-    assert(gen == "gen_c25", s"expected compacted generation, got $gen")
-    assert(buckets.count() == buckets.distinct().count(),
-      "compaction left duplicate bucket rows")
-    // file growth is bounded: compaction rewrites to one file per
-    // touched pfx partition (≤256), vs one-per-batch-per-partition
-    // accumulation without it
-    def parquetFiles(p: String): Int = {
-      val it = fs.listFiles(new Path(p), true)
-      var n = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
+    // auto-compaction really ran on both tables
+    tables.foreach { case (name, lake) =>
+      assert(lake.history(spark).filter($"op" === "compact").count() > 0,
+        s"$name never compacted")
     }
-    val bucketPfx = buckets.select($"pfx").distinct().count()
-    assert(parquetFiles(s"$ledger/$gen/buckets") <= bucketPfx,
-      "compacted buckets hold more than one file per partition")
-    // stale generations pruned: at most the current one plus its
-    // predecessor (deleted lazily on the NEXT compaction)
-    val gens = fs.listStatus(new Path(ledger))
-      .map(_.getPath.getName).filter(_.startsWith("gen_"))
-    assert(gens.length <= 2, s"stale generations not pruned: ${gens.mkString(",")}")
-    // admission record: exactly one sigs row per corpus doc, despite
-    // 3 replayed batches and 5 compactions
+    // a full replay of a committed batch is a no-op
     val corpus = spark.read.parquet(out).select($"doc_id").as[Long].collect().toSet
-    assert(NearDedupStreams.ledgerSigs(spark, ledger).count() == corpus.size)
-    assert(NearDedupStreams.ledgerSigs(spark, ledger)
-      .select($"doc_id").distinct().count() == corpus.size)
+    val bucketCount = bucketRows(ledger).count()
+    sink(docs.filter($"doc_id" % nBatches === 19), 19L)
+    assert(spark.read.parquet(out).select($"doc_id").as[Long].collect().toSet == corpus)
+    assert(bucketRows(ledger).count() == bucketCount)
+    assertNoDupBuckets(nBatches)
+    // admission record: exactly one sigs row per corpus doc, despite
+    // two healed crashes and a replay; every signed doc has its buckets
+    assert(sigsRows(ledger).count() == corpus.size)
+    assert(sigsRows(ledger).select($"doc_id").distinct().count() == corpus.size)
+    assert(bucketRows(ledger).select($"doc_id").distinct().count() ==
+      sigsRows(ledger).filter($"sig".isNotNull).count())
     spark.catalog.clearCache()
   }
 
   test("maxMisRounds bounds the per-batch MIS loop — LOUD error, not a stalled stream") {
     // the streaming twin of ScaleSpec's sequentialAdmission budget test
-    // (r13 review: the sink's loop was unbounded even after the batch
-    // path gained the knob): one micro-batch carrying a near-dup CHAIN
+    // (the sink's loop once stayed unbounded after the batch path
+    // gained the knob): one micro-batch carrying a near-dup CHAIN
     // 1-2, 2-3, ..., 9-10 (same 24-token sliding-window fixture — J =
     // 19/21 adjacent, 18/22 at distance 2, τ = 0.85 keeps exactly the
     // path) has greedy dependency depth 5, so maxMisRounds = 1 must
@@ -343,7 +316,7 @@ class NearDedupSpec extends SparkSpecBase {
     val out = Files.createTempDirectory("graft_nd_mis_out").toString + "/o"
     val e = intercept[IllegalStateException] {
       NearDedupStreams.nearDedupIngestSink(spark, ledger, out, tau,
-        compactEvery = 0, maxMisRounds = 1)(chain, 0L)
+        maxMisRounds = 1)(chain, 0L)
     }
     assert(e.getMessage.contains("maxMisRounds"),
       s"budget error must name the knob: ${e.getMessage}")
@@ -359,8 +332,7 @@ class NearDedupSpec extends SparkSpecBase {
     // ScaleSpec's batch-twin chain test.
     val ledger2 = Files.createTempDirectory("graft_nd_mis2").toString + "/l"
     val out2 = Files.createTempDirectory("graft_nd_mis_out2").toString + "/o"
-    NearDedupStreams.nearDedupIngestSink(spark, ledger2, out2, tau,
-      compactEvery = 0)(chain, 0L)
+    NearDedupStreams.nearDedupIngestSink(spark, ledger2, out2, tau)(chain, 0L)
     val admitted = spark.read.parquet(out2)
       .select($"doc_id").as[Long].collect().toSet
     assert(admitted.contains(1L) && admitted.size >= 3 &&

@@ -265,7 +265,7 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("doc ledger: null-text docs dedup consistently across both tiers") {
-    // r13 review: md5(NULL) = NULL made the tiers disagree — the
+    // md5(NULL) = NULL once made the tiers disagree — the
     // within-batch window collapsed NULL keys (groupBy semantics) while
     // the cross-batch anti-join on a NULL fp never matched, so the one
     // survivor was re-admitted every batch and never ledgered. The
@@ -295,111 +295,146 @@ class StreamingSpec extends SparkSpecBase {
       s"null-text doc escaped the ledger: $wave2")
   }
 
-  test("doc ledger: pruned prefix reads, bounded file count, replay-safe writes") {
-    import org.apache.hadoop.fs.Path
+  test("doc ledger: pruned scans, bounded versions, replay-safe writes") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val ledger = Files.createTempDirectory("graft_docs_ledger2").toString + "/l"
     val out = Files.createTempDirectory("graft_docs_out2").toString + "/o"
     val docs = Tables.documents(spark, sf0001)
-    val sink = DocStreams.dedupIngestSink(spark, ledger, out, compactEvery = 3) _
-    val fs = new Path(ledger).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // file count of the CURRENT generation — the set every future
-    // anti-join actually scans (the retained predecessor is a one-cycle
-    // reader-grace artifact, swept at the next compaction)
-    def currentGenFiles(): Int = {
-      val cur = {
-        val in = fs.open(new Path(s"$ledger/CURRENT"))
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        finally in.close()
-      }
-      val it = fs.listFiles(new Path(s"$ledger/$cur"), true)
-      var n = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
-    // 9 batches = 3 compaction cycles; file count must RETURN to ≤ one
-    // file per touched prefix after every compaction instead of growing
-    // one file set per batch forever
-    var postCompact = List.empty[Int]
+    val sink = DocStreams.dedupIngestSink(spark, ledger, out) _
+    val lake = DocStreams.ledger(ledger)
+    // 9 batches cross the auto-compaction threshold once; after every
+    // batch the live generations stay under it, and the vacuum after
+    // each fold keeps the on-disk versions bounded instead of growing
+    // one generation per batch forever
+    var beforeLast: Option[java.io.File] = None
     (1L to 9L).foreach { b =>
+      if (b == 9L) beforeLast = LedgerCopies.take(ledger)
       sink(docs.filter($"doc_id" % 9 === (b - 1)), b)
-      if (b % 3 == 0) postCompact ::= currentGenFiles()
+      val n = lake.autoCompactConfig(spark).map(_._1).getOrElse(fail("no auto-compaction"))
+      val live = lake.dirsAt(spark, lake.latestVersion(spark).get).size
+      assert(live < n, s"batch $b: $live live ledger generations")
+      assert(lake.versions(spark).size <= n + 1,
+        s"batch $b: ${lake.versions(spark).size} ledger versions on disk")
     }
-    val prefixes = spark.read.parquet(out).select(substring(md5($"text"), 1, 2))
-      .distinct().count()
-    postCompact.foreach(n => assert(n <= prefixes,
-      s"compaction left $n ledger files for $prefixes prefixes"))
-    assert(fs.listStatus(new Path(ledger))
-      .count(_.getPath.getName.startsWith("gen_")) <= 2)
-    // the anti-join's ledger read prunes on prefix partitions
-    val pruned = DocStreams.ledgerFingerprints(spark, ledger)
-      .filter($"pfx".isin("00", "a1"))
-    val scan = pruned.queryExecution.executedPlan.toString
-    assert("PartitionFilters: \\[[^\\]]*pfx".r.findFirstIn(scan).isDefined,
-      s"ledger read does not partition-prune on pfx:\n${scan.take(600)}")
+    assert(lake.history(spark).filter($"op" === "compact").count() > 0,
+      "the ledger never compacted")
+    // a batch of unseen documents scans only the ledger files whose
+    // Blooms may hold one of its fingerprints: fewer than the ledger has
+    val unseen = (1 to 5).map(i => s"unseen document $i").toDF("text")
+      .select(md5($"text").as("fp"))
+    val scan = DocStreams.ledgerScan(lake, unseen).get
+    scan.collect()
+    val filesRead = scan.queryExecution.executedPlan.collectFirst {
+      case s: FileSourceScanExec => s.metrics("numFiles").value
+    }.getOrElse(fail("no file scan in the ledger read"))
+    val held = lake.read(spark).inputFiles.length
+    assert(filesRead < held, s"unseen batch read $filesRead of $held ledger files")
     // ledger holds exactly the admitted fingerprints
-    assert(DocStreams.ledgerFingerprints(spark, ledger).count() ==
-      spark.read.parquet(out).count())
-    // full-replay idempotence: rerunning a completed batch changes nothing
     val n0 = spark.read.parquet(out).count()
+    assert(lake.read(spark).count() == n0)
+    // full-replay idempotence: rerunning a completed batch changes
+    // nothing, the batch whose commit folded the ledger included
     sink(docs.filter($"doc_id" % 9 === 3), 4L)
+    sink(docs.filter($"doc_id" % 9 === 7), 8L)
     assert(spark.read.parquet(out).count() == n0)
-    // replaying a completed COMPACTION batch (pointer already swapped to
-    // this batch's generation) must not re-compact — re-reading and
-    // overwriting the same path would wedge the stream permanently
+    assert(lake.read(spark).count() == n0)
+    // crash-between-writes replay: the corpus write landed but the
+    // ledger commit was lost (the ledger restored to its copy from
+    // before the batch); the rerun must OVERWRITE its own ingest_batch
+    // partition, not append duplicates, and re-ledger the batch
+    LedgerCopies.restore(ledger, beforeLast)
     sink(docs.filter($"doc_id" % 9 === 8), 9L)
-    assert(spark.read.parquet(out).count() == n0)
-    assert(DocStreams.ledgerFingerprints(spark, ledger).count() == n0)
-    // crash-between-writes replay: data landed but the ledger append was
-    // lost; the rerun must OVERWRITE its own ingest_batch partition, not
-    // append duplicates
-    val gen = fs.listStatus(new Path(ledger))
-      .map(_.getPath.getName).find(_.startsWith("gen_")).get
-    fs.delete(new Path(s"$ledger/$gen"), true) // simulate lost ledger
-    sink(docs.filter($"doc_id" % 9 === 3), 4L)
     assert(spark.read.parquet(out).count() == n0,
       "replay after ledger loss duplicated corpus rows")
+    assert(lake.read(spark).count() == n0)
+  }
+
+  test("doc ledger: query restarts neither replay nor swallow batch 0") {
+    val src = Files.createTempDirectory("graft_docs_rq_src").toString
+    val ledger = Files.createTempDirectory("graft_docs_rq_ledger").toString + "/l"
+    val out = Files.createTempDirectory("graft_docs_rq_out").toString + "/o"
+    val ckpt = Files.createTempDirectory("graft_docs_rq_ckpt").toString
+    val docs = Tables.documents(spark, sf0001)
+    docs.filter($"doc_id" % 2 === 0).coalesce(1).write.mode("append").parquet(src)
+    Thread.sleep(1100) // strictly increasing mtimes → deterministic batch order
+    docs.filter($"doc_id" % 2 === 1).coalesce(1).write.mode("append").parquet(src)
+    val lake = DocStreams.ledger(ledger)
+    def corpus(dir: String) = spark.read.parquet(dir)
+      .select($"doc_id", $"ingest_batch".cast("long")).as[(Long, Long)].collect().toSet
+    def ledgered = lake.read(spark).select($"fp", $"doc_id").as[(String, Long)].collect().toSet
+    def queryId(checkpoint: String): String = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(s"$checkpoint/metadata")).get("id").asText()
+    DocStreams.runOnce(spark, src, ledger, out, ckpt)
+    val (corpus0, ledger0) = (corpus(out), ledgered)
+    assert(corpus0.map(_._2) == Set(0L, 1L) && ledger0.size == corpus0.size)
+    // the same query restarted on its checkpoint: nothing is replayed
+    DocStreams.runOnce(spark, src, ledger, out, ckpt)
+    assert(corpus(out) == corpus0 && ledgered == ledger0)
+    // a fresh query (new checkpoint, its own corpus) against the same
+    // ledger: its batch 0 holds already-ledgered docs and unseen ones
+    val src2 = Files.createTempDirectory("graft_docs_rq_src2").toString
+    val out2 = Files.createTempDirectory("graft_docs_rq_out2").toString + "/o"
+    val ckpt2 = Files.createTempDirectory("graft_docs_rq_ckpt2").toString
+    val unseen = (1 to 3).map(i =>
+      (920000L + i, s"unseen document $i", "en", "synthetic", 17L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.limit(20).unionByName(unseen).coalesce(1).write.mode("append").parquet(src2)
+    DocStreams.runOnce(spark, src2, ledger, out2, ckpt2)
+    // batch 0 is not swallowed by the first query's watermark (1): the
+    // unseen docs are admitted in it, and nothing ledgered is re-admitted
+    assert(corpus(out2) == (1 to 3).map(i => (920000L + i, 0L)).toSet)
+    assert(lake.lastStreamBatchId(spark, Some(queryId(ckpt2))).contains(0L))
+    assert(lake.lastStreamBatchId(spark, Some(queryId(ckpt))).contains(1L))
+    assert(ledgered.size == ledger0.size + 3)
   }
 
   test("upsert snapshot sink: streamed merge == batch latest-per-user") {
-    val snap = Files.createTempDirectory("graft_snap").toString
+    import org.apache.spark.sql.DataFrame
+    val lake = new graft.ingest.SnapshotLake(
+      Files.createTempDirectory("graft_snap").toString + "/t")
     val ckpt = Files.createTempDirectory("graft_snap_ckpt").toString
+    val cols = Seq("user_id", "ts", "event_type", "value", "event_id").map(col)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
+    // the batch shape snaplakeUpsertSink takes: one row per user,
+    // last-wins by (ts, event_id) over the batch and the lake's current
+    // rows for the batch's users, so an older event arriving later
+    // cannot overwrite a newer one ('error' tombstones stay in the table
+    // for the same reason; the reader view hides them)
+    def upsert(batch: DataFrame, batchId: Long): Unit = {
+      val b = batch.select(cols: _*)
+      val current = lake.latestVersion(spark).fold(b.limit(0))(v =>
+        lake.readAt(spark, v).join(b.select($"user_id"), Seq("user_id"), "left_semi")
+          .select(cols: _*))
+      val collapsed = b.unionByName(current)
+        .withColumn("rk", row_number().over(w)).filter($"rk" === 1).drop("rk")
+      EventStreams.snaplakeUpsertSink(lake, Seq("user_id"))(collapsed, batchId)
+    }
+    def active = lake.read(spark).filter($"event_type" =!= "error")
+      .select($"user_id", $"event_id").as[(Long, Long)].collect().toSet
     val q = EventStreams.fromParquetDir(spark, stagedDir)
-      .select($"user_id", $"ts", $"event_type", $"value", $"event_id")
       .writeStream
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", ckpt)
-      .foreachBatch(EventStreams.upsertSnapshotSink(spark, snap) _)
+      .foreachBatch(upsert _)
       .start()
     q.awaitTermination()
-    val got = EventStreams.activeSnapshot(spark, snap)
-      .select($"user_id", $"event_id").as[(Long, Long)].collect().toSet
     // batch expectation: globally-latest event per user, hidden if it is
     // an 'error' tombstone
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
     val expected = Tables.events(spark, sf0001)
       .withColumn("rk", row_number().over(w)).filter($"rk" === 1)
       .filter($"event_type" =!= "error")
       .select($"user_id", $"event_id").as[(Long, Long)].collect().toSet
-    assert(got == expected)
+    assert(active == expected)
     // replaying the final micro-batch must not change the snapshot
     val last = spark.read.parquet(stagedDir).filter($"event_id" % 2 === 1)
-      .select($"user_id", $"ts", $"event_type", $"value", $"event_id")
-    EventStreams.upsertSnapshotSink(spark, snap)(last, 999L)
-    val again = EventStreams.activeSnapshot(spark, snap)
-      .select($"user_id", $"event_id").as[(Long, Long)].collect().toSet
-    assert(again == expected)
-    // crash-recovery replay of the SAME batch id (pointer already names
-    // its generation) must no-op, not read-and-overwrite one path
-    EventStreams.upsertSnapshotSink(spark, snap)(last, 999L)
-    val sameId = EventStreams.activeSnapshot(spark, snap)
-      .select($"user_id", $"event_id").as[(Long, Long)].collect().toSet
-    assert(sameId == expected)
-    // superseded generations are reaped: at most current + predecessor
-    val gens = new java.io.File(snap).listFiles()
-      .map(_.getName).filter(_.startsWith("gen_"))
-    assert(gens.length <= 2, s"generation dirs not bounded: ${gens.mkString(",")}")
+    upsert(last, 999L)
+    assert(active == expected)
+    // a crash-recovery replay of the SAME batch id is skipped whole
+    val v = lake.latestVersion(spark)
+    upsert(last, 999L)
+    assert(lake.latestVersion(spark) == v)
+    assert(active == expected)
   }
 }

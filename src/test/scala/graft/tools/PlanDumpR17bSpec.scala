@@ -14,7 +14,10 @@ class PlanDumpR17bSpec extends AnyFunSuite {
     // opt-in only: building ns_similarity_rebuild's query plan runs its
     // driver-side training collects at sf0.1 — too heavy for every suite
     // run, and the dump is a measurement tool, not a correctness pin
-    assume(sys.env.contains("GRAFT_PLAN_DUMP"),
+    // bound first: assume's message renders its expression, and on
+    // `sys.env.contains(...)` that is the whole environment
+    val planDumpRequested = sys.env.contains("GRAFT_PLAN_DUMP")
+    assume(planDumpRequested,
       "set GRAFT_PLAN_DUMP=1 to regenerate the plans/r17 dumps")
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[4]")

@@ -12,7 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanDumpR17cSpec extends AnyFunSuite {
 
   test("dump formatted plans for the r17c touched paths") {
-    assume(sys.env.contains("GRAFT_PLAN_DUMP"),
+    // bound first: assume's message renders its expression, and on
+    // `sys.env.contains(...)` that is the whole environment
+    val planDumpRequested = sys.env.contains("GRAFT_PLAN_DUMP")
+    assume(planDumpRequested,
       "set GRAFT_PLAN_DUMP=1 to regenerate the plans/r17 dumps")
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[4]")
