@@ -3,35 +3,38 @@ package graft.ingest
 import scala.jdk.CollectionConverters._
 
 /** A generation directory as one version reads it: whole, or only the
-  * data files `files` names — what a merge that rewrote some of the
-  * generation's files leaves of it — with the deletion vector of each
-  * data file a delete marked rows of (`dvs`, by file name). */
+  * data files `files` names — what is left of it once some of its files
+  * lost every row — with the deletion vector of each data file a merge
+  * or a delete marked rows of (`dvs`, by file name). */
 private[graft] final case class GenRef(dir: String, files: Option[Seq[String]] = None,
     dvs: Map[String, Dv] = Map.empty)
 
 /** One [[SnapshotLake]] commit file (`_commits/v%08d.json`): the
   * generation directories `version` reads, in manifest order, and in
   * `files` the data files of each directory it reads only in part; the
-  * operation that published it; whether that operation materialized its
-  * one new generation's changefeed (`rewrite` — a restore
-  * re-referencing that generation does not own its `_cdf/`); a
-  * streaming writer's exactly-once marker, `batchId` scoped by
-  * `queryId`; in `dvs`, per directory, the deletion vector of each data
-  * file with deleted rows: the `_dv/` file holding its bitmap and the
-  * rows it marks ([[Dv]], [[DeletionVectors]]); and a rewrite's or a
-  * delete's file, byte and row counts ([[Commit.Metrics]]). Absent
-  * options, an empty `files` or `dvs` and a false `rewrite` are not
-  * written:
+  * operation that published it; a streaming writer's exactly-once
+  * marker, `batchId` scoped by `queryId`; in `dvs`, per directory, the
+  * deletion vector of each data file with replaced or deleted rows: the
+  * `_dv/` file holding its bitmap and the rows it marks ([[Dv]],
+  * [[DeletionVectors]]); and a mutation's file, byte and row counts
+  * ([[Commit.Metrics]]). Absent options and an empty `files` or `dvs`
+  * are not written:
   * {{{
-  *   {"version":7,"op":"merge","batchId":3,"queryId":"q","rewrite":true,
-  *    "dirs":["gen-0a1b","gen-ab12"],"files":{"gen-0a1b":["part-00001.parquet"]},
-  *    "metrics":{"files_added":1,"bytes_added":2048,...}}
+  *   {"version":7,"op":"merge","batchId":3,"queryId":"q",
+  *    "dirs":["gen-0a1b","gen-ab12"],
+  *    "dvs":{"gen-0a1b":{"part-00000.parquet":{"file":"dv-5e6f….json","rows":1}}},
+  *    "metrics":{"files_added":1,"bytes_added":2048,...,"rows_removed":1,"dvs_changed":1}}
   *   {"version":8,"op":"delete","dirs":["gen-0a1b","gen-ab12"],
   *    "files":{"gen-0a1b":["part-00001.parquet"]},
   *    "dvs":{"gen-ab12":{"part-00000.parquet":{"file":"dv-77aa….json","rows":2}}},
   *    "metrics":{"files_added":0,...,"rows_removed":2,"dvs_changed":1}}
   * }}}
-  * A file without `op` (an older writer's) reads as `unknown`. */
+  * A file without `op` (an older writer's) reads as `unknown`. A commit
+  * written before merges marked rows may carry `"rewrite":true`: its
+  * operation materialized its one new generation's changefeed in
+  * `_cdf/`, which only that commit owns (a restore re-referencing the
+  * generation does not). It parses and re-serializes; no writer sets
+  * it. */
 private[graft] final case class Commit(version: Long, op: String,
     dirs: Seq[String], rewrite: Boolean = false,
     batchId: Option[Long] = None, queryId: Option[String] = None,
@@ -84,19 +87,20 @@ private[graft] object Commit {
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** A commit over manifest `gens`. */
-  def of(version: Long, op: String, gens: Seq[GenRef], rewrite: Boolean = false,
+  def of(version: Long, op: String, gens: Seq[GenRef],
       batchId: Option[Long] = None, queryId: Option[String] = None,
       metrics: Option[Metrics] = None): Commit =
-    Commit(version, op, gens.map(_.dir), rewrite, batchId, queryId,
+    Commit(version, op, gens.map(_.dir), false, batchId, queryId,
       gens.flatMap(g => g.files.map(g.dir -> _)).toMap, metrics,
       gens.filter(_.dvs.nonEmpty).map(g => g.dir -> g.dvs).toMap)
 
-  /** What a rewrite (merge, compaction, optimize) or a delete did, in
-    * data files and their bytes: written into its new generation, read
-    * and replaced (or, for a delete, left the manifest because every row
-    * was deleted), and carried into the new version by reference. A
-    * delete also counts the rows it removed and the files whose deletion
-    * vector it changed; other operations leave those two unset. */
+  /** What a mutation (merge, delete, compaction, optimize) did, in data
+    * files and their bytes: written into its new generation, read and
+    * replaced (or, for a merge or a delete, left the manifest because
+    * every row was removed), and carried into the new version by
+    * reference. A merge or a delete also counts the rows it removed and
+    * the files whose deletion vector it changed; other operations leave
+    * those two unset. */
   final case class Metrics(filesAdded: Long, bytesAdded: Long,
       filesRemoved: Long, bytesRemoved: Long,
       filesCarried: Long, bytesCarried: Long,

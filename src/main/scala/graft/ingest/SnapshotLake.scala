@@ -3,8 +3,9 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute,
   AttributeReference, Cast, EqualTo, EvalMode, Expression, GreaterThanOrEqual,
-  LessThanOrEqual, Literal, Or}
+  LessThanOrEqual, Literal, Or, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf.StoreAssignmentPolicy
@@ -20,20 +21,24 @@ import org.roaringbitmap.RoaringBitmap
   * {{{
   *   root/
   *     _commits/v00000001.json   // {"version":1,"op":"create","dirs":["gen-ab12cd34"]}
-  *     _commits/v00000002.json   // {"version":2,"op":"merge","rewrite":true,
+  *     _commits/v00000002.json   // {"version":2,"op":"merge",
   *                               //  "dirs":["gen-ab12cd34","gen-99ff0011"],
-  *                               //  "files":{"gen-ab12cd34":["part-00001-….parquet"]},
+  *                               //  "dvs":{"gen-ab12cd34":{"part-00000-….parquet":
+  *                               //    {"file":"dv-5e6f….json","rows":2}}},
   *                               //  "metrics":{"files_added":1,…}}
   *     _commits/v00000003.json   // {"version":3,"op":"delete","dirs":[…],"files":{…},
-  *                               //  "dvs":{"gen-99ff0011":{"part-00000-….parquet":
-  *                               //    {"file":"dv-5e6f….json","rows":2}}},…}
-  *     _dv/dv-5e6f….json         // the deletion vectors one delete changed
+  *                               //  "dvs":{…},…}
+  *     _dv/dv-5e6f….json         // the deletion vectors one merge or delete changed
   *     gen-ab12cd34/  ...parquet...
   *                    _stats.json    // per-file envelopes + the Spark schema
   *                    _blooms.json   // per-file Blooms (auto-Blooms / computeBlooms)
-  *                    _cdf/          // row-level changes of a merge or compaction
-  *     gen-99ff0011/  ...parquet...
+  *     gen-99ff0011/  ...parquet...  // the merge's source rows
   * }}}
+  *
+  * Commits written before merges marked rows may also carry
+  * `"rewrite":true`, and their one new generation a `_cdf/` directory
+  * holding the row-level changes the merge (or, empty, the compaction)
+  * materialized; only the changefeed of those older commits reads it.
   *
   * A generation's metadata is captured by the pass that writes it,
   * before its commit publishes it: the write job itself fills the
@@ -68,17 +73,18 @@ import org.roaringbitmap.RoaringBitmap
   * Append commits reference the previous snapshot's directories plus the
   * new generation — O(1) data movement per append, like a table format's
   * manifest reuse; overwrite commits reference only the new generation.
-  * A merge rewrites only the data files that may hold a row in its scope
-  * and carries the rest by reference, so a commit may read a generation
-  * in part: its record names that generation's remaining files
-  * ([[GenRef]]). A delete copies no file: it gives each data file with a
-  * deleted row a deletion vector ([[DeletionVectors]]) that every read
-  * applies.
+  * Neither a merge nor a delete copies a data file: each gives every
+  * data file with a replaced or deleted row a deletion vector
+  * ([[DeletionVectors]]) that every read applies, and a merge writes its
+  * source as one new generation. A file whose rows are all gone leaves
+  * the manifest, so a commit may read a generation in part: its record
+  * names that generation's remaining files ([[GenRef]]).
   * Schemas may evolve across appends: a version reads under the union
   * of its generations' schemas, as a `mergeSchema` read would infer it.
   */
 object SnapshotLake {
-  /** Changefeed meta columns and the per-generation CDF directory name
+  /** Changefeed meta columns, and the per-generation changefeed
+    * directory of commits written before merges marked rows
     * (`_`-prefixed: invisible to the generation's data reads). */
   val ChangeTypeCol = "_change_type"
   val CommitVersionCol = "_commit_version"
@@ -173,10 +179,11 @@ class SnapshotLake(root: String) {
     * that published it (`create`/`append`/`overwrite`/`merge`/`delete`/
     * `optimize`/`zorder`/`compact`/`restore`; commits from writers
     * predating the tag read as `unknown`), the generation count, the
-    * publication instant ([[versionAt]]'s clock), and for a rewrite or a
-    * delete the data files and bytes it added, removed and carried by
-    * reference, and for a delete the rows it removed and the files whose
-    * deletion vector it changed ([[Commit.Metrics]]; null where an
+    * publication instant ([[versionAt]]'s clock), and for a merge, a
+    * delete or a rewrite the data files and bytes it added, removed and
+    * carried by reference, and for a merge or a delete the rows it
+    * removed and the files whose deletion vector it changed
+    * ([[Commit.Metrics]]; null where an
     * operation does not record them). Metadata-only:
     * one commit record per version, no data touched. Built with an
     * explicit schema (the createDataFrame/REPL-classloader contract
@@ -221,7 +228,7 @@ class SnapshotLake(root: String) {
     GraftBridge.ofRows(spark, LogicalRelation(relation(spark, gens, schema)))
 
   /** The one scan of snaplake data: the data files of directories `gens`
-    * (relative to the root — generations, or a rewrite's `_cdf/`; a
+    * (relative to the root — generations, or an older rewrite's `_cdf/`; a
     * [[GenRef]] with a file subset reads only those files) as Spark's own
     * parquet relation under `schema`, so pushdown, column pruning and
     * vectorized decoding are the parquet scan's. A file with a deletion
@@ -560,21 +567,18 @@ class SnapshotLake(root: String) {
   /** Write `df` as the still-UNPUBLISHED generation `gen` with its
     * metadata: the auto-Bloom sidecar from the write job itself, then
     * the footer-harvested stats and schema — all inside the generation,
-    * so they are immutable alongside the data they describe — then the
-    * constraint check, and last the rewrite's changefeed (`_cdf/`, a
-    * `_`-prefixed subdirectory invisible to data reads). */
-  private def writeGen(spark: SparkSession, df: DataFrame, gen: String,
-      changes: Option[DataFrame] = None): Unit = {
+    * so they are immutable alongside the data they describe — and last
+    * the constraint check. */
+  private def writeGen(spark: SparkSession, df: DataFrame, gen: String): Unit = {
     GenWriter.write(df, s"$root/$gen", autoBloomRequest(spark))
     GenStats.write(spark.sparkContext.hadoopConfiguration, s"$root/$gen")
     validateGen(spark, gen)
-    changes.foreach(GenWriter.write(_, s"$root/$gen/${SnapshotLake.CdfDirName}"))
   }
 
   /** Test seam: invoked after a mutation has written what it publishes
-    * (a merge's rewrite generation, a delete's deletion vectors) but
-    * before it claims the commit — the window a concurrent commit would
-    * race into. No-op in production. */
+    * (a merge's source generation, its or a delete's deletion vectors, a
+    * compaction's generation) but before it claims the commit — the
+    * window a concurrent commit would race into. No-op in production. */
   protected def onBeforePublish(): Unit = ()
 
   // ------------------------------------------------ auto bloom tier
@@ -583,10 +587,11 @@ class SnapshotLake(root: String) {
     s"$root/_bloomcols.json")
 
   /** Table-level bloom freshness: once enabled, EVERY write path
-    * (append/overwrite commits, merge/delete rewrites, optimize) builds
-    * `_blooms.json` for its new generation before publishing, so
-    * point-lookup skipping and merge/delete bloom scoping never decay
-    * to envelope-only as the table accretes commits. [[computeBlooms]]
+    * (append/overwrite commits, a merge's source, compaction,
+    * optimize) builds `_blooms.json` for its new generation before
+    * publishing, so point-lookup skipping and merge/delete bloom
+    * scoping never decay to envelope-only as the table accretes
+    * commits. [[computeBlooms]]
     * remains the one-shot backfill for generations that predate the
     * setting. Each file's Bloom is sized to the rows it holds, with
     * `expectedNdvPerFile` as the cap ([[GenBlooms.sized]]).
@@ -658,7 +663,7 @@ class SnapshotLake(root: String) {
     * [[enableAutoBlooms]], and what keeps the streaming ledgers
     * ([[graft.streaming.DocStreams]]) bounded: once enabled, EVERY
     * publishing path — append/overwrite commits, streamed
-    * micro-batches, and the merge/delete/optimize rewrites — checks
+    * micro-batches, merges, deletes and optimize — checks
     * the small-generation tail and runs [[compactSmall]] when it has
     * accumulated `maxSmallGens` generations under `smallBytes` each.
     * (commitInitial is exempt: a one-generation table has no tail.)
@@ -858,30 +863,29 @@ class SnapshotLake(root: String) {
     }
   }
 
-  /** Copy-on-write UPSERT: target rows whose key equals a source row's
+  /** Merge-on-read UPSERT: target rows whose key equals a source row's
     * key are replaced by that source row; source rows matching nothing
-    * insert. The rewrite is scoped by a predicate over the key columns —
-    * each key within the source's [min, max], and, for a source of at
-    * most [[SnapshotLake.BloomScopeCap]] distinct keys, one of its key
-    * tuples — judged per data file by [[mayMatch]], the read path's own
-    * envelope and Bloom check. The source's columns that the table
-    * already has are first cast to the table's types ([[conform]]), so
-    * keys compare, scope and are stored in the table's own type; a key
-    * over a collated string column does not bound the scope. A file that
-    * provably holds no match CARRIES FORWARD into the new commit
-    * untouched, also when other files of its generation are rewritten —
-    * on a 100 TB table where upserts land in the recent key range, the
-    * rewrite touches the tail files and the commit re-references the
-    * rest, a table format's file-level MERGE scoping. Files without
-    * stats (older writers) rewrite conservatively.
+    * insert. No target row is copied: the merge marks the positions of
+    * the rows it replaces in deletion vectors, as [[delete]] does, and
+    * writes the source as one new generation. Only data files that may
+    * hold a key in scope are scanned for those rows — each key within the
+    * source's [min, max], and, for a source of at most
+    * [[SnapshotLake.BloomScopeCap]] distinct keys, one of its key tuples
+    * — judged per file by [[mayMatch]], the read path's own envelope and
+    * Bloom check; files without stats (older writers) are scanned
+    * conservatively. The source's columns that the table already has are
+    * first cast to the table's types ([[conform]]), so keys compare,
+    * scope and are stored in the table's own type; a key over a collated
+    * string column does not bound the scope.
     *
     * Contract: source keys should be unique (a duplicated source key
     * inserts duplicates, same as repeated appends); null source keys
     * never match a target row and insert as-is. Publication is
-    * optimistic ([[publishRewrite]]): a racing commit whose new
-    * generations are out of the merge's scope is rebased across; any
-    * other race aborts with ConcurrentModificationException (cleaning up
-    * its generation) instead of silently dropping the winner's rows —
+    * optimistic ([[publishMarks]]): a racing commit whose new files are
+    * out of the merge's scope, and which left the files it marks as they
+    * were, is rebased across; any other race aborts with
+    * ConcurrentModificationException (cleaning up its generation and
+    * deletion vectors) instead of silently dropping the winner's rows —
     * rerun to rebase.
     */
   def merge(source: DataFrame, keyCols: Seq[String]): Long =
@@ -904,21 +908,38 @@ class SnapshotLake(root: String) {
       sys.error(s"merge into a never-committed lake: $root"))
     val gens = commitAt(spark, base).gens
     val snapSchema = schemaOf(spark, gens.map(_.dir))
-    // the source plan is consumed by the envelope agg, both key joins,
-    // the rewrite, and the changefeed — cache it so an expensive or
-    // non-deterministic source executes ONCE and the committed table
-    // cannot disagree with its own materialized changes
+    // the key collect, the marking scan and the write each read the
+    // source: cache it so an expensive or non-deterministic source runs
+    // ONCE and the rows written cannot disagree with the rows marked
     val src = conform(source, snapSchema).persist()
     try {
-      // the merge's key scope as a predicate over the key columns, judged
-      // per file by the read path's own check ([[mayMatch]]).
-      // Envelope part: per key `k >= min AND k <= max` of the source,
-      // from one tiny agg job. A key with no non-null source value
-      // matches no target row (equi-join semantics), so the scope is
-      // `false`: an empty or all-null-key source rewrites nothing and the
-      // merge degrades to a plain append.
-      val aggs = keyCols.flatMap(k => Seq(min(col(k)).as(s"mn_$k"), max(col(k)).as(s"mx_$k")))
-      val env = src.agg(aggs.head, aggs.tail: _*).collect()(0)
+      // the merge's key scope, judged per file by the read path's own check
+      // ([[mayMatch]]). One job, a task per partition of the cached source
+      // (filling the cache), collects the distinct key tuples up to the cap.
+      val srcKeys = src.select(keyCols.map(col): _*)
+      val keyTypes = srcKeys.schema.map(_.dataType)
+      val keys = srcKeys.queryExecution.toRdd.mapPartitions { rows =>
+        val proj = UnsafeProjection.create(keyTypes.toArray)
+        val seen = scala.collection.mutable.HashSet.empty[UnsafeRow]
+        while (rows.hasNext && seen.size <= SnapshotLake.BloomScopeCap) seen += proj(rows.next()).copy()
+        Iterator.single(seen.toArray)
+      }.collect().flatten.distinct
+      val fits = keys.length <= SnapshotLake.BloomScopeCap
+      // Envelope part: per key `k >= min AND k <= max` of the source, from
+      // the tuples when they fit the cap, else from a parallel agg. A key
+      // with no non-null source value matches no target row (equi-join
+      // semantics), so the scope is `false`: an empty or all-null-key
+      // source marks nothing and the merge degrades to a plain append.
+      val bounds: Seq[Option[(Literal, Literal)]] = if (fits) keyTypes.zipWithIndex.map { case (t, i) =>
+        val vs = keys.filterNot(_.isNullAt(i)).map(_.get(i, t))
+        lazy val o = TypeUtils.getInterpretedOrdering(t)
+        if (vs.isEmpty) None else Some((Literal(vs.min(o), t), Literal(vs.max(o), t)))
+      } else {
+        val aggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k))))
+        val env = src.agg(aggs.head, aggs.tail: _*).collect()(0)
+        keyTypes.indices.map(i => Option.when(!env.isNullAt(2 * i))((
+          Literal.create(env.get(2 * i), keyTypes(i)), Literal.create(env.get(2 * i + 1), keyTypes(i)))))
+      }
       // Conformed, a source key has its target column's type. A collated
       // string key still proves nothing from stored values: the join
       // compares it case-blind, the envelope orders bytes. Such a key,
@@ -930,73 +951,50 @@ class SnapshotLake(root: String) {
             .filter(f => f.dataType match { case s: StringType => s == StringType; case _ => true })
             .map(f => (AttributeReference(f.name, f.dataType)(), i))
       }
-      def litOf(a: AttributeReference, v: Any) = Literal.create(v, a.dataType)
       val envScope: Expression =
-        if (keyCols.exists(k => env.isNullAt(env.fieldIndex(s"mn_$k")))) Literal.FalseLiteral
+        if (bounds.exists(_.isEmpty)) Literal.FalseLiteral
         else keyAttrs.map { case (a, i) =>
-          And(GreaterThanOrEqual(a, litOf(a, env.getAs[Any](s"mn_${keyCols(i)}"))),
-            LessThanOrEqual(a, litOf(a, env.getAs[Any](s"mx_${keyCols(i)}")))): Expression
+          val (lo, hi) = bounds(i).get
+          And(GreaterThanOrEqual(a, lo), LessThanOrEqual(a, hi)): Expression
         }.reduceOption(And).getOrElse(Literal.TrueLiteral)
-      val srcKeys = src.select(keyCols.map(col): _*).distinct()
-      // Bloom part: when the distinct source key set is small (a bounded
-      // metadata collect), the disjunction of the key tuples' equalities
-      // lets a file whose Blooms reject every tuple carry forward even
-      // when its envelope intersects — the unsorted-layout case, where
-      // every file's envelope spans the key domain. Tuples holding NULL
-      // match nothing and are dropped. Each tuple lies inside the
-      // envelope, so once a file passes the envelope part the key part
-      // alone is the stricter check. LAZY: the collect runs only once a
-      // file in envelope scope has a Bloom sidecar, so tables without
-      // Blooms never pay for it.
-      lazy val inKeyScope = mayMatch(spark, if (keyAttrs.isEmpty) Nil else {
-        val head = srcKeys.limit(SnapshotLake.BloomScopeCap + 1).collect()
-        if (head.length > SnapshotLake.BloomScopeCap) Nil
-        else Seq(head.toSeq.filterNot(r => keyCols.indices.exists(r.isNullAt))
-          .map(r => keyAttrs.map { case (a, i) => EqualTo(a, litOf(a, r.get(i))): Expression }
-            .reduce(And))
-          .reduceOption(Or).getOrElse(Literal.FalseLiteral))
-      })
+      // Bloom part, for tuples within the cap: the disjunction of their
+      // equalities lets a file whose Blooms reject every tuple go unscanned
+      // even when its envelope intersects (the unsorted layout, where every
+      // envelope spans the key domain). Tuples holding NULL match nothing.
+      // Every tuple lies in the envelope, so this check is the stricter one.
+      val inKeyScope = mayMatch(spark, if (keyAttrs.isEmpty || !fits) Nil else
+        Seq(keys.toSeq.filterNot(r => keyCols.indices.exists(r.isNullAt))
+          .map(r => keyAttrs.map { case (a, i) =>
+            EqualTo(a, Literal(r.get(i, keyTypes(i)), keyTypes(i))): Expression }.reduce(And))
+          .reduceOption(Or).getOrElse(Literal.FalseLiteral)))
       val inEnvelope = mayMatch(spark, Seq(envScope))
       val conf = spark.sparkContext.hadoopConfiguration
       def inScope(gen: String): String => Boolean = {
         val envelope = inEnvelope(gen)
         if (!GenBlooms.load(conf, s"$root/$gen").exists(_.nonEmpty)) envelope
         else {
-          lazy val keys = inKeyScope(gen)
-          file => envelope(file) && keys(file)
+          lazy val inKeys = inKeyScope(gen)
+          file => envelope(file) && inKeys(file)
         }
       }
-      val affected = scoped(spark, gens, inScope)
-      import org.apache.spark.sql.functions.lit
-      // affected files read under the SNAPSHOT's full schema (missing
-      // columns null-filled), not bare mergeSchema over the affected
-      // subset: under schema evolution the subset can predate a key
-      // column entirely, and the key joins below would fail analysis on
-      // an unresolved column — null-filled, such rows simply match no
+      val affected = narrow(spark, gens)(inScope)
+      // the files in scope read under the SNAPSHOT's full schema (missing
+      // columns null-filled): under schema evolution they can predate a
+      // key column entirely, and the key join below would fail analysis
+      // on an unresolved column — null-filled, such rows simply match no
       // source key, which is the correct semantics
-      val affectedDf = if (affected.isEmpty) None
-        else Some(readGens(spark, affected, snapSchema))
-      val keep = affectedDf.map(_.join(srcKeys, keyCols, "left_anti"))
-      val rewritten = keep match {
-        case Some(k) => k.unionByName(src, allowMissingColumns = true)
-        case None => src
+      val marks = if (affected.isEmpty) Map.empty[String, RoaringBitmap] else {
+        val target = readGens(spark, affected, snapSchema)
+        DeletionVectors.mark(target.join(srcKeys,
+          keyCols.map(k => target(k) === srcKeys(k)).reduce(_ && _), "left_semi"))
       }
-      // row-level changefeed, materialized while we still know exactly
-      // what changed: pre-images of replaced target rows as deletes,
-      // every source row as an insert (an update is its pair)
-      val deletes = affectedDf.map(
-        _.join(srcKeys, keyCols, "left_semi")
-          .withColumn(SnapshotLake.ChangeTypeCol, lit("delete")))
-      val inserts = src.withColumn(SnapshotLake.ChangeTypeCol, lit("insert"))
-      val changes = deletes match {
-        case Some(d) => d.unionByName(inserts, allowMissingColumns = true)
-        case None => inserts
-      }
+      val gen = newGenName()
+      // validated like any ingest: a merge source can violate
+      writeGen(spark, src, gen)
       // rebase-across check = the scoping check (envelope AND bloom
       // tiers): a racing commit's new file is safe to carry forward iff
       // it provably holds none of this merge's keys
-      publishRewrite(spark, base, affected, rewritten, changes,
-        mayOverlapScope = inScope, op = "merge", batchId = batchId, queryId = queryId)
+      publishMarks(spark, base, affected, marks, inScope, "merge", Some(gen), batchId, queryId)
     } finally src.unpersist()
   }
 
@@ -1004,16 +1002,14 @@ class SnapshotLake(root: String) {
     * file is copied. The data files that [[mayMatch]] — the read path's
     * own envelope and Bloom check — keeps in scope are scanned once for
     * the positions of their matching rows ([[DeletionVectors.mark]]), and
-    * the commit gives each file with a match a deletion vector: its
-    * earlier one unioned with the new marks, all stored in one new `_dv/`
-    * file. A file whose vector covers every row leaves the manifest
-    * instead. Every read of the table skips the marked rows
-    * ([[relation]]); a merge, compaction or optimize that rewrites the
-    * file drops them and its vector. Returns the current version
-    * unchanged when no row matches, including a predicate that folds to
-    * `false` (a free no-op). Same optimistic-abort publication contract
-    * as merge: a racing commit that changed the vector of, or rewrote, a
-    * file this delete marks aborts it. */
+    * the commit gives each file with a match a deletion vector
+    * ([[publishMarks]]). Every read of the table skips the marked rows
+    * ([[relation]]); a compaction or optimize that rewrites the file
+    * drops them and its vector. Returns the current version unchanged
+    * when no row matches, including a predicate that folds to `false` (a
+    * free no-op). Same optimistic-abort publication contract as merge: a
+    * racing commit that changed the vector of, or rewrote, a file this
+    * delete marks aborts it. */
   def delete(spark: SparkSession, predicate: org.apache.spark.sql.Column): Long = {
     val base = latestVersion(spark).getOrElse(
       sys.error(s"delete from a never-committed lake: $root"))
@@ -1047,10 +1043,30 @@ class SnapshotLake(root: String) {
     val marks = DeletionVectors.mark(readGens(spark, affected, schema).filter(
       org.apache.spark.sql.functions.coalesce(predicate, org.apache.spark.sql.functions.lit(false))))
     if (marks.isEmpty) return base
+    publishMarks(spark, base, affected, marks, inScope, "delete")
+  }
+
+  /** Publish a mutation of version `base` that removes the rows `marks`
+    * holds (row positions by [[DeletionVectors.key]]) from the files of
+    * `affected` and adds generation `added`, if any (a merge's source).
+    * Each file with a mark gets a deletion vector: its earlier one
+    * unioned with the new marks, all stored in one new `_dv/` file. A
+    * file whose vector covers every row (its `_stats.json` row count)
+    * leaves the manifest instead; if no file is left, the generations
+    * stay reading none, so the table keeps its schema. The files with a
+    * mark are what the mutation consumed ([[publish]]'s conflict check,
+    * with `mayOverlapScope` for racing commits' new files); an abort
+    * removes the `_dv/` file and `added`. The commit records the files
+    * and bytes added, removed and carried, the rows removed and the
+    * vectors changed ([[Commit.Metrics]]). */
+  private def publishMarks(spark: SparkSession, base: Long, affected: Seq[GenRef],
+      marks: Map[String, RoaringBitmap], mayOverlapScope: String => String => Boolean,
+      op: String, added: Option[String] = None, batchId: Option[Long] = None,
+      queryId: Option[String] = None): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val consumed = narrow(spark, affected)(d => f => marks.contains(DeletionVectors.key(d, f)))
-    val vectors = for (g <- consumed; (f, _) <- liveFiles(spark, g))
-      yield (g.dir, f, RoaringBitmap.or(marks(DeletionVectors.key(g.dir, f)), vectorOf(spark, g, f)))
+    val vectors = for (g <- consumed; (f, _) <- liveFiles(spark, g)) yield (g.dir, f, RoaringBitmap.or(
+      marks(DeletionVectors.key(g.dir, f)), vectorOf(spark, g.dir, f, g.dvs.get(f))))
     val (emptied, marked) = vectors.partition { case (d, f, all) =>
       GenStats.load(conf, s"$root/$d").flatMap(_.get(f)).exists(_.rows == all.getLongCardinality)
     }
@@ -1060,28 +1076,32 @@ class SnapshotLake(root: String) {
     val changed = marked.groupBy(_._1).map { case (d, files) =>
       d -> files.map { case (_, f, all) => f -> Dv(dvFile.get, all.getLongCardinality) }.toMap
     }
+    val fresh = added.map(GenRef(_)).toSeq
+    val (addedN, addedB) = filesAndBytes(spark, fresh)
     val (removedN, removedB) = filesAndBytes(spark, narrow(spark, consumed)(d => f => gone((d, f))))
     val rows = marks.values.map(_.getLongCardinality).sum
-    publish(spark, base, consumed, "delete", dvFile.getOrElse(newGenName()),
-      mayOverlapScope = inScope,
-      discard = () => dvFile.foreach(f => rawFs(spark).delete(dvPath(f), false)),
-      manifest = hs => narrow(spark, hs)(d => f => !gone((d, f))).map(g =>
+    publish(spark, base, consumed, op, added.orElse(dvFile).getOrElse(newGenName()),
+      mayOverlapScope,
+      discard = () => {
+        dvFile.foreach(f => rawFs(spark).delete(dvPath(f), false))
+        added.foreach(g => hadoopFs(spark).delete(new org.apache.hadoop.fs.Path(s"$root/$g"), true))
+      },
+      manifest = hs => (narrow(spark, hs)(d => f => !gone((d, f))).map(g =>
         changed.get(g.dir).fold(g)(c => g.copy(dvs = g.dvs ++ c))) match {
-        // with every row gone the generations stay, reading no file, so
-        // the table keeps its schema
         case Nil => hs.map(g => GenRef(g.dir, Some(Nil)))
         case kept => kept
-      },
+      }) ++ fresh,
       metrics = m => {
-        val (n, b) = filesAndBytes(spark, m)
-        Commit.Metrics(0L, 0L, removedN, removedB, n, b, Some(rows), Some(marked.size.toLong))
-      })
+        val (n, b) = filesAndBytes(spark, m.dropRight(fresh.size))
+        Commit.Metrics(addedN, addedB, removedN, removedB, n, b, Some(rows), Some(marked.size.toLong))
+      },
+      batchId = batchId, queryId = queryId)
   }
 
-  /** The rows `gen`'s deletion vector marks of its data file `file`. */
-  private def vectorOf(spark: SparkSession, gen: GenRef, file: String): RoaringBitmap =
-    gen.dvs.get(file).fold(new RoaringBitmap())(dv =>
-      DeletionVectors.bitmap(DeletionVectors.load(hadoopFs(spark), root, gen.dir, file, dv)))
+  /** The rows deletion vector `dv`, if any, marks of data file `file` of `dir`. */
+  private def vectorOf(spark: SparkSession, dir: String, file: String,
+      dv: Option[Dv]): RoaringBitmap = dv.fold(new RoaringBitmap())(v =>
+    DeletionVectors.bitmap(DeletionVectors.load(hadoopFs(spark), root, dir, file, v)))
 
   /** For generation `gen`: could its data file `file` hold a row passing
     * every one of `filters`? [[graft.sources.FilePruning]] — the read
@@ -1097,25 +1117,6 @@ class SnapshotLake(root: String) {
       val stats = GenStats.load(conf, s"$root/$gen").getOrElse(Map.empty)
       lazy val blooms = GenBlooms.load(conf, s"$root/$gen").getOrElse(Map.empty)
       file => prune.mayMatch(stats.get(file), blooms.get(file))
-    }
-  }
-
-  /** The files of `gens` that `inScope` keeps, as manifest entries; a
-    * generation none of whose files is in scope is left out. With
-    * auto-compaction on, a generation whose files are small by its
-    * measure ([[compactSmall]]) is taken with every file the version
-    * reads of it: carrying the others would leave one more small
-    * generation that the next fold rewrites anyway, and bring that fold
-    * sooner. An unreadable setting scopes file by file. */
-  private def scoped(spark: SparkSession, gens: Seq[GenRef],
-      inScope: String => String => Boolean): Seq[GenRef] = {
-    val smallBytes = scala.util.Try(autoCompactConfig(spark)).toOption.flatten.map(_._2)
-    gens.flatMap { g =>
-      val files = liveFiles(spark, g)
-      val kept = files.map(_._1).filter(inScope(g.dir))
-      if (kept.isEmpty) None
-      else if (kept.size == files.size || smallBytes.exists(files.map(_._2).sum < _)) Some(g)
-      else Some(subset(g, kept))
     }
   }
 
@@ -1142,15 +1143,7 @@ class SnapshotLake(root: String) {
       if (sortCols.isEmpty) snap.repartition(numFiles)
       else snap.repartitionByRange(numFiles, sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
-    // optimize changes the layout, not the table: materialize an EMPTY
-    // changefeed so CDF readers see "no rows changed", not the
-    // file-level restatement the manifest delta would imply.
-    // mayOverlapScope=false: a layout rewrite claims nothing about row
-    // content, so racing APPEND generations always carry forward
-    // (rewrites of the consumed snapshot still abort via the consumed
-    // check)
-    publishRewrite(spark, base, commitAt(spark, base).gens, clustered,
-      emptyChanges(snap), mayOverlapScope = _ => _ => false, op = "optimize")
+    publishRewrite(spark, base, commitAt(spark, base).gens, clustered, "optimize")
   }
 
   /** [[optimize]] on the z-order curve of `keys`, numeric columns
@@ -1165,14 +1158,16 @@ class SnapshotLake(root: String) {
       sys.error(s"optimize of a never-committed lake: $root"))
     val snap = readAt(spark, base)
     publishRewrite(spark, base, commitAt(spark, base).gens,
-      graft.ops.Layout.zOrderClusterN(snap, keys, numFiles, bitsPerKey),
-      emptyChanges(snap), mayOverlapScope = _ => _ => false, op = "zorder")
+      graft.ops.Layout.zOrderClusterN(snap, keys, numFiles, bitsPerKey), "zorder")
   }
 
   /** INCREMENTAL compaction: collapse only generations whose live data
-    * files (the files the manifest reads of them) total under `maxBytes`
-    * into one sorted generation, carrying larger ones forward by
-    * reference. This is the steady-state maintenance loop
+    * total under `maxBytes` into one sorted generation, carrying larger
+    * ones forward by reference. A generation's live data is the bytes of
+    * the files the manifest reads of it, each scaled by the share of its
+    * rows no deletion vector marks (`_stats.json` row counts): a
+    * generation whose vectors mark most of its rows folds, and the fold
+    * drops them. This is the steady-state maintenance loop
     * for a stream-written table — each micro-batch commit adds one
     * small generation, and periodic compactSmall folds the accumulated
     * tail WITHOUT rewriting the big compacted body the way a full
@@ -1181,7 +1176,7 @@ class SnapshotLake(root: String) {
     * Returns the current version unchanged while fewer than
     * `max(2, minSmallGens)` small generations exist (the auto tier
     * passes its threshold through `minSmallGens`). Same abort-on-race
-    * and empty-changefeed contract as optimize. */
+    * contract as optimize, and no changefeed row. */
   def compactSmall(spark: SparkSession, maxBytes: Long,
       sortCols: Seq[org.apache.spark.sql.Column],
       minSmallGens: Int = 2): Long = {
@@ -1191,7 +1186,14 @@ class SnapshotLake(root: String) {
     // immutable, so with auto-compact checking per commit the steady
     // state lists only the generations the last commit added, not the
     // whole (ever-growing) big body
-    val sizes = commitAt(spark, base).gens.map(g => g -> liveFiles(spark, g).map(_._2).sum)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val sizes = commitAt(spark, base).gens.map { g =>
+      lazy val stats = GenStats.load(conf, s"$root/${g.dir}").getOrElse(Map.empty)
+      g -> liveFiles(spark, g).map { case (f, bytes) =>
+        g.dvs.get(f).flatMap(dv => stats.get(f).filter(_.rows > 0)
+          .map(st => (bytes.toDouble * (st.rows - dv.rows) / st.rows).toLong)).getOrElse(bytes)
+      }.sum
+    }
     val small = sizes.filter(_._2 < maxBytes)
     if (small.size < math.max(2, minSmallGens)) return base
     val tailBytes = small.map(_._2).sum
@@ -1203,49 +1205,35 @@ class SnapshotLake(root: String) {
       if (sortCols.isEmpty) tail.coalesce(numFiles)
       else tail.repartitionByRange(numFiles, sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
-    publishRewrite(spark, base, small.map(_._1), clustered, emptyChanges(tail),
-      mayOverlapScope = _ => _ => false, op = "compact")
+    publishRewrite(spark, base, small.map(_._1), clustered, "compact")
   }
 
-  private def emptyChanges(snap: DataFrame): DataFrame =
-    snap.limit(0).withColumn(SnapshotLake.ChangeTypeCol,
-      org.apache.spark.sql.functions.lit("insert"))
-
-  /** Write `rewritten` as a new generation (with its changefeed,
-    * `changes`) and publish the base manifest minus the `consumed` files
-    * (what the rewrite read and replaces) plus the new generation. The
+  /** Write `rewritten` — the rows of the `consumed` files in a new
+    * layout — as a new generation and publish the base manifest minus
+    * the `consumed` files plus the new generation. A layout rewrite
+    * claims nothing about row content, so racing appends always carry
+    * forward (a racing commit that changed a consumed file still aborts
+    * it), and the changefeed shows no row for it ([[walkChanges]]). The
     * commit records the files and bytes added, removed and carried
     * ([[Commit.Metrics]]). */
   private def publishRewrite(spark: SparkSession, base: Long,
-      consumed: Seq[GenRef], rewritten: DataFrame, changes: DataFrame,
-      mayOverlapScope: String => String => Boolean, op: String,
-      batchId: Option[Long] = None, queryId: Option[String] = None): Long = {
+      consumed: Seq[GenRef], rewritten: DataFrame, op: String): Long = {
     val gen = newGenName()
-    // validated like any ingest (a merge source can violate); the
-    // changefeed rides INSIDE the writer-unique generation, so it
-    // publishes atomically with the commit that references the
-    // generation and is cleaned up with it on abort — no separate
-    // claim to race
-    writeGen(spark, rewritten, gen, Some(changes))
+    writeGen(spark, rewritten, gen)
     val consumedFiles = fileSet(spark, consumed).map(f => (f._1, f._2))
     // a consumed generation without data files (an empty batch's) leaves
     // the manifest too
     val emptied = consumed.filter(liveFiles(spark, _).isEmpty).map(_.dir).toSet
     val (addedN, addedB) = filesAndBytes(spark, Seq(GenRef(gen)))
     val (removedN, removedB) = filesAndBytes(spark, consumed)
-    // rewrite marks this commit as the mutation that OWNS its
-    // generation's _cdf — the changefeed walker only reads _cdf under
-    // this flag (a restore re-referencing the generation stays a
-    // restatement)
-    publish(spark, base, consumed, op, gen, mayOverlapScope,
+    publish(spark, base, consumed, op, gen, mayOverlapScope = _ => _ => false,
       discard = () => hadoopFs(spark).delete(new org.apache.hadoop.fs.Path(s"$root/$gen"), true),
       manifest = hs => narrow(spark, hs)(d => f => !consumedFiles((d, f)))
         .filterNot(g => emptied(g.dir)) :+ GenRef(gen),
       metrics = m => {
         val (carriedN, carriedB) = filesAndBytes(spark, m.init)
         Commit.Metrics(addedN, addedB, removedN, removedB, carriedN, carriedB)
-      },
-      rewrite = true, batchId = batchId, queryId = queryId)
+      })
   }
 
   /** Claim the next version for a mutation of version `base` that read
@@ -1259,7 +1247,8 @@ class SnapshotLake(root: String) {
     *  - every file this mutation CONSUMED must still be read by the new
     *    head, under the same deletion vector — a winner that rewrote,
     *    dropped or deleted rows of one has invalidated this mutation;
-    *  - every file the winners ADDED must satisfy
+    *  - every file the winners ADDED, or un-marked rows of (a restore
+    *    to a version before a delete shrinks a vector), must satisfy
     *    `!mayOverlapScope(gen)(file)` — for merge and delete that is
     *    [[mayMatch]] over the mutation's scope, the SAME check that
     *    scoped it (and prunes reads), so "carried forward untouched" and
@@ -1270,14 +1259,12 @@ class SnapshotLake(root: String) {
     * land — without this, every concurrent pair of disjoint merges
     * serializes through abort and rerun, which at 100 TB (many
     * independent upsert streams over disjoint key ranges) serializes the
-    * whole write path. Bounded retries; a rewrite's materialized `_cdf`
-    * stays correct under rebase because the carried files provably
-    * contain no scoped rows. `token` names the writer's temp commit
-    * file. */
+    * whole write path. Bounded retries. `token` names the writer's temp
+    * commit file. */
   private def publish(spark: SparkSession, base: Long, consumed: Seq[GenRef],
       op: String, token: String, mayOverlapScope: String => String => Boolean,
       discard: () => Unit, manifest: Seq[GenRef] => Seq[GenRef],
-      metrics: Seq[GenRef] => Commit.Metrics, rewrite: Boolean = false,
+      metrics: Seq[GenRef] => Commit.Metrics,
       batchId: Option[Long] = None, queryId: Option[String] = None): Long = {
     onBeforePublish()
     def abort(detail: String): Nothing = {
@@ -1293,7 +1280,7 @@ class SnapshotLake(root: String) {
     var attempts = 0
     while (true) {
       val gens = manifest(headGens)
-      if (claimVersion(spark, token, Commit.of(head + 1, op, gens, rewrite, batchId, queryId,
+      if (claimVersion(spark, token, Commit.of(head + 1, op, gens, batchId, queryId,
           Some(metrics(gens))))) {
         // mutations can also grow the small tail — the auto tier covers
         // EVERY publishing path, not just appends (the reentrancy guard
@@ -1308,8 +1295,11 @@ class SnapshotLake(root: String) {
       val headFiles = fileSet(spark, headGens)
       if (!consumedFiles.subsetOf(headFiles))
         abort("a racing commit rewrote or deleted from a file this mutation read")
-      // a file whose deletion vector alone changed added no row
-      val added = headFiles.map(f => (f._1, f._2)) -- baseFiles.map(f => (f._1, f._2))
+      // a file whose deletion vector only gained marks added no row; one
+      // whose vector lost a mark (a restore) counts as added
+      val baseDvs = baseFiles.map(f => (f._1, f._2) -> f._3).toMap
+      val added = headFiles.collect { case (d, f, dv) if !baseDvs.get((d, f)).exists(b =>
+        b == dv || vectorOf(spark, d, f, dv).contains(vectorOf(spark, d, f, b))) => (d, f) }
       if (added.groupBy(_._1).exists { case (d, fs) =>
           val overlaps = mayOverlapScope(d)
           fs.exists(f => overlaps(f._2))
@@ -1409,21 +1399,23 @@ class SnapshotLake(root: String) {
 
   /** Row-level CHANGEFEED for versions (fromV, toV]: every change row
     * tagged `_change_type` (insert/delete; an update is its pair) and
-    * `_commit_version`. Three cost tiers, cheapest wins per version:
+    * `_commit_version`, derived per version from its manifest delta
+    * ([[walkChanges]]):
     *
     *  - APPEND commits emit their new generations' rows as inserts —
     *    pure manifest arithmetic, no extra storage, no diffing. DELETE
     *    commits emit, as deletes, the rows their new deletion vectors
     *    mark that the old ones did not — a read of those positions only.
-    *  - MERGE rewrites read the row-level changes the mutation
-    *    MATERIALIZED while it still knew them (`_cdf/` inside the
-    *    rewrite generation — atomic with the commit, sized by the rows
-    *    actually changed, never by the table). OPTIMIZE materializes an
-    *    empty feed: layout changed, content did not.
-    *  - Blind OVERWRITE commits have no change knowledge to materialize;
-    *    they surface as the file-level restatement the manifest implies
-    *    (all previous rows delete, all new rows insert) — the honest
-    *    semantics of a table rewritten wholesale.
+    *    A MERGE is both: the rows its new vectors mark are the replaced
+    *    rows' pre-images, and its new generation holds the source rows —
+    *    a read sized by the rows changed, never by the table.
+    *  - COMPACT, OPTIMIZE and ZORDER commits emit nothing: layout
+    *    changed, content did not. A merge committed before merges marked
+    *    rows reads the `_cdf/` it materialized.
+    *  - Blind OVERWRITE commits have no change knowledge; they surface
+    *    as the file-level restatement the manifest implies (all previous
+    *    rows delete, all new rows insert) — the honest semantics of a
+    *    table rewritten wholesale.
     *
     * Contrast [[diff]]: that SHUFFLES both snapshots to reconstruct
     * changes after the fact (audit tool); the changefeed only ever reads
@@ -1443,15 +1435,17 @@ class SnapshotLake(root: String) {
   /** The changefeed's per-version walk, shared by the batch reader
     * ([[changesBetween]]) and the streaming source's `readChangeFeed`
     * mode so the tier logic cannot drift between them. For each version
-    * in (fromV, toV] it classifies the manifest delta — materialized
-    * `_cdf/` (rewrites), rows the version reads that its predecessor did
-    * not as inserts, the reverse as deletes — and leaves frame
+    * in (fromV, toV] it takes the rows the version reads that its
+    * predecessor did not as inserts, the reverse as deletes — none for a
+    * layout rewrite (compact, optimize, zorder), and an older rewrite
+    * commit's materialized `_cdf/` instead — and leaves frame
     * construction (batch vs streaming frames) to `frame`, over
     * [[relation]]s. A row is read by one version and not the other when
     * its file is, or when the other version's deletion vector of the
-    * file marks it and this one's does not: a delete's rows are the
-    * marks its new vectors add. Each commit record is read once per walk
-    * ([[commitAt]]); a vacuumed one inside the range fails fast. Every
+    * file marks it and this one's does not: a merge's or a delete's
+    * removed rows are the marks its new vectors add. Each commit record
+    * is read once per walk ([[commitAt]]); a vacuumed one inside the
+    * range fails fast. Every
     * frame has the `schema` columns, then [[SnapshotLake.ChangeTypeCol]]
     * and [[SnapshotLake.CommitVersionCol]]. */
   private[graft] def walkChanges(spark: SparkSession, fromV: Long, toV: Long,
@@ -1472,7 +1466,8 @@ class SnapshotLake(root: String) {
             val have = liveFiles(spark, o).map(_._1).toSet
             val (both, extra) = liveFiles(spark, g).map(_._1).partition(have)
             val only = both.filter(f => g.dvs.get(f) != o.dvs.get(f)).flatMap { f =>
-              val rows = RoaringBitmap.andNot(vectorOf(spark, o, f), vectorOf(spark, g, f))
+              val rows = RoaringBitmap.andNot(vectorOf(spark, o.dir, f, o.dvs.get(f)),
+                vectorOf(spark, g.dir, f, g.dvs.get(f)))
               if (rows.isEmpty) None else Some(f -> rows)
             }
             if (extra.isEmpty && only.isEmpty) None
@@ -1488,24 +1483,20 @@ class SnapshotLake(root: String) {
       val commit = commitAt(spark, v)
       val cur = commit.gens
       val newDirs = commit.dirs.filterNot(prev.map(_.dir).toSet)
-      // the `_cdf/` read is gated on the COMMIT being a rewrite, not
-      // just on the directory carrying `_cdf/`: a restore re-references
-      // an old rewrite generation, and reading its stale change rows
-      // here would feed CDC consumers the original mutation's changes
-      // (or optimize's empty feed) instead of the restore's restatement
-      val materialized = newDirs match {
-        case Seq(g) if commit.rewrite && fs.exists(
-            new org.apache.hadoop.fs.Path(
-              s"$root/$g/${SnapshotLake.CdfDirName}")) =>
-          Some(frame(relation(spark, Seq(GenRef(s"$g/${SnapshotLake.CdfDirName}")), withChange)))
-        case _ => None
-      }
       def rows(delta: (Seq[GenRef], Map[String, RoaringBitmap]), change: String) =
         if (delta._1.isEmpty) None else Some(frame(relation(spark, delta._1, schema, delta._2))
           .withColumn(SnapshotLake.ChangeTypeCol, lit(change)))
-      materialized.map(Seq(_)).getOrElse(rows(minus(cur, prev), "insert").toSeq ++
-        rows(minus(prev.sortBy(_.dir), cur), "delete"))
-        .map(_.select(withChange.fieldNames.map(col).toSeq: _*)
+      val changes = (commit.op, newDirs) match {
+        case ("compact" | "optimize" | "zorder", _) => Nil
+        // an older merge's materialized changes, read only under its own
+        // commit: a restore re-referencing that generation restates
+        case (_, Seq(g)) if commit.rewrite && fs.exists(
+            new org.apache.hadoop.fs.Path(s"$root/$g/${SnapshotLake.CdfDirName}")) =>
+          Seq(frame(relation(spark, Seq(GenRef(s"$g/${SnapshotLake.CdfDirName}")), withChange)))
+        case _ => rows(minus(cur, prev), "insert").toSeq ++
+          rows(minus(prev.sortBy(_.dir), cur), "delete")
+      }
+      changes.map(_.select(withChange.fieldNames.map(col).toSeq: _*)
           .withColumn(SnapshotLake.CommitVersionCol, lit(v)))
     }
   }
@@ -1629,7 +1620,7 @@ class SnapshotLake(root: String) {
     * a concurrent writer's seconds-old unpublished generation).
     * [[vacuum]] deliberately deletes only generations the dropped
     * commits referenced, so a crash between a data write and its commit
-    * claim (or a failed _cdf/_stats publish) strands a directory
+    * claim (or a failed _stats publish) strands a directory
     * forever — an unbounded storage leak on a long-lived table. The age
     * guard (directory mtime vs a cutoff a sane retention puts hours in
     * the past) is what keeps this safe against the race vacuum's

@@ -102,11 +102,12 @@ object LayoutPack extends QueryPack {
         .orderBy(col("o_orderpriority"))
     }),
 
-    // Copy-on-write MERGE through the lake API: upsert every third doc
+    // Merge-on-read MERGE through the lake API: upsert every third doc
     // (text_len bumped by 1000) and insert shifted-key copies of the
-    // first ten — updates replace by key, inserts append, everything
-    // else carries. The scoping machinery (untouched generations
-    // re-referenced, not rewritten) is asserted in SnapLakeMergeSpec;
+    // first ten — replaced rows are marked in deletion vectors, the
+    // source lands as one new generation, everything else carries. The
+    // scoping machinery (only files that may hold a source key are
+    // scanned for marks) is asserted in SnapLakeMergeSpec;
     // the oracle pins the upsert ANSWER. Deterministic reused root +
     // vacuum, same lifecycle as the other snaplake queries.
     "l_snaplake_merge" -> ((s, d) => {
@@ -161,13 +162,14 @@ object LayoutPack extends QueryPack {
         .orderBy(col("lang"))
     }),
 
-    // Row-level CHANGEFEED of a merge: the mutation materialized its
-    // exact changes (_cdf inside the rewrite generation, atomic with
-    // the commit), so the feed is pre-image deletes + source inserts —
-    // unchanged rows never appear, and the read costs change-sized I/O,
-    // not table-sized diffing (contrast l_snaplake_diff, the audit
-    // form). _commit_version is dropped from the output because the
-    // reused root's version counter grows across invocations.
+    // Row-level CHANGEFEED of a merge: its deletes are the rows its new
+    // deletion vectors mark (the replaced rows' pre-images) and its
+    // inserts its source generation, so the feed is pre-image deletes +
+    // source inserts — unchanged rows never appear, and the read costs
+    // change-sized I/O, not table-sized diffing (contrast
+    // l_snaplake_diff, the audit form). _commit_version is dropped from
+    // the output because the reused root's version counter grows across
+    // invocations.
     // Incremental aggregate maintenance from the changefeed — the
     // materialized-view refresh pattern a lakehouse table format exists
     // to enable: the per-lang rollup is maintained by applying the
@@ -467,11 +469,12 @@ object LayoutPack extends QueryPack {
 
     // The five-operation audit trail as literal rows: the lake's
     // history is fully determined by the query's own mutation sequence.
-    // The delete marks doc_id 1 in a deletion vector and writes no
-    // generation, so its version reads the merge's one generation.
+    // The merge marks doc_id 0 in a deletion vector and adds its source
+    // generation; the delete marks doc_id 1 and writes no generation, so
+    // both versions read the overwrite's generation and the merge's.
     "l_snaplake_history" ->
       """SELECT * FROM (VALUES
-        |  (1, 'overwrite', 1), (2, 'merge', 1), (3, 'delete', 1),
+        |  (1, 'overwrite', 1), (2, 'merge', 2), (3, 'delete', 2),
         |  (4, 'optimize', 1), (5, 'restore', 1))
         |AS t(seq, op, n_dirs) ORDER BY seq""".stripMargin,
 

@@ -84,14 +84,15 @@ class SnapLakeStreamSource(spark: SparkSession, root: String,
   private def streaming(r: HadoopFsRelation): DataFrame =
     GraftBridge.ofRows(spark, LogicalRelation(r, isStreaming = true))
 
-  /** CHANGEFEED batch for versions (startV, endV]: the same three cost
-    * tiers as [[SnapshotLake.changesBetween]] — appends emit their new
-    * generations as inserts (manifest arithmetic), rewrites read the
-    * row-level `_cdf/` their mutation materialized, blind overwrites
-    * restate file-level — each row tagged with change type and commit
-    * version. Any commit the walk needs that vacuum has dropped is
-    * fatal ([[SnapshotLake.commitAt]]): a changefeed cannot skip history
-    * without lying. */
+  /** CHANGEFEED batch for versions (startV, endV]: the same manifest
+    * delta as [[SnapshotLake.changesBetween]] — appends and a merge's
+    * source emit their new generations as inserts, merges and deletes
+    * the rows their new deletion vectors mark as deletes, layout
+    * rewrites nothing, blind overwrites restate file-level, and a merge
+    * committed before merges marked rows its `_cdf/` — each row tagged
+    * with change type and commit version. Any commit the walk needs
+    * that vacuum has dropped is fatal ([[SnapshotLake.commitAt]]): a
+    * changefeed cannot skip history without lying. */
   private def changeBatch(startV: Long, endV: Long): DataFrame = {
     // the shared tier walker — only frame construction (streaming
     // relations) is this source's own

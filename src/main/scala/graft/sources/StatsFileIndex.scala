@@ -16,9 +16,10 @@ import graft.ingest.GenStats.{ColStats, FileStats}
   * `listFiles`, the skipping step — every file whose
   * [[graft.ingest.GenStats]] envelope or Bloom sidecar proves the pushed
   * data filters cannot match any of its rows is dropped ([[FilePruning]],
-  * the same check snaplake merges and deletes scope their rewrites
-  * with). A file with a [[RowMask]] (its deletion vector) carries it as
-  * file-constant metadata to [[DvParquetFileFormat]], which reads it.
+  * the same check snaplake merges and deletes scope their marking
+  * scans with). A file with a [[RowMask]] (its deletion vector) carries
+  * it as file-constant metadata to [[DvParquetFileFormat]], which reads
+  * it.
   *
   * This is the point where a table format earns its keep at 100 TB:
   * `FileSourceStrategy` hands the scan's data filters to the index

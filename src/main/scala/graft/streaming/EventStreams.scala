@@ -188,9 +188,7 @@ object EventStreams {
     * verbatim, so in-batch duplicates would both insert. First batch on
     * a never-committed lake lands as the table-creating append; empty
     * batches commit an empty generation so the watermark advances across
-    * idle windows (the append-sink rule — and merge's key envelope is
-    * degenerate on an empty source, so the empty append also dodges an
-    * unscoped full rewrite).
+    * idle windows (the append-sink rule).
     */
   def snaplakeUpsertSink(lake: graft.ingest.SnapshotLake,
       keyCols: Seq[String])(batch: DataFrame, batchId: Long): Unit = {

@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField}
 
 import graft.SparkSpecBase
@@ -143,6 +144,41 @@ class SnapLakeCommitSpec extends SparkSpecBase {
     val v3 = lake.delete(spark, $"id" === 70L)
     val c3 = lake.commitAt(spark, v3)
     assert(c3.dvs.keySet == Set(gen) && Commit.parse(c3.json) == c3, c3.json)
+  }
+
+  test("commits written before merges marked rows read the same changefeed") {
+    // a lake written by the copy-on-write merge: v1 overwrite (a, b, c),
+    // v2 merge of (2, B) and (9, i) with "rewrite":true and a `_cdf/`,
+    // v3 optimize with an empty `_cdf/`, v4 restore of v2
+    val root = freshRoot()
+    val fixture = new java.io.File(getClass.getResource("/graft/fixtures/snaplake-rewrite-commits").toURI)
+    org.apache.commons.io.FileUtils.copyDirectory(fixture, new java.io.File(root))
+    val lake = new SnapshotLake(root)
+    assert(lake.commitAt(spark, 2L).rewrite && lake.commitAt(spark, 3L).rewrite)
+    (1L to 4L).foreach { v =>
+      val p = Paths.get(f"$root/_commits/v$v%08d.json")
+      assert(lake.commitAt(spark, v).json == new String(Files.readAllBytes(p), "UTF-8"), s"version $v")
+    }
+    val want = Seq((1L, "a", "insert", 1L), (2L, "b", "insert", 1L), (3L, "c", "insert", 1L),
+      (2L, "b", "delete", 2L), (2L, "B", "insert", 2L), (9L, "i", "insert", 2L)) ++
+      Seq((1L, "a"), (2L, "B"), (3L, "c"), (9L, "i")).flatMap { case (i, x) =>
+        Seq((i, x, "insert", 4L), (i, x, "delete", 4L))
+      }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, String, Long)] =
+      df.select($"id", $"v", col(SnapshotLake.ChangeTypeCol), col(SnapshotLake.CommitVersionCol))
+        .as[(Long, String, String, Long)].collect().toSeq.sorted
+    assert(rows(lake.changesBetween(spark, 0L, 4L)) == want.sorted)
+    val q = spark.readStream.format("snaplake").option("readChangeFeed", "true").load(root)
+      .writeStream.format("memory").queryName("rewrite_commit_feed").start()
+    try {
+      q.processAllAvailable()
+      assert(rows(spark.table("rewrite_commit_feed")) == want.sorted)
+    } finally q.stop()
+    // a merge on the old table marks rows and writes no "rewrite"
+    val v5 = lake.merge(Seq((3L, "C")).toDF("id", "v"), Seq("id"))
+    assert(!lake.commitAt(spark, v5).json.contains("rewrite"))
+    assert(rows(lake.changesBetween(spark, 4L, v5)) ==
+      Seq((3L, "C", "insert", v5), (3L, "c", "delete", v5)).sorted)
   }
 }
 

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpecBase
 
 /** MERGE and DELETE on [[SnapshotLake]]: upsert and delete semantics,
-  * stats-scoped copy-on-write merges (untouched files carry forward by
-  * reference), deletes by deletion vector, the no-op delete fast path,
+  * merges and deletes by deletion vector scoped by file stats (untouched
+  * files carry forward by reference), the no-op delete fast path,
   * the optimistic-abort publication contract under a racing commit, and
   * vacuum of what only expired versions read.
   */
@@ -23,6 +23,31 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     * same files of each: carried by reference, untouched. */
   private def carried(lake: SnapshotLake, u: Long, v: Long): Set[String] =
     lake.commitAt(spark, v).gens.toSet.intersect(lake.commitAt(spark, u).gens.toSet).map(_.dir)
+
+  /** Rows version `v`'s deletion vectors mark, by generation. */
+  private def marked(lake: SnapshotLake, v: Long): Map[String, Long] =
+    lake.commitAt(spark, v).dvs.map { case (d, fs) => d -> fs.values.map(_.rows).sum }
+
+  /** The directories the file scans of the queries `body` ran read. */
+  private def scannedDirs(body: => Unit): Set[String] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        helper.collect(qe.executedPlan) { case s: FileSourceScanExec => s }
+          .foreach(_.relation.location.rootPaths.foreach(p => dirs.add(p.getName)))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.sql.GraftBridge.waitListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.sql.GraftBridge.waitListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    dirs.asScala.toSet
+  }
 
   test("merge: updates replace by key, inserts append, others survive") {
     val root = freshRoot()
@@ -50,17 +75,27 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     // source touches only the middle generation's envelope
     val v = lake.merge(Seq((150L, "new")).toDF("id", "v"), Seq("id"))
     val after = lake.dirsAt(spark, v)
-    // the two untouched generations are re-referenced, not rewritten
+    // the two untouched generations are re-referenced as they were; only
+    // the middle one gets a mark, for the one row the merge replaces
     assert(carried(lake, 3L, v) == Set(before(0), before(2)),
       s"expected 2 carried generations: before=$before after=$after")
-    assert(after.filterNot(before.contains).size == 1, s"one rewrite generation expected: $after")
+    assert(marked(lake, v) == Map(before(1) -> 1L), lake.commitAt(spark, v).json)
+    // and the one new generation is the source's
+    val Seq(fresh) = after.filterNot(before.contains)
+    assert(spark.read.parquet(s"$root/$fresh").as[(Long, String)].collect().toSeq == Seq((150L, "new")))
     val rows = lake.read(spark).as[(Long, String)].collect()
     assert(rows.length == 300)
     assert(rows.toMap.apply(150L) == "new")
     assert(rows.count(_._2 == "old") == 299)
   }
 
-  test("merge into a statless generation rewrites it conservatively") {
+  test("merge into a statless generation scans it conservatively") {
+    // a twin with stats: the source key is outside the envelope, so the
+    // merge scans no target file
+    val twin = new SnapshotLake(freshRoot())
+    twin.commit(Seq((1L, "x")).toDF("id", "v"), overwrite = true)
+    val twinGen = twin.dirsAt(spark, 1L).head
+    assert(!scannedDirs(twin.merge(Seq((99L, "y")).toDF("id", "v"), Seq("id"))).contains(twinGen))
     val root = freshRoot()
     val lake = new SnapshotLake(root)
     lake.commit(Seq((1L, "x")).toDF("id", "v"), overwrite = true)
@@ -69,11 +104,14 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     val gen1 = lake.dirsAt(spark, 1L).head
     fs.delete(new org.apache.hadoop.fs.Path(
       s"$root/$gen1/${GenStats.StatsFileName}"), false)
-    val v = lake.merge(Seq((99L, "y")).toDF("id", "v"), Seq("id"))
+    var v = 0L
+    val scanned = scannedDirs { v = lake.merge(Seq((99L, "y")).toDF("id", "v"), Seq("id")) }
     assert(lake.read(spark).as[(Long, String)].collect().toSet ==
       Set((1L, "x"), (99L, "y")))
-    // conservative: the statless generation was rewritten, not carried
-    assert(!lake.dirsAt(spark, v).contains(gen1))
+    // conservative: the statless generation was scanned for the key,
+    // which it does not hold, so it carries unmarked
+    assert(scanned.contains(gen1), s"the statless generation was not scanned: $scanned")
+    assert(carried(lake, 1L, v) == Set(gen1) && marked(lake, v).isEmpty)
   }
 
   test("delete: predicate rows go, NULL-evaluating rows stay") {
@@ -377,11 +415,14 @@ class SnapLakeMergeSpec extends SparkSpecBase {
       org.apache.spark.sql.GraftBridge.waitListenerBus(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     // the body generation (multi-MB) must never be scanned: the merge's
-    // reads are the tail generation + the one-row source + its own
-    // validation/stats read-back of the small rewrite
+    // only data-file reads are its marking scan of the tail generation
+    // (the cached one-row source is not a file read)
     assert(bytesRead.get() < bigBytes / 4,
       s"merge read ${bytesRead.get()} bytes vs body $bigBytes — " +
         "stats scoping stopped excluding the untouched generation")
+    val v = lake.latestVersion(spark).get
+    assert(marked(lake, v) == Map(lake.dirsAt(spark, 2L).last -> 1L) &&
+      carried(lake, 2L, v) == Set(bigGen), lake.commitAt(spark, v).json)
     assert(lake.read(spark).count() == 300100)
   }
 
@@ -481,18 +522,21 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     def live(v: Long): Int = lake.commitAt(spark, v).gens.flatMap(g =>
       g.files.getOrElse(Files.list(java.nio.file.Paths.get(root, g.dir)).toArray
         .map(_.toString).filter(_.endsWith(".parquet")).toSeq)).size
+    // a merge that replaces every row of the file holding [lo, hi)
+    def replace(l: SnapshotLake, lo: Long, hi: Long): Long =
+      l.merge(spark.range(lo, hi, 1, 1).toDF("id").withColumn("v", lit("y")), Seq("id"))
     def upsert(l: SnapshotLake, id: Long): Long = l.merge(Seq((id, "y")).toDF("id", "v"), Seq("id"))
-    // a merge racing into another file of the same generation: the
-    // files this merge read are untouched, so it rebases and both land
+    // a merge emptying another file of the same generation races in: the
+    // files this merge marked are untouched, so it rebases and both land
     val racy = new SnapshotLake(root) {
-      override protected def onBeforePublish(): Unit = upsert(new SnapshotLake(root), 80L)
+      override protected def onBeforePublish(): Unit = replace(new SnapshotLake(root), 75L, 100L)
     }
-    val v3 = upsert(racy, 10L)
+    val v3 = replace(racy, 0L, 25L)
     assert(v3 == 3L)
     assert(lake.commitAt(spark, v3).files.get(gen).exists(_.size == 2))
-    assert(lake.read(spark).filter(col("v") === "y").count() == 2L)
-    assert(live(3L) == 6, "two carried files and two rewrites of the kept rows and the source row")
-    // a racing merge in the SAME file rewrites a file this one read: abort
+    assert(lake.read(spark).filter(col("v") === "y").count() == 50L)
+    assert(live(3L) == 4, "two carried files and the two merges' one-file sources")
+    // a racing merge marking the SAME file changes a vector this one read: abort
     val racy2 = new SnapshotLake(root) {
       override protected def onBeforePublish(): Unit = upsert(new SnapshotLake(root), 30L)
     }
@@ -500,21 +544,21 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     assert(lake.latestVersion(spark).contains(4L))
     assert(lake.read(spark).filter(col("id") === 31L && col("v") === "x").count() == 1L)
     // restore to v1 reads the generation whole again; its changefeed is
-    // the file-level restatement: the three rewritten files' rows come
-    // back, the rewrites' rows go
+    // the file-level restatement: the two emptied files' rows and the
+    // marked row come back, the three merges' source rows go
     val v5 = lake.restore(spark, 1L)
     assert(lake.commitAt(spark, v5).gens == Seq(GenRef(gen)))
     val feed = lake.changesBetween(spark, 4L, v5)
       .groupBy(col("_change_type")).count().as[(String, Long)].collect().toMap
-    assert(feed == Map("insert" -> 75L, "delete" -> 75L), feed)
+    assert(feed == Map("insert" -> 51L, "delete" -> 51L), feed)
     assert(lake.read(spark).filter(col("v") === "x").count() == 100L)
     // vacuum keeps a generation while a retained version reads any file
-    // of it; the rewrites only dropped versions read go
-    val v6 = upsert(lake, 60L)
+    // of it; the merges' sources, which only dropped versions read, go
+    val v6 = lake.delete(spark, col("id") >= 50L && col("id") < 75L)
     assert(lake.commitAt(spark, v6).files.get(gen).exists(_.size == 3))
     lake.vacuum(spark, retainLast = 1)
     assert(lake.versions(spark) == Seq(v6))
-    assert(lake.read(spark).count() == 100L)
+    assert(lake.read(spark).count() == 75L)
     val dirs = Files.list(java.nio.file.Paths.get(root)).toArray.map(_.toString)
       .filter(_.contains("/gen-")).toSet
     assert(dirs == lake.dirsAt(spark, v6).map(d => s"$root/$d").toSet, dirs)
@@ -523,7 +567,7 @@ class SnapLakeMergeSpec extends SparkSpecBase {
       .load(root).writeStream.format("memory").queryName("file_granular_stream").start()
     try {
       q.processAllAvailable()
-      assert(spark.table("file_granular_stream").count() == 100L)
+      assert(spark.table("file_granular_stream").count() == 75L)
     } finally q.stop()
   }
 
@@ -536,8 +580,9 @@ class SnapLakeMergeSpec extends SparkSpecBase {
       .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
       .filter(n => n.endsWith(".parquet") && !n.startsWith(".")).toSet
     val all = parquet(gen)
-    // a file-granular merge replaces the file holding id 10
-    val v2 = lake.merge(Seq((10L, "y")).toDF("id", "v"), Seq("id"))
+    // a merge replaces every row of the file holding id 10, which
+    // leaves the manifest
+    val v2 = lake.merge(spark.range(0, 25, 1, 1).toDF("id").withColumn("v", lit("y")), Seq("id"))
     val kept = lake.commitAt(spark, v2).files(gen).toSet
     assert(kept.size == 3)
     val want = lake.read(spark).as[(Long, String)].collect().toSet
@@ -552,28 +597,5 @@ class SnapLakeMergeSpec extends SparkSpecBase {
     lake.vacuum(spark, retainLast = 1)
     assert(lake.versions(spark) == Seq(v4) && dvFiles == 1L && v3 == v4 - 1)
     assert(lake.read(spark).count() == 98L)
-  }
-
-  test("with auto-compaction on, a mutation rewrites a small generation whole") {
-    val root = freshRoot()
-    val lake = new SnapshotLake(root)
-    lake.commit(spark.range(0, 100, 1, 4).toDF("id").withColumn("v", lit("x")))
-    val gen = lake.dirsAt(spark, 1L).head
-    // every generation is small: the next fold would rewrite the files a
-    // file-granular merge carries, so the merge takes all four
-    lake.enableAutoCompact(spark, maxSmallGens = 8, smallBytes = 1L << 30)
-    def upsert(id: Long): Long = lake.merge(Seq((id, "y")).toDF("id", "v"), Seq("id"))
-    val v2 = upsert(10L)
-    val c2 = lake.commitAt(spark, v2)
-    assert(!c2.dirs.contains(gen) && c2.metrics.exists(_.filesRemoved == 4L), c2.json)
-    // no generation is small: the merge rewrites only the file in scope
-    lake.enableAutoCompact(spark, maxSmallGens = 8, smallBytes = 1L)
-    val Seq(rewrite) = c2.dirs
-    val files = c2.metrics.get.filesAdded.toInt
-    val c3 = lake.commitAt(spark, upsert(60L))
-    assert(c3.files.get(rewrite).exists(_.size == files - 1) &&
-      c3.metrics.exists(_.filesRemoved == 1L), c3.json)
-    assert(lake.read(spark).count() == 100L)
-    assert(lake.read(spark).filter(col("v") === "y").count() == 2L)
   }
 }

@@ -22,6 +22,7 @@ class SnapLakeMetaSpec extends SparkSpecBase {
   /** Pinned byte counts; each test says what it measures. */
   private val BloomSidecarBytes = 851L
   private val DeleteBytes = 483L
+  private val MergeBytes = 3475L
 
   private def freshRoot(): String =
     Files.createTempDirectory("graft_snapmeta").toString + "/lake"
@@ -266,6 +267,45 @@ class SnapLakeMetaSpec extends SparkSpecBase {
       Seq((1500L, 1500L % 7, "delete", v)))
   }
 
+  test("byte budget: a two-row merge writes its source and one deletion-vector file") {
+    val root = freshRoot()
+    val lake = new SnapshotLake(root)
+    lake.enableAutoBlooms(spark, Seq("id"), expectedNdvPerFile = 1000)
+    // three files holding ids [0, 1000), [1000, 2000), [2000, 3000)
+    lake.commit(spark.range(0, 3000, 1, 3).select(col("id"), (col("id") % 7).as("v")))
+    val gen = lake.dirsAt(spark, 1L).head
+    def files(): Set[String] = {
+      val s = Files.walk(Paths.get(root))
+      try s.filter(Files.isRegularFile(_)).toArray.map(_.toString).toSet finally s.close()
+    }
+    val before = files()
+    val beforeBytes = bytesUnder(root)
+    val v = lake.merge(Seq((1500L, 99L), (5000L, 1L)).toDF("id", "v"), Seq("id"))
+    val written = bytesUnder(root) - beforeBytes
+    val c = lake.commitAt(spark, v)
+    info(s"two-row merge: generation ${bytesUnder(s"$root/$gen")} bytes, the merge wrote $written bytes")
+    // the old generation is read whole, its middle file with a one-row
+    // vector; the new generation holds exactly the two source rows
+    val Seq(`gen`, fresh) = c.dirs
+    assert(c.files.isEmpty && c.dvs.keySet == Set(gen) &&
+      c.dvs(gen).values.map(_.rows).toSeq == Seq(1L), c.json)
+    assert(spark.read.parquet(s"$root/$fresh").as[(Long, Long)].collect().sorted.toSeq ==
+      Seq((1500L, 99L), (5000L, 1L)))
+    // outside the new generation: one `_dv/` file and the commit file
+    val added = (files() -- before).map(_.stripPrefix(s"$root/")).filterNot(_.startsWith(s"$fresh/"))
+    assert(added.count(_.startsWith(s"${DeletionVectors.DirName}/")) == 1 &&
+      added.count(_.startsWith("_commits/")) == 1 && added.size == 2, added)
+    val m = c.metrics.get
+    def parquetBytes(d: String): Long = Files.list(Paths.get(root, d)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).map(f => Files.size(Paths.get(f))).sum
+    assert((m.bytesAdded, m.filesRemoved, m.bytesRemoved, m.filesCarried, m.bytesCarried) ==
+      (parquetBytes(fresh), 0L, 0L, 3L, parquetBytes(gen)), m)
+    assert(m.rowsRemoved.contains(1L) && m.dvsChanged.contains(1L), m)
+    assert(written == MergeBytes, s"the merge wrote $written bytes")
+    assert(lake.read(spark).filter(col("id") === 1500L).as[(Long, Long)].collect().toSeq ==
+      Seq((1500L, 99L)))
+  }
+
   test("job budget: append 1, resolve 0, point delete and small merge pinned") {
     val root = freshRoot()
     val lake = new SnapshotLake(root)
@@ -283,14 +323,15 @@ class SnapLakeMetaSpec extends SparkSpecBase {
     assert(resolve == 0, s"resolving format(snaplake).load ran $resolve jobs")
     // one scan marks the row's position; nothing is written by a job
     assert(delete == 1, s"one-key delete ran $delete jobs")
-    // the source envelope, the Bloom-scoping key collect, and the
-    // rewrite and changefeed writes with their shuffle stages
-    assert(merge == 11, s"small merge ran $merge jobs")
+    // one collect of the source's key tuples (which fills the source's
+    // cache and gives both the envelope and the Bloom scope), the marking
+    // scan with its broadcast of the source keys, and the source's write
+    assert(merge == 4, s"small merge ran $merge jobs")
     assert(lake.read(spark).count() == 1100)
     // an empty source scopes nothing from its envelope alone
     val emptyMerge = jobsOf(lake.merge(Seq.empty[(Long, Long)].toDF("id", "v"),
       Seq("id")))
-    // without Blooms the key tuples are never collected
+    // without Blooms the key tuples still give the envelope
     val plain = new SnapshotLake(freshRoot())
     plain.commit(spark.range(0, 1000).select(col("id"), (col("id") % 7).as("v"))
       .repartition(2))
@@ -298,12 +339,14 @@ class SnapLakeMetaSpec extends SparkSpecBase {
       Seq("id")))
     // a Bloom backfill runs one scan job per generation: the recorded
     // schema leaves no inference job to run before it
-    plain.commit(spark.range(3000, 3100).select(col("id"), (col("id") % 7).as("v")))
-    val backfill = jobsOf(plain.computeBlooms(spark, Seq("id"), expectedNdvPerFile = 1000))
+    val twoGens = new SnapshotLake(freshRoot())
+    twoGens.commit(spark.range(0, 1000).select(col("id"), (col("id") % 7).as("v")))
+    twoGens.commit(spark.range(3000, 3100).select(col("id"), (col("id") % 7).as("v")))
+    val backfill = jobsOf(twoGens.computeBlooms(spark, Seq("id"), expectedNdvPerFile = 1000))
     info(s"jobs: empty-source merge $emptyMerge, merge without Blooms $plainMerge, " +
       s"Bloom backfill of 2 generations $backfill")
-    assert(emptyMerge == 4, s"empty-source merge ran $emptyMerge jobs")
-    assert(plainMerge == 9, s"merge without Blooms ran $plainMerge jobs")
+    assert(emptyMerge == 2, s"empty-source merge ran $emptyMerge jobs")
+    assert(plainMerge == 4, s"merge without Blooms ran $plainMerge jobs")
     assert(backfill == 2, s"computeBlooms ran $backfill jobs")
   }
 }

@@ -247,4 +247,34 @@ class SnapLakeOptimizeSpec extends SparkSpecBase {
     assert(lake.dirsAt(spark, v2).size == 1, lake.dirsAt(spark, v2))
     assert(lake.read(spark).as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
   }
+
+  test("compactSmall folds a large generation whose vectors mark most rows, dropping them") {
+    val root = freshRoot()
+    val lake = new SnapshotLake(root)
+    // two large one-file generations of the same size, and a small one
+    lake.commit(spark.range(0, 10000, 1, 1).toDF("id"))
+    lake.commit(spark.range(10000, 20000, 1, 1).toDF("id"))
+    lake.commit(spark.range(20000, 20010, 1, 1).toDF("id"))
+    val Seq(mostly, barely, small) = lake.dirsAt(spark, 3L)
+    def bytes(d: String): Long = Files.list(java.nio.file.Paths.get(root, d)).toArray
+      .map(_.toString).filter(_.endsWith(".parquet")).map(f => Files.size(java.nio.file.Paths.get(f))).sum
+    val maxBytes = bytes(mostly) / 2
+    assert(bytes(barely) > maxBytes && bytes(small) < maxBytes)
+    // nothing to fold yet: one small generation
+    assert(lake.compactSmall(spark, maxBytes, Seq(col("id"))) == 3L)
+    // 90% of the first generation's rows marked, 1% of the second's
+    lake.delete(spark, col("id") < 10000L && col("id") % 10 =!= 0L)
+    val v = lake.delete(spark, col("id") >= 10000L && col("id") < 20000L && col("id") % 100 === 0L)
+    val vc = lake.compactSmall(spark, maxBytes, Seq(col("id")))
+    assert(vc == v + 1, "the mostly-marked generation counts as small")
+    val c = lake.commitAt(spark, vc)
+    // the mostly-marked generation folds with the small one and its
+    // vector is gone; the barely-marked one is carried with its vector
+    assert(!c.dirs.contains(mostly) && !c.dirs.contains(small) && c.dirs.contains(barely), c.json)
+    assert(c.dvs.keySet == Set(barely) && c.gens.find(_.dir == barely) ==
+      lake.commitAt(spark, v).gens.find(_.dir == barely), c.json)
+    assert(lake.read(spark).count() == 1000L + 9900L + 10L)
+    assert(lake.changesBetween(spark, v, vc).count() == 0L)
+  }
 }
+
